@@ -466,8 +466,8 @@ def reset_stats_view_cache() -> None:
     """Drop every memoized merged view. The cached frames are LOCAL
     checkpoints (blocks on executors, no lineage): after an executor
     loss in a long-lived cluster session their actions fail instead
-    of recomputing — call this to fall back to fresh reads. Test
-    seams and the storefs cache reset use it too."""
+    of recomputing — call this to fall back to fresh reads. Nothing
+    in the library calls it: it is the caller's recovery hook."""
     _VIEW_CACHE.clear()
 
 

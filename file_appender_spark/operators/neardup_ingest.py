@@ -1,8 +1,9 @@
 """Incremental near-dup ingest: the LSH analog of q89's exact
 incremental dedup (queries/llm.py), shaped for a streaming
-``foreachBatch`` or a batch-per-partition backfill loop. Two
-modality variants share one protocol and one candidate core
-(``_band_pairs``):
+``foreachBatch`` or a batch-per-partition backfill loop. Three
+modality variants share one protocol and ONE epoch core
+(``_ingest_epoch``); each entry point only builds its modality spec
+(``_modality_spec`` plus its signature stage and verifier):
 
 - ``neardup_ingest_batch`` — EMBEDDINGS: SRP band signatures
   (operators/similarity: deterministic hash-derived hyperplanes),
@@ -10,6 +11,8 @@ modality variants share one protocol and one candidate core
 - ``textdup_ingest_batch`` — DOCUMENTS: q52's MinHash signatures
   (imported definitions), estimated-Jaccard verification over the 16
   stored slots (fixed-size store rows, O(docs) store).
+- ``imagedup_ingest_batch`` — BINARY PAYLOADS: perceptual-hash bands
+  (operators/imagehash, aHash or dHash), exact Hamming verification.
 
 A persistent SIGNATURE STORE (parquet) holds one signature row per
 admitted item. Each incoming batch:
@@ -37,6 +40,7 @@ from __future__ import annotations
 
 import json
 import os
+from contextlib import contextmanager, nullcontext
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -89,7 +93,6 @@ def _store_has_data(store_dir: str) -> bool:
 # canonical home, these aliases keep this module's established names
 from file_appender_spark.storefs import (  # noqa: E402
     MANIFEST_CURRENT_FILE as _CURRENT_FILE,
-    clean_stale_manifest_versions as _clean_stale_versions,
     manifest_version as _manifest_version,
 )
 
@@ -262,36 +265,122 @@ _BROADCAST_FETCH_ROWS = 4_000_000
 _EAGER_SLICE_MIN_STORE_ROWS = 1_000_000
 
 
+def _checkpoint_sigs(sigs: DataFrame, reliable: bool) -> DataFrame:
+    """Keep an epoch's batch signatures as an EAGER checkpoint behind a
+    narrow scan — the text and image spelling. NOT a lazy persist
+    (re-measured r11): a persisted frame with five consumers inside
+    one epoch DAG loses 30-40% wall to cache-population effects
+    (measured 550-630 -> ~420 docs/s idle at sf0.1), so the dedicated
+    materialization job earns its ~0.3-0.5s."""
+    return _compact_scan(materialize_frame(sigs, eager=True, reliable=reliable))
+
+
+def _persist_sigs(sigs: DataFrame, reliable: bool) -> DataFrame:
+    """Keep an epoch's batch signatures as a lazy MEMORY_AND_DISK
+    cache — the SRP spelling, whose rows carry the whole vector.
+    Measured on a 4-core host (2000 x 64-d vectors per epoch, three
+    epochs, 6 interleaved process pairs): the eager checkpoint made
+    each epoch against a non-empty store a median ~1.2s slower than
+    this cache, whose first consumer is the "auto" cap's count.
+    ``reliable=True`` takes the DFS checkpoint instead, like every
+    other epoch materialization."""
+    if reliable:
+        return _checkpoint_sigs(sigs, reliable)
+    from pyspark import StorageLevel
+
+    return sigs.persist(StorageLevel.MEMORY_AND_DISK)
+
+
 def _modality_spec(params: dict) -> dict:
-    """Per-modality store-schema facts, derived from the params
-    sidecar (the one source of truth): band count, which columns are
-    the verify payload, which columns define full-signature equality,
-    and the renames the verifiers expect on the incumbent side."""
+    """Per-modality facts, derived from the params stamp (the one
+    source of truth), as data and small column builders:
+
+    - ``params``: the stamp itself;
+    - ``n_bands`` and ``fh_cols`` (the columns defining full-signature
+      equality — also the identical-signature tier's group keys);
+    - ``payload`` / ``payload_new``: the verify-payload renames on the
+      incumbent / incoming side;
+    - ``exact_eq()``: exact payload equality over those renames — what
+      confirms a 64-bit full-signature-hash match before it may
+      suppress (the hash only prunes);
+    - ``ident_rows(sigs)``: the batch rows eligible for the identical-
+      signature tier;
+    - ``cap_for(n_items)``: the ``"auto"`` hot-bucket cap. ``n_items``
+      is a thunk for the store + batch item count, called only by the
+      policies whose bucket space is finite (SRP, image);
+    - ``keep_sigs(sigs, reliable)``: how the epoch keeps the batch
+      signatures it reads many times (_checkpoint_sigs /
+      _persist_sigs).
+
+    The ingest entry points add the per-call facts (``id_col``,
+    ``sig_frame``, ``verify``) and hand the whole spec to
+    _ingest_epoch."""
     m = params["modality"]
     if m == "minhash":
         nb = params.get("n_slots", 16) // 4
         return {
+            "params": params,
             "n_bands": nb,
             "payload": {"mh": "mh_old"},
             "payload_new": {"mh": "mh_new"},
             "fh_cols": [f"b{i}" for i in range(nb)],
+            # all 16 slots agree <=> all band signatures agree
+            "exact_eq": lambda: F.col("mh_new") == F.col("mh_old"),
+            "ident_rows": lambda sigs: sigs,
+            # MinHash band space is effectively unbounded (four 32-bit
+            # slots), so the sized policy is the count-free budget cap
+            "cap_for": lambda n_items: ingest_band_bucket_cap_for(2, n_bands=nb),
+            "keep_sigs": _checkpoint_sigs,
         }
     if m == "srp":
         nb = params["n_bands"]
         return {
+            "params": params,
             "n_bands": nb,
             "payload": {"v": "v_old", "nrm": "n_old"},
             "payload_new": {"v": "v_new", "nrm": "n_new"},
             # full-signature equality for SRP is VECTOR equality (band
             # equality does not imply cosine 1.0, vector equality does)
             "fh_cols": ["v"],
+            # cos(v, v) = 1.0 only for finite nonzero v: undefined
+            # cosines must never suppress, so zero-norm/NaN rows stay
+            # out of both identical-vector tiers (both sides here, and
+            # the within-batch groupBy via ident_rows)
+            "exact_eq": lambda: (
+                (F.col("v_new") == F.col("v_old"))
+                & (F.col("n_new") > 0)
+                & ~F.isnan("n_new")
+                & (F.col("n_old") > 0)
+                & ~F.isnan("n_old")
+            ),
+            "ident_rows": lambda sigs: sigs.filter(
+                (F.col("nrm") > 0) & ~F.isnan("nrm")
+            ),
+            # SRP bands carry n_bits sign bits per band
+            "cap_for": lambda n_items: ingest_band_bucket_cap_for(
+                max(n_items(), 2), n_bands=nb, bucket_space_bits=params["n_bits"]
+            ),
+            "keep_sigs": _persist_sigs,
         }
     if m in ("ahash", "dhash"):
+        from file_appender_spark.operators.imagehash import band_bucket_cap_for
+
         return {
+            "params": params,
             "n_bands": 4,
             "payload": {f"b{k}": f"ob{k}" for k in range(4)},
             "payload_new": {f"b{k}": f"nb{k}" for k in range(4)},
             "fh_cols": [f"b{k}" for k in range(4)],
+            # all four bands agree <=> Hamming 0
+            "exact_eq": lambda: sum(
+                (F.col(f"nb{k}") != F.col(f"ob{k}")).cast("int") for k in range(4)
+            )
+            == 0,
+            "ident_rows": lambda sigs: sigs,
+            "cap_for": lambda n_items: band_bucket_cap_for(
+                max(n_items(), 2), grid=params["grid"]
+            ),
+            "keep_sigs": _checkpoint_sigs,
         }
     raise ValueError(f"unknown store modality {m!r}")
 
@@ -705,10 +794,10 @@ def _hist_dup_terms(
     id_col: str,
     spec: dict,
     cap: int | None,
-    store_rows: int | None = None,
     reliable: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
-    """History-side dup inputs from the fused store touch:
+    """History-side dup inputs of the BIG-store epoch shape, from the
+    fused store touch:
 
       cand_pay  — (new_id, old_id, payload...) post-cap banded
         candidates with the incumbent verify payload attached;
@@ -735,24 +824,18 @@ def _hist_dup_terms(
         an over-cap bucket, and exact dups must dedup regardless
         (the r8 shortcut's whole point).
 
-    Two shapes, pinned equal in tests/test_store_v2.py: BIG stores
-    (>= _EAGER_SLICE_MIN_STORE_ROWS, footer-estimated) checkpoint the
-    slice and both frames and gate the payload broadcast on their
-    EXACT combined row count under _BROADCAST_FETCH_ROWS (r9 ADVICE:
-    the old unconditional hint could legally OOM the driver); over
-    the ceiling the joins run unhinted and AQE picks the strategy.
-    SMALL stores take the LEAN shape — lazy joins, broadcast hints
-    straight on the candidate frames (bounded by min(batch x bands x
-    cap, store x bands) there) — because at that size the 4-6
-    materialization jobs cost more than re-deriving the slice inside
-    one action. cap None never hints anywhere (nothing bounds the
-    candidate set)."""
+    The slice and both frames are checkpointed, and the payload
+    broadcast is gated on their EXACT combined row count under
+    _BROADCAST_FETCH_ROWS (r9 ADVICE: the old unconditional hint could
+    legally OOM the driver); over the ceiling the joins run unhinted
+    and AQE picks the strategy. cap None never hints (nothing bounds
+    the candidate set). Small stores take _lean_dup_terms instead;
+    the two shapes are pinned equal in tests/test_store_v2.py."""
     slice_src, payload_src = _history_access(
         spark, store_dir, hist, batch_bands, id_col, spec
     )
-    big = store_rows is None or store_rows >= _EAGER_SLICE_MIN_STORE_ROWS
     sl, cand = _sliced_band_candidates(
-        batch_bands, slice_src, id_col, cap, materialize=big, reliable=reliable
+        batch_bands, slice_src, id_col, cap, reliable=reliable
     )
     ident = (
         sigs.select(F.col(id_col).alias("new_id"), "fh")
@@ -765,40 +848,23 @@ def _hist_dup_terms(
         .select("new_id", "old_id")
         .distinct()
     )
-    if cap is not None and big:
-        cand = materialize_frame(cand, eager=True, reliable=reliable)
-        ident = materialize_frame(ident, eager=True, reliable=reliable)
-        bounded = (cand.count() + ident.count()) <= _BROADCAST_FETCH_ROWS
-        fetch_ids = (
-            cand.select("old_id").unionByName(ident.select("old_id")).distinct()
-        )
-        if bounded:
-            pay = materialize_frame(
-                payload_src.join(
-                    F.broadcast(fetch_ids), "old_id", "semi"
-                ).dropDuplicates(["old_id"]),
-                eager=True,
-                reliable=reliable,
-            )
-        else:
-            pay = payload_src.join(fetch_ids, "old_id", "semi").dropDuplicates(
+    if cap is None:
+        return cand.join(payload_src, "old_id"), ident.join(payload_src, "old_id")
+    cand = materialize_frame(cand, eager=True, reliable=reliable)
+    ident = materialize_frame(ident, eager=True, reliable=reliable)
+    bounded = (cand.count() + ident.count()) <= _BROADCAST_FETCH_ROWS
+    fetch_ids = cand.select("old_id").unionByName(ident.select("old_id")).distinct()
+    if bounded:
+        pay = materialize_frame(
+            payload_src.join(F.broadcast(fetch_ids), "old_id", "semi").dropDuplicates(
                 ["old_id"]
-            )
-        return cand.join(pay, "old_id"), ident.join(pay, "old_id")
-    if cap is not None:
-        # lean small-store shape: banded candidates are bounded by
-        # min(batch x bands x cap, store x bands) — a hint is safe and
-        # the joins stay lazy inside the caller's one action. ident is
-        # NOT hinted (r10 ADVICE): identical-signature matches bypass
-        # the bucket cap by design, so a legacy small store holding a
-        # large identical-signature family times a template-heavy
-        # batch is |batch| x |family| rows — unbounded by the cap
-        # arithmetic above. Left unhinted, AQE sizes that join itself.
-        return (
-            F.broadcast(cand).join(payload_src, "old_id"),
-            ident.join(payload_src, "old_id"),
+            ),
+            eager=True,
+            reliable=reliable,
         )
-    return cand.join(payload_src, "old_id"), ident.join(payload_src, "old_id")
+    else:
+        pay = payload_src.join(fetch_ids, "old_id", "semi").dropDuplicates(["old_id"])
+    return cand.join(pay, "old_id"), ident.join(pay, "old_id")
 
 
 def _lean_dup_terms(
@@ -973,9 +1039,6 @@ def _spread(df: DataFrame) -> DataFrame:
 
 
 _LEAN_SCAN_PARTITIONS = 4
-
-
-from contextlib import contextmanager
 
 
 @contextmanager
@@ -1157,32 +1220,150 @@ def _identical_sig_dups(
     )
 
 
-def neardup_ingest_batch(
+def _ingest_epoch(
     spark: SparkSession,
     batch: DataFrame,
     store_dir: str,
-    threshold: float,
-    n_bits: int = 16,
-    n_bands: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_dp: int = 6,
-    band_bucket_cap: int | None | str = "auto",
-    reliable: bool = False,
+    mod: dict,
+    band_bucket_cap: int | None | str,
+    reliable: bool,
 ) -> DataFrame:
-    if _epoch_is_lean(store_dir):
-        with _static_epoch_planning(spark):
-            return _neardup_epoch(
-                spark, batch, store_dir, threshold, n_bits, n_bands,
-                id_col, vec_col, round_dp, band_bucket_cap, reliable,
-            )
-    return _neardup_epoch(
-        spark, batch, store_dir, threshold, n_bits, n_bands,
-        id_col, vec_col, round_dp, band_bucket_cap, reliable,
+    """ONE ingest epoch for every modality — ``mod`` is the modality
+    spec (_modality_spec plus the entry point's ``id_col``,
+    ``sig_frame`` and ``verify``): open the store and stamp its
+    params, build the batch signatures and resolve the hot-bucket cap,
+    take the LEAN or BIG candidate terms, apply the identical-
+    signature tier and the own-stored override, then admit the batch
+    and append its signatures to the store.
+
+    The lean-vs-big decision is ONE early-exit footer walk, taken
+    before any Spark work so a lean epoch runs under static planning
+    end to end (_static_epoch_planning); the full footer count is
+    walked only when the ``"auto"`` cap policy asks for ``n_items``."""
+    id_col, n_bands = mod["id_col"], mod["n_bands"]
+    store_dir = _open_store(store_dir)
+    store_exists = _store_has_data(store_dir)
+    big = (
+        store_exists
+        and store_fs_for(store_dir).parquet_rows(
+            store_dir, stop_at=_EAGER_SLICE_MIN_STORE_ROWS
+        )
+        >= _EAGER_SLICE_MIN_STORE_ROWS
     )
+    with nullcontext() if big else _static_epoch_planning(spark):
+        _check_store_params(store_dir, mod["params"])
+        sigs = mod["keep_sigs"](
+            _with_index_cols(mod["sig_frame"](batch), n_bands, mod["fh_cols"]),
+            reliable,
+        )
+        if band_bucket_cap == "auto":
+            # footer counts include retry-duplicated rows until
+            # compaction — fine, the cap needs order-of-magnitude
+            # accuracy only
+            cap = mod["cap_for"](lambda: sigs.count() + _store_row_count(store_dir))
+        else:
+            cap = _resolve_ingest_cap(band_bucket_cap, 2, n_bands, None)
+        hist = spark.read.parquet(store_dir) if store_exists else None
+
+        def payload(src, renames, id_alias):
+            return src.select(
+                F.col(id_col).alias(id_alias),
+                *[F.col(c).alias(a) for c, a in renames.items()],
+            )
+
+        def as_id(df):
+            return df.select(F.col("new_id").alias(id_col))
+
+        new_pay = payload(sigs, mod["payload_new"], "new_id")
+        verify = mod["verify"]
+        conf = None
+        if not big:
+            # LEAN micro-batch shape (r12): payloads carried through
+            # the within-batch band self-join, no intermediate
+            # .distinct()s — see _lean_dup_terms
+            wb_pairs, hist_pairs, ident_pairs = _lean_dup_terms(
+                spark, store_dir, hist, sigs, id_col, mod, cap
+            )
+            dup_ids = as_id(wb_pairs.filter(verify))
+            if hist_pairs is not None:
+                dup_ids = dup_ids.unionByName(
+                    as_id(hist_pairs.join(new_pay, "new_id").filter(verify))
+                )
+                conf = ident_pairs.join(new_pay, "new_id")
+        else:
+            # MATERIALIZED big-store shape (>= _EAGER_SLICE_MIN_STORE_ROWS
+            # footer rows): within-batch candidates over the hashed band
+            # keys (earlier id is the incumbent), and ONE fused store
+            # touch (r9 verdict task 1) for the banded candidates, the
+            # over-cap histogram, identical-signature matches and the
+            # own-stored override — _hist_dup_terms
+            batch_bands = _bands_hash_long(sigs, n_bands, id_col, mod["fh_cols"])
+            wb = batch_bands.select(id_col, "band", F.col("bh").alias("sig"))
+            cands = _band_pairs(
+                wb, wb, id_col, within_batch=True, band_bucket_cap=cap
+            ).join(payload(sigs, mod["payload"], "old_id"), "old_id")
+            cand_pay, ident_pay = _hist_dup_terms(
+                spark, store_dir, hist, sigs, batch_bands, id_col, mod, cap,
+                reliable=reliable,
+            )
+            cands = cands.unionByName(cand_pay.select(*cands.columns))
+            conf = ident_pay.join(new_pay, "new_id")
+            dup_ids = as_id(cands.join(new_pay, "new_id").filter(verify)).distinct()
+        own_stored = sig_stored = None
+        if conf is not None:
+            # full-signature-hash matches confirmed by exact payload
+            # equality, split into stored dups and the own-stored set
+            conf = conf.filter(mod["exact_eq"]())
+            own_stored = as_id(conf.filter(F.col("old_id") == F.col("new_id")))
+            sig_stored = as_id(conf.filter(F.col("old_id") != F.col("new_id")))
+            if big:
+                own_stored, sig_stored = own_stored.distinct(), sig_stored.distinct()
+        if mod["ident_rows"] is not None:
+            # identical-signature tier: exact duplicates under the
+            # modality's own verifier, within the batch by a groupBy
+            # (no pair join) and vs history through the confirmed
+            # matches above — so a template family dedups to ONE
+            # stored representative even when its band bucket is capped
+            dup_ids = dup_ids.unionByName(
+                _identical_sig_dups(mod["ident_rows"](sigs), id_col, mod["fh_cols"])
+            )
+            if sig_stored is not None:
+                dup_ids = dup_ids.unionByName(sig_stored)
+            if big:
+                dup_ids = dup_ids.distinct()
+        if own_stored is not None:
+            # at-least-once override: a row whose own (id, payload) is
+            # already stored was admitted by an earlier attempt and
+            # must be re-emitted whatever it now collides with
+            dup_ids = dup_ids.join(F.broadcast(own_stored), id_col, "left_anti")
+        # NOTE: within-batch suppression is vs earlier-id rows
+        # regardless of whether the earlier row itself gets suppressed
+        # — a chain a~b~c (a<b<c, a!~c) admits only a. That is the
+        # transitive-closure contract of dedup_clusters (operators/
+        # components.py); the conservative form drops more, never
+        # less, and stays single-pass (no iteration inside a
+        # streaming batch). Materialized ONCE: the store append below
+        # and the caller's downstream write both reuse it.
+        admitted = materialize_frame(
+            batch.join(dup_ids, id_col, "left_anti"), eager=True, reliable=reliable
+        )
+        # reuse the kept batch signatures for the append (r11):
+        # the semi-join slices the admitted rows out of `sigs` instead
+        # of recomputing the signature stage
+        admitted_sigs = sigs.join(admitted.select(id_col), id_col)
+        if store_exists and not _store_is_v2(hist):
+            # appends always match the store's existing schema, so a
+            # store is never mixed-version (compact_store upgrades
+            # atomically)
+            admitted_sigs = admitted_sigs.drop(
+                "fh", *[f"bh{bi}" for bi in range(n_bands)]
+            )
+        admitted_sigs.write.mode("append").parquet(store_dir)
+        sigs.unpersist()  # a no-op unless keep_sigs cached the frame
+    return admitted
 
 
-def _neardup_epoch(
+def neardup_ingest_batch(
     spark: SparkSession,
     batch: DataFrame,
     store_dir: str,
@@ -1229,51 +1410,6 @@ def _neardup_epoch(
     disables the cap explicitly (the shortcut stays).
     ``reliable=True`` as in textdup_ingest_batch (DFS checkpoints
     for scheduled pipelines needing within-job recovery)."""
-    from pyspark import StorageLevel
-
-    spec = _modality_spec(
-        {"modality": "srp", "n_bits": n_bits, "n_bands": n_bands}
-    )
-    sigs = _with_index_cols(
-        _sig_frame(batch, n_bits, n_bands, id_col, vec_col),
-        n_bands,
-        spec["fh_cols"],
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-
-    store_dir = _open_store(store_dir)
-    _check_store_params(
-        store_dir, {"modality": "srp", "n_bits": n_bits, "n_bands": n_bands}
-    )
-    store_rows = _store_row_count(store_dir)  # footer metadata, no scan
-    if band_bucket_cap == "auto":
-        # the batch count materializes the persisted signature frame
-        # it would compute anyway. SRP bands carry n_bits sign bits
-        # per band.
-        n_items = sigs.count() + store_rows
-        band_bucket_cap = _resolve_ingest_cap(
-            "auto", n_items, n_bands, bucket_space_bits=n_bits
-        )
-    else:
-        band_bucket_cap = _resolve_ingest_cap(band_bucket_cap, 2, n_bands, n_bits)
-    store_exists = _store_has_data(store_dir)
-    hist = spark.read.parquet(store_dir) if store_exists else None
-
-    new_pay = sigs.select(
-        F.col(id_col).alias("new_id"),
-        F.col("v").alias("v_new"),
-        F.col("nrm").alias("n_new"),
-    )
-    # full-signature matches are confirmed by EXACT vector equality
-    # (cos(v, v) = 1.0 for finite nonzero v; undefined cosines must
-    # never suppress, so zero-norm/NaN rows are excluded on BOTH
-    # sides — the shortcut's finite_pos rule)
-    exact_eq = (
-        (F.col("v_new") == F.col("v_old"))
-        & (F.col("n_new") > 0)
-        & ~F.isnan("n_new")
-        & (F.col("n_old") > 0)
-        & ~F.isnan("n_old")
-    )
     # try_divide: a zero-norm vector's cosine is UNDEFINED — NULL
     # fails the >= threshold filter, so degenerate vectors are
     # admitted rather than crashing the batch (ANSI mode raises on
@@ -1286,130 +1422,25 @@ def _neardup_epoch(
         ),
         round_dp,
     )
-    # ~isnan: NaN-normed vectors have cos = NaN, and Spark orders
-    # NaN above every number (NaN >= t is TRUE) — without the guard
-    # the banded path would suppress rows whose cosine is undefined,
-    # the exact invariant the shortcut's finite_pos filter enforces
-    # (2nd review pass, r9). try_divide's NULL (zero norm) already
-    # fails the >= filter on its own.
-    verify = (cos >= threshold) & ~F.isnan(cos)
-    big = store_exists and store_rows >= _EAGER_SLICE_MIN_STORE_ROWS
-    if not big:
-        # LEAN micro-batch shape (r12) — see _lean_dup_terms and the
-        # text twin's branch notes; pinned equal to the big shape in
-        # tests/test_store_v2.py
-        wb_pairs, hist_pairs, ident_pairs = _lean_dup_terms(
-            spark, store_dir, hist if store_exists else None, sigs,
-            id_col, spec, band_bucket_cap,
-        )
-        dup_ids = wb_pairs.filter(verify).select(F.col("new_id").alias(id_col))
-        own_stored = sig_stored = None
-        if hist_pairs is not None:
-            hp = hist_pairs.join(new_pay, "new_id")
-            dup_ids = dup_ids.unionByName(
-                hp.filter(verify).select(F.col("new_id").alias(id_col))
-            )
-            conf = ident_pairs.join(new_pay, "new_id").filter(exact_eq)
-            own_stored = conf.filter(
-                F.col("old_id") == F.col("new_id")
-            ).select(F.col("new_id").alias(id_col))
-            sig_stored = conf.filter(
-                F.col("old_id") != F.col("new_id")
-            ).select(F.col("new_id").alias(id_col))
-    else:
-        # MATERIALIZED big-store shape — unchanged from r11
-        batch_bands = _bands_hash_long(sigs, n_bands, id_col, spec["fh_cols"])
-        old_payload = lambda src: src.select(  # noqa: E731
-            F.col(id_col).alias("old_id"),
-            F.col("v").alias("v_old"),
-            F.col("nrm").alias("n_old"),
-        )
-        # within-batch candidates: earlier id is the incumbent (hashed
-        # long band keys — same buckets as the store touch)
-        wb = batch_bands.select(id_col, "band", F.col("bh").alias("sig"))
-        cands = _band_pairs(
-            wb, wb, id_col, within_batch=True, band_bucket_cap=band_bucket_cap
-        ).join(old_payload(sigs), "old_id")
-        # ONE fused store touch (r9 verdict task 1): banded candidates,
-        # the over-cap histogram, identical-signature matches and the
-        # own-stored override all come from _hist_dup_terms' narrow
-        # checkpointed slice + bounded payload fetch
-        cand_pay, ident_pay = _hist_dup_terms(
-            spark, store_dir, hist, sigs, batch_bands, id_col, spec,
-            band_bucket_cap, store_rows=store_rows, reliable=reliable,
-        )
-        cands = cands.unionByName(cand_pay.select(*cands.columns))
-        conf = ident_pay.join(new_pay, "new_id").filter(exact_eq)
-        own_stored = (
-            conf.filter(F.col("old_id") == F.col("new_id"))
-            .select(F.col("new_id").alias(id_col))
-            .distinct()
-        )
-        sig_stored = (
-            conf.filter(F.col("old_id") != F.col("new_id"))
-            .select(F.col("new_id").alias(id_col))
-            .distinct()
-        )
-        dup_ids = (
-            cands.join(new_pay, "new_id")
-            .filter(verify)
-            .select(F.col("new_id").alias(id_col))
-            .distinct()
-        )
-    if threshold <= 1.0:
-        # exact-duplicate shortcut — the SRP analog of the text/image
-        # identical-signature tier (r8 ADVICE): sign-band equality
-        # does NOT imply cosine >= threshold, but exact VECTOR
-        # equality does (cos(v, v) = 1.0 after round_dp rounding for
-        # any finite nonzero v), so a degenerate identical-embedding
-        # family larger than the bucket cap still dedups and stores
-        # ONE representative. Within-batch by vector-equality groupBy
-        # (no pair join); vs history through the confirmed
-        # full-signature-hash matches above. threshold > 1.0 admits
-        # everything by definition; the guard keeps the shortcut
-        # subordinate to the verifier's semantics.
-        finite_pos = (F.col("nrm") > 0) & ~F.isnan("nrm")
-        elig = sigs.filter(finite_pos).select(id_col, "v")
-        dup_ids = dup_ids.unionByName(
-            _identical_sig_dups(elig, id_col, ["v"])
-        )
-        if sig_stored is not None:
-            dup_ids = dup_ids.unionByName(sig_stored)
-        if big:
-            dup_ids = dup_ids.distinct()
-    if own_stored is not None:
-        # at-least-once override: a row whose own (id, vector) is
-        # already stored was admitted by an earlier attempt and must
-        # be re-emitted whatever it now collides with
-        dup_ids = dup_ids.join(F.broadcast(own_stored), id_col, "left_anti")
-    # NOTE: within-batch suppression is vs earlier-id rows regardless
-    # of whether the earlier row itself gets suppressed — a chain
-    # a~b~c (a<b<c, a!~c) admits only a. That is the transitive-
-    # closure contract of dedup_clusters (operators/components.py);
-    # the conservative form drops more, never less, and stays
-    # single-pass (no iteration inside a streaming batch).
-    admitted = batch.join(dup_ids, id_col, "left_anti")
-    # materialize ONCE (executor-local checkpoint; reliable=True takes
-    # the DFS spelling): the store append below and the caller's
-    # downstream write both reuse it — without this, the caller's
-    # action re-runs the whole history join + verification after sigs
-    # is unpersisted
-    admitted = materialize_frame(admitted, eager=True, reliable=reliable)
-    # reuse the persisted batch signature frame for the append (r11):
-    # recomputing _sig_frame(admitted) re-ran the whole per-row
-    # projection stage a second time per epoch; the semi-join slices
-    # the identical rows out of `sigs` instead (bit-identical — same
-    # computed frame, admitted ids only)
-    admitted_sigs = sigs.join(admitted.select(id_col), id_col)
-    if store_exists and not _store_is_v2(hist):
-        # appends always match the store's existing schema, so a store
-        # is never mixed-version (compact_store upgrades atomically)
-        admitted_sigs = admitted_sigs.drop(
-            "fh", *[f"bh{bi}" for bi in range(n_bands)]
-        )
-    admitted_sigs.write.mode("append").parquet(store_dir)
-    sigs.unpersist()
-    return admitted
+    mod = _modality_spec(
+        {"modality": "srp", "n_bits": n_bits, "n_bands": n_bands}
+    ) | {
+        "id_col": id_col,
+        "sig_frame": lambda b: _sig_frame(b, n_bits, n_bands, id_col, vec_col),
+        # ~isnan: NaN-normed vectors have cos = NaN, and Spark orders
+        # NaN above every number (NaN >= t is TRUE) — without the
+        # guard the banded path would suppress rows whose cosine is
+        # undefined (2nd review pass, r9)
+        "verify": (cos >= threshold) & ~F.isnan(cos),
+    }
+    if threshold > 1.0:
+        # sign-band equality does NOT imply cosine >= threshold, but
+        # exact vector equality does (cos(v, v) = 1.0 after round_dp
+        # rounding for finite nonzero v) — except that threshold > 1.0
+        # admits everything by definition: the identical-vector tier
+        # stays subordinate to the verifier's semantics
+        mod["ident_rows"] = None
+    return _ingest_epoch(spark, batch, store_dir, mod, band_bucket_cap, reliable)
 
 
 _PARAMS_FILE = "_LSH_PARAMS.json"
@@ -1653,7 +1684,8 @@ def compact_store(
     Contract (narrower than layout.compact, which is read-concurrent):
     ingest must be PAUSED during compaction — there is exactly one
     writer by design (the sequential foreachBatch loop), so pausing is
-    the natural maintenance window. Two swap protocols by layout:
+    the natural maintenance window. Two swap protocols by layout,
+    both through storefs.swap_table_dir:
 
     - CLASSIC stores: the crash-safe two-RENAME directory swap (POSIX
       rename on bare paths, the pyarrow adapter's atomic namenode
@@ -1669,22 +1701,13 @@ def compact_store(
 
     Returns the ACTUAL compacted file count."""
     from file_appender_spark.operators.layout import dir_bytes, plan_file_count
-
-    from file_appender_spark.storefs import assert_no_inflight_write
+    from file_appender_spark.storefs import assert_no_inflight_write, swap_table_dir
 
     fs = store_fs_for(store_dir)
-    manifest_cur = _manifest_version(store_dir)
-    if manifest_cur is None:
+    if _manifest_version(store_dir) is None:
         require_atomic_dir_rename(fs, store_dir, "classic-layout compact_store")
         _recover_store(store_dir)
-        data_dir = store_dir
-        tmp = store_dir.rstrip("/") + ".compacting"
-        if fs.exists(tmp):
-            fs.rmtree(tmp)  # leftover from an interrupted compaction
-    else:
-        _clean_stale_versions(store_dir, keep=manifest_cur)
-        data_dir = os.path.join(store_dir, manifest_cur)
-        tmp = os.path.join(store_dir, f"v{int(manifest_cur[1:]) + 1}")
+    data_dir = _resolve_store(store_dir)
     # single-writer window invariant (r9 verdict task 7): an in-flight
     # ingest append leaves _temporary under the store while it runs
     assert_no_inflight_write(fs, data_dir)
@@ -1709,36 +1732,21 @@ def compact_store(
         dir_bytes(spark, idx_dir) if fs.exists(idx_dir) else 0
     )
     n = plan_file_count(int(wide_bytes * frac), target_file_mb)
-    df.dropDuplicates([id_col]).repartition(n).write.mode("overwrite").parquet(tmp)
-    # the LSH-params stamp must survive the swap, or the next ingest
-    # batch would re-stamp with whatever params it happens to pass
-    if fs.exists(params_src):
-        fs.copy_file(params_src, os.path.join(tmp, _PARAMS_FILE))
-    if spec is not None and index_buckets is not None:
-        # built inside the next/tmp dir BEFORE the swap: file names
-        # survive both swap protocols, so the meta's covers list stays
-        # exact
-        build_band_index(spark, tmp, id_col, n_buckets=index_buckets)
-    if manifest_cur is None:
-        old = store_dir.rstrip("/") + ".old"
-        if fs.exists(old):
-            fs.rmtree(old)
-        fs.rename(store_dir, old)
-        fs.rename(tmp, store_dir)
-        fs.rmtree(old)
-        live = store_dir
-    else:
-        # THE swap: one atomic publish; the old version dir stays fully
-        # readable until this lands, then becomes deletable debris
-        fs.publish_text(
-            os.path.join(store_dir, _CURRENT_FILE), os.path.basename(tmp)
-        )
-        fs.rmtree(data_dir)
-        live = tmp
-    return sum(
-        1 for f in fs.listdir(live)
-        if f.endswith(".parquet") and not f.startswith((".", "_"))
-    )
+
+    def write(tmp: str) -> None:
+        df.dropDuplicates([id_col]).repartition(n).write.mode("overwrite").parquet(tmp)
+        # the LSH-params stamp must survive the swap, or the next ingest
+        # batch would re-stamp with whatever params it happens to pass
+        if spec is not None:
+            fs.copy_file(params_src, os.path.join(tmp, _PARAMS_FILE))
+            if index_buckets is not None:
+                # built inside the next/tmp dir BEFORE the swap: file
+                # names survive both swap protocols, so the meta's
+                # covers list stays exact
+                build_band_index(spark, tmp, id_col, n_buckets=index_buckets)
+
+    swap_table_dir(store_dir, write)
+    return len(_wide_files(_resolve_store(store_dir)))
 
 
 # --------------------------------------------------------------------------
@@ -1931,48 +1939,7 @@ def _minhash_sig_frame(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-def _epoch_is_lean(store_dir: str) -> bool:
-    """The lean-vs-big branch condition, computed cheaply (early-exit
-    footer walk) BEFORE an epoch starts so the public entry points can
-    enter static planning around the whole lean epoch. The impl
-    re-derives the same facts (idempotent file ops, no Spark jobs)."""
-    store_dir = _open_store(store_dir)
-    if not _store_has_data(store_dir):
-        return True
-    return (
-        store_fs_for(store_dir).parquet_rows(
-            store_dir, stop_at=_EAGER_SLICE_MIN_STORE_ROWS
-        )
-        < _EAGER_SLICE_MIN_STORE_ROWS
-    )
-
-
 def textdup_ingest_batch(
-    spark: SparkSession,
-    batch: DataFrame,
-    store_dir: str,
-    threshold: float = 0.5,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    band_bucket_cap: int | None | str = "auto",
-    reliable: bool = False,
-) -> DataFrame:
-    if _epoch_is_lean(store_dir):
-        # micro-batch-bounded epoch: static planning (see
-        # _static_epoch_planning — AQE's per-Exchange driver round
-        # trips were the measured epoch floor, r12 verdict item 3)
-        with _static_epoch_planning(spark):
-            return _textdup_epoch(
-                spark, batch, store_dir, threshold, id_col, text_col,
-                band_bucket_cap, reliable,
-            )
-    return _textdup_epoch(
-        spark, batch, store_dir, threshold, id_col, text_col,
-        band_bucket_cap, reliable,
-    )
-
-
-def _textdup_epoch(
     spark: SparkSession,
     batch: DataFrame,
     store_dir: str,
@@ -2012,38 +1979,6 @@ def _textdup_epoch(
     is the measured-faster interactive spelling."""
     from file_appender_spark.queries.llm import _MH_PARAMS
 
-    n_bands = len(_MH_PARAMS) // 4
-    spec = _modality_spec(
-        {"modality": "minhash", "n_slots": len(_MH_PARAMS), "n_bands": n_bands}
-    )
-    store_dir = _open_store(store_dir)
-    _check_store_params(
-        store_dir,
-        {"modality": "minhash", "n_slots": len(_MH_PARAMS), "n_bands": n_bands},
-    )
-    # eager localCheckpoint, NOT a lazy persist (re-measured r11): a
-    # persisted frame with five consumers inside one epoch DAG loses
-    # 30-40% wall to cache-population effects (measured 550-630 ->
-    # ~420 docs/s idle at sf0.1), so the dedicated materialization
-    # job earns its ~0.3-0.5s
-    sigs = _compact_scan(
-        materialize_frame(
-            _with_index_cols(
-                minhash_signatures(batch, id_col, text_col),
-                n_bands,
-                spec["fh_cols"],
-            ),
-            eager=True,
-            reliable=reliable,
-        )
-    )
-    # MinHash band space is effectively unbounded (four 32-bit slots),
-    # so the sized policy is the count-free candidate budget — no
-    # batch count, no store-size lookup (unlike the SRP/image
-    # modalities, whose finite band spaces make the expected-
-    # population floor count-dependent)
-    band_bucket_cap = _resolve_ingest_cap(band_bucket_cap, 2, n_bands, None)
-
     est_jacc = _VERIFY_COLS_CACHE.get("est_jacc")
     if est_jacc is None:
         est_jacc = (
@@ -2055,143 +1990,15 @@ def _textdup_epoch(
             / F.size("mh_new")
         )
         _VERIFY_COLS_CACHE["est_jacc"] = est_jacc
-
-    store_exists = _store_has_data(store_dir)
-    hist = spark.read.parquet(store_dir) if store_exists else None
-    # big-vs-lean threshold check only — early-exit footer walk, so a
-    # store with thousands of pre-compaction appends never pays a
-    # footer read per file here
-    store_rows = (
-        store_fs_for(store_dir).parquet_rows(
-            store_dir, stop_at=_EAGER_SLICE_MIN_STORE_ROWS
-        )
-        if store_exists
-        else 0
-    )
-    sig_cols = [f"b{bi}" for bi in range(n_bands)]
-    big = store_exists and store_rows >= _EAGER_SLICE_MIN_STORE_ROWS
-    if not big:
-        # LEAN micro-batch shape (r12): payloads carried through the
-        # within-batch band self-join, no intermediate .distinct()s,
-        # suppression assembled by two left_antis — see _lean_dup_terms
-        wb_pairs, hist_pairs, ident_pairs = _lean_dup_terms(
-            spark, store_dir, hist if store_exists else None, sigs,
-            id_col, spec, band_bucket_cap,
-        )
-        new_pay = sigs.select(
-            F.col(id_col).alias("new_id"), F.col("mh").alias("mh_new")
-        )
-        dup_ids = wb_pairs.filter(est_jacc >= threshold).select(
-            F.col("new_id").alias(id_col)
-        )
-        own_stored = None
-        if hist_pairs is not None:
-            hp = hist_pairs.join(new_pay, "new_id")
-            dup_ids = dup_ids.unionByName(
-                hp.filter(est_jacc >= threshold).select(
-                    F.col("new_id").alias(id_col)
-                )
-            )
-            # full-signature-hash matches confirmed by exact mh
-            # equality (all 16 slots agree <=> all four band
-            # signatures agree — the 64-bit fh only prunes, never
-            # decides a suppression)
-            conf = ident_pairs.join(new_pay, "new_id").filter(
-                F.col("mh_new") == F.col("mh_old")
-            )
-            own_stored = conf.filter(
-                F.col("old_id") == F.col("new_id")
-            ).select(F.col("new_id").alias(id_col))
-            dup_ids = dup_ids.unionByName(
-                conf.filter(F.col("old_id") != F.col("new_id")).select(
-                    F.col("new_id").alias(id_col)
-                )
-            )
-        # identical-signature dups (estimated Jaccard exactly 1.0) by
-        # signature equality — no pair join, so a template family is
-        # deduped even when its band bucket is capped (see the big
-        # branch's notes; semantics identical)
-        dup_ids = dup_ids.unionByName(
-            _identical_sig_dups(sigs, id_col, sig_cols)
-        )
-        if own_stored is not None:
-            # at-least-once override: a row whose own (id, signature)
-            # is already stored was admitted by an earlier attempt and
-            # must be re-emitted whatever it now collides with
-            dup_ids = dup_ids.join(
-                F.broadcast(own_stored), id_col, "left_anti"
-            )
-    else:
-        # MATERIALIZED big-store shape (>= _EAGER_SLICE_MIN_STORE_ROWS
-        # footer rows): checkpointed slice/candidates + the exact-count
-        # broadcast gate — unchanged from r11; the lean twin above is
-        # pinned equal in tests/test_store_v2.py
-        batch_bands = _bands_hash_long(sigs, n_bands, id_col, spec["fh_cols"])
-        wb = batch_bands.select(id_col, "band", F.col("bh").alias("sig"))
-        cands = _band_pairs(
-            wb, wb, id_col, within_batch=True, band_bucket_cap=band_bucket_cap
-        ).join(
-            sigs.select(F.col(id_col).alias("old_id"), F.col("mh").alias("mh_old")),
-            "old_id",
-        )
-        # ONE fused store touch (r9 verdict task 1): banded candidates,
-        # over-cap histogram, identical-signature matches and the
-        # own-stored override all derive from _hist_dup_terms' narrow
-        # checkpointed slice + bounded payload fetch
-        cand_pay, ident_pay = _hist_dup_terms(
-            spark, store_dir, hist, sigs, batch_bands, id_col, spec,
-            band_bucket_cap, store_rows=store_rows, reliable=reliable,
-        )
-        cands = cands.unionByName(cand_pay.select(*cands.columns))
-        # full-signature-hash matches confirmed by exact mh equality
-        conf = ident_pay.join(
-            sigs.select(F.col(id_col).alias("new_id"), F.col("mh").alias("mh_new")),
-            "new_id",
-        ).filter(F.col("mh_new") == F.col("mh_old"))
-        own_stored = (
-            conf.filter(F.col("old_id") == F.col("new_id"))
-            .select(F.col("new_id").alias(id_col))
-            .distinct()
-        )
-        sig_stored = (
-            conf.filter(F.col("old_id") != F.col("new_id"))
-            .select(F.col("new_id").alias(id_col))
-            .distinct()
-        )
-        dup_ids = (
-            cands.join(
-                sigs.select(
-                    F.col(id_col).alias("new_id"), F.col("mh").alias("mh_new")
-                ),
-                "new_id",
-            )
-            .filter(est_jacc >= threshold)
-            .select(F.col("new_id").alias(id_col))
-            .distinct()
-        )
-        # identical-signature dups (estimated Jaccard exactly 1.0) by
-        # signature equality — no pair join, so a template family is
-        # deduped even when its band bucket is capped, and only ONE
-        # representative ever reaches the store. Within-batch via the
-        # groupBy shortcut; vs history via the confirmed fh matches.
-        dup_ids = dup_ids.unionByName(
-            _identical_sig_dups(sigs, id_col, sig_cols)
-        )
-        dup_ids = dup_ids.unionByName(sig_stored).distinct()
-        # at-least-once override (see the lean branch's note)
-        dup_ids = dup_ids.join(F.broadcast(own_stored), id_col, "left_anti")
-    admitted = materialize_frame(
-        batch.join(dup_ids, id_col, "left_anti"), eager=True, reliable=reliable
-    )
-    admitted_sigs = sigs.join(admitted.select(id_col), id_col)
-    if store_exists and not _store_is_v2(hist):
-        # appends always match the store's existing schema, so a store
-        # is never mixed-version (compact_store upgrades atomically)
-        admitted_sigs = admitted_sigs.drop(
-            "fh", *[f"bh{bi}" for bi in range(n_bands)]
-        )
-    admitted_sigs.write.mode("append").parquet(store_dir)
-    return admitted
+    n_slots = len(_MH_PARAMS)
+    mod = _modality_spec(
+        {"modality": "minhash", "n_slots": n_slots, "n_bands": n_slots // 4}
+    ) | {
+        "id_col": id_col,
+        "sig_frame": lambda b: minhash_signatures(b, id_col, text_col),
+        "verify": est_jacc >= threshold,
+    }
+    return _ingest_epoch(spark, batch, store_dir, mod, band_bucket_cap, reliable)
 
 
 # --------------------------------------------------------------------------
@@ -2200,29 +2007,6 @@ def _textdup_epoch(
 
 
 def imagedup_ingest_batch(
-    spark: SparkSession,
-    batch: DataFrame,
-    store_dir: str,
-    max_hamming: int = 8,
-    id_col: str = "doc_id",
-    payload_col: str = "payload",
-    hash_mode: str = "ahash",
-    band_bucket_cap: int | None | str = "auto",
-    reliable: bool = False,
-) -> DataFrame:
-    if _epoch_is_lean(store_dir):
-        with _static_epoch_planning(spark):
-            return _imagedup_epoch(
-                spark, batch, store_dir, max_hamming, id_col, payload_col,
-                hash_mode, band_bucket_cap, reliable,
-            )
-    return _imagedup_epoch(
-        spark, batch, store_dir, max_hamming, id_col, payload_col,
-        hash_mode, band_bucket_cap, reliable,
-    )
-
-
-def _imagedup_epoch(
     spark: SparkSession,
     batch: DataFrame,
     store_dir: str,
@@ -2262,168 +2046,27 @@ def _imagedup_epoch(
     (at-least-once, see _band_pairs). ``None`` disables the cap
     explicitly (the shortcut stays). ``reliable=True`` as in
     textdup_ingest_batch (DFS checkpoints for scheduled pipelines)."""
-    from file_appender_spark.operators.imagehash import band_bucket_cap_for
+    # Both modes take the vectorized Arrow signature stage (r12, guide
+    # §4.2): one mapInArrow pass computes the strided cells +
+    # threshold bits per payload in numpy int64 — BIT-IDENTICAL to the
+    # exploded references (ahash_wide / dhash_wide /
+    # ahash_ingest_sigs_sql), pinned in tests/test_imagehash.py;
+    # measured 0.75 -> 0.37s (aHash) and 0.97 -> 0.39s (dHash) per
+    # 2500-payload batch (ARROW_SIGS_PROBE_r12)
+    from file_appender_spark.operators.imagehash import image_sigs_arrow
 
     if hash_mode not in ("ahash", "dhash"):
         raise ValueError(f"hash_mode must be 'ahash' or 'dhash', got {hash_mode!r}")
-    n_bands = 4
-    spec = _modality_spec({"modality": hash_mode})
-    store_dir = _open_store(store_dir)
-    _check_store_params(
-        store_dir, {"modality": hash_mode, "grid": 64, "band_bits": 16}
-    )
-    # eager localCheckpoint, NOT a lazy persist — the text twin's note.
-    # Both modes take the vectorized Arrow signature stage (r12,
-    # guide §4.2): one mapInArrow pass computes the strided cells +
-    # threshold bits per payload in numpy int64 — no per-byte explode,
-    # no aggregation exchanges (the exploded spelling's two shuffled
-    # aggregations were the epoch's largest real-work term). Values
-    # are BIT-IDENTICAL to the exploded references (ahash_wide /
-    # dhash_wide / ahash_ingest_sigs_sql), pinned in
-    # tests/test_imagehash.py; measured 0.75 -> 0.37s (aHash) and
-    # 0.97 -> 0.39s (dHash) per 2500-payload batch
-    # (ARROW_SIGS_PROBE_r12). The index columns stay a JVM projection
-    # (xxhash64 must match stored v2 signatures exactly).
-    from file_appender_spark.operators.imagehash import image_sigs_arrow
-
-    sig_plan = _with_index_cols(
-        image_sigs_arrow(_spread(batch), id_col, payload_col, hash_mode),
-        n_bands,
-        spec["fh_cols"],
-    )
-    sigs = _compact_scan(
-        materialize_frame(sig_plan, eager=True, reliable=reliable)
-    )
-
     hamming = sum(
         F.bit_count(F.col(f"nb{k}").bitwiseXOR(F.col(f"ob{k}"))) for k in range(4)
     )
-
-    store_exists = _store_has_data(store_dir)
-    old_cols = lambda src: src.select(  # noqa: E731
-        F.col(id_col).alias("old_id"),
-        *[F.col(f"b{k}").alias(f"ob{k}") for k in range(4)],
-    )
-    hist = spark.read.parquet(store_dir) if store_exists else None
-    store_rows = _store_row_count(store_dir)  # footer metadata, no scan
-    if band_bucket_cap == "auto":
-        # sized from the footer count + the batch's checkpointed
-        # signature count — the cap needs order-of-magnitude accuracy
-        # only, so footer counts (which include retry-duplicated rows
-        # until compaction) are fine
-        n_items = sigs.count() + store_rows
-        cap = band_bucket_cap_for(max(n_items, 2), grid=64)
-    elif isinstance(band_bucket_cap, str):
-        raise ValueError(
-            "band_bucket_cap must be 'auto', None, or an int, got "
-            f"{band_bucket_cap!r}"
-        )
-    else:
-        cap = band_bucket_cap
-    sig_cols = [f"b{k}" for k in range(4)]
-    new_pay = sigs.select(
-        F.col(id_col).alias("new_id"),
-        *[F.col(f"b{k}").alias(f"nb{k}") for k in range(4)],
-    )
-    exact_eq = (
-        sum((F.col(f"nb{k}") != F.col(f"ob{k}")).cast("int") for k in range(4))
-        == 0
-    )
-    big = hist is not None and store_rows >= _EAGER_SLICE_MIN_STORE_ROWS
-    if not big:
-        # LEAN micro-batch shape (r12) — see _lean_dup_terms and the
-        # text twin's branch notes; semantics pinned equal to the big
-        # shape in tests/test_store_v2.py
-        wb_pairs, hist_pairs, ident_pairs = _lean_dup_terms(
-            spark, store_dir, hist, sigs, id_col, spec, cap
-        )
-        dup_ids = wb_pairs.filter(hamming <= max_hamming).select(
-            F.col("new_id").alias(id_col)
-        )
-        own_stored = None
-        if hist_pairs is not None:
-            hp = hist_pairs.join(new_pay, "new_id")
-            dup_ids = dup_ids.unionByName(
-                hp.filter(hamming <= max_hamming).select(
-                    F.col("new_id").alias(id_col)
-                )
-            )
-            # fh matches confirmed by exact band equality (Hamming 0)
-            # — the 64-bit fh only prunes, never decides a suppression
-            conf = ident_pairs.join(new_pay, "new_id").filter(exact_eq)
-            own_stored = conf.filter(
-                F.col("old_id") == F.col("new_id")
-            ).select(F.col("new_id").alias(id_col))
-            dup_ids = dup_ids.unionByName(
-                conf.filter(F.col("old_id") != F.col("new_id")).select(
-                    F.col("new_id").alias(id_col)
-                )
-            )
-        # identical-hash dups (Hamming exactly 0) via signature-
-        # equality groupBy within the batch — the flat-image family
-        # dedups even when its band bucket is capped
-        dup_ids = dup_ids.unionByName(
-            _identical_sig_dups(sigs, id_col, sig_cols)
-        )
-        if own_stored is not None:
-            # at-least-once override: a row whose own (id, hash) is
-            # already stored was admitted by an earlier attempt and
-            # must be re-emitted whatever it now collides with
-            dup_ids = dup_ids.join(
-                F.broadcast(own_stored), id_col, "left_anti"
-            )
-    else:
-        # MATERIALIZED big-store shape — unchanged from r11
-        batch_bands = _bands_hash_long(sigs, n_bands, id_col, spec["fh_cols"])
-        wb = batch_bands.select(id_col, "band", F.col("bh").alias("sig"))
-        cands = _band_pairs(
-            wb, wb, id_col, within_batch=True, band_bucket_cap=cap
-        ).join(old_cols(sigs), "old_id")
-        # ONE fused store touch (r9 verdict task 1) — see _hist_dup_terms
-        cand_pay, ident_pay = _hist_dup_terms(
-            spark, store_dir, hist, sigs, batch_bands, id_col, spec, cap,
-            store_rows=store_rows, reliable=reliable,
-        )
-        cands = cands.unionByName(cand_pay.select(*cands.columns))
-        # fh matches confirmed by exact band equality (Hamming 0)
-        conf = ident_pay.join(new_pay, "new_id").filter(exact_eq)
-        own_stored = (
-            conf.filter(F.col("old_id") == F.col("new_id"))
-            .select(F.col("new_id").alias(id_col))
-            .distinct()
-        )
-        sig_stored = (
-            conf.filter(F.col("old_id") != F.col("new_id"))
-            .select(F.col("new_id").alias(id_col))
-            .distinct()
-        )
-        dup_ids = (
-            cands.join(new_pay, "new_id")
-            .filter(hamming <= max_hamming)
-            .select(F.col("new_id").alias(id_col))
-            .distinct()
-        )
-        # identical-hash dups via the groupBy shortcut + confirmed fh
-        # matches (see the text twin's notes)
-        dup_ids = dup_ids.unionByName(
-            _identical_sig_dups(sigs, id_col, sig_cols)
-        )
-        dup_ids = dup_ids.unionByName(sig_stored).distinct()
-        dup_ids = dup_ids.join(F.broadcast(own_stored), id_col, "left_anti")
-    admitted = materialize_frame(
-        batch.join(dup_ids, id_col, "left_anti"), eager=True, reliable=reliable
-    )
-    admitted_sigs = sigs.join(admitted.select(id_col), id_col)
-    if store_exists and not _store_is_v2(hist):
-        admitted_sigs = admitted_sigs.drop(
-            "fh", *[f"bh{bi}" for bi in range(n_bands)]
-        )
-    admitted_sigs.write.mode("append").parquet(store_dir)
-    return admitted
-
-
-# the public wrappers add only the lean-epoch static-planning guard;
-# their full contracts live on the impls — surface them for help()
-textdup_ingest_batch.__doc__ = _textdup_epoch.__doc__
-imagedup_ingest_batch.__doc__ = _imagedup_epoch.__doc__
-neardup_ingest_batch.__doc__ = _neardup_epoch.__doc__
+    mod = _modality_spec(
+        {"modality": hash_mode, "grid": 64, "band_bits": 16}
+    ) | {
+        "id_col": id_col,
+        "sig_frame": lambda b: image_sigs_arrow(
+            _spread(b), id_col, payload_col, hash_mode
+        ),
+        "verify": hamming <= max_hamming,
+    }
+    return _ingest_epoch(spark, batch, store_dir, mod, band_bucket_cap, reliable)

@@ -209,9 +209,17 @@ def _srp_coefs(spark, n_bits: int, dim: int) -> list[list[float]]:
 
 
 def _vec_dim(df: DataFrame, vec_col_expr) -> int | None:
-    """Dimension of the (fixed-width) vector column, or None when the
-    frame is empty — callers fall back to the inline-hash path."""
-    row = df.select(F.size(vec_col_expr).alias("d")).first()
+    """Dimension of the (fixed-width) vector column from the first
+    NON-NULL vector (a bounded one-row probe), or None when the frame
+    holds no vector at all — callers fall back to the inline-hash
+    path. NULL rows are skipped: a NULL first row would otherwise
+    read as "no dim" and route the whole frame to the slow path."""
+    row = (
+        df.filter(vec_col_expr.isNotNull())
+        .select(F.size(vec_col_expr).alias("d"))
+        .limit(1)
+        .first()
+    )
     return None if row is None else row["d"]
 
 
@@ -467,8 +475,10 @@ def cos_scores_arrow(
     session: under ANSI (the Spark 4 default) a non-NULL dot divided
     by 0.0 raises DIVIDE_BY_ZERO in the JVM spelling, so this pass
     raises too (captured from the session conf at plan-build time);
-    with ANSI off both spellings produce IEEE +-Inf/NaN. Pinned
-    against the expression spelling in tests/test_operators.py."""
+    with ANSI off Spark's Divide returns NULL for a zero divisor (never
+    IEEE +-Inf/NaN), so this pass masks those rows to NULL as well —
+    they then sort last in a descending top-k instead of first.
+    Pinned against the expression spelling in tests/test_operators.py."""
     qid_field = pairs.schema[qid_col]
     id_field = pairs.schema[id_col]
     ansi = (
@@ -495,12 +505,14 @@ def cos_scores_arrow(
             if qn is None or nr is None:
                 return None
             den = np.float64(qn) * np.float64(nr)
-            if ansi and den == 0.0:
-                raise ArithmeticError(
-                    "[DIVIDE_BY_ZERO] zero norm product in "
-                    "cos_scores_arrow under ANSI mode — the engine "
-                    "spelling raises here too"
-                )
+            if den == 0.0:
+                if ansi:
+                    raise ArithmeticError(
+                        "[DIVIDE_BY_ZERO] zero norm product in "
+                        "cos_scores_arrow under ANSI mode — the engine "
+                        "spelling raises here too"
+                    )
+                return None  # non-ANSI Divide: NULL on a zero divisor
             with np.errstate(divide="ignore", invalid="ignore"):
                 return float(acc / den)
 
@@ -546,7 +558,8 @@ def cos_scores_arrow(
                             "engine spelling raises here too"
                         )
                     cos = acc / den
-                cos_arr = pa.array(cos)
+                # non-ANSI Divide: NULL on a zero divisor
+                cos_arr = pa.array(cos, mask=den == 0.0)
             else:
                 qpl, vpl = qv.to_pylist(), v.to_pylist()
                 qnl, nrl = qn.to_pylist(), nr.to_pylist()

@@ -472,6 +472,38 @@ def test_neardup_ingest_across_batches(spark, tmp_path):
     assert sorted(r["vec_id"] for r in a2_retry.collect()) == [102, 104]
 
 
+def test_neardup_ingest_null_first_vector(spark, tmp_path):
+    """A NULL vector in the FIRST row must not change the signature
+    stage: the dim probe skips NULL rows, and the batch admits the
+    same set as with the NULL row last (the NULL row has no cosine, so
+    it is always admitted; id 9 duplicates id 2 exactly)."""
+    from file_appender_spark.operators.neardup_ingest import neardup_ingest_batch
+    from file_appender_spark.operators.similarity import _vec_dim
+
+    base = _synth_vecs(spark, [1, 2, 3, 4]).unionByName(
+        _synth_vecs(spark, [2]).select(
+            F.lit(9).cast("long").alias("vec_id"), "embedding"
+        )
+    )
+    null_row = spark.createDataFrame(
+        [(77, None)], "vec_id long, embedding array<double>"
+    )
+    first = null_row.unionByName(base).coalesce(1)
+    last = base.unionByName(null_row).coalesce(1)
+    assert first.first()["embedding"] is None
+    assert _vec_dim(first, F.col("embedding")) == 16
+    got = {
+        name: sorted(
+            r["vec_id"]
+            for r in neardup_ingest_batch(
+                spark, b, str(tmp_path / name), threshold=0.999
+            ).collect()
+        )
+        for name, b in (("first", first), ("last", last))
+    }
+    assert got["first"] == got["last"] == [1, 2, 3, 4, 77]
+
+
 def test_neardup_ingest_plan_has_no_cross_join(spark, tmp_path):
     from file_appender_spark.operators.neardup_ingest import neardup_ingest_batch
 
@@ -1483,3 +1515,36 @@ def test_cos_scores_arrow_bit_identical(spark, sf_dir):
         ).collect()
     with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
         cos_scores_arrow(zr, "qid", "vid").collect()
+
+    # ANSI off: Spark's Divide returns NULL for a zero divisor (never
+    # IEEE +-Inf/NaN), so a zero-norm row must score NULL — sorting
+    # last in ann_sign_ivf's descending top-k, not first. Both the
+    # vectorized path and the per-row replica (forced by a ragged row
+    # in the same Arrow batch) are checked.
+    schema = (
+        "qid long, vid long, qv array<double>, v array<double>, "
+        "qnrm double, nrm double"
+    )
+    zero_rows = [
+        (5, 50, [0.0, 0.0, 0.0], [1.0, 0.5, 2.0], 0.0, 2.29128784747792),
+        (9, 90, [1.0, 2.0, 3.0], [0.0, 0.0, 0.0], 3.7416573867739413, -0.0),
+        (1, 10, [1.0, 2.0, 3.0], [1.0, 0.5, 2.0], 3.7416573867739413, 2.29128784747792),
+    ]
+    ragged = (3, 30, [1.0, 2.0], [1.0, 0.5, 2.0], 2.23606797749979, 2.29128784747792)
+    old_ansi = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try:
+        for extra in ([], [ragged]):
+            z = spark.createDataFrame(zero_rows + extra, schema).coalesce(1)
+            ref3 = z.select(
+                "qid",
+                "vid",
+                (_dot(F.col("qv"), F.col("v")) / (F.col("qnrm") * F.col("nrm"))).alias(
+                    "cos_raw"
+                ),
+            ).collect()
+            out3 = norm(cos_scores_arrow(z, "qid", "vid").collect())
+            assert norm(ref3) == out3
+            assert out3[5] is None and out3[9] is None and out3[1] is not None
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", old_ansi)

@@ -202,3 +202,19 @@ def test_pq_encode_arrow_bitequal_sql(spark, sf_dir):
             out[r["vec_id"]] = (vals, "nan" if e is not None and math.isnan(e) else e)
         return out
     assert norm(sql2) == norm(arrow2)
+
+
+def test_pq_encode_null_first_row_keeps_arrow_path(spark):
+    """A NULL FIRST vector must not send pq_encode to the generated-SQL
+    spelling: the dim probe skips NULL rows, so the frame still plans
+    the Arrow pass, and every code equals the NULL-last frame's."""
+    schema = "vec_id long, e array<double>"
+    rows = _clustered_vecs(40, 8, 2, seed=5)
+    cb = seed_codebook(spark.createDataFrame(rows, schema), "e", 2, 4)
+    first = spark.createDataFrame([(999, None)] + rows, schema).coalesce(1)
+    last = spark.createDataFrame(rows + [(999, None)], schema).coalesce(1)
+    assert first.first()["e"] is None
+    enc = pq_encode(first, "e", cb, keep_cols=["vec_id"])
+    assert "MapInArrow" in enc._jdf.queryExecution().executedPlan().toString()
+    ref = pq_encode(last, "e", cb, keep_cols=["vec_id"])
+    assert sorted(enc.collect()) == sorted(ref.collect())

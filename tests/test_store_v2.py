@@ -191,36 +191,88 @@ def test_index_meta_shape(spark, tmp_path):
     assert all(d.startswith(("bucket=", "_", ".")) for d in data)
 
 
-def test_big_store_materialized_path_equals_lean(spark, tmp_path, monkeypatch):
+def _lean_big_case(spark, modality):
+    """(ingest, id_col, stored batch, epoch batch) for one modality.
+    The epoch carries an exact-duplicate family of stored row 5 (ids
+    900/901 — 901 is a near-dup tail for text), row 5's own-id
+    re-ingest and a novel row 902; the SRP case adds zero-norm vectors
+    to both sides (903/904 in the epoch), which are never suppressed."""
+    import random
+
+    from file_appender_spark.operators.neardup_ingest import (
+        imagedup_ingest_batch,
+        neardup_ingest_batch,
+    )
+
+    if modality == "textdup":
+        docs = _corpus(spark, 50, seed_tag="delta")
+        d5 = docs.filter(F.col("doc_id") == 5).collect()[0]["text"]
+        ep = _docs(
+            spark,
+            [(900, d5), (901, d5 + " near dup tail"), (5, d5),
+             (902, "totally novel tokens unlike anything else qq ww ee rr tt yy")],
+        )
+        return textdup_ingest_batch, "doc_id", docs, ep
+    if modality == "neardup":
+        def vec(i):
+            rng = random.Random(i)
+            return [rng.gauss(0.0, 1.0) for _ in range(8)]
+
+        schema = "vec_id long, embedding array<double>"
+        zero = [0.0] * 8
+        stored = spark.createDataFrame(
+            [(i, vec(i)) for i in range(50)] + [(50, zero)], schema
+        )
+        ep = spark.createDataFrame(
+            [(900, vec(5)), (901, vec(5)), (5, vec(5)), (902, vec(7777)),
+             (903, zero), (904, zero)],
+            schema,
+        )
+
+        def ingest(spark, batch, store):
+            return neardup_ingest_batch(spark, batch, store, threshold=0.999)
+
+        return ingest, "vec_id", stored, ep
+
+    def payload(i):
+        rng = random.Random(1000 + i)
+        return bytearray(rng.randrange(256) for _ in range(256))
+
+    schema = "doc_id long, payload binary"
+    stored = spark.createDataFrame([(i, payload(i)) for i in range(50)], schema)
+    ep = spark.createDataFrame(
+        [(900, payload(5)), (901, payload(5)), (5, payload(5)),
+         (902, payload(7777))],
+        schema,
+    )
+    return imagedup_ingest_batch, "doc_id", stored, ep
+
+
+@pytest.mark.parametrize("modality", ["textdup", "neardup", "imagedup"])
+def test_big_store_materialized_path_equals_lean(
+    spark, tmp_path, monkeypatch, modality
+):
     """The epoch has two shapes: LEAN (small stores — lazy joins, no
     materialization jobs) and MATERIALIZED (big stores — checkpointed
     slice/candidates + exact-count broadcast gating). They must make
-    identical admit decisions; unit stores are small, so the big
-    branch is forced by zeroing the threshold."""
+    identical admit decisions for every modality; unit stores are
+    small, so the big branch is forced by zeroing the threshold."""
     import shutil
 
     import file_appender_spark.operators.neardup_ingest as ni
 
-    docs = _corpus(spark, 50, seed_tag="delta")
+    ingest, id_col, stored, ep = _lean_big_case(spark, modality)
     s_lean = str(tmp_path / "lean")
-    textdup_ingest_batch(spark, docs, s_lean)
+    ingest(spark, stored, s_lean)
     s_big = str(tmp_path / "big")
     shutil.copytree(s_lean, s_big)
 
-    d5 = docs.filter(F.col("doc_id") == 5).collect()[0]["text"]
-    ep = _docs(
-        spark,
-        [(900, d5), (901, d5 + " near dup tail"), (5, d5),
-         (902, "totally novel tokens unlike anything else qq ww ee rr tt yy")],
-    )
-    lean = sorted(
-        r["doc_id"] for r in textdup_ingest_batch(spark, ep, s_lean).collect()
-    )
+    lean = sorted(r[id_col] for r in ingest(spark, ep, s_lean).collect())
     monkeypatch.setattr(ni, "_EAGER_SLICE_MIN_STORE_ROWS", 0)
-    big = sorted(
-        r["doc_id"] for r in textdup_ingest_batch(spark, ep, s_big).collect()
-    )
-    assert big == lean and 5 in big and 900 not in big
+    big = sorted(r[id_col] for r in ingest(spark, ep, s_big).collect())
+    assert big == lean and 5 in big and 900 not in big and 902 in big
+    if modality == "neardup":
+        assert 901 not in big and {903, 904} <= set(big)
 
 
 def test_maintenance_refuses_inflight_write(spark, tmp_path):

@@ -174,6 +174,7 @@ def test_reliable_checkpoint_parameter(spark, tmp_path):
     capped operators and a textdup ingest epoch once a dir is set."""
     from file_appender_spark.operators.containment import containment_pairs
     from file_appender_spark.operators.neardup_ingest import (
+        neardup_ingest_batch,
         textdup_ingest_batch,
     )
 
@@ -245,3 +246,22 @@ def test_reliable_checkpoint_parameter(spark, tmp_path):
         )
         admitted[tag] = sorted(r["doc_id"] for r in out.collect())
     assert admitted["local"] == admitted["reliable"]
+
+    # the SRP epoch takes the reliable path too (its batch signatures
+    # get the DFS checkpoint instead of the lazy cache): same admits
+    vecs = spark.createDataFrame(
+        [(1, [1.0, 0.0, 2.0]), (2, [1.0, 0.0, 2.0]),
+         (3, [0.0, 5.0, 1.0]), (4, [3.0, 1.0, 0.5])],
+        "vec_id long, embedding array<double>",
+    )
+    srp = {
+        tag: sorted(
+            r["vec_id"]
+            for r in neardup_ingest_batch(
+                spark, vecs, str(tmp_path / f"srp_{tag}"), threshold=0.99,
+                reliable=rel,
+            ).collect()
+        )
+        for tag, rel in (("local", False), ("reliable", True))
+    }
+    assert srp["local"] == srp["reliable"] == [1, 3, 4]
