@@ -39,31 +39,23 @@ the scan-everything spelling is pinned in tests/test_corpusstats.py.
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from file_appender_spark.storefs import (
+    TableStore,
+    compact_tables,
     create_manifest_tables,
-    manifest_version,
     migrate_tables_to_manifest,
-    refuse_mid_migration,
-    require_atomic_dir_rename,
-    resolve_manifest_dir,
+    open_table_store,
+    rebuild_table_store,
     store_fs_for,
-    swap_table_dir,
+    table_dir,
+    write_table_epoch,
 )
 
-_PARAMS_FILE = "_corpusstats_params.json"
-_REBUILD_MARKER = "_corpusstats_rebuilding"
-_MIGRATING_MARKER = "_MIGRATING_TO_MANIFEST"
-# the three stats tables; in the MANIFEST layout (r11, lifting the
-# r10 deferral) each carries its own _CURRENT manifest and compaction
-# flips it atomically instead of the two-rename swap — which is what
-# lets the store live on object stores (pairstore.py's discipline)
-_TABLE_NAMES = ("token_stats", "source_stats", "bigram_stats")
 # the one tokenizer every text query shares (queries/llm.py's _WS);
 # version 2 added the bigram table (a v1 store lacks it, so the
 # params guard forces a rebuild rather than failing mid-read)
@@ -225,82 +217,25 @@ def corpusstats_worthwhile(
     )
 
 
-def _stamp_params(store_dir: str) -> None:
-    """(Re)write the tokenizer stamp unconditionally — the build
-    path's prerogative: a full rebuild replaces every table dir, so
-    the store's counts are by construction comparable to the CURRENT
-    tokenizer, whatever stamp an older-version store carried. This is
-    what makes a v1 -> v2 upgrade possible through the API instead of
-    requiring manual deletion of the params file."""
-    fs = store_fs_for(store_dir)
-    fs.makedirs(store_dir)
-    # publish_text: atomic tmp+rename on POSIX/HDFS, one atomic PUT
-    # on object stores (where replace_file would raise)
-    fs.publish_text(
-        os.path.join(store_dir, _PARAMS_FILE),
-        json.dumps(_TOKENIZER, sort_keys=True),
-    )
-
-
-def _refuse_mid_rebuild(store_dir: str) -> None:
-    """A crashed rebuild leaves the store part-wiped/part-written; a
-    missing params stamp alone cannot distinguish that from a fresh
-    directory (the ingest path legitimately starts stores), so the
-    build drops a marker for its whole critical section. Any
-    ingest/read that sees it must refuse — silently adopting the
-    half-built store would serve counts missing the wiped baseline
-    (review finding r8)."""
-    if store_fs_for(store_dir).exists(os.path.join(store_dir, _REBUILD_MARKER)):
-        raise ValueError(
-            f"corpus-stats store {store_dir} has an unfinished rebuild "
-            "(crash mid-build_corpus_stats): its tables are partial — "
-            "re-run build_corpus_stats over the full corpus"
-        )
-
-
-def _check_params(store_dir: str) -> None:
-    """Strict guard for the INGEST/READ paths: counts written under a
-    different tokenizer are incomparable, and these paths only ever
-    add to or read what exists — they must refuse, not re-stamp."""
-    fs = store_fs_for(store_dir)
-    fs.makedirs(store_dir)
-    _refuse_mid_rebuild(store_dir)
-    path = os.path.join(store_dir, _PARAMS_FILE)
-    if fs.exists(path):
-        stored = json.loads(fs.read_text(path))
-        if stored != _TOKENIZER:
-            raise ValueError(
-                f"corpus-stats store {store_dir} was built with tokenizer "
-                f"{stored}, this build uses {_TOKENIZER} — counts are "
-                "incomparable; rebuild the store (build_corpus_stats "
-                "re-stamps and replaces all tables)"
-            )
-    else:
-        _stamp_params(store_dir)
-
-
-def _table_base(store_dir: str, name: str) -> str:
-    """The table's UNRESOLVED dir — where its manifest (if any) and
-    version dirs live; only the swap paths need it."""
-    return os.path.join(store_dir, name)
-
-
-def _resolve_table(store_dir: str, name: str) -> str:
-    """The table's LIVE data dir: manifest current version, or the
-    base itself for classic layout."""
-    return resolve_manifest_dir(_table_base(store_dir, name))
-
-
-def _token_dir(store_dir: str) -> str:
-    return _resolve_table(store_dir, "token_stats")
-
-
-def _source_dir(store_dir: str) -> str:
-    return _resolve_table(store_dir, "source_stats")
-
-
-def _bigram_dir(store_dir: str) -> str:
-    return _resolve_table(store_dir, "bigram_stats")
+_STORE = TableStore(
+    kind="corpus-stats",
+    # the three stats tables; in the MANIFEST layout (r11, lifting the
+    # r10 deferral) each carries its own _CURRENT manifest and compaction
+    # flips it atomically instead of the two-rename swap — which is what
+    # lets the store live on object stores (pairstore.py's discipline)
+    tables=("token_stats", "source_stats", "bigram_stats"),
+    params_file="_corpusstats_params.json",
+    params=lambda stamp: _TOKENIZER,
+    mismatch="counts are incomparable; rebuild the store (build_corpus_stats "
+    "re-stamps and replaces all tables)",
+    rebuild_marker="_corpusstats_rebuilding",
+    rebuild_hint="build_corpus_stats",
+    migrate_hint="migrate_corpusstats_to_manifest",
+    # the ingest path legitimately starts stores
+    first_ingest_stamps=True,
+)
+# each table's batch definition, in _STORE.tables order
+_STATS = (corpus_token_stats, corpus_source_stats, corpus_bigram_stats)
 
 
 def create_manifest_corpusstats(store_dir: str) -> str:
@@ -310,12 +245,7 @@ def create_manifest_corpusstats(store_dir: str) -> str:
     classic ``.old`` debris (storefs.create_manifest_tables). The
     build/ingest entry points call this automatically when the target
     filesystem lacks atomic directory rename."""
-    return create_manifest_tables(
-        store_dir,
-        _TABLE_NAMES,
-        "corpus-stats",
-        "migrate_corpusstats_to_manifest",
-    )
+    return create_manifest_tables(_STORE, store_dir)
 
 
 def migrate_corpusstats_to_manifest(store_dir: str) -> str:
@@ -323,34 +253,7 @@ def migrate_corpusstats_to_manifest(store_dir: str) -> str:
     POSIX/HDFS only — where classic stores can exist). RESUMABLE via
     the store-level marker; also sweeps classic debris siblings
     (storefs.migrate_tables_to_manifest has the full contract)."""
-    return migrate_tables_to_manifest(
-        store_dir,
-        _TABLE_NAMES,
-        _MIGRATING_MARKER,
-        "migrate_corpusstats_to_manifest",
-    )
-
-
-def _ensure_store_layout(store_dir: str) -> None:
-    """Creation-time layout choice: a NEW store on a filesystem
-    without atomic directory rename must be manifest-layout (its
-    classic swap could never run there); POSIX/HDFS stores default to
-    classic with manifest as the explicit opt-in."""
-    if not store_fs_for(store_dir).supports_atomic_dir_rename:
-        create_manifest_corpusstats(store_dir)
-
-
-def _dirs(store_dir: str) -> tuple[str, str, str]:
-    return (
-        _token_dir(store_dir),
-        _source_dir(store_dir),
-        _bigram_dir(store_dir),
-    )
-
-
-def _write_batch(df: DataFrame, base: str, batch_id: str) -> None:
-    # one partition dir per epoch, overwritten on retry — idempotent
-    df.write.mode("overwrite").parquet(os.path.join(base, f"batch={batch_id}"))
+    return migrate_tables_to_manifest(_STORE, store_dir)
 
 
 def build_corpus_stats(
@@ -372,29 +275,16 @@ def build_corpus_stats(
     rescan). Production amortizes the build through the incremental
     path anyway, where each batch is scanned once per table at
     micro-batch size."""
-    _recover(store_dir)
-    _ensure_store_layout(store_dir)  # manifest mandatory sans atomic rename
-    # a rebuild replaces all data, so it RE-STAMPS rather than checks
+
+    def write() -> None:
+        for name, stats in zip(_STORE.tables, _STATS):
+            write_table_epoch(stats(docs), store_dir, name, "base")
+
+    # the shared rebuild protocol (storefs.rebuild_table_store): a
+    # rebuild replaces all data, so it RE-STAMPS rather than checks
     # (upgrading a store across tokenizer versions goes through here)
-    # — but only AFTER the new tables exist: stamp-then-wipe would
-    # leave old-tokenizer counts readable under the new stamp if the
-    # rebuild crashed in between (review finding r8). Wipe the stale
-    # stamp with the tables, so a mid-rebuild crash fails loudly.
-    fs = store_fs_for(store_dir)
-    fs.makedirs(store_dir)
-    marker = os.path.join(store_dir, _REBUILD_MARKER)
-    fs.write_text(marker, "rebuild in progress")
-    old_stamp = os.path.join(store_dir, _PARAMS_FILE)
-    if fs.exists(old_stamp):
-        fs.remove(old_stamp)
-    for d in _dirs(store_dir):
-        if fs.exists(d):
-            fs.rmtree(d)
-    _write_batch(corpus_token_stats(docs), _token_dir(store_dir), "base")
-    _write_batch(corpus_source_stats(docs), _source_dir(store_dir), "base")
-    _write_batch(corpus_bigram_stats(docs), _bigram_dir(store_dir), "base")
-    _stamp_params(store_dir)
-    fs.remove(marker)  # critical section closed — store is whole again
+    # — but only AFTER the new tables exist (review finding r8)
+    rebuild_table_store(_STORE, store_dir, _TOKENIZER, write)
 
 
 def corpusstats_ingest_batch(
@@ -412,12 +302,9 @@ def corpusstats_ingest_batch(
             "batch_id 'base' is reserved for build_corpus_stats — an "
             "ingest epoch writing there would clobber the corpus baseline"
         )
-    _recover(store_dir)
-    _ensure_store_layout(store_dir)  # ingest may legitimately START a store
-    _check_params(store_dir)
-    _write_batch(corpus_token_stats(batch), _token_dir(store_dir), str(batch_id))
-    _write_batch(corpus_source_stats(batch), _source_dir(store_dir), str(batch_id))
-    _write_batch(corpus_bigram_stats(batch), _bigram_dir(store_dir), str(batch_id))
+    open_table_store(_STORE, store_dir, ingest=True)
+    for name, stats in zip(_STORE.tables, _STATS):
+        write_table_epoch(stats(batch), store_dir, name, batch_id)
 
 
 # ---------------------------------------------------------------------------
@@ -444,7 +331,7 @@ _VIEW_CACHE: dict[tuple, DataFrame] = {}
 _VIEW_CACHE_MAX = 24  # tables x stores a session plausibly touches
 
 
-def _table_fingerprint(store_dir: str, table_dir: str) -> tuple:
+def _table_fingerprint(store_dir: str, tdir: str) -> tuple:
     fs = store_fs_for(store_dir)
     out: list[str] = []
 
@@ -457,8 +344,8 @@ def _table_fingerprint(store_dir: str, table_dir: str) -> tuple:
             else:
                 out.append(r)
 
-    if fs.isdir(table_dir):
-        walk(table_dir, "")
+    if fs.isdir(tdir):
+        walk(tdir, "")
     return tuple(out)
 
 
@@ -471,12 +358,16 @@ def reset_stats_view_cache() -> None:
     _VIEW_CACHE.clear()
 
 
-def _merged_view(spark: SparkSession, store_dir: str, table_dir: str, build):
-    key = (
-        spark.sparkContext.applicationId,
-        table_dir,
-        _table_fingerprint(store_dir, table_dir),
-    )
+def _merged_view(
+    spark: SparkSession, store_dir: str, name: str, keys: tuple, sums: tuple
+) -> DataFrame:
+    """Table ``name``'s merged view: one groupBy(``keys``)-sum of
+    ``sums`` over base + increments, opened through the store's one
+    open path (crash recovery, mid-rebuild and params refusal) and
+    memoized per file fingerprint (see the block comment above)."""
+    open_table_store(_STORE, store_dir)
+    d = table_dir(store_dir, name)
+    key = (spark.sparkContext.applicationId, d, _table_fingerprint(store_dir, d))
     df = _VIEW_CACHE.get(key)
     if df is None:
         # drop stale fingerprints of the same table before inserting
@@ -484,7 +375,12 @@ def _merged_view(spark: SparkSession, store_dir: str, table_dir: str, build):
             del _VIEW_CACHE[k]
         while len(_VIEW_CACHE) >= _VIEW_CACHE_MAX:
             del _VIEW_CACHE[next(iter(_VIEW_CACHE))]
-        df = build().localCheckpoint(eager=False)
+        df = (
+            spark.read.parquet(d)
+            .groupBy(*keys)
+            .agg(*[F.sum(c).cast("long").alias(c) for c in sums])
+            .localCheckpoint(eager=False)
+        )
         _VIEW_CACHE[key] = df
     return df
 
@@ -498,36 +394,14 @@ def read_token_stats(spark: SparkSession, store_dir: str) -> DataFrame:
     may be the first process to touch the store after a compaction
     crash, and must not fail on a directory that is one rename from
     healthy."""
-    _recover(store_dir)
-    _refuse_mid_rebuild(store_dir)
-    d = _token_dir(store_dir)
     return _merged_view(
-        spark,
-        store_dir,
-        d,
-        lambda: spark.read.parquet(d)
-        .groupBy("source", "token")
-        .agg(
-            F.sum("tf").cast("long").alias("tf"),
-            F.sum("df").cast("long").alias("df"),
-        ),
+        spark, store_dir, "token_stats", ("source", "token"), ("tf", "df")
     )
 
 
 def read_source_stats(spark: SparkSession, store_dir: str) -> DataFrame:
-    _recover(store_dir)
-    _refuse_mid_rebuild(store_dir)
-    d = _source_dir(store_dir)
     return _merged_view(
-        spark,
-        store_dir,
-        d,
-        lambda: spark.read.parquet(d)
-        .groupBy("source")
-        .agg(
-            F.sum("n_docs").cast("long").alias("n_docs"),
-            F.sum("total_tokens").cast("long").alias("total_tokens"),
-        ),
+        spark, store_dir, "source_stats", ("source",), ("n_docs", "total_tokens")
     )
 
 
@@ -539,46 +413,9 @@ def read_bigram_stats(spark: SparkSession, store_dir: str) -> DataFrame:
     Note bigram counts are additive across epochs EXCEPT pairs that
     would span two epochs of one document — impossible under the
     whole-documents-per-epoch contract the ingest declares."""
-    _recover(store_dir)
-    _refuse_mid_rebuild(store_dir)
-    d = _bigram_dir(store_dir)
     return _merged_view(
-        spark,
-        store_dir,
-        d,
-        lambda: spark.read.parquet(d)
-        .groupBy("source", "bigram")
-        .agg(F.sum("tf").cast("long").alias("tf")),
+        spark, store_dir, "bigram_stats", ("source", "bigram"), ("tf",)
     )
-
-
-def _recover(store_dir: str) -> None:
-    """Crash recovery at the head of every entry point, layout-aware
-    (r11, lifting the r10 deferral): MANIFEST-layout tables need no
-    recovery (debris is a stale version dir, cleaned lazily at the
-    next compaction), so a fully manifest store runs on filesystems
-    without atomic directory rename. CLASSIC tables keep the .old
-    restore, which still requires the rename — enforced per table,
-    only when classic data actually exists."""
-    fs = store_fs_for(store_dir)
-    refuse_mid_migration(
-        store_dir,
-        _MIGRATING_MARKER,
-        "corpus-stats",
-        "migrate_corpusstats_to_manifest",
-        manifest_dirs=[_table_base(store_dir, n) for n in _TABLE_NAMES],
-    )
-    for name in _TABLE_NAMES:
-        base = _table_base(store_dir, name)
-        if manifest_version(base) is not None:
-            continue
-        old = base.rstrip("/") + ".old"
-        if fs.exists(base) or fs.exists(old):
-            require_atomic_dir_rename(
-                fs, store_dir, "classic-layout corpus-stats maintenance"
-            )
-        if not fs.exists(base) and fs.exists(old):
-            fs.rename(old, base)
 
 
 def compact_corpus_stats(spark: SparkSession, store_dir: str) -> None:
@@ -587,25 +424,18 @@ def compact_corpus_stats(spark: SparkSession, store_dir: str) -> None:
     on every read. Writer must be paused (the sequential foreachBatch
     loop is the only writer by design); the per-table swap (two
     renames for classic tables, one atomic manifest publish for
-    manifest tables) plus _recover makes a crash at any point
-    non-destructive. Output files
-    are sized from the store's measured bytes (the compact_store
-    discipline) — without this every compaction writes one tiny file
-    per shuffle partition, recreating the small-file problem it
-    exists to fix."""
-    from file_appender_spark.operators.layout import dir_bytes, plan_file_count
-
-    _recover(store_dir)
-    for name, merged in (
-        ("token_stats", read_token_stats(spark, store_dir)),
-        ("source_stats", read_source_stats(spark, store_dir)),
-        ("bigram_stats", read_bigram_stats(spark, store_dir)),
-    ):
-        n = plan_file_count(dir_bytes(spark, _resolve_table(store_dir, name)))
-        # the shared classic-two-rename vs manifest-publish swap
-        swap_table_dir(
-            _table_base(store_dir, name),
-            lambda tmp, m=merged, k=n: m.repartition(k)
-            .write.mode("overwrite")
-            .parquet(os.path.join(tmp, "batch=base")),
-        )
+    manifest tables) plus crash recovery makes a crash at any point
+    non-destructive. Output files are sized from the store's measured
+    bytes (storefs.compact_tables)."""
+    # single-writer window invariant: refuse to fold epochs while an
+    # ingest epoch write is in flight
+    open_table_store(_STORE, store_dir, quiesce=_STORE.tables)
+    compact_tables(
+        spark,
+        store_dir,
+        {
+            "token_stats": lambda d: read_token_stats(spark, store_dir),
+            "source_stats": lambda d: read_source_stats(spark, store_dir),
+            "bigram_stats": lambda d: read_bigram_stats(spark, store_dir),
+        },
+    )

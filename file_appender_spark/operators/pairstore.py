@@ -92,25 +92,20 @@ from file_appender_spark.operators.neardup_ingest import (
     _with_index_cols,
 )
 from file_appender_spark.storefs import (
+    TableStore,
+    compact_tables,
     create_manifest_tables,
-    manifest_version,
     migrate_tables_to_manifest,
-    refuse_mid_migration,
-    require_atomic_dir_rename,
-    resolve_manifest_dir,
+    open_table_store,
+    rebuild_table_store,
     store_fs_for,
     swap_table_dir,
+    table_dir,
+    write_table_epoch,
 )
 
-_PARAMS_FILE = "_PAIRSTORE_PARAMS.json"
 _CLUSTERS_STATE = "_CLUSTERS_STATE.json"
-_MIGRATING_MARKER = "_MIGRATING_TO_MANIFEST"
-# the three tables a maintenance pass may swap; each carries its OWN
-# manifest (dir/table/_CURRENT -> vN) in the manifest layout, because
-# they flip at different cadences (clusters on every refresh, sigs/
-# pairs only at compaction) — per-table flips match the crash-safety
-# granularity the classic per-table two-rename swap already had
-_TABLES = ("sigs", "pairs", "clusters")
+_CAPPED_MARKER = "_CAPPED_EPOCHS"
 
 # the store's one band count, used at EVERY _bands_long/_resolve call
 # site (r9 ADVICE: a hard-coded 4 drifting from _params would make the
@@ -145,23 +140,27 @@ def _params(threshold: float) -> dict:
     }
 
 
-def _table_base(store_dir: str, name: str) -> str:
-    """The table's UNRESOLVED dir — where its manifest (if any) and
-    version dirs live. Maintenance swap paths need this; everything
-    else reads through the resolved live dir."""
-    return os.path.join(store_dir, name)
-
-
-def _resolve_table(store_dir: str, name: str) -> str:
-    """The table's LIVE data dir: the manifest's current version dir,
-    or the base itself for classic layout. Safe to resolve per call —
-    maintenance windows are single-writer by contract, so a flip
-    cannot race the operation that resolved."""
-    return resolve_manifest_dir(_table_base(store_dir, name))
-
-
-def _sigs_dir(store_dir: str) -> str:
-    return _resolve_table(store_dir, "sigs")
+_STORE = TableStore(
+    kind="pair",
+    # the three tables a maintenance pass may swap; each carries its OWN
+    # manifest (dir/table/_CURRENT -> vN) in the manifest layout, because
+    # they flip at different cadences (clusters on every refresh, sigs/
+    # pairs only at compaction) — per-table flips match the crash-safety
+    # granularity the classic per-table two-rename swap already had
+    tables=("sigs", "pairs", "clusters"),
+    params_file="_PAIRSTORE_PARAMS.json",
+    # with no threshold given, a store is checked against its own one
+    params=lambda stamp: _params(stamp["threshold"]),
+    mismatch="the stores are different graphs; rebuild or pass the "
+    "original threshold",
+    rebuild_marker="_PAIRSTORE_REBUILDING",
+    rebuild_hint="build_pair_graph",
+    migrate_hint="migrate_pairstore_to_manifest",
+    classic_debris=(".old", ".compacting", ".refreshing"),
+    # the coverage stamp describes the wiped clusters; a rebuild
+    # restores exactness
+    rebuild_wipes=(_CLUSTERS_STATE, _CAPPED_MARKER),
+)
 
 
 def _sigs_row_count(store_dir: str) -> int:
@@ -170,7 +169,7 @@ def _sigs_row_count(store_dir: str) -> int:
     layout hides its files from the flat parquet_rows). Sizes the
     lean-vs-materialized epoch shape; order-of-magnitude is enough."""
     fs = store_fs_for(store_dir)
-    d = _sigs_dir(store_dir)
+    d = table_dir(store_dir, "sigs")
     if not fs.isdir(d):
         return 0
     total = 0
@@ -185,14 +184,6 @@ def _sigs_row_count(store_dir: str) -> int:
     return total
 
 
-def _pairs_dir(store_dir: str) -> str:
-    return _resolve_table(store_dir, "pairs")
-
-
-def _clusters_dir(store_dir: str) -> str:
-    return _resolve_table(store_dir, "clusters")
-
-
 def create_manifest_pairstore(store_dir: str) -> str:
     """Initialize an EMPTY manifest-layout pair store (the layout
     choice is creation-time, like the signature stores'): each table
@@ -202,9 +193,7 @@ def create_manifest_pairstore(store_dir: str) -> str:
     automatically when the target filesystem lacks atomic directory
     rename (an object store could otherwise only ever hold a classic
     store that its own maintenance would refuse)."""
-    return create_manifest_tables(
-        store_dir, _TABLES, "pair", "migrate_pairstore_to_manifest"
-    )
+    return create_manifest_tables(_STORE, store_dir)
 
 
 def migrate_pairstore_to_manifest(store_dir: str) -> str:
@@ -215,23 +204,7 @@ def migrate_pairstore_to_manifest(store_dir: str) -> str:
     marker; also sweeps classic debris siblings the manifest
     maintenance would never clean (storefs.migrate_tables_to_manifest
     has the full contract)."""
-    return migrate_tables_to_manifest(
-        store_dir,
-        _TABLES,
-        _MIGRATING_MARKER,
-        "migrate_pairstore_to_manifest",
-        classic_debris_suffixes=(".old", ".compacting", ".refreshing"),
-    )
-
-
-def _ensure_store_layout(store_dir: str) -> None:
-    """Creation-time layout choice: on a filesystem without atomic
-    directory rename the classic swap can never run, so a NEW store
-    must be manifest-layout (create_manifest_pairstore refuses loudly
-    if classic tables already exist there). POSIX/HDFS stores default
-    to classic; manifest is the explicit opt-in."""
-    if not store_fs_for(store_dir).supports_atomic_dir_rename:
-        create_manifest_pairstore(store_dir)
+    return migrate_tables_to_manifest(_STORE, store_dir)
 
 
 def pair_signatures(
@@ -352,80 +325,6 @@ def _old_side(sigs: DataFrame, id_col: str, dedup: bool = True) -> DataFrame:
     return out.dropDuplicates(["old_id"]) if dedup else out
 
 
-def _stamp_params(store_dir: str, threshold: float) -> None:
-    """Unconditional (re)stamp — the BUILD path's prerogative: a full
-    rebuild replaces every table, so stale params are simply replaced
-    (the corpusstats r7-advice lesson, applied from day one here)."""
-    fs = store_fs_for(store_dir)
-    fs.makedirs(store_dir)
-    # publish_text, not write+replace_file: atomic on POSIX/HDFS via
-    # the same tmp+rename, one atomic PUT on object stores (where
-    # replace_file would raise)
-    fs.publish_text(
-        os.path.join(store_dir, _PARAMS_FILE),
-        json.dumps(_params(threshold), sort_keys=True),
-    )
-
-
-def _check_params(store_dir: str, threshold: float | None) -> float:
-    """Strict guard for ingest/read: pairs verified under a different
-    threshold or hash params are a DIFFERENT graph. Returns the
-    store's threshold so read/ingest paths can default to it."""
-    fs = store_fs_for(store_dir)
-    path = os.path.join(store_dir, _PARAMS_FILE)
-    if not fs.exists(path):
-        raise ValueError(
-            f"{store_dir} is not a pair store (no {_PARAMS_FILE}); "
-            "run build_pair_graph first"
-        )
-    stored = json.loads(fs.read_text(path))
-    if threshold is not None and stored != _params(threshold):
-        raise ValueError(
-            f"pair store {store_dir} was built with {stored}, this call "
-            f"uses {_params(threshold)} — the stores are different graphs; "
-            "rebuild or pass the original threshold"
-        )
-    return float(stored["threshold"])
-
-
-def _recover(store_dir: str) -> None:
-    """Crash recovery at the head of every entry point — the
-    single-fault discipline shared by every incremental store, now
-    layout-aware (r11, lifting the r10 deferral): MANIFEST-layout
-    tables need no recovery at all (crash debris is a stale version
-    dir, cleaned lazily by the next swap of that table), so a fully
-    manifest store runs on filesystems without atomic directory
-    rename. CLASSIC tables keep the .old restore, whose crash-safety
-    still requires the rename — enforced loudly here, per table,
-    only when classic data actually exists."""
-    fs = store_fs_for(store_dir)
-    refuse_mid_migration(
-        store_dir,
-        _MIGRATING_MARKER,
-        "pair",
-        "migrate_pairstore_to_manifest",
-        manifest_dirs=[_table_base(store_dir, n) for n in _TABLES],
-    )
-    for name in _TABLES:
-        base = _table_base(store_dir, name)
-        if manifest_version(base) is not None:
-            continue
-        old = base.rstrip("/") + ".old"
-        if fs.exists(base) or fs.exists(old):
-            require_atomic_dir_rename(
-                fs, store_dir, "classic-layout pair-store maintenance"
-            )
-        if not fs.exists(base) and fs.exists(old):
-            fs.rename(old, base)
-
-
-def _write_epoch(df: DataFrame, base: str, batch_id: str) -> None:
-    # one partition dir per epoch, overwritten on retry — idempotent.
-    # (an empty epoch still writes one footer-bearing part file —
-    # Spark 4's FileFormatWriter — so read-back keeps its schema)
-    df.write.mode("overwrite").parquet(os.path.join(base, f"batch={batch_id}"))
-
-
 def build_pair_graph(
     spark: SparkSession,
     docs: DataFrame,
@@ -453,54 +352,42 @@ def build_pair_graph(
     if threshold is None:
         threshold = _q52_threshold()
 
-    _recover(store_dir)
-    _ensure_store_layout(store_dir)  # manifest is mandatory sans atomic rename
-    # wipe FIRST, stamp params only after the new tables exist: a
-    # crash mid-rebuild must leave a store that fails LOUDLY (missing
-    # tables / missing stamp), never old-threshold pairs readable
-    # under a new-threshold stamp (review finding r8)
-    fs = store_fs_for(store_dir)
-    params_path = os.path.join(store_dir, _PARAMS_FILE)
-    if fs.exists(params_path):
-        fs.remove(params_path)
-    for d in (_sigs_dir(store_dir), _pairs_dir(store_dir), _clusters_dir(store_dir)):
-        if fs.exists(d):
-            fs.rmtree(d)
-    state = os.path.join(store_dir, _CLUSTERS_STATE)
-    if fs.exists(state):
-        fs.remove(state)
-    capped_marker = os.path.join(store_dir, _CAPPED_MARKER)
-    if fs.exists(capped_marker):
-        fs.remove(capped_marker)  # a rebuild restores exactness
-
-    sigs = _with_sig_hashes(pair_signatures(docs, id_col, text_col)).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    # the MinHash band space is unbounded (bucket_space_bits=None), so
-    # the sized cap is count-free — no sigs.count() forced here, and
-    # the default (None) pays nothing at all
-    cap = _resolve_ingest_cap(band_bucket_cap, 2, _N_BANDS, None)
-    bands = _bands_hash_long(sigs, _N_BANDS, id_col, _FH_COLS).select(
-        id_col, "band", F.col("bh").alias("sig")
-    )
-    # within_batch=True emits every unordered candidate pair exactly
-    # once (larger id on the new side) — the full self-join, over the
-    # precomputed long band hashes (same buckets, cheaper equi-join)
-    cand = _band_pairs(bands, bands, id_col, within_batch=True, band_bucket_cap=cap)
-    pairs = _verified_pairs(
-        cand, _new_side(sigs, id_col), _old_side(sigs, id_col), threshold
-    )
-    if cap is not None:
-        # a capped BUILD can drop candidates too — the shared binding
-        # test, history side empty (the build IS the corpus), marker
-        # before the epoch writes like the ingest path
-        _mark_if_cap_bound(
-            store_dir, None, bands.withColumnRenamed("sig", "bh"), cap
+    def write() -> None:
+        sigs = _with_sig_hashes(pair_signatures(docs, id_col, text_col)).persist(
+            StorageLevel.MEMORY_AND_DISK
         )
-    _write_epoch(sigs, _sigs_dir(store_dir), "base")
-    _write_epoch(pairs, _pairs_dir(store_dir), "base")
-    sigs.unpersist()
-    _stamp_params(store_dir, threshold)  # only once the data it describes exists
+        # the MinHash band space is unbounded (bucket_space_bits=None), so
+        # the sized cap is count-free — no sigs.count() forced here, and
+        # the default (None) pays nothing at all
+        cap = _resolve_ingest_cap(band_bucket_cap, 2, _N_BANDS, None)
+        bands = _bands_hash_long(sigs, _N_BANDS, id_col, _FH_COLS).select(
+            id_col, "band", F.col("bh").alias("sig")
+        )
+        # within_batch=True emits every unordered candidate pair exactly
+        # once (larger id on the new side) — the full self-join, over the
+        # precomputed long band hashes (same buckets, cheaper equi-join)
+        cand = _band_pairs(
+            bands, bands, id_col, within_batch=True, band_bucket_cap=cap
+        )
+        pairs = _verified_pairs(
+            cand, _new_side(sigs, id_col), _old_side(sigs, id_col), threshold
+        )
+        if cap is not None:
+            # a capped BUILD can drop candidates too — the shared binding
+            # test, history side empty (the build IS the corpus), marker
+            # before the epoch writes like the ingest path
+            _mark_if_cap_bound(
+                store_dir, None, bands.withColumnRenamed("sig", "bh"), cap
+            )
+        write_table_epoch(sigs, store_dir, "sigs", "base")
+        write_table_epoch(pairs, store_dir, "pairs", "base")
+        sigs.unpersist()
+
+    # the shared rebuild protocol (storefs.rebuild_table_store): the
+    # stamp lands only once the tables it describes exist, so a crash
+    # mid-rebuild fails LOUDLY, never serving old-threshold pairs
+    # under a new-threshold stamp (review finding r8)
+    rebuild_table_store(_STORE, store_dir, _params(threshold), write)
     refresh_clusters(spark, store_dir)
 
 
@@ -537,16 +424,16 @@ def pairstore_ingest_batch(
             "batch_id 'base' is reserved for build_pair_graph — an ingest "
             "epoch writing there would clobber the corpus baseline"
         )
-    _recover(store_dir)
-    threshold = _check_params(store_dir, None)
+    threshold = float(open_table_store(_STORE, store_dir, ingest=True)["threshold"])
     sigs = _with_sig_hashes(
         pair_signatures(batch, id_col, text_col)
     ).localCheckpoint(eager=True)
     batch_bands = _bands_hash_long(sigs, _N_BANDS, id_col, _FH_COLS)
 
+    sd = table_dir(store_dir, "sigs")
     hist = (
-        spark.read.option("basePath", _sigs_dir(store_dir))
-        .parquet(_sigs_dir(store_dir))
+        spark.read.option("basePath", sd)
+        .parquet(sd)
         # cast: the partition column infers int when every epoch id is
         # numeric, string once 'base' is present — normalize
         .filter(F.col("batch").cast("string") != str(batch_id))
@@ -602,16 +489,13 @@ def pairstore_ingest_batch(
     # exact (2nd review pass, r9)
     if cap is not None:
         _mark_if_cap_bound(store_dir, hist_slice, batch_bands, cap)
-    _write_epoch(pairs, _pairs_dir(store_dir), str(batch_id))
+    write_table_epoch(pairs, store_dir, "pairs", batch_id)
     if not _store_is_v2(hist):
         # epochs always match the store's existing sig schema so the
         # merged partitioned read is never mixed-version; compaction
         # upgrades the whole table atomically
         sigs = sigs.drop("fh", *[f"bh{bi}" for bi in range(_N_BANDS)])
-    _write_epoch(sigs, _sigs_dir(store_dir), str(batch_id))
-
-
-_CAPPED_MARKER = "_CAPPED_EPOCHS"
+    write_table_epoch(sigs, store_dir, "sigs", batch_id)
 
 
 def _mark_if_cap_bound(
@@ -702,14 +586,14 @@ def read_pairs(
     assumption LOUD: a store built at a different threshold is a
     different graph, and oracle-parity consumers (q116/q183/q213
     pass q52's 0.2) must refuse it rather than silently serve it."""
-    _recover(store_dir)
-    _check_params(store_dir, expected_threshold)
-    pairs = (
-        spark.read.option("basePath", _pairs_dir(store_dir))
-        .parquet(_pairs_dir(store_dir))
-        .select("d1", "d2", "jaccard")
+    open_table_store(
+        _STORE,
+        store_dir,
+        None if expected_threshold is None else _params(expected_threshold),
     )
-    if len(_epoch_ids(_pairs_dir(store_dir))) > 1:
+    d = table_dir(store_dir, "pairs")
+    pairs = spark.read.option("basePath", d).parquet(d).select("d1", "d2", "jaccard")
+    if len(_epoch_ids(d)) > 1:
         pairs = pairs.distinct()
     return pairs
 
@@ -729,13 +613,9 @@ def store_missing_ids(
     get a signature row by q52's definition, so their absence is not
     a coverage gap). One columnar id scan of the sigs table + an
     anti-join; no payload columns touched."""
-    _recover(store_dir)
-    _check_params(store_dir, None)
-    sigs_ids = (
-        spark.read.option("basePath", _sigs_dir(store_dir))
-        .parquet(_sigs_dir(store_dir))
-        .select(F.col(id_col))
-    )
+    open_table_store(_STORE, store_dir)
+    d = table_dir(store_dir, "sigs")
+    sigs_ids = spark.read.option("basePath", d).parquet(d).select(F.col(id_col))
     return doc_ids.select(id_col).join(sigs_ids, id_col, "left_anti")
 
 
@@ -802,11 +682,13 @@ def _fold_new_edges(
     components are never read."""
     from file_appender_spark.operators.components import dedup_clusters
 
-    asg = spark.read.parquet(_clusters_dir(store_dir)).select("doc", "cluster")
+    asg = spark.read.parquet(table_dir(store_dir, "clusters")).select(
+        "doc", "cluster"
+    )
     new_edges = None
     for e in new_epochs:
         part = spark.read.parquet(
-            os.path.join(_pairs_dir(store_dir), f"batch={e}")
+            os.path.join(table_dir(store_dir, "pairs"), f"batch={e}")
         ).select("d1", "d2")
         new_edges = part if new_edges is None else new_edges.unionByName(part)
     new_edges = new_edges.distinct().localCheckpoint(eager=True)
@@ -866,23 +748,20 @@ def refresh_clusters(
     external cleanup — coverage could otherwise claim epochs that no
     longer exist). ``mode="full"`` forces the recompute — it is also
     the incremental path's equivalence oracle. Crash-safe swap +
-    _recover, the shared store discipline."""
+    recovery, the shared store discipline."""
     from file_appender_spark.operators.components import dedup_clusters
 
     if mode not in ("auto", "full", "incremental"):
         raise ValueError(f"mode must be auto/full/incremental, got {mode!r}")
-    from file_appender_spark.storefs import assert_no_inflight_write
-
-    _recover(store_dir)
-    _check_params(store_dir, None)
-    fs = store_fs_for(store_dir)
     # refuse to stamp coverage while an epoch write is in flight: the
     # stamp would claim (or miss) a half-written epoch
-    assert_no_inflight_write(fs, _pairs_dir(store_dir))
-    live = set(_epoch_ids(_pairs_dir(store_dir)))
+    open_table_store(_STORE, store_dir, quiesce=("pairs",))
+    fs = store_fs_for(store_dir)
+    pairs_dir = table_dir(store_dir, "pairs")
+    live = set(_epoch_ids(pairs_dir))
     state = os.path.join(store_dir, _CLUSTERS_STATE)
     covers: set | None = None
-    if fs.exists(state) and fs.exists(_clusters_dir(store_dir)):
+    if fs.exists(state) and fs.exists(table_dir(store_dir, "clusters")):
         covers = set(json.loads(fs.read_text(state))["covers"])
     can_fold = covers is not None and covers and covers <= live
     if mode == "incremental" and not can_fold:
@@ -906,7 +785,7 @@ def refresh_clusters(
     # repartition(>=1) guarantees at least one footer-bearing file so
     # an empty graph still reads back with a schema
     swap_table_dir(
-        _table_base(store_dir, "clusters"),
+        os.path.join(store_dir, "clusters"),
         lambda tmp: cl.repartition(
             max(1, spark.sparkContext.defaultParallelism // 8)
         )
@@ -916,7 +795,7 @@ def refresh_clusters(
     )
     fs.publish_text(
         state,
-        json.dumps({"covers": _epoch_ids(_pairs_dir(store_dir))}, sort_keys=True),
+        json.dumps({"covers": _epoch_ids(pairs_dir)}, sort_keys=True),
     )
     return used
 
@@ -935,8 +814,11 @@ def read_cluster_assignment(
     merged-away clusters — unless ``allow_stale=True``; the fix is
     one refresh_clusters call. ``expected_threshold`` as in
     read_pairs (q116 passes q52's 0.2)."""
-    _recover(store_dir)
-    _check_params(store_dir, expected_threshold)
+    open_table_store(
+        _STORE,
+        store_dir,
+        None if expected_threshold is None else _params(expected_threshold),
+    )
     fs = store_fs_for(store_dir)
     state = os.path.join(store_dir, _CLUSTERS_STATE)
     if not fs.exists(state):
@@ -945,14 +827,14 @@ def read_cluster_assignment(
             "refresh_clusters (build_pair_graph does it automatically)"
         )
     covers = set(json.loads(fs.read_text(state))["covers"])
-    live = set(_epoch_ids(_pairs_dir(store_dir)))
+    live = set(_epoch_ids(table_dir(store_dir, "pairs")))
     if live - covers and not allow_stale:
         raise ValueError(
             f"cluster assignment in {store_dir} is STALE: pair epochs "
             f"{sorted(live - covers)} are not folded in — run "
             "refresh_clusters (or pass allow_stale=True to read anyway)"
         )
-    return spark.read.parquet(_clusters_dir(store_dir))
+    return spark.read.parquet(table_dir(store_dir, "clusters"))
 
 
 def compact_pairstore(spark: SparkSession, store_dir: str) -> None:
@@ -968,21 +850,15 @@ def compact_pairstore(spark: SparkSession, store_dir: str) -> None:
     assignment stays stale (empty coverage), because folding epochs
     into ``base`` must never launder away the staleness the read
     guard exists to catch (review finding r8)."""
-    from file_appender_spark.operators.layout import dir_bytes, plan_file_count
-
-    from file_appender_spark.storefs import assert_no_inflight_write
-
-    _recover(store_dir)
-    _check_params(store_dir, None)
-    fs = store_fs_for(store_dir)
     # single-writer window invariant (r9 verdict task 7): refuse to
     # fold epochs while an ingest epoch write is in flight
-    assert_no_inflight_write(fs, _sigs_dir(store_dir), _pairs_dir(store_dir))
+    open_table_store(_STORE, store_dir, quiesce=("sigs", "pairs"))
+    fs = store_fs_for(store_dir)
     state = os.path.join(store_dir, _CLUSTERS_STATE)
     if fs.exists(state):
         covers = set(json.loads(fs.read_text(state))["covers"])
         clusters_were_fresh = not (
-            set(_epoch_ids(_pairs_dir(store_dir))) - covers
+            set(_epoch_ids(table_dir(store_dir, "pairs"))) - covers
         )
         # write the POST-fold coverage BEFORE folding: a crash
         # mid-fold then reads as (at worst spuriously) STALE — never
@@ -995,25 +871,21 @@ def compact_pairstore(spark: SparkSession, store_dir: str) -> None:
                 sort_keys=True,
             ),
         )
-    for name in ("sigs", "pairs"):
-        d = _resolve_table(store_dir, name)
-        merged = spark.read.option("basePath", d).parquet(d).drop("batch")
-        if name == "sigs" and not _store_is_v2(merged):
-            # compaction is the v1 -> v2 migration point: fold in the
-            # precomputed band-hash columns so later epochs scan longs
-            merged = _with_sig_hashes(merged)
-        if name == "pairs":
-            # cross-epoch duplicate pairs (an out-of-order replay's
-            # contract violation — see pairstore_ingest_batch) are
-            # collapsed here for good; read_pairs dedups them on the
-            # fly until compaction. Sigs never duplicate: each doc's
-            # signature lives in exactly its own overwritten epoch.
-            merged = merged.distinct()
-        n = plan_file_count(dir_bytes(spark, d))
-        swap_table_dir(
-            _table_base(store_dir, name),
-            lambda tmp, m=merged, k=n: m.repartition(k)
-            .write.mode("overwrite")
-            .parquet(os.path.join(tmp, "batch=base")),
-        )
 
+    def epochs(d: str) -> DataFrame:
+        return spark.read.option("basePath", d).parquet(d).drop("batch")
+
+    def sigs(d: str) -> DataFrame:
+        merged = epochs(d)
+        # compaction is the v1 -> v2 migration point: fold in the
+        # precomputed band-hash columns so later epochs scan longs
+        return merged if _store_is_v2(merged) else _with_sig_hashes(merged)
+
+    # cross-epoch duplicate pairs (an out-of-order replay's contract
+    # violation — see pairstore_ingest_batch) are collapsed here for
+    # good; read_pairs dedups them on the fly until compaction. Sigs
+    # never duplicate: each doc's signature lives in exactly its own
+    # overwritten epoch.
+    compact_tables(
+        spark, store_dir, {"sigs": sigs, "pairs": lambda d: epochs(d).distinct()}
+    )

@@ -248,14 +248,12 @@ def q268_refresh_auto_fallback(spark: SparkSession, sf_dir: str) -> DataFrame:
     full-corpus closure oracle, certifying the store healed to the
     exact graph after the fault."""
     from file_appender_spark.operators.pairstore import (
-        _pairs_dir,
-        _sigs_dir,
         build_pair_graph,
         pairstore_ingest_batch,
         refresh_clusters,
     )
     from file_appender_spark.queries.llm import q116_dedup_clusters
-    from file_appender_spark.storefs import store_fs_for
+    from file_appender_spark.storefs import store_fs_for, table_dir
 
     store = _scratch("q268_fallback")
     docs = _t(spark, sf_dir, "documents")
@@ -269,8 +267,8 @@ def q268_refresh_auto_fallback(spark: SparkSession, sf_dir: str) -> DataFrame:
         raise AssertionError(f"expected incremental fold, got {used!r}")
     # external cleanup removes epoch 1 AFTER the stamp covered it
     fs = store_fs_for(store)
-    fs.rmtree(os.path.join(_pairs_dir(store), "batch=1"))
-    fs.rmtree(os.path.join(_sigs_dir(store), "batch=1"))
+    fs.rmtree(os.path.join(table_dir(store, "pairs"), "batch=1"))
+    fs.rmtree(os.path.join(table_dir(store, "sigs"), "batch=1"))
     used = refresh_clusters(spark, store)
     if used != "full":
         raise AssertionError(

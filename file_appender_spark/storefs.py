@@ -24,6 +24,10 @@ their (possibly schemed) paths to Spark unchanged and route only the
 metadata operations — exists/list/rename/delete/sidecars — through
 this seam.
 
+The module also holds the one multi-table store lifecycle
+(:class:`TableStore` and the functions over it) that the pair-graph
+and corpus-stats stores run on; see the section comment below.
+
 Durability note: ``rename`` must be atomic for DIRECTORIES on the
 target filesystem — POSIX rename and the HDFS namenode rename both
 are; object stores (S3) are NOT and are out of scope by the same
@@ -36,9 +40,11 @@ MISSING sidecar as loud failure, never as default-adoption.
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
-from typing import Protocol
+from dataclasses import dataclass
+from typing import Callable, Protocol
 
 from file_appender_spark.sinks.append_text import resolve_against_spec
 
@@ -482,6 +488,8 @@ def require_atomic_dir_rename(fs: "StoreFS", path: str, what: str) -> None:
 # the layout legal on filesystems without atomic directory rename.
 
 MANIFEST_CURRENT_FILE = "_CURRENT"
+# store-level marker of an unfinished in-place migration to manifests
+MANIFEST_MIGRATING_MARKER = "_MIGRATING_TO_MANIFEST"
 
 
 def manifest_version(directory: str) -> str | None:
@@ -564,9 +572,7 @@ def _is_empty_version_debris(fs: "StoreFS", base: str, name: str) -> bool:
     )
 
 
-def create_manifest_tables(
-    store_dir: str, table_names: tuple[str, ...], kind: str, migrate_hint: str
-) -> str:
+def create_manifest_tables(spec: "TableStore", store_dir: str) -> str:
     """Initialize an EMPTY manifest-layout multi-table store: each
     table gets v1 + its own ``_CURRENT``. Idempotent, and resumable
     across a crash inside create_manifest_dir (a lone empty version
@@ -577,9 +583,9 @@ def create_manifest_tables(
     - a ``<table>.old`` sibling — classic crash debris whose ONLY
       data copy may be the backup; publishing an empty manifest over
       it would orphan that copy silently (the manifest-layout
-      ``_recover`` never looks at .old again)."""
+      recovery never looks at .old again)."""
     fs = store_fs_for(store_dir)
-    for name in table_names:
+    for name in spec.tables:
         base = os.path.join(store_dir, name)
         if manifest_version(base) is not None:
             continue
@@ -587,15 +593,15 @@ def create_manifest_tables(
         if fs.exists(old):
             raise ValueError(
                 f"{base!r} has classic crash debris ({old!r} exists); "
-                f"recover the classic {kind} store first, then use "
-                f"{migrate_hint}"
+                f"recover the classic {spec.kind} store first, then use "
+                f"{spec.migrate_hint}"
             )
         if fs.isdir(base) and any(
             not _is_empty_version_debris(fs, base, n) for n in fs.listdir(base)
         ):
             raise ValueError(
                 f"{base!r} already holds a classic-layout table; use "
-                f"{migrate_hint} instead"
+                f"{spec.migrate_hint} instead"
             )
         create_manifest_dir(base)
     return store_dir
@@ -639,13 +645,7 @@ def refuse_mid_migration(
     )
 
 
-def migrate_tables_to_manifest(
-    store_dir: str,
-    table_names: tuple[str, ...],
-    marker_file: str,
-    what: str,
-    classic_debris_suffixes: tuple[str, ...] = (".old", ".compacting"),
-) -> str:
+def migrate_tables_to_manifest(spec: "TableStore", store_dir: str) -> str:
     """Convert a CLASSIC multi-table store in place (single-writer
     maintenance window): move each table's children into its ``v1``
     and publish the per-table manifests. Needs per-child renames, so
@@ -660,27 +660,27 @@ def migrate_tables_to_manifest(
     outputs) are cleaned here — the classic maintenance passes that
     used to clean them never run again after migration."""
     fs = store_fs_for(store_dir)
-    marker = os.path.join(store_dir, marker_file)
-    bases = [os.path.join(store_dir, n) for n in table_names]
+    marker = os.path.join(store_dir, spec.migrating_marker)
+    bases = [os.path.join(store_dir, n) for n in spec.tables]
     if all(manifest_version(b) is not None for b in bases):
         if fs.exists(marker):
             fs.remove(marker)  # crash after the last publish: finish up
         return store_dir
-    require_atomic_dir_rename(fs, store_dir, what)
-    # classic .old recovery first (the store's _recover refuses on the
+    require_atomic_dir_rename(fs, store_dir, spec.migrate_hint)
+    # classic .old recovery first (the store's recovery refuses on the
     # marker, so the restore must happen here)
     for b in bases:
         old = b.rstrip("/") + ".old"
         if not fs.exists(b) and fs.exists(old):
             fs.rename(old, b)
     fs.makedirs(store_dir)
-    fs.write_text(marker, f"{what} in progress")
+    fs.write_text(marker, f"{spec.migrate_hint} in progress")
     for b in bases:
         # classic debris that no later pass would ever clean: a stale
         # .old BACKUP next to a live table (classic compaction deletes
         # it after the second rename; a crash in between leaves it),
         # and interrupted swap outputs
-        for suffix in classic_debris_suffixes:
+        for suffix in spec.classic_debris:
             p = b.rstrip("/") + suffix
             if fs.exists(p):
                 fs.rmtree(p)
@@ -714,7 +714,7 @@ def swap_table_dir(base: str, write, tmp_suffix: str = ".compacting") -> None:
 
     - CLASSIC layout (no manifest): ``tmp`` is a ``tmp_suffix``
       sibling; the crash-safe two-rename swap (needs atomic directory
-      rename; the caller's ``_recover`` restores the ``.old`` backup
+      rename; the store's crash recovery restores the ``.old`` backup
       after a mid-swap crash).
     - MANIFEST layout: ``tmp`` is the next version dir inside
       ``base``; one atomic manifest publish flips readers, the old
@@ -744,6 +744,218 @@ def swap_table_dir(base: str, write, tmp_suffix: str = ".compacting") -> None:
         live_old = os.path.join(base, cur)
         if fs.exists(live_old):
             fs.rmtree(live_old)
+
+
+# --------------------------------------------------------------------------
+# Multi-table store lifecycle (shared by the pair graph and corpus stats)
+# --------------------------------------------------------------------------
+#
+# Both stores keep several tables under one store dir, a params stamp
+# next to them, a store-level migration marker and a rebuild marker.
+# Each declares how it differs as a TableStore record; the functions
+# below are its whole lifecycle — open (recover, refuse, check params),
+# rebuild, epoch write, manifest create/migrate and compaction — and
+# none of them branches on which store is calling.
+
+
+@dataclass(frozen=True)
+class TableStore:
+    """One multi-table store's declared differences.
+
+    ``params`` maps the stamp on disk (None when there is none) to the
+    params this code expects of the store; ``mismatch`` ends the
+    refusal of a foreign stamp. ``first_ingest_stamps`` is what a
+    missing stamp means to ingest: stamp it and start the store, or
+    refuse (reads and compaction never stamp; they accept a missing
+    stamp only when ingest could have started the store)."""
+
+    kind: str
+    tables: tuple[str, ...]
+    params_file: str
+    params: Callable[[dict | None], dict]
+    mismatch: str
+    rebuild_marker: str
+    rebuild_hint: str
+    migrate_hint: str
+    migrating_marker: str = MANIFEST_MIGRATING_MARKER
+    classic_debris: tuple[str, ...] = (".old", ".compacting")
+    rebuild_wipes: tuple[str, ...] = ()
+    first_ingest_stamps: bool = False
+
+
+def table_dir(store_dir: str, name: str) -> str:
+    """A table's LIVE data dir: the manifest's current version dir, or
+    the table base itself for classic layout. Safe to resolve per
+    call — maintenance windows are single-writer by contract, so a
+    flip cannot race the operation that resolved."""
+    return resolve_manifest_dir(os.path.join(store_dir, name))
+
+
+def _recover_tables(spec: TableStore, store_dir: str) -> None:
+    """Crash recovery at the head of every entry point, layout-aware:
+    MANIFEST-layout tables need none (crash debris is a stale version
+    dir, cleaned lazily by the next swap of that table), so a fully
+    manifest store runs on filesystems without atomic directory
+    rename. CLASSIC tables keep the .old restore, whose crash-safety
+    still requires the rename — enforced per table, only when classic
+    data actually exists."""
+    fs = store_fs_for(store_dir)
+    refuse_mid_migration(
+        store_dir,
+        spec.migrating_marker,
+        spec.kind,
+        spec.migrate_hint,
+        manifest_dirs=[os.path.join(store_dir, n) for n in spec.tables],
+    )
+    for name in spec.tables:
+        base = os.path.join(store_dir, name)
+        if manifest_version(base) is not None:
+            continue
+        old = base.rstrip("/") + ".old"
+        if fs.exists(base) or fs.exists(old):
+            require_atomic_dir_rename(
+                fs, store_dir, f"classic-layout {spec.kind} store maintenance"
+            )
+        if not fs.exists(base) and fs.exists(old):
+            fs.rename(old, base)
+
+
+def _ensure_layout(spec: TableStore, store_dir: str) -> None:
+    """Creation-time layout choice: on a filesystem without atomic
+    directory rename the classic swap can never run, so a NEW store
+    must be manifest-layout (create_manifest_tables refuses loudly if
+    classic tables already exist there). POSIX/HDFS stores default to
+    classic; manifest is the explicit opt-in."""
+    if not store_fs_for(store_dir).supports_atomic_dir_rename:
+        create_manifest_tables(spec, store_dir)
+
+
+def stamp_params(spec: TableStore, store_dir: str, params: dict) -> None:
+    """(Re)write the params stamp unconditionally — the build path's
+    prerogative (a full rebuild replaces every table, so stale params
+    are simply replaced) and corpus stats' first ingest. publish_text:
+    atomic tmp+rename on POSIX/HDFS, one atomic PUT on object stores
+    (where replace_file would raise)."""
+    fs = store_fs_for(store_dir)
+    fs.makedirs(store_dir)
+    fs.publish_text(
+        os.path.join(store_dir, spec.params_file),
+        json.dumps(params, sort_keys=True),
+    )
+
+
+def open_table_store(
+    spec: TableStore,
+    store_dir: str,
+    params: dict | None = None,
+    *,
+    ingest: bool = False,
+    quiesce: tuple[str, ...] = (),
+) -> dict | None:
+    """The one open path of every read, ingest, refresh and compaction:
+    crash recovery; refuse a mid-migration or mid-rebuild store (a
+    crashed rebuild leaves tables part-wiped, and silently adopting
+    them would serve data missing the wiped baseline); then the strict
+    params guard — data written under different params is
+    incomparable, and these paths only add to or read what exists, so
+    they refuse rather than re-stamp. ``params`` defaults to what the
+    store expects of its own stamp. Only ``ingest`` on a store whose
+    first ingest stamps ever writes a stamp. ``quiesce`` names tables
+    that must have no in-flight write (the maintenance window).
+    Returns the stamp (None for an unstamped store that may be read)."""
+    fs = store_fs_for(store_dir)
+    _recover_tables(spec, store_dir)
+    if fs.exists(os.path.join(store_dir, spec.rebuild_marker)):
+        raise ValueError(
+            f"{spec.kind} store {store_dir} has an unfinished rebuild "
+            f"(crash mid-{spec.rebuild_hint}): its tables are partial — "
+            f"re-run {spec.rebuild_hint} over the full corpus"
+        )
+    path = os.path.join(store_dir, spec.params_file)
+    if fs.exists(path):
+        stored = json.loads(fs.read_text(path))
+        want = params if params is not None else spec.params(stored)
+        if stored != want:
+            raise ValueError(
+                f"{spec.kind} store {store_dir} was built with {stored}, "
+                f"this call uses {want} — {spec.mismatch}"
+            )
+    elif not spec.first_ingest_stamps:
+        raise ValueError(
+            f"{store_dir} is not a {spec.kind} store (no {spec.params_file}); "
+            f"run {spec.rebuild_hint} first"
+        )
+    elif ingest:
+        _ensure_layout(spec, store_dir)  # ingest may legitimately START a store
+        stored = spec.params(None)
+        stamp_params(spec, store_dir, stored)
+    else:
+        stored = None
+    assert_no_inflight_write(fs, *[table_dir(store_dir, n) for n in quiesce])
+    return stored
+
+
+def write_table_epoch(df, store_dir: str, name: str, batch_id) -> None:
+    """One partition dir per epoch in table ``name``'s live dir,
+    overwritten on retry — idempotent. (An empty epoch still writes
+    one footer-bearing part file — Spark 4's FileFormatWriter — so
+    read-back keeps its schema.)"""
+    df.write.mode("overwrite").parquet(
+        os.path.join(table_dir(store_dir, name), f"batch={batch_id}")
+    )
+
+
+def rebuild_table_store(
+    spec: TableStore, store_dir: str, params: dict, write: Callable[[], None]
+) -> None:
+    """The one rebuild protocol: write the rebuild marker, drop the
+    stamp (and ``spec.rebuild_wipes``), wipe every table, ``write()``
+    the new tables, stamp, remove the marker. The stamp goes on only
+    once the data it describes exists — stamp-then-wipe would leave
+    old-params data readable under the new stamp after a crash — and
+    the marker makes every open refuse the half-built store in
+    between, which a missing stamp alone cannot signal where ingest
+    may start a store."""
+    _recover_tables(spec, store_dir)
+    _ensure_layout(spec, store_dir)
+    fs = store_fs_for(store_dir)
+    fs.makedirs(store_dir)
+    marker = os.path.join(store_dir, spec.rebuild_marker)
+    fs.write_text(marker, "rebuild in progress")
+    for name in (spec.params_file, *spec.rebuild_wipes):
+        p = os.path.join(store_dir, name)
+        if fs.exists(p):
+            fs.remove(p)
+    for name in spec.tables:
+        d = table_dir(store_dir, name)
+        if fs.exists(d):
+            fs.rmtree(d)
+    write()
+    stamp_params(spec, store_dir, params)
+    fs.remove(marker)  # critical section closed — store is whole again
+
+
+def compact_tables(spark, store_dir: str, folds: dict) -> None:
+    """Fold each named table into one fresh ``batch=base`` partition:
+    ``folds[name](live_dir)`` is the table's merged content. Output
+    files are sized from the table's measured bytes — without this
+    every compaction writes one tiny file per shuffle partition,
+    recreating the small-file problem it exists to fix — and each
+    table swaps through swap_table_dir (two renames classic, one
+    atomic manifest publish otherwise). Callers open the store with
+    ``quiesce`` over the same tables first."""
+    from file_appender_spark.operators.layout import dir_bytes, plan_file_count
+
+    for name, fold in folds.items():
+        d = table_dir(store_dir, name)
+        merged = fold(d)
+        n = plan_file_count(dir_bytes(spark, d))
+        swap_table_dir(
+            os.path.join(store_dir, name),
+            lambda tmp, m=merged, k=n: m.repartition(k)
+            .write.mode("overwrite")
+            .parquet(os.path.join(tmp, "batch=base")),
+        )
 
 
 def store_fs_for(path: str) -> StoreFS:

@@ -63,11 +63,13 @@ def main() -> None:
         textdup_ingest_batch,
     )
     from file_appender_spark.operators.pairstore import (
-        _stamp_params,
+        _STORE,
+        _params,
         _with_sig_hashes,
         pair_signatures,
         pairstore_ingest_batch,
     )
+    from file_appender_spark.storefs import stamp_params
 
     params = {"modality": "minhash", "n_slots": 16, "n_bands": 4}
     spec = _modality_spec(params)
@@ -99,7 +101,7 @@ def main() -> None:
         os.path.join(wp, "sigs", "batch=base")
     )
     os.makedirs(os.path.join(wp, "pairs", "batch=base"), exist_ok=True)
-    _stamp_params(wp, 0.2)
+    stamp_params(_STORE, wp, _params(0.2))
     pairstore_ingest_batch(
         spark, epoch_docs(spark, small_dir, 1_000, 92_000_000), wp, batch_id=1
     )
@@ -147,7 +149,7 @@ def main() -> None:
             )
         )
         os.makedirs(os.path.join(pstore, "pairs", "batch=base"), exist_ok=True)
-        _stamp_params(pstore, 0.2)
+        stamp_params(_STORE, pstore, _params(0.2))
         pep = epoch_docs(spark, small_dir, 5_000, 30_000_000)
         t = timed(
             lambda: pairstore_ingest_batch(spark, pep, pstore, batch_id=1)

@@ -58,10 +58,12 @@ def main() -> None:
         textdup_ingest_batch,
     )
     from file_appender_spark.operators.pairstore import (
-        _stamp_params,
+        _STORE,
+        _params,
         pair_signatures,
         pairstore_ingest_batch,
     )
+    from file_appender_spark.storefs import stamp_params
 
     dirs = {}
     for label, n in SIZES:
@@ -104,7 +106,7 @@ def main() -> None:
             )
         )
         os.makedirs(os.path.join(pstore, "pairs", "batch=base"), exist_ok=True)
-        _stamp_params(pstore, 0.2)
+        stamp_params(_STORE, pstore, _params(0.2))
         pep = epoch_docs(spark, small_dir, 5_000, 30_000_000)
         t = timed(
             lambda: pairstore_ingest_batch(spark, pep, pstore, batch_id=1)

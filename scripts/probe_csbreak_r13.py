@@ -47,9 +47,6 @@ def main():
     docs.count()
 
     from file_appender_spark.operators.corpusstats import (
-        _bigram_dir,
-        _source_dir,
-        _token_dir,
         build_corpus_stats,
         corpus_bigram_stats,
         corpus_source_stats,

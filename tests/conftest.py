@@ -108,19 +108,19 @@ _SLOW_TESTS = {
     "tests/test_manifest_store.py::test_classic_pairstore_refused_on_no_dir_rename_backend",
     "tests/test_manifest_store.py::test_classic_store_refused_on_no_dir_rename_backend",
     "tests/test_manifest_store.py::test_corpusstats_manifest_lifecycle_on_no_dir_rename_backend",
-    "tests/test_manifest_store.py::test_create_manifest_pairstore_resumes_and_refuses_debris",
+    "tests/test_manifest_store.py::test_create_manifest_resumes_and_refuses_debris",
     "tests/test_manifest_store.py::test_manifest_compaction_cleans_crash_debris",
     "tests/test_manifest_store.py::test_manifest_layout_is_fs_agnostic_and_decision_identical",
     "tests/test_manifest_store.py::test_manifest_lifecycle_on_no_dir_rename_backend",
     "tests/test_manifest_store.py::test_migrate_classic_store_to_manifest",
     "tests/test_manifest_store.py::test_migrate_corpusstats_to_manifest",
     "tests/test_manifest_store.py::test_migrate_pairstore_to_manifest",
+    "tests/test_manifest_store.py::test_migration_marker_crash_after_last_publish",
     "tests/test_manifest_store.py::test_migration_sweeps_base_level_write_artifacts",
+    "tests/test_manifest_store.py::test_migration_sweeps_classic_debris",
     "tests/test_manifest_store.py::test_pairstore_manifest_lifecycle_on_no_dir_rename_backend",
     "tests/test_manifest_store.py::test_pairstore_manifest_parity_with_classic",
-    "tests/test_manifest_store.py::test_pairstore_migration_marker_crash_after_last_publish",
     "tests/test_manifest_store.py::test_pairstore_migration_resumes_after_crash",
-    "tests/test_manifest_store.py::test_pairstore_migration_sweeps_classic_debris",
     "tests/test_manifest_store.py::test_sigstore_migration_marker_refuses_and_resumes",
     "tests/test_operators.py::test_ann_sign_ivf_exclude_self_flag",
     "tests/test_operators.py::test_band_pairs_slice_equivalence",

@@ -20,10 +20,12 @@ from file_appender_spark.operators.corpusstats import (
     compact_corpus_stats,
     corpus_token_stats,
     corpusstats_ingest_batch,
+    read_bigram_stats,
     read_source_stats,
     read_token_stats,
 )
 from file_appender_spark.sources.catalog import load_table
+from file_appender_spark.storefs import table_dir
 
 
 def _rows(df):
@@ -108,6 +110,41 @@ def test_tokenizer_params_guard(spark, sf_dir, tmp_path):
         json.dump({"tokenizer": "other", "version": 99}, f)
     with pytest.raises(ValueError, match="incomparable"):
         corpusstats_ingest_batch(spark, docs, store, batch_id=7)
+    # reads and compaction open through the same guard: they refuse a
+    # foreign stamp too, and write nothing
+    before = _listing(store)
+    for read in (read_token_stats, read_source_stats, read_bigram_stats):
+        with pytest.raises(ValueError, match="incomparable"):
+            read(spark, store)
+    with pytest.raises(ValueError, match="incomparable"):
+        compact_corpus_stats(spark, store)
+    assert _listing(store) == before
+
+
+def _listing(store):
+    return sorted(
+        os.path.relpath(os.path.join(d, f), store)
+        for d, _, files in os.walk(store)
+        for f in files
+    )
+
+
+def test_compaction_refuses_inflight_write(spark, tmp_path):
+    """A Spark ``_temporary`` dir under a stats table means a live (or
+    crashed) ingest writer: compaction refuses the maintenance window
+    instead of racing the swap, like the pair and signature stores."""
+    docs = spark.createDataFrame(
+        [(1, "alpha beta", "s1")], "doc_id long, text string, source string"
+    )
+    store = str(tmp_path / "busy_stats")
+    build_corpus_stats(spark, docs, store)
+    os.makedirs(
+        os.path.join(table_dir(store, "token_stats"), "batch=base", "_temporary")
+    )
+    before = _listing(store)
+    with pytest.raises(RuntimeError, match="in-flight"):
+        compact_corpus_stats(spark, store)
+    assert _listing(store) == before
 
 
 def test_corpusstats_survive_empty_corpus(spark, tmp_path):

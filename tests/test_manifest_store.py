@@ -521,9 +521,43 @@ def test_classic_corpusstats_refused_on_no_dir_rename_backend(
         compact_corpus_stats(spark, store)
 
 
-def test_pairstore_migration_marker_crash_after_last_publish(
-    spark, tmp_path
-):
+def _table_store(kind):
+    """One multi-table store's lifecycle entry points, so the shared
+    lifecycle tests run against both stores: (spec, build(spark, docs,
+    store), create(store), migrate(store), read(spark, store) -> frame,
+    rows the read serves for _corpus(spark, 10))."""
+    from types import SimpleNamespace
+
+    if kind == "pair":
+        from file_appender_spark.operators import pairstore as m
+
+        return SimpleNamespace(
+            spec=m._STORE,
+            build=m.build_pair_graph,
+            create=m.create_manifest_pairstore,
+            migrate=m.migrate_pairstore_to_manifest,
+            read=m.read_pairs,
+            n_rows=1,  # the one exact twin pair (0, 1)
+        )
+    from file_appender_spark.operators import corpusstats as m
+
+    return SimpleNamespace(
+        spec=m._STORE,
+        build=lambda spark, docs, store: m.build_corpus_stats(
+            spark, docs.withColumn("source", F.lit("web")), store
+        ),
+        create=m.create_manifest_corpusstats,
+        migrate=m.migrate_corpusstats_to_manifest,
+        read=m.read_token_stats,
+        n_rows=90,  # 9 distinct texts x 10 distinct words, one source
+    )
+
+
+_TABLE_STORES = pytest.mark.parametrize("kind", ["pair", "corpusstats"])
+
+
+@_TABLE_STORES
+def test_migration_marker_crash_after_last_publish(spark, tmp_path, kind):
     """Review finding: a crash BETWEEN the last table publish and the
     marker removal used to wedge the store forever (the re-run's
     all-published early return skipped the removal). With every
@@ -531,84 +565,73 @@ def test_pairstore_migration_marker_crash_after_last_publish(
     SELF-HEAL: the marker is recognized as completed-migration debris
     and removed (storefs.refuse_mid_migration), no manual re-run
     needed."""
-    from file_appender_spark.operators.pairstore import (
-        _MIGRATING_MARKER,
-        build_pair_graph,
-        migrate_pairstore_to_manifest,
-        read_pairs,
-    )
-
-    store = str(tmp_path / "ps_marker")
-    build_pair_graph(spark, _corpus(spark, 12, tag="mk"), store)
-    migrate_pairstore_to_manifest(store)
+    ts = _table_store(kind)
+    marker = ts.spec.migrating_marker
+    store = str(tmp_path / "marker")
+    ts.build(spark, _corpus(spark, 12, tag="mk"), store)
+    ts.migrate(store)
     # simulate the crash: every table published, marker back on disk
-    open(os.path.join(store, _MIGRATING_MARKER), "w").write("crash")
-    assert read_pairs(spark, store).count() >= 1  # self-heals
-    assert not os.path.exists(os.path.join(store, _MIGRATING_MARKER))
+    open(os.path.join(store, marker), "w").write("crash")
+    assert ts.read(spark, store).count() >= 1  # self-heals
+    assert not os.path.exists(os.path.join(store, marker))
     # a genuinely half-moved store (some manifest missing) still
     # refuses: recreate the marker and unpublish one table's manifest
-    open(os.path.join(store, _MIGRATING_MARKER), "w").write("crash")
-    os.remove(os.path.join(store, "clusters", _CURRENT_FILE))
+    open(os.path.join(store, marker), "w").write("crash")
+    os.remove(os.path.join(store, ts.spec.tables[-1], _CURRENT_FILE))
     with pytest.raises(ValueError, match="unfinished manifest migration"):
-        read_pairs(spark, store)
+        ts.read(spark, store)
     # the re-run republishes the missing manifest and clears the marker
-    migrate_pairstore_to_manifest(store)
-    assert not os.path.exists(os.path.join(store, _MIGRATING_MARKER))
-    assert read_pairs(spark, store).count() >= 1
+    ts.migrate(store)
+    assert not os.path.exists(os.path.join(store, marker))
+    assert ts.read(spark, store).count() >= 1
 
 
-def test_create_manifest_pairstore_resumes_and_refuses_debris(
-    spark, tmp_path, object_fs
+@_TABLE_STORES
+def test_create_manifest_resumes_and_refuses_debris(
+    spark, tmp_path, object_fs, kind
 ):
     """Review findings on create_manifest_* crash windows: a lone
     EMPTY version dir without _CURRENT (create's own crash debris) is
     finished by a retry, not misread as classic data; a classic .old
     backup refuses loudly instead of being silently orphaned under an
     empty manifest."""
-    from file_appender_spark.operators.pairstore import (
-        build_pair_graph,
-        create_manifest_pairstore,
-        read_pairs,
-    )
-
-    store = str(tmp_path / "ps_create_resume")
+    ts = _table_store(kind)
+    first, second = ts.spec.tables[:2]
+    store = str(tmp_path / "create_resume")
     # crash between makedirs(v1) and the _CURRENT publish
-    os.makedirs(os.path.join(store, "sigs", "v1"))
-    create_manifest_pairstore(store)  # retry completes the layout
-    build_pair_graph(spark, _corpus(spark, 10, tag="cr"), store)
-    assert read_pairs(spark, store).count() == 1
+    os.makedirs(os.path.join(store, first, "v1"))
+    ts.create(store)  # retry completes the layout
+    ts.build(spark, _corpus(spark, 10, tag="cr"), store)
+    assert ts.read(spark, store).count() == ts.n_rows
     # a .old sibling is recoverable classic data — never orphan it
-    store2 = str(tmp_path / "ps_create_old")
-    os.makedirs(os.path.join(store2, "pairs.old"))
-    open(os.path.join(store2, "pairs.old", "part-x.parquet"), "w").close()
+    store2 = str(tmp_path / "create_old")
+    os.makedirs(os.path.join(store2, f"{second}.old"))
+    open(os.path.join(store2, f"{second}.old", "part-x.parquet"), "w").close()
     with pytest.raises(ValueError, match="classic crash debris"):
-        create_manifest_pairstore(store2)
+        ts.create(store2)
 
 
-def test_pairstore_migration_sweeps_classic_debris(spark, tmp_path):
+@_TABLE_STORES
+def test_migration_sweeps_classic_debris(spark, tmp_path, kind):
     """Review finding: classic debris siblings (a stale .old backup
     next to a live table, interrupted .compacting/.refreshing swap
     outputs) would never be cleaned again after migration — the
     classic passes that cleaned them stop running. Migration sweeps
     them."""
-    from file_appender_spark.operators.pairstore import (
-        build_pair_graph,
-        migrate_pairstore_to_manifest,
-        read_pairs,
-    )
-
-    store = str(tmp_path / "ps_debris")
-    build_pair_graph(spark, _corpus(spark, 12, tag="db"), store)
-    want = read_pairs(spark, store).count()
+    ts = _table_store(kind)
+    store = str(tmp_path / "debris")
+    ts.build(spark, _corpus(spark, 12, tag="db"), store)
+    want = ts.read(spark, store).count()
     # stale backup NEXT TO a live table + interrupted swap outputs
-    os.makedirs(os.path.join(store, "sigs.old"))
-    open(os.path.join(store, "sigs.old", "stale.parquet"), "w").close()
-    os.makedirs(os.path.join(store, "pairs.compacting"))
-    os.makedirs(os.path.join(store, "clusters.refreshing"))
-    migrate_pairstore_to_manifest(store)
-    for debris in ("sigs.old", "pairs.compacting", "clusters.refreshing"):
-        assert not os.path.exists(os.path.join(store, debris)), debris
-    assert read_pairs(spark, store).count() == want
+    debris = [t + s for t, s in zip(ts.spec.tables, ts.spec.classic_debris)]
+    os.makedirs(os.path.join(store, debris[0]))
+    open(os.path.join(store, debris[0], "stale.parquet"), "w").close()
+    for d in debris[1:]:
+        os.makedirs(os.path.join(store, d))
+    ts.migrate(store)
+    for d in debris:
+        assert not os.path.exists(os.path.join(store, d)), d
+    assert ts.read(spark, store).count() == want
 
 
 def test_migration_sweeps_base_level_write_artifacts(spark, tmp_path):

@@ -185,6 +185,35 @@ def test_params_guard_and_reserved_epoch(spark, tmp_path):
         pairstore_ingest_batch(spark, docs, store, batch_id="base")
 
 
+def test_params_guard_checks_full_stamp_without_threshold(spark, tmp_path):
+    """With no threshold passed, the params guard still compares the
+    whole stamp — the stamped threshold with this code's hash params.
+    A store stamped with other LSH params (here n_bands 8) is a
+    different graph: ingest, default-threshold reads, refresh and
+    compaction all refuse it instead of folding into it."""
+    store = str(tmp_path / "foreign_bands")
+    docs = spark.createDataFrame(
+        [(1, "alpha beta gamma delta"), (2, "alpha beta gamma delta epsilon")],
+        "doc_id long, text string",
+    )
+    build_pair_graph(spark, docs, store)
+    path = os.path.join(store, "_PAIRSTORE_PARAMS.json")
+    with open(path) as f:
+        stamp = json.load(f)
+    stamp["n_bands"] = 8
+    with open(path, "w") as f:
+        json.dump(stamp, f)
+    with pytest.raises(ValueError, match="different graphs"):
+        pairstore_ingest_batch(spark, docs, store, batch_id=1)
+    with pytest.raises(ValueError, match="different graphs"):
+        read_pairs(spark, store)
+    with pytest.raises(ValueError, match="different graphs"):
+        refresh_clusters(spark, store)
+    with pytest.raises(ValueError, match="different graphs"):
+        compact_pairstore(spark, store)
+    assert not os.path.exists(os.path.join(store, "pairs", "batch=1"))
+
+
 def test_crash_recovery_restores_half_swapped_store(spark, tmp_path):
     store = str(tmp_path / "crash")
     docs = spark.createDataFrame(

@@ -15,7 +15,12 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from file_appender_spark.storefs import ArrowStoreFS, LocalStoreFS, store_fs_for
+from file_appender_spark.storefs import (
+    ArrowStoreFS,
+    LocalStoreFS,
+    store_fs_for,
+    table_dir,
+)
 
 
 @pytest.fixture(params=["posix", "arrow"])
@@ -207,7 +212,6 @@ def test_pairstore_lifecycle_both_backends(spark, mkstore):
     """build -> ingest -> refresh -> read -> compact, plus the
     half-swapped-clusters crash recovery, on both backends."""
     from file_appender_spark.operators.pairstore import (
-        _clusters_dir,
         build_pair_graph,
         compact_pairstore,
         pairstore_ingest_batch,
@@ -237,7 +241,7 @@ def test_pairstore_lifecycle_both_backends(spark, mkstore):
     # crash between the clusters swap renames: directory missing,
     # .old present — reader recovers it
     fs = store_fs_for(store)
-    cd = _clusters_dir(store)
+    cd = table_dir(store, "clusters")
     fs.rename(cd, cd + ".old")
     asg2 = {r["doc"]: r["cluster"]
             for r in read_cluster_assignment(spark, store).collect()}

@@ -281,19 +281,19 @@ def test_maintenance_refuses_inflight_write(spark, tmp_path):
     refresh must refuse the maintenance window instead of racing the
     directory swap."""
     from file_appender_spark.operators.pairstore import (
-        _sigs_dir,
         build_pair_graph,
         compact_pairstore,
         refresh_clusters,
     )
+    from file_appender_spark.storefs import table_dir
 
     store = str(tmp_path / "busy")
     build_pair_graph(spark, _corpus(spark, 20), store, threshold=0.2)
-    os.makedirs(os.path.join(_sigs_dir(store), "batch=9", "_temporary"))
+    os.makedirs(os.path.join(table_dir(store, "sigs"), "batch=9", "_temporary"))
     with pytest.raises(RuntimeError, match="in-flight"):
         compact_pairstore(spark, store)
-    os.rmdir(os.path.join(_sigs_dir(store), "batch=9", "_temporary"))
-    os.rmdir(os.path.join(_sigs_dir(store), "batch=9"))
+    os.rmdir(os.path.join(table_dir(store, "sigs"), "batch=9", "_temporary"))
+    os.rmdir(os.path.join(table_dir(store, "sigs"), "batch=9"))
 
     # signature store: same guard on compact_store
     sstore = str(tmp_path / "busy_sig")
