@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from file_appender_spark.operators.arraykernels import as_double, dot
+
 SIMILARITY_CROSSOVER = 5_000
 SEMANTIC_CELL_CROSSOVER = 5_000
 # Measured (SCALING.md "weighted-Jaccard scale paths at 100x"): the
@@ -152,12 +154,6 @@ def _dedup_on_cells(c: DataFrame, tau: float) -> DataFrame:
     """SemDeDup core shared by both quantizers: exact cosine within
     each cell, lowest-id-wins keep rule; input is (vec_id, e, nrm,
     cell) with nrm > 0."""
-
-    def dot(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda s, x: s + x
-        )
-
     a = c.select(
         F.col("vec_id").alias("id1"),
         F.col("e").alias("e1"),
@@ -221,13 +217,8 @@ def semantic_dedup(
 
     v = emb.select(
         F.col(id_col).alias("vec_id"),
-        F.transform(vec_col, lambda x: x.cast("double")).alias("e"),
+        as_double(F.col(vec_col)).alias("e"),
     )
-
-    def dot(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda s, x: s + x
-        )
 
     if mode == "fixed":
         from file_appender_spark.queries.mining import _SD_DIMS

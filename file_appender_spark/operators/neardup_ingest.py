@@ -45,13 +45,12 @@ from contextlib import contextmanager, nullcontext
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from file_appender_spark.operators.arraykernels import dot
 from file_appender_spark.operators.materialize import materialize_frame
 from file_appender_spark.operators.similarity import (
-    _as_double,
-    _dot,
-    _srp_band_sigs,
     _srp_coefs,
     _vec_dim,
+    srp_sigs_arrow,
 )
 from file_appender_spark.storefs import require_atomic_dir_rename, store_fs_for
 
@@ -1003,25 +1002,10 @@ def _lean_dup_terms(
 def _sig_frame(
     df: DataFrame, n_bits: int, n_bands: int, id_col: str, vec_col: str
 ) -> DataFrame:
-    v = _as_double(F.col(vec_col))
-    # Fixed-width batches take the vectorized Arrow signature stage —
-    # bit-identical by sequential-fold construction (similarity.
-    # srp_sigs_arrow's docstring; pinned in tests), so stores written
-    # either way stay comparable. Empty batches keep the inline HOF
-    # path (no dim to size the coefficient matrix from).
-    base = _spread(df).select(F.col(id_col), v.alias("v"))
-    dim = _vec_dim(base, F.col("v"))
-    if dim is None:
-        sigs = _srp_band_sigs(F.col("v"), n_bits, n_bands)
-        return base.select(
-            F.col(id_col),
-            "v",
-            F.sqrt(_dot(F.col("v"), F.col("v"))).alias("nrm"),
-            *[sigs[bi].alias(f"b{bi}") for bi in range(n_bands)],
-        )
-    from file_appender_spark.operators.similarity import srp_sigs_arrow
-
-    coefs = _srp_coefs(df.sparkSession, n_bits, dim)
+    # the vectorized Arrow signature stage, bit-identical to the SQL
+    # folds (similarity.srp_sigs_arrow), so stores written by any
+    # release stay comparable
+    coefs = _srp_coefs(df.sparkSession, n_bits, _vec_dim(df, F.col(vec_col)))
     return srp_sigs_arrow(_spread(df), id_col, vec_col, n_bits, n_bands, coefs)
 
 
@@ -1417,7 +1401,7 @@ def neardup_ingest_batch(
     # they reliably become candidates of each other)
     cos = F.round(
         F.try_divide(
-            _dot(F.col("v_new"), F.col("v_old")),
+            dot(F.col("v_new"), F.col("v_old")),
             F.col("n_new") * F.col("n_old"),
         ),
         round_dp,

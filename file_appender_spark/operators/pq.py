@@ -11,12 +11,13 @@ via asymmetric distance computation (ADC): per query, one
 candidate scores as m table lookups instead of a D-dim dot product.
 
 Spark mapping:
-- **encode** is a generated-SQL per-row expression (the similarity.py
-  lesson: literal codebooks + HOF folds stay in codegen; no join, no
-  shuffle, no UDF). Encoding 100 TB of vectors is an embarrassingly
-  parallel scan, like q88's scalar quantizer.
+- **encode** is one vectorized Arrow pass over the vector column
+  (``arraykernels.map_vectors``; no join, no shuffle). Encoding 100 TB
+  of vectors is an embarrassingly parallel scan, like q88's scalar
+  quantizer. The generated-SQL spelling (``_pq_encode_sql``) is the
+  reference it is pinned against.
 - **train** is Lloyd's algorithm as repeated (assign -> mean)
-  aggregations: assignment reuses the encode expression with the
+  aggregations: assignment is the generated-SQL argmin with the
   current codebook; the update is one groupBy(code) over each
   subspace. Each iteration is one job; the codebook (m x k x D/m
   floats) lives on the driver and broadcasts as literals — there is
@@ -41,9 +42,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _sql_double(x: float) -> str:
-    return f"{x!r}D"
+from file_appender_spark.operators.arraykernels import (
+    as_double,
+    fold_dot,
+    map_vectors,
+    row_fold,
+    sign_bits,
+    sql_double,
+)
 
 
 def seed_codebook(
@@ -75,7 +81,7 @@ def _dist_sql(vec_col: str, s: int, sub: int, codeword: list[float]) -> str:
     """Squared L2 distance of subspace ``s`` of ``vec_col`` to one
     literal codeword, as a Spark SQL expression: slice, zip_with
     squared diffs, left-fold sum — dim-by-dim in order."""
-    arr = "array(" + ",".join(_sql_double(c) for c in codeword) + ")"
+    arr = "array(" + ",".join(sql_double(c) for c in codeword) + ")"
     sl = f"slice({vec_col}, {s * sub + 1}, {sub})"
     return (
         f"aggregate(zip_with({sl}, {arr}, (x, c) -> (x - c) * (x - c)), "
@@ -128,131 +134,65 @@ def _pq_encode_arrow(
     codebook: list[list[list[float]]],
     keep: list[str],
 ) -> DataFrame:
-    """One vectorized Arrow pass over fixed-width vectors — the
-    srp_sigs_arrow technique (r12, guide §4.2) applied to the encode
-    folds: m*k interpreted ``aggregate(zip_with(...))`` trees per row
-    (4*16 folds x 16 dims = 1024 expression evaluations at q158's
-    shape) become numpy float64 ops vectorized over rows with the
-    FOLD ORDER preserved — the JVM spelling is a left fold
-    ``((0 + d_1) + d_2) + ...`` per codeword and a left fold over
-    subspaces for recon_err2, so the numpy loops run sequentially
-    over the dim and subspace axes, making every intermediate
-    rounding — hence every distance, code and error — BIT-IDENTICAL.
-    Ties pick the lower codeword index in both spellings (np.argmin
-    first-minimum == the (d, i) struct array_min). Degenerate rows
-    (NULL vector, NULL element, ragged length, NaN values) fall back
-    to a per-row Python replica pinning the SQL semantics (NULL
-    distances sort FIRST like the struct ordering; NaN sorts LAST,
-    Spark's NaN-as-largest) — pinned against the SQL spelling in
-    tests/test_pq.py."""
+    """The encode folds as one vectorized Arrow pass: m*k interpreted
+    ``aggregate(zip_with(...))`` trees per row become ``fold_dot``
+    left folds vectorized over rows, and recon_err2 sums the chosen
+    distances in subspace order — every distance, code and error
+    BIT-IDENTICAL to ``_pq_encode_sql``. Ties pick the lower codeword
+    index in both spellings (np.argmin's first minimum == the (d, i)
+    struct array_min). Batches with a NULL, a ragged width or a NaN go
+    to the per-row replica, which orders distances like the struct:
+    NULL first, NaN last (Spark's NaN-as-largest). Pinned in
+    tests/test_arraykernels.py."""
+    import numpy as np
+
     m = len(codebook)
     k = len(codebook[0])
     sub = len(codebook[0][0])
-    dim = m * sub
     cb = [[list(map(float, cw)) for cw in cbs] for cbs in codebook]
-    fields = [df.schema[c] for c in keep]
 
-    def compute(batches):
-        import math
+    def sq_diff(x, c):
+        return (x - c) * (x - c)
 
-        import numpy as np
-        import pyarrow as pa
-        import pyarrow.compute as pc
+    def sq_dist(X, cw):  # squared L2 per row, folded in dim order
+        dd = X - cw
+        return fold_dot(dd, dd)
 
-        C = np.array(cb, dtype=np.float64)  # (m, k, sub)
+    def fast(V):
+        n = V.shape[0]
+        codes, err = [], np.zeros(n)
+        for s in range(m):
+            Vs = V[:, s * sub:(s + 1) * sub]
+            D = np.stack([sq_dist(Vs, cw) for cw in cb[s]], axis=1)  # (rows, k)
+            sel = np.argmin(D, axis=1)
+            codes.append(sel.astype(np.int32))
+            err = err + D[np.arange(n), sel]
+        return [*codes, err]
 
-        def slow_row(v):
-            if v is None:
-                v = []
-            codes, err = [], 0.0
-            err_none = False
-            for s in range(m):
-                ds = []
-                for c in range(k):
-                    acc, bad = 0.0, False
-                    for j in range(sub):
-                        idx = s * sub + j
-                        x = v[idx] if idx < len(v) else None
-                        if x is None:
-                            bad = True
-                            break
-                        dd = float(x) - C[s, c, j]
-                        acc = acc + dd * dd
-                    ds.append(None if bad else acc)
-                best_c, best_key = 0, None
-                for c, d in enumerate(ds):
-                    # struct (d, i) ordering: NULL first, NaN last
-                    key = (
-                        (0, 0.0)
-                        if d is None
-                        else ((2, 0.0) if math.isnan(d) else (1, d))
-                    )
-                    if best_key is None or key < best_key:
-                        best_key, best_c = key, c
-                codes.append(best_c)
-                d_sel = ds[best_c]
-                if d_sel is None:
-                    err_none = True
-                elif not err_none:
-                    err = err + d_sel
-            return codes, (None if err_none else err)
-
-        for rb in batches:
-            n = rb.num_rows
-            if n == 0:
-                continue
-            keeps = [rb.column(i) for i in range(len(keep))]
-            vec = pc.cast(rb.column(len(keep)), pa.list_(pa.float64()))
-            lens = pc.list_value_length(vec)
-            clean = (
-                vec.null_count == 0
-                and vec.flatten().null_count == 0
-                and pc.min(lens).as_py() == dim
-                and pc.max(lens).as_py() == dim
+    def slow(v):
+        codes, err = [], 0.0
+        for s in range(m):
+            part = None if v is None else v[s * sub:(s + 1) * sub]
+            ds = [row_fold(part, cw, sq_diff) for cw in cb[s]]
+            best = min(
+                range(k),
+                key=lambda c: (0, 0.0) if ds[c] is None
+                else ((2, 0.0) if np.isnan(ds[c]) else (1, ds[c])),
             )
-            if clean:
-                V = vec.flatten().to_numpy(zero_copy_only=False).reshape(n, dim)
-                if np.isnan(V).any():
-                    clean = False  # NaN ordering differs from argmin
-            if clean:
-                codes_cols = []
-                err_acc = np.zeros(n, dtype=np.float64)
-                for s in range(m):
-                    off = s * sub
-                    D = np.empty((n, k), dtype=np.float64)
-                    for c in range(k):
-                        acc = np.zeros(n, dtype=np.float64)
-                        crow = C[s, c]
-                        for j in range(sub):
-                            dd = V[:, off + j] - crow[j]
-                            acc = acc + dd * dd
-                        D[:, c] = acc
-                    sel = np.argmin(D, axis=1)  # first min == lower idx
-                    codes_cols.append(sel.astype(np.int32))
-                    err_acc = err_acc + D[np.arange(n), sel]
-                arrays = keeps + [pa.array(c) for c in codes_cols] + [
-                    pa.array(err_acc)
-                ]
-            else:
-                pl = vec.to_pylist()
-                rows = [slow_row(v) for v in pl]
-                arrays = keeps + [
-                    pa.array([r[0][s] for r in rows], type=pa.int32())
-                    for s in range(m)
-                ] + [
-                    pa.array([r[1] for r in rows], type=pa.float64())
-                ]
-            yield pa.RecordBatch.from_arrays(
-                arrays,
-                names=keep + [f"code{s}" for s in range(m)] + ["recon_err2"],
-            )
+            codes.append(best)
+            err = None if err is None or ds[best] is None else err + ds[best]
+        return (*codes, err)
 
-    out_schema = ", ".join(
-        [f"`{f.name}` {f.dataType.simpleString()}" for f in fields]
-        + [f"code{s} int" for s in range(m)]
-        + ["recon_err2 double"]
+    return map_vectors(
+        df,
+        keep,
+        [vec_col],
+        [(f"code{s}", "int") for s in range(m)] + [("recon_err2", "double")],
+        fast,
+        slow,
+        width=m * sub,
+        clean=lambda V: not np.isnan(V).any(),
     )
-    return df.select(*keep, vec_col).mapInArrow(compute, schema=out_schema)
 
 
 def pq_encode(
@@ -263,17 +203,11 @@ def pq_encode(
 ) -> DataFrame:
     """Encode every vector: ``code{s}`` per subspace plus the total
     squared reconstruction error (= sum of subspace distances, summed
-    in subspace order). Fixed-width frames take the vectorized Arrow
-    pass (bit-identical by sequential-fold construction —
-    _pq_encode_arrow's contract, pinned in tests/test_pq.py); an
-    empty frame (no dim to validate the codebook against) keeps the
-    generated-SQL spelling."""
+    in subspace order), as one Arrow pass (``_pq_encode_arrow``). The
+    codebook fixes the width, so building the frame runs no Spark job;
+    a NULL vector encodes to code 0 in every subspace with a NULL
+    recon_err2, like the SQL spelling."""
     keep = keep_cols if keep_cols is not None else [df.columns[0]]
-    from file_appender_spark.operators.similarity import _vec_dim
-
-    dim = _vec_dim(df.select(F.col(vec_col).alias("v")), F.col("v"))
-    if dim is None:
-        return _pq_encode_sql(df, vec_col, codebook, keep)
     return _pq_encode_arrow(df, vec_col, codebook, keep)
 
 
@@ -439,9 +373,7 @@ def ivf_pq_index(
     if n_rows is None:
         n_rows = corpus.count()
     n_bits = ivf_bits_for(n_rows, target_cell_size)
-    v = corpus.select(
-        id_col, F.transform(vec_col, lambda x: x.cast("double")).alias("v")
-    )
+    v = corpus.select(id_col, as_double(F.col(vec_col)).alias("v"))
     dim = len(codebook) * len(codebook[0][0])
     coefs = _srp_coefs(corpus.sparkSession, n_bits, dim)
     cells = v.withColumn("cell", _srp_cell_sql("v", n_bits, coefs))
@@ -450,15 +382,17 @@ def ivf_pq_index(
 
 
 def _py_cell(qv: list[float], n_bits: int, coefs: list[list[float]]) -> int:
-    """Driver-side cell of a plain Python vector: the same left-fold
-    dot products as the SQL path (Python floats ARE IEEE doubles and
-    the fold order matches, so signs agree bit-for-bit)."""
+    """Cell of a plain Python query vector, spelled as ``_srp_cell_sql``
+    builds the index's: the same left-fold projections (``fold_dot``)
+    and Spark's sign rule (a NaN projection gives bit 1). A query of
+    another width has no cell (the engine's would be NULL), so it
+    raises."""
+    dim = len(coefs[0])
+    if len(qv) != dim:
+        raise ValueError(f"query vector has {len(qv)} dims, the index expects {dim}")
     cell = 0
-    for b in range(n_bits):
-        s = 0.0
-        for x, c in zip(qv, coefs[b]):
-            s += x * c
-        cell = cell * 2 + (1 if s >= 0 else 0)
+    for bit in sign_bits(fold_dot(coefs[:n_bits], qv)):
+        cell = cell * 2 + int(bit)
     return cell
 
 

@@ -40,13 +40,16 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-
-def _dot(a, b):
-    return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda s, x: s + x)
-
-
-def _as_double(col):
-    return F.transform(col, lambda x: x.cast("double"))
+from file_appender_spark.operators.arraykernels import (
+    as_double,
+    dot,
+    fold_dot,
+    map_vectors,
+    row_fold,
+    sign_bits,
+    sql_double,
+    zero_divisor,
+)
 
 
 def brute_force_topk(
@@ -62,13 +65,13 @@ def brute_force_topk(
     with an id tie-break so the ordering is total."""
     # norms per row, not per pair: one codegen'd fold per candidate
     c = corpus.select(
-        F.col(id_col), _as_double(F.col(vec_col)).alias("v")
-    ).withColumn("nrm", F.sqrt(_dot(F.col("v"), F.col("v"))))
+        F.col(id_col), as_double(F.col(vec_col)).alias("v")
+    ).withColumn("nrm", F.sqrt(dot(F.col("v"), F.col("v"))))
     q = queries.select(
-        F.col(qid_col), _as_double(F.col(vec_col)).alias("qv")
-    ).withColumn("qnrm", F.sqrt(_dot(F.col("qv"), F.col("qv"))))
+        F.col(qid_col), as_double(F.col(vec_col)).alias("qv")
+    ).withColumn("qnrm", F.sqrt(dot(F.col("qv"), F.col("qv"))))
     cos = F.round(
-        _dot(F.col("qv"), F.col("v")) / (F.col("qnrm") * F.col("nrm")),
+        dot(F.col("qv"), F.col("v")) / (F.col("qnrm") * F.col("nrm")),
         round_dp,
     )
     scored = (
@@ -146,27 +149,16 @@ def blocked_topk(
     )
 
 
-def _srp_projection(v, bit_idx: int, coefs: list | None = None):
+def _srp_projection(v, bit_idx: int):
     """Dot product of ``v`` with a hash-derived pseudo-random
     hyperplane: coefficient for (bit, dim) is murmur3(bit, dim)
     scaled to [-1, 1). No stored model, no RNG state — signatures are
-    deterministic across runs, engines, and partitionings, and the
-    whole fold stays inside codegen.
+    deterministic across runs, engines, and partitionings.
 
-    ``coefs`` (from ``_srp_coefs``) is the hoisted fast path: the
-    per-(bit, dim) hash is data-independent, so when the vector
-    dimension is known the coefficients become ONE array literal and
-    the per-row work drops to a multiply-add fold — measured ~2x on
-    the sf0.1 bench. The fold ORDER and every multiply are unchanged,
-    so projections (and therefore signatures) are bit-identical to
-    the inline-hash path — required for signature-store compatibility
-    (operators/neardup_ingest.py)."""
-    if coefs is not None:
-        return F.aggregate(
-            F.zip_with(v, F.lit(coefs[bit_idx]), lambda x, c: x * c),
-            F.lit(0.0),
-            lambda s, x: s + x,
-        )
+    The operators hoist these coefficients once (``_srp_coefs``) and
+    fold against them in ``srp_sigs_arrow``; this inline-hash spelling
+    stays only as the reference the bit-identity pins compare
+    against."""
     return F.aggregate(
         F.transform(
             v,
@@ -184,11 +176,14 @@ def _srp_coefs(spark, n_bits: int, dim: int) -> list[list[float]]:
     """The exact hyperplane coefficients the inline path computes per
     row, hoisted: one tiny JVM job evaluates the SAME
     ``F.hash(bit, i)`` murmur3 (so values match bit-for-bit), then the
-    (n_bits x dim) matrix is memoized — it is session-independent."""
+    (n_bits x dim) matrix is memoized — it is session-independent.
+    ``dim=0`` (a frame with no vector) needs no job: every row is
+    empty."""
     key = (n_bits, dim)
     got = _SRP_COEF_MEMO.get(key)
     if got is None:
-        rows = (
+        mat = [[0.0] * dim for _ in range(n_bits)]
+        rows = [] if dim == 0 else (
             spark.range(n_bits)
             .select(F.col("id").cast("int").alias("bit"))
             .select("bit", F.explode(F.expr(f"sequence(0, {dim - 1})")).alias("i"))
@@ -201,32 +196,24 @@ def _srp_coefs(spark, n_bits: int, dim: int) -> list[list[float]]:
             )
             .collect()
         )
-        mat = [[0.0] * dim for _ in range(n_bits)]
         for r in rows:
             mat[r["bit"]][r["i"]] = r["c"]
         got = _SRP_COEF_MEMO[key] = mat
     return got
 
 
-def _vec_dim(df: DataFrame, vec_col_expr) -> int | None:
+def _vec_dim(df: DataFrame, vec_col_expr) -> int:
     """Dimension of the (fixed-width) vector column from the first
-    NON-NULL vector (a bounded one-row probe), or None when the frame
-    holds no vector at all — callers fall back to the inline-hash
-    path. NULL rows are skipped: a NULL first row would otherwise
-    read as "no dim" and route the whole frame to the slow path."""
+    NON-NULL vector (a bounded one-row probe), or 0 when the frame
+    holds no vector at all. A zero-width coefficient matrix is then
+    exact: every row is NULL (the replica returns NULL) or empty."""
     row = (
         df.filter(vec_col_expr.isNotNull())
         .select(F.size(vec_col_expr).alias("d"))
         .limit(1)
         .first()
     )
-    return None if row is None else row["d"]
-
-
-def _sql_double(x: float) -> str:
-    """SQL double literal that parses back to the same IEEE-754 value
-    (repr is the shortest round-tripping decimal)."""
-    return f"{x!r}D"
+    return 0 if row is None else row["d"]
 
 
 def _srp_bit_sql(vname: str, bit_idx: int, coefs: list) -> str:
@@ -235,7 +222,7 @@ def _srp_bit_sql(vname: str, bit_idx: int, coefs: list) -> str:
     are bit-identical; only the plan-construction cost differs
     (building 96 Python-lambda HOFs costs ~5s of py4j roundtrips on
     the driver; parsing one generated SQL string costs ~ms)."""
-    arr = "array(" + ",".join(_sql_double(c) for c in coefs[bit_idx]) + ")"
+    arr = "array(" + ",".join(sql_double(c) for c in coefs[bit_idx]) + ")"
     proj = (
         f"aggregate(zip_with({vname}, {arr}, (x, c) -> x * c), "
         f"0.0D, (s, x) -> s + x)"
@@ -270,14 +257,13 @@ def _srp_cell_sql(vname: str, n_bits: int, coefs: list):
     return F.expr(sig)
 
 
-def _srp_band_sigs(v, n_bits: int, n_bands: int, coefs: list | None = None) -> list:
-    """Split ``n_bits`` hyperplane sign bits into ``n_bands`` integer
-    band signatures (bits packed big-endian within a band)."""
+def _srp_band_sigs(v, n_bits: int, n_bands: int) -> list:
+    """Split ``n_bits`` inline-hash sign bits into ``n_bands`` integer
+    band signatures (bits packed big-endian within a band) — the
+    reference spelling for the pins."""
     assert n_bits % n_bands == 0, "n_bits must divide evenly into bands"
     rows_per_band = n_bits // n_bands
-    bits = [
-        (_srp_projection(v, b, coefs) >= 0).cast("long") for b in range(n_bits)
-    ]
+    bits = [(_srp_projection(v, b) >= 0).cast("long") for b in range(n_bits)]
     sigs = []
     for bi in range(n_bands):
         sig = F.lit(0).cast("long")
@@ -296,157 +282,64 @@ def srp_sigs_arrow(
     coefs: list[list[float]],
 ) -> DataFrame:
     """(id, v, nrm, b0..b{n_bands-1}) via ONE vectorized Arrow pass —
-    the signature-stage spelling behind ``srp_neardup`` and the
-    embedding ingest (r12, guide §4.2).
+    the signature stage behind ``srp_neardup``, ``ann_sign_ivf`` (one
+    band: b0 is the cell id) and the embedding ingest.
 
-    The SQL/HOF spelling evaluates n_bits x dim interpreted
-    multiply-adds per row (96 x 64 = 6144 at the bench's sized
-    params) — SRP_BREAKDOWN_r12 attributes 84% of srp_neardup's wall
-    to it. Here the projections are numpy float64 ops vectorized over
-    rows, with the FOLD ORDER preserved: the JVM spelling is a left
-    fold ``((0 + v0*c0) + v1*c1) + ...``, so the numpy loop runs
-    sequentially over the dimension axis (acc += V[:, j] * C[b, j]),
-    making every intermediate rounding — hence every sign bit, hence
-    every signature — BIT-IDENTICAL, not merely close (a single
-    np.dot would use pairwise summation and could flip near-zero
-    signs). nrm follows the same rule (sequential self-dot, then
-    IEEE sqrt). Pinned in tests/test_similarity_ops.py.
-
-    Degenerate rows reproduce the zip_with-against-literal semantics:
-    NULL vectors -> NULL v/nrm/bands; a vector whose LENGTH differs
-    from the coefficient dim -> valid v and nrm (the self-dot never
-    mismatches) but NULL bands (zip_with pads the shorter side with
-    NULLs); a NULL element -> NULL nrm and bands; NaN elements
-    poison the projection to NaN, whose sign bit is 1 in both
-    spellings (Spark evaluates ``NaN >= 0`` as TRUE under its
-    NaN-as-largest comparison ordering, so the numpy/Python paths
-    spell the bit as ``not (proj < 0)`` to match — r12 ADVICE).
-    The clean fixed-width fast path is fully vectorized; degenerate
-    batches fall back to a per-row Python replica of the same folds."""
+    Bit-identical to the SQL spelling (``sqrt(dot(v, v))`` and
+    ``_srp_band_sigs_sql``): projections are ``fold_dot`` left folds
+    against the hoisted coefficients and bits follow Spark's sign rule
+    (a NaN projection gives 1), both from ``arraykernels``. Degenerate
+    rows reproduce zip_with-against-literal semantics through the
+    per-row replica: a NULL vector or element gives NULL nrm and
+    bands; a width other than the coefficients' gives a valid nrm but
+    NULL bands. Pinned in tests/test_arraykernels.py."""
     if n_bits % n_bands != 0:
         raise ValueError(
             f"n_bits ({n_bits}) must divide evenly into n_bands ({n_bands})"
         )
     rows_per_band = n_bits // n_bands
-    id_field = df.schema[id_col]
     cmat = [list(map(float, row)) for row in coefs]
     dim = len(cmat[0])
 
-    def _pack_bands(bits_mat):  # (rows, n_bits) int64 -> (rows, n_bands)
+    def pack(bits):  # (..., n_bits) sign bits -> n_bands big-endian ints
         import numpy as np
 
-        out = np.zeros((bits_mat.shape[0], n_bands), dtype=np.int64)
+        sigs = []
         for bi in range(n_bands):
-            sig = np.zeros(bits_mat.shape[0], dtype=np.int64)
-            for j in range(rows_per_band):
-                sig = sig * 2 + bits_mat[:, bi * rows_per_band + j]
-            out[:, bi] = sig
-        return out
+            sig = np.zeros(bits.shape[:-1], dtype=np.int64)
+            for j in range(bi * rows_per_band, (bi + 1) * rows_per_band):
+                sig = sig * 2 + bits[..., j]
+            sigs.append(sig)
+        return sigs
 
-    def compute(batches):
+    def fast(V):
         import numpy as np
-        import pyarrow as pa
-        import pyarrow.compute as pc
 
-        C = np.array(cmat, dtype=np.float64)  # (n_bits, dim)
+        # (rows, 1, dim) x (n_bits, dim): every projection in one fold
+        projs = fold_dot(V[:, None, :], np.array(cmat))
+        return [np.sqrt(fold_dot(V, V)), *pack(sign_bits(projs))]
 
-        def slow_row(v):
-            """Per-row replica of the SQL folds for degenerate rows:
-            returns (nrm, bands or None)."""
-            if v is None:
-                return None, None
-            if any(e is None for e in v):
-                return None, None
-            acc = 0.0
-            for e in v:
-                acc = acc + float(e) * float(e)
-            import math
+    def slow(v):
+        import math
 
-            nrm = math.sqrt(acc)
-            if len(v) != dim:
-                return nrm, None
-            bands_row = []
-            for bi in range(n_bands):
-                sig = 0
-                for j in range(rows_per_band):
-                    b = bi * rows_per_band + j
-                    p = 0.0
-                    for jj in range(dim):
-                        p = p + float(v[jj]) * C[b, jj]
-                    # Spark: NaN >= 0 is TRUE (NaN sorts above every
-                    # number), so the bit is "not negative", which is
-                    # 1 for NaN here exactly like the engine
-                    sig = sig * 2 + (0 if p < 0 else 1)
-                bands_row.append(sig)
-            return nrm, bands_row
+        sq = row_fold(v, v)
+        if sq is None:
+            return (None,) * (1 + n_bands)
+        if len(v) != dim:
+            return (math.sqrt(sq),) + (None,) * n_bands
+        bits = sign_bits([row_fold(v, c) for c in cmat])
+        return (math.sqrt(sq), *(int(s) for s in pack(bits)))
 
-        for rb in batches:
-            n_rows = rb.num_rows
-            if n_rows == 0:
-                continue
-            ids = rb.column(0)
-            vec = pc.cast(
-                rb.column(1), pa.list_(pa.float64())
-            )  # exact float->double, nulls preserved
-            lens = pc.list_value_length(vec)
-            clean = (
-                vec.null_count == 0
-                and vec.flatten().null_count == 0
-                and pc.min(lens).as_py() == dim
-                and pc.max(lens).as_py() == dim
-            )
-            if clean:
-                flat = vec.flatten().to_numpy(zero_copy_only=False)
-                V = flat.reshape(n_rows, dim)
-                # sequential fold over the dim axis (see docstring)
-                nacc = np.zeros(n_rows, dtype=np.float64)
-                for j in range(dim):
-                    nacc = nacc + V[:, j] * V[:, j]
-                nrm = np.sqrt(nacc)
-                bits_mat = np.empty((n_rows, n_bits), dtype=np.int64)
-                with np.errstate(invalid="ignore"):
-                    for b in range(n_bits):
-                        acc = np.zeros(n_rows, dtype=np.float64)
-                        crow = C[b]
-                        for j in range(dim):
-                            acc = acc + V[:, j] * crow[j]
-                        # ~(acc < 0), not (acc >= 0): numpy NaN >= 0 is
-                        # False but Spark's NaN >= 0 is TRUE — the bit
-                        # must match the engine (r12 ADVICE, medium)
-                        bits_mat[:, b] = ~(acc < 0)
-                bands = _pack_bands(bits_mat)
-                arrays = [ids, vec, pa.array(nrm)] + [
-                    pa.array(bands[:, bi]) for bi in range(n_bands)
-                ]
-            else:
-                pl = vec.to_pylist()
-                nrms, bandvals = [], []
-                for v in pl:
-                    nrm, brow = slow_row(v)
-                    nrms.append(nrm)
-                    bandvals.append(brow)
-                arrays = [ids, vec, pa.array(nrms, type=pa.float64())] + [
-                    pa.array(
-                        [b[bi] if b is not None else None for b in bandvals],
-                        type=pa.int64(),
-                    )
-                    for bi in range(n_bands)
-                ]
-            yield pa.RecordBatch.from_arrays(
-                arrays,
-                names=[id_field.name, "v", "nrm"]
-                + [f"b{bi}" for bi in range(n_bands)],
-            )
-
-    out_schema = ", ".join(
-        [
-            f"`{id_field.name}` {id_field.dataType.simpleString()}",
-            "v array<double>",
-            "nrm double",
-        ]
-        + [f"b{bi} bigint" for bi in range(n_bands)]
+    return map_vectors(
+        df.select(id_col, F.col(vec_col).alias("v")),
+        [id_col],
+        ["v"],
+        [("nrm", "double")] + [(f"b{bi}", "bigint") for bi in range(n_bands)],
+        fast,
+        slow,
+        width=dim,
+        emit_vecs=True,
     )
-    return df.select(id_col, vec_col).mapInArrow(compute, schema=out_schema)
 
 
 def cos_scores_arrow(
@@ -455,136 +348,46 @@ def cos_scores_arrow(
     """(qid, id, cos_raw) for a joined candidate frame carrying
     ``qv``/``v`` vectors and their precomputed ``qnrm``/``nrm`` —
     the SCORING stage of ``ann_sign_ivf`` as one vectorized Arrow
-    pass (r13, guide §4.2; the srp_sigs_arrow technique applied to
-    the post-join pair dot products: dim interpreted multiply-adds
-    PER CANDIDATE PAIR — ~target_cell_size x dim per query — become
-    numpy float64 ops vectorized over pairs).
+    pass: dim interpreted multiply-adds PER CANDIDATE PAIR become one
+    ``fold_dot`` vectorized over pairs.
 
-    cos_raw replicates ``aggregate(zip_with(qv, v, x*y), 0.0, s+x)
-    / (qnrm * nrm)`` BIT-IDENTICALLY: elementwise products are single
-    IEEE multiplies in both spellings, the sum preserves the JVM's
-    sequential left-fold order over the dimension axis, and the
-    division/norm product are single IEEE ops — callers apply the
-    final ``F.round`` in the JVM so even the HALF_UP rounding stays
-    the engine's. NaN elements propagate through the same arithmetic
-    in both spellings (no orderings are taken here). Degenerate rows
-    reproduce the zip_with semantics per row: a NULL vector, NULL
-    element, NULL norm, or LENGTH MISMATCH (zip_with pads the shorter
-    side with NULLs, so the fold goes NULL) -> cos_raw NULL. A ZERO
-    norm product replicates the engine's division semantics for the
-    session: under ANSI (the Spark 4 default) a non-NULL dot divided
-    by 0.0 raises DIVIDE_BY_ZERO in the JVM spelling, so this pass
-    raises too (captured from the session conf at plan-build time);
-    with ANSI off Spark's Divide returns NULL for a zero divisor (never
-    IEEE +-Inf/NaN), so this pass masks those rows to NULL as well —
-    they then sort last in a descending top-k instead of first.
-    Pinned against the expression spelling in tests/test_operators.py."""
-    qid_field = pairs.schema[qid_col]
-    id_field = pairs.schema[id_col]
+    cos_raw replicates ``dot(qv, v) / (qnrm * nrm)`` BIT-IDENTICALLY;
+    callers apply the final ``F.round`` in the JVM so even the HALF_UP
+    rounding stays the engine's. A NULL vector, element or norm, or a
+    width mismatch, gives NULL (the per-row replica). A zero norm
+    product follows Spark's Divide for the session, captured at
+    plan-build time (``zero_divisor``): it raises DIVIDE_BY_ZERO under
+    ANSI (the Spark 4 default) and is NULL with ANSI off, so such rows
+    sort last in a descending top-k. Pinned in
+    tests/test_arraykernels.py."""
     ansi = (
         pairs.sparkSession.conf.get("spark.sql.ansi.enabled", "true").lower()
         == "true"
     )
 
-    def compute(batches):
+    def fast(Q, V, qn, nr):
         import numpy as np
-        import pyarrow as pa
-        import pyarrow.compute as pc
 
-        def slow_row(qv, v, qn, nr):
-            if qv is None or v is None:
-                return None
-            L = max(len(qv), len(v))
-            acc = np.float64(0.0)
-            for i in range(L):
-                x = qv[i] if i < len(qv) else None
-                y = v[i] if i < len(v) else None
-                if x is None or y is None:
-                    return None
-                acc = acc + np.float64(x) * np.float64(y)
-            if qn is None or nr is None:
-                return None
-            den = np.float64(qn) * np.float64(nr)
-            if den == 0.0:
-                if ansi:
-                    raise ArithmeticError(
-                        "[DIVIDE_BY_ZERO] zero norm product in "
-                        "cos_scores_arrow under ANSI mode — the engine "
-                        "spelling raises here too"
-                    )
-                return None  # non-ANSI Divide: NULL on a zero divisor
-            with np.errstate(divide="ignore", invalid="ignore"):
-                return float(acc / den)
+        den = qn * nr
+        zero = zero_divisor(den, ansi)
+        with np.errstate(divide="ignore", invalid="ignore"):
+            return [np.ma.array(fold_dot(Q, V) / den, mask=zero)]
 
-        for rb in batches:
-            n = rb.num_rows
-            if n == 0:
-                continue
-            qids, ids = rb.column(0), rb.column(1)
-            qv = pc.cast(rb.column(2), pa.list_(pa.float64()))
-            v = pc.cast(rb.column(3), pa.list_(pa.float64()))
-            qn, nr = rb.column(4), rb.column(5)
-            qlens = pc.list_value_length(qv)
-            vlens = pc.list_value_length(v)
-            widths = {
-                pc.min(qlens).as_py(), pc.max(qlens).as_py(),
-                pc.min(vlens).as_py(), pc.max(vlens).as_py(),
-            }
-            clean = (
-                qv.null_count == 0 and v.null_count == 0
-                and qv.flatten().null_count == 0
-                and v.flatten().null_count == 0
-                and qn.null_count == 0 and nr.null_count == 0
-                and len(widths) == 1 and None not in widths
-            )
-            if clean:
-                dim = widths.pop()
-                Q = qv.flatten().to_numpy(zero_copy_only=False).reshape(n, dim)
-                V = v.flatten().to_numpy(zero_copy_only=False).reshape(n, dim)
-                acc = np.zeros(n, dtype=np.float64)
-                # sequential fold over the dim axis — the JVM's
-                # aggregate() order, so every intermediate rounding
-                # matches (see srp_sigs_arrow)
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    for j in range(dim):
-                        acc = acc + Q[:, j] * V[:, j]
-                    den = qn.to_numpy(zero_copy_only=False) * nr.to_numpy(
-                        zero_copy_only=False
-                    )
-                    if ansi and (den == 0.0).any():
-                        raise ArithmeticError(
-                            "[DIVIDE_BY_ZERO] zero norm product in "
-                            "cos_scores_arrow under ANSI mode — the "
-                            "engine spelling raises here too"
-                        )
-                    cos = acc / den
-                # non-ANSI Divide: NULL on a zero divisor
-                cos_arr = pa.array(cos, mask=den == 0.0)
-            else:
-                qpl, vpl = qv.to_pylist(), v.to_pylist()
-                qnl, nrl = qn.to_pylist(), nr.to_pylist()
-                cos_arr = pa.array(
-                    [
-                        slow_row(qpl[i], vpl[i], qnl[i], nrl[i])
-                        for i in range(n)
-                    ],
-                    type=pa.float64(),
-                )
-            yield pa.RecordBatch.from_arrays(
-                [qids, ids, cos_arr],
-                names=[qid_field.name, id_field.name, "cos_raw"],
-            )
+    def slow(qv, v, qn, nr):
+        d = row_fold(qv, v)
+        if d is None or qn is None or nr is None or zero_divisor(qn * nr, ansi):
+            return (None,)
+        return (d / (qn * nr),)
 
-    out_schema = ", ".join(
-        [
-            f"`{qid_field.name}` {qid_field.dataType.simpleString()}",
-            f"`{id_field.name}` {id_field.dataType.simpleString()}",
-            "cos_raw double",
-        ]
+    return map_vectors(
+        pairs,
+        [qid_col, id_col],
+        ["qv", "v"],
+        [("cos_raw", "double")],
+        fast,
+        slow,
+        nums=("qnrm", "nrm"),
     )
-    return pairs.select(
-        qid_col, id_col, "qv", "v", "qnrm", "nrm"
-    ).mapInArrow(compute, schema=out_schema)
 
 
 def srp_neardup(
@@ -616,30 +419,18 @@ def srp_neardup(
     in every band)."""
     from pyspark import StorageLevel
 
-    c = corpus.select(F.col(id_col), _as_double(F.col(vec_col)).alias("v"))
-    dim = _vec_dim(c, F.col("v"))
     # vectors + norms + band signatures in one pass — the frame
     # feeds the candidate join AND both verify sides, so it is
     # persisted by default (the q52 shared-branch pattern). The cache
     # lives until evicted or the session ends; repeat callers in a
     # long-lived service should pass persist=False (recompute the
     # map-side signatures 3x instead of holding a cache per call) or
-    # unpersist via their own lifecycle. Fixed-width corpora take the
-    # vectorized Arrow signature stage (srp_sigs_arrow, bit-identical
-    # by sequential-fold construction, SRP_BREAKDOWN_r12: the SQL
-    # folds were 84% of end-to-end wall); the empty-frame fallback
-    # keeps the inline HOF path.
-    if dim is None:
-        band_sigs = _srp_band_sigs(F.col("v"), n_bits, n_bands)
-        sigs = c.select(
-            F.col(id_col),
-            "v",
-            F.sqrt(_dot(F.col("v"), F.col("v"))).alias("nrm"),
-            *[band_sigs[bi].alias(f"b{bi}") for bi in range(n_bands)],
-        )
-    else:
-        coefs = _srp_coefs(corpus.sparkSession, n_bits, dim)
-        sigs = srp_sigs_arrow(corpus, id_col, vec_col, n_bits, n_bands, coefs)
+    # unpersist via their own lifecycle. The signature stage is the
+    # vectorized Arrow pass (srp_sigs_arrow, bit-identical to the SQL
+    # folds; SRP_BREAKDOWN_r12: those folds were 84% of end-to-end
+    # wall).
+    coefs = _srp_coefs(corpus.sparkSession, n_bits, _vec_dim(corpus, F.col(vec_col)))
+    sigs = srp_sigs_arrow(corpus, id_col, vec_col, n_bits, n_bands, coefs)
     if persist:
         sigs = sigs.persist(StorageLevel.MEMORY_AND_DISK)
     bands = sigs.select(
@@ -671,7 +462,7 @@ def srp_neardup(
         F.col(id_col).alias("id2"), F.col("v").alias("v2"), F.col("nrm").alias("n2")
     )
     cos = F.round(
-        _dot(F.col("v1"), F.col("v2")) / (F.col("n1") * F.col("n2")), round_dp
+        dot(F.col("v1"), F.col("v2")) / (F.col("n1") * F.col("n2")), round_dp
     )
     return (
         cand.join(s1, "id1")
@@ -785,39 +576,17 @@ def ann_sign_ivf(
             n_rows = corpus.count()
         n_bits = ivf_bits_for(n_rows, target_cell_size)
 
-    dim = _vec_dim(
-        corpus.select(_as_double(F.col(vec_col)).alias("v")), F.col("v")
+    coefs = _srp_coefs(corpus.sparkSession, n_bits, _vec_dim(corpus, F.col(vec_col)))
+    # both sides take the same one-band signature pass: b0 is the
+    # packed n_bits cell id, bit-identical to the SQL spelling
+    c = srp_sigs_arrow(corpus, id_col, vec_col, n_bits, 1, coefs).select(
+        F.col(id_col), "v", F.col("b0").alias("cell"), "nrm"
     )
-    coefs = None if dim is None else _srp_coefs(corpus.sparkSession, n_bits, dim)
-
-    def cell_of(vname: str):
-        if coefs is not None:
-            return _srp_cell_sql(vname, n_bits, coefs)
-        sig = F.lit(0).cast("long")
-        for b in range(n_bits):
-            sig = sig * 2 + (_srp_projection(F.col(vname), b) >= 0).cast("long")
-        return sig
-
-    # corpus side: the packed n_bits signature IS srp_sigs_arrow with
-    # a single band (b0 = the cell id), so the fixed-width path rides
-    # the vectorized Arrow stage (r12) — bit-identical by the
-    # sequential-fold construction pinned in tests; the empty-frame
-    # fallback keeps the expression spelling. The (small) query side
-    # stays in JVM expressions either way.
-    if coefs is not None:
-        c = srp_sigs_arrow(corpus, id_col, vec_col, n_bits, 1, coefs).select(
-            F.col(id_col), "v", F.col("b0").alias("cell"), "nrm"
-        )
-    else:
-        c = (
-            corpus.select(F.col(id_col), _as_double(F.col(vec_col)).alias("v"))
-            .withColumn("cell", cell_of("v"))
-            .withColumn("nrm", F.sqrt(_dot(F.col("v"), F.col("v"))))
-        )
-    q = (
-        queries.select(F.col(qid_col), _as_double(F.col(vec_col)).alias("qv"))
-        .withColumn("cell0", cell_of("qv"))
-        .withColumn("qnrm", F.sqrt(_dot(F.col("qv"), F.col("qv"))))
+    q = srp_sigs_arrow(queries, qid_col, vec_col, n_bits, 1, coefs).select(
+        F.col(qid_col),
+        F.col("v").alias("qv"),
+        F.col("b0").alias("cell0"),
+        F.col("nrm").alias("qnrm"),
     )
     if nprobe <= 1:
         probes = q.select(qid_col, "qv", "qnrm", F.col("cell0").alias("cell"))
@@ -881,19 +650,19 @@ def ivf_topk(
         raise NotImplementedError("pyspark.ml unavailable")
 
     c = corpus.select(
-        id_col, _as_double(F.col(vec_col)).alias("v")
+        id_col, as_double(F.col(vec_col)).alias("v")
     ).withColumn("features", array_to_vector("v"))
     km = KMeans(k=n_centroids, seed=seed, featuresCol="features")
     model = km.fit(c)
     assigned = model.transform(c).select(
         id_col, "v", F.col("prediction").alias("cell")
-    ).withColumn("nrm", F.sqrt(_dot(F.col("v"), F.col("v"))))
+    ).withColumn("nrm", F.sqrt(dot(F.col("v"), F.col("v"))))
 
     centroids = [list(map(float, ctr)) for ctr in model.clusterCenters()]
     cent_df = spark.createDataFrame(
         [(i, centroids[i]) for i in range(len(centroids))], "cell int, cv array<double>"
     )
-    q = queries.select(qid_col, _as_double(F.col(vec_col)).alias("qv"))
+    q = queries.select(qid_col, as_double(F.col(vec_col)).alias("qv"))
     # query -> nprobe nearest cells (tiny cross join: |Q| x n_centroids)
     qc = (
         F.broadcast(q)
@@ -902,7 +671,7 @@ def ivf_topk(
             qid_col,
             "qv",
             "cell",
-            _dot(F.col("qv"), F.col("cv")).alias("qc_dot"),
+            dot(F.col("qv"), F.col("cv")).alias("qc_dot"),
         )
     )
     wq = W.partitionBy(qid_col).orderBy(F.desc("qc_dot"), F.asc("cell"))
@@ -910,10 +679,10 @@ def ivf_topk(
         qc.withColumn("rn", F.row_number().over(wq))
         .filter(F.col("rn") <= nprobe)
         .select(qid_col, "qv", "cell")
-        .withColumn("qnrm", F.sqrt(_dot(F.col("qv"), F.col("qv"))))
+        .withColumn("qnrm", F.sqrt(dot(F.col("qv"), F.col("qv"))))
     )
     cos = F.round(
-        _dot(F.col("qv"), F.col("v")) / (F.col("qnrm") * F.col("nrm")),
+        dot(F.col("qv"), F.col("v")) / (F.col("qnrm") * F.col("nrm")),
         6,
     )
     scored = (

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from file_appender_spark.operators.arraykernels import as_double, dot
 from file_appender_spark.queries.registry import register
 from file_appender_spark.sources.catalog import load_table
 
@@ -421,14 +422,9 @@ def q54_similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     operators/similarity.py and are bench-only."""
     e = _t(spark, sf_dir, "embeddings")
 
-    def dot(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-        )
-
     vecs = e.select(
         "vec_id",
-        F.transform("embedding", lambda x: x.cast("double")).alias("v"),
+        as_double(F.col("embedding")).alias("v"),
     ).withColumn("nrm", F.sqrt(dot(F.col("v"), F.col("v"))))
     queries = vecs.filter(F.col("vec_id") % 100 == 0).select(
         F.col("vec_id").alias("qid"),

@@ -44,6 +44,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from file_appender_spark.operators.arraykernels import as_double, dot
 from file_appender_spark.operators.heavyhitters import exact_heavy_hitters
 from file_appender_spark.operators.pq import pq_encode, seed_codebook
 from file_appender_spark.operators.textstats import let_expr, ngrams
@@ -354,13 +355,8 @@ def q156_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings")
     v = emb.select(
         "vec_id",
-        F.transform("embedding", lambda x: x.cast("double")).alias("e"),
+        as_double(F.col("embedding")).alias("e"),
     )
-
-    def dot(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda s, x: s + x
-        )
 
     cell = (F.element_at("e", 1) >= 0).cast("int")
     for j in range(1, _SD_DIMS):
@@ -502,7 +498,7 @@ def q158_pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings")
     v = emb.select(
         "vec_id",
-        F.transform("embedding", lambda x: x.cast("double")).alias("e"),
+        as_double(F.col("embedding")).alias("e"),
     )
     codebook = seed_codebook(v, "e", _PQ_M, _PQ_K)
     enc = pq_encode(v, "e", codebook, keep_cols=["vec_id"])

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from file_appender_spark.operators.arraykernels import dot
 from file_appender_spark.queries.registry import register
 from file_appender_spark.sources.catalog import load_table
 
@@ -518,10 +519,6 @@ def q74_ann_ivf_cell(spark: SparkSession, sf_dir: str) -> DataFrame:
         + F.when(F.element_at("v", 2) > 0, 2).otherwise(0)
         + F.when(F.element_at("v", 3) > 0, 1).otherwise(0)
     )
-    def dot(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-        )
 
     # norms hoisted per row (not per candidate pair): one fold per
     # pair survives, and it stays inside codegen — same 20x effect

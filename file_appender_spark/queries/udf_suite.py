@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from file_appender_spark.operators.arraykernels import as_double, dot
 from file_appender_spark.queries.registry import register
 from file_appender_spark.sources.catalog import load_table
 
@@ -48,13 +49,8 @@ def q62_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     as q54: the single fold stays in codegen, norm work drops to
     O(rows)); values bit-identical."""
     v = _t(spark, sf_dir, "embeddings").select(
-        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("e")
+        "vec_id", as_double(F.col("embedding")).alias("e")
     )
-
-    def dot(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda s, x: s + x
-        )
 
     v = v.withColumn("nrm", F.sqrt(dot(F.col("e"), F.col("e"))))
     a = v.select(

@@ -34,6 +34,7 @@ spark = (
 spark.sparkContext.setLogLevel("ERROR")
 
 from file_appender_spark.operators import similarity as sim  # noqa: E402
+from file_appender_spark.operators.arraykernels import dot  # noqa: E402
 from file_appender_spark.sources.catalog import load_table  # noqa: E402
 
 emb = load_table(spark, sf_dir, "embeddings")
@@ -50,7 +51,7 @@ def expr_scores(pairs, qid_col, id_col):
         qid_col,
         id_col,
         (
-            sim._dot(F.col("qv"), F.col("v"))
+            dot(F.col("qv"), F.col("v"))
             / (F.col("qnrm") * F.col("nrm"))
         ).alias("cos_raw"),
     )

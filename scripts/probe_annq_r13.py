@@ -42,8 +42,8 @@ def timed(spark, label, fn, out, key):
 
 
 def ann_terms(spark, sf_dir) -> dict:
+    from file_appender_spark.operators.arraykernels import as_double
     from file_appender_spark.operators.similarity import (
-        _as_double,
         _srp_coefs,
         _vec_dim,
         ann_sign_ivf,
@@ -80,7 +80,7 @@ def ann_terms(spark, sf_dir) -> dict:
             spark,
             n_bits,
             _vec_dim(
-                emb.select(_as_double(F.col("embedding")).alias("v")),
+                emb.select(as_double(F.col("embedding")).alias("v")),
                 F.col("v"),
             ),
         ),
@@ -88,7 +88,7 @@ def ann_terms(spark, sf_dir) -> dict:
         "t_dim_coefs",
     )
     dim = _vec_dim(
-        emb.select(_as_double(F.col("embedding")).alias("v")), F.col("v")
+        emb.select(as_double(F.col("embedding")).alias("v")), F.col("v")
     )
     coefs = _srp_coefs(spark, n_bits, dim)
     # term 3: corpus-side Arrow signature pass alone

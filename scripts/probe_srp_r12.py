@@ -37,9 +37,8 @@ def medtime(fn, reps=3):
 
 
 def main() -> None:
+    from file_appender_spark.operators.arraykernels import as_double, dot
     from file_appender_spark.operators.similarity import (
-        _as_double,
-        _dot,
         _srp_band_sigs_sql,
         _srp_coefs,
         _vec_dim,
@@ -54,7 +53,7 @@ def main() -> None:
     n_bits, n_bands = srp_params_for(n, threshold=0.95)
     out.update(n_rows=n, n_bits=n_bits, n_bands=n_bands)
 
-    c = emb.select(F.col("vec_id"), _as_double(F.col("embedding")).alias("v"))
+    c = emb.select(F.col("vec_id"), as_double(F.col("embedding")).alias("v"))
     dim = _vec_dim(c, F.col("v"))
     out["dim"] = dim
     coefs = _srp_coefs(spark, n_bits, dim)
@@ -63,7 +62,7 @@ def main() -> None:
     sigs_plan = c.select(
         F.col("vec_id"),
         "v",
-        F.sqrt(_dot(F.col("v"), F.col("v"))).alias("nrm"),
+        F.sqrt(dot(F.col("v"), F.col("v"))).alias("nrm"),
         *[band_sigs[bi].alias(f"b{bi}") for bi in range(n_bands)],
     )
     # warm
@@ -99,7 +98,7 @@ def main() -> None:
     cand = cand_plan.localCheckpoint(eager=True)
     s1 = sigs.select(F.col("vec_id").alias("id1"), F.col("v").alias("v1"), F.col("nrm").alias("n1"))
     s2 = sigs.select(F.col("vec_id").alias("id2"), F.col("v").alias("v2"), F.col("nrm").alias("n2"))
-    cos = F.round(_dot(F.col("v1"), F.col("v2")) / (F.col("n1") * F.col("n2")), 6)
+    cos = F.round(dot(F.col("v1"), F.col("v2")) / (F.col("n1") * F.col("n2")), 6)
     verify_plan = (
         cand.join(s1, "id1").join(s2, "id2")
         .select("id1", "id2", cos.alias("cos_sim"))

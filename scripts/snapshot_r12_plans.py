@@ -97,9 +97,8 @@ def main() -> None:
     dump("ahash_ingest_sig_stage", sig)
 
     # SRP signature stage (srp_neardup + embedding ingest)
+    from file_appender_spark.operators.arraykernels import as_double, dot
     from file_appender_spark.operators.similarity import (
-        _as_double,
-        _dot,
         _srp_band_sigs_sql,
         _srp_coefs,
         _vec_dim,
@@ -108,7 +107,7 @@ def main() -> None:
 
     emb = load_table(spark, SF, "embeddings")
     n_bits, n_bands = srp_params_for(emb.count(), threshold=0.95)
-    c = emb.select(F.col("vec_id"), _as_double(F.col("embedding")).alias("v"))
+    c = emb.select(F.col("vec_id"), as_double(F.col("embedding")).alias("v"))
     dim = _vec_dim(c, F.col("v"))
     coefs = _srp_coefs(spark, n_bits, dim)
     try:
@@ -120,7 +119,7 @@ def main() -> None:
         srp_sig = c.select(
             F.col("vec_id"),
             "v",
-            F.sqrt(_dot(F.col("v"), F.col("v"))).alias("nrm"),
+            F.sqrt(dot(F.col("v"), F.col("v"))).alias("nrm"),
             *[band_sigs[bi].alias(f"b{bi}") for bi in range(n_bands)],
         )
     dump("srp_sig_stage", srp_sig)

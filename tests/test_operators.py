@@ -234,6 +234,11 @@ def test_srp_neardup_finds_exact_duplicates(spark, sf_dir):
     want = {(r["vec_id"], r["vec_id"] + 1_000_000) for r in emb.collect()}
     assert want <= got
     assert all(r["cos_sim"] >= 0.999 for r in pairs.collect())
+    # no vector at all (empty, all-NULL): no pairs
+    schema = "vec_id long, embedding array<float>"
+    nulls = spark.createDataFrame([(1, None), (2, None)], schema)
+    for df in (spark.createDataFrame([], schema), nulls):
+        assert srp_neardup(df, threshold=0.5).collect() == []
 
 
 def test_srp_neardup_subset_of_exact_with_same_values(spark, sf_dir):
@@ -502,10 +507,24 @@ def test_neardup_ingest_null_first_vector(spark, tmp_path):
         for name, b in (("first", first), ("last", last))
     }
     assert got["first"] == got["last"] == [1, 2, 3, 4, 77]
+    # no vector at all: an empty batch admits nothing, an all-NULL
+    # batch admits every row (a NULL vector has no cosine)
+    schema = "vec_id long, embedding array<double>"
+    for name, b, want in (
+        ("empty", spark.createDataFrame([], schema), []),
+        ("nulls", spark.createDataFrame([(5, None), (6, None)], schema), [5, 6]),
+    ):
+        admitted = neardup_ingest_batch(
+            spark, b, str(tmp_path / name), threshold=0.999
+        )
+        assert sorted(r["vec_id"] for r in admitted.collect()) == want
 
 
 def test_neardup_ingest_plan_has_no_cross_join(spark, tmp_path):
-    from file_appender_spark.operators.neardup_ingest import neardup_ingest_batch
+    from file_appender_spark.operators.neardup_ingest import (
+        _sig_frame,
+        neardup_ingest_batch,
+    )
 
     store = str(tmp_path / "sigstore")
     neardup_ingest_batch(spark, _synth_vecs(spark, [1, 2, 3]), store, threshold=0.999)
@@ -515,6 +534,9 @@ def test_neardup_ingest_plan_has_no_cross_join(spark, tmp_path):
     plan_df = neardup_ingest_batch(spark, b2, store, threshold=0.999)
     plan = plan_df._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan
+    # the signature stage is the Arrow kernel pass
+    sigs = _sig_frame(b2, 16, 4, "vec_id", "embedding")
+    assert "MapInArrow" in sigs._jdf.queryExecution().executedPlan().toString()
 
 
 def test_neardup_ingest_via_streaming_foreachbatch(spark, tmp_path):
@@ -668,6 +690,11 @@ def test_ann_sign_ivf_exclude_self_flag(spark):
     )
     best = {r["vec_id"]: r["cos_sim"] for r in hits_incl.collect()}
     assert best.get(2) == 1.0  # the identical colliding row IS returned
+    # a corpus with no vector (empty, all-NULL) has no top-k
+    schema = "vec_id long, embedding array<double>"
+    nulls = spark.createDataFrame([(1, None), (2, None)], schema)
+    for c in (spark.createDataFrame([], schema), nulls):
+        assert ann_sign_ivf(c, queries, k=3, target_cell_size=64).collect() == []
 
 
 def test_textdup_ingest_across_batches(spark, sf_dir, tmp_path):
@@ -782,8 +809,8 @@ def test_srp_hoisted_coefs_bit_identical(spark, sf_dir):
     band signatures to the inline-hash path (same multiplies, same
     fold order) — signature stores written under either are
     comparable."""
+    from file_appender_spark.operators.arraykernels import as_double
     from file_appender_spark.operators.similarity import (
-        _as_double,
         _srp_band_sigs,
         _srp_band_sigs_sql,
         _srp_coefs,
@@ -791,7 +818,7 @@ def test_srp_hoisted_coefs_bit_identical(spark, sf_dir):
     from file_appender_spark.sources.catalog import load_table
 
     emb = load_table(spark, sf_dir, "embeddings").limit(50)
-    base = emb.select("vec_id", _as_double(F.col("embedding")).alias("v"))
+    base = emb.select("vec_id", as_double(F.col("embedding")).alias("v"))
     dim = base.select(F.size("v").alias("d")).first()["d"]
     coefs = _srp_coefs(spark, 16, dim)
     inline = base.select(
@@ -809,94 +836,6 @@ def test_srp_hoisted_coefs_bit_identical(spark, sf_dir):
         ],
     )
     assert sorted(map(tuple, inline.collect())) == sorted(map(tuple, hoisted.collect()))
-
-
-def test_srp_sigs_arrow_bit_identical(spark, sf_dir):
-    """The vectorized Arrow SRP signature stage (r12 hot path under
-    srp_neardup and the embedding ingest) must be BIT-IDENTICAL to
-    the SQL-fold spelling — v, nrm AND every band signature, because
-    stores persist these values and q265's oracle mirrors the
-    protocol over them. Also pins the degenerate-row semantics
-    (NULL vector, NULL element, ragged length) against the
-    zip_with-vs-literal reference behavior."""
-    from file_appender_spark.operators.similarity import (
-        _as_double,
-        _dot,
-        _srp_band_sigs_sql,
-        _srp_coefs,
-        srp_sigs_arrow,
-    )
-    from file_appender_spark.sources.catalog import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings").limit(200)
-    base = emb.select("vec_id", _as_double(F.col("embedding")).alias("v"))
-    dim = base.select(F.size("v").alias("d")).first()["d"]
-    coefs = _srp_coefs(spark, 16, dim)
-    sql_sigs = _srp_band_sigs_sql("v", 16, 4, coefs)
-    ref = base.select(
-        "vec_id",
-        "v",
-        F.sqrt(_dot(F.col("v"), F.col("v"))).alias("nrm"),
-        *[sql_sigs[i].alias(f"b{i}") for i in range(4)],
-    )
-    got = srp_sigs_arrow(emb, "vec_id", "embedding", 16, 4, coefs)
-    assert got.columns == ref.columns
-    assert got.exceptAll(ref).count() == 0
-    assert ref.exceptAll(got).count() == 0
-
-    # degenerate rows: NULL vector / NULL element / ragged lengths
-    rows = [
-        (1, [1.0] * dim),
-        (2, None),
-        (3, [1.0] * (dim - 1)),          # ragged: nrm valid, bands NULL
-        (4, [None] + [1.0] * (dim - 1)),  # NULL element: nrm+bands NULL
-        (5, []),                          # empty: nrm 0.0, bands NULL
-    ]
-    adv = spark.createDataFrame(rows, f"vec_id long, embedding array<double>")
-    ref2 = adv.select(
-        "vec_id",
-        _as_double(F.col("embedding")).alias("v"),
-    ).select(
-        "vec_id",
-        "v",
-        F.sqrt(_dot(F.col("v"), F.col("v"))).alias("nrm"),
-        *[s.alias(f"b{i}") for i, s in enumerate(_srp_band_sigs_sql("v", 16, 4, coefs))],
-    )
-    got2 = srp_sigs_arrow(adv, "vec_id", "embedding", 16, 4, coefs)
-    assert sorted(map(tuple, ref2.collect())) == sorted(map(tuple, got2.collect()))
-
-    # NaN rows (r12 ADVICE, medium): Spark evaluates NaN >= 0 as TRUE
-    # (NaN-as-largest ordering), so a NaN-poisoned projection's sign
-    # bit must be 1 in the Arrow spelling too — both the vectorized
-    # fast path (fixed-width batch) and the per-row replica (ragged
-    # batch forces the slow path). Band values are compared against
-    # the SQL reference directly; nrm is NaN on both sides (tuple
-    # equality can't see that, NaN != NaN, so bands are checked alone).
-    import math
-
-    nan = float("nan")
-    for extra in ([], [(99, [1.0] * (dim - 1))]):  # fast path / slow path
-        nrows = [(1, [nan] + [1.0] * (dim - 1)), (2, [nan] * dim)] + extra
-        ndf = spark.createDataFrame(nrows, "vec_id long, embedding array<double>")
-        nsel = ndf.select("vec_id", _as_double(F.col("embedding")).alias("v"))
-        nref = {
-            r["vec_id"]: tuple(r[f"b{i}"] for i in range(4))
-            for r in nsel.select(
-                "vec_id",
-                *[
-                    s.alias(f"b{i}")
-                    for i, s in enumerate(_srp_band_sigs_sql("v", 16, 4, coefs))
-                ],
-            ).collect()
-        }
-        ngot = srp_sigs_arrow(ndf, "vec_id", "embedding", 16, 4, coefs)
-        for r in ngot.collect():
-            if r["vec_id"] == 99:
-                continue  # the ragged row only forces the slow path
-            assert tuple(r[f"b{i}"] for i in range(4)) == nref[r["vec_id"]], (
-                r["vec_id"]
-            )
-            assert math.isnan(r["nrm"])
 
 
 def test_neardup_store_legacy_without_stamp_requires_migration(spark, tmp_path):
@@ -1425,126 +1364,3 @@ def test_srp_admitted_sigs_reuse_batch_frame(spark, tmp_path):
     # replay must re-emit (own-stored override reads the reused rows)
     again = neardup_ingest_batch(spark, docs, store, threshold=0.99)
     assert sorted(r["vec_id"] for r in again.collect()) == a_ids
-
-
-def test_cos_scores_arrow_bit_identical(spark, sf_dir):
-    """r13: the vectorized Arrow scoring stage under ann_sign_ivf must
-    be BIT-IDENTICAL to the expression spelling — the raw (pre-round)
-    cosine doubles, compared both directions on a real joined
-    candidate frame, plus a degenerate matrix (NULL vector, NULL
-    element, ragged length mismatch, zero norm, NULL norm, NaN
-    element) that forces the per-row replica of the zip_with/fold
-    semantics."""
-    import math
-
-    from file_appender_spark.operators.similarity import (
-        _as_double,
-        _dot,
-        cos_scores_arrow,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings").limit(300)
-    a = emb.select(
-        F.col("vec_id").alias("qid"), _as_double(F.col("embedding")).alias("qv")
-    ).withColumn("qnrm", F.sqrt(_dot(F.col("qv"), F.col("qv"))))
-    b = emb.select(
-        F.col("vec_id").alias("vid"), _as_double(F.col("embedding")).alias("v")
-    ).withColumn("nrm", F.sqrt(_dot(F.col("v"), F.col("v"))))
-    pairs = a.join(b, (a["qid"] % 7) == (b["vid"] % 7))
-    ref = pairs.select(
-        "qid",
-        "vid",
-        (_dot(F.col("qv"), F.col("v")) / (F.col("qnrm") * F.col("nrm"))).alias(
-            "cos_raw"
-        ),
-    )
-    out = cos_scores_arrow(pairs, "qid", "vid")
-    assert ref.columns == out.columns
-    assert ref.exceptAll(out).count() == 0
-    assert out.exceptAll(ref).count() == 0
-
-    nan = float("nan")
-    rows = [
-        (1, 10, [1.0, 2.0, 3.0], [1.0, 0.5, 2.0], 3.7416573867739413, 2.29128784747792),
-        (2, 20, None, [1.0, 0.5, 2.0], 1.0, 2.29128784747792),  # NULL qv
-        (3, 30, [1.0, 2.0], [1.0, 0.5, 2.0], 2.23606797749979, 2.29128784747792),  # ragged
-        (4, 40, [1.0, None, 3.0], [1.0, 0.5, 2.0], 1.0, 2.29128784747792),  # NULL elem
-        (6, 60, [1.0, 2.0, 3.0], [1.0, 0.5, 2.0], None, 2.29128784747792),  # NULL norm
-        (7, 70, [nan, 2.0, 3.0], [1.0, 0.5, 2.0], nan, 2.29128784747792),  # NaN
-    ]
-    adv = spark.createDataFrame(
-        rows,
-        "qid long, vid long, qv array<double>, v array<double>, "
-        "qnrm double, nrm double",
-    )
-    ref2 = adv.select(
-        "qid",
-        "vid",
-        (_dot(F.col("qv"), F.col("v")) / (F.col("qnrm") * F.col("nrm"))).alias(
-            "cos_raw"
-        ),
-    ).collect()
-    out2 = cos_scores_arrow(adv, "qid", "vid").collect()
-
-    def norm(rs):
-        o = {}
-        for r in sorted(rs, key=lambda r: r["qid"]):
-            c = r["cos_raw"]
-            o[r["qid"]] = (
-                "nan" if c is not None and math.isnan(c) else c
-            )
-        return o
-
-    assert norm(ref2) == norm(out2)
-
-    # zero norm product: under ANSI (the Spark 4 default) the ENGINE
-    # spelling raises DIVIDE_BY_ZERO for a non-NULL dot / 0.0 — the
-    # Arrow pass must fail the same way, not emit IEEE Inf
-    import pytest
-    from py4j.protocol import Py4JJavaError
-    from pyspark.errors import PySparkException
-
-    zr = spark.createDataFrame(
-        [(5, 50, [0.0, 0.0, 0.0], [1.0, 0.5, 2.0], 0.0, 2.29128784747792)],
-        "qid long, vid long, qv array<double>, v array<double>, "
-        "qnrm double, nrm double",
-    )
-    with pytest.raises((PySparkException, Py4JJavaError)):
-        zr.select(
-            (_dot(F.col("qv"), F.col("v")) / (F.col("qnrm") * F.col("nrm"))).alias("c")
-        ).collect()
-    with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
-        cos_scores_arrow(zr, "qid", "vid").collect()
-
-    # ANSI off: Spark's Divide returns NULL for a zero divisor (never
-    # IEEE +-Inf/NaN), so a zero-norm row must score NULL — sorting
-    # last in ann_sign_ivf's descending top-k, not first. Both the
-    # vectorized path and the per-row replica (forced by a ragged row
-    # in the same Arrow batch) are checked.
-    schema = (
-        "qid long, vid long, qv array<double>, v array<double>, "
-        "qnrm double, nrm double"
-    )
-    zero_rows = [
-        (5, 50, [0.0, 0.0, 0.0], [1.0, 0.5, 2.0], 0.0, 2.29128784747792),
-        (9, 90, [1.0, 2.0, 3.0], [0.0, 0.0, 0.0], 3.7416573867739413, -0.0),
-        (1, 10, [1.0, 2.0, 3.0], [1.0, 0.5, 2.0], 3.7416573867739413, 2.29128784747792),
-    ]
-    ragged = (3, 30, [1.0, 2.0], [1.0, 0.5, 2.0], 2.23606797749979, 2.29128784747792)
-    old_ansi = spark.conf.get("spark.sql.ansi.enabled")
-    spark.conf.set("spark.sql.ansi.enabled", "false")
-    try:
-        for extra in ([], [ragged]):
-            z = spark.createDataFrame(zero_rows + extra, schema).coalesce(1)
-            ref3 = z.select(
-                "qid",
-                "vid",
-                (_dot(F.col("qv"), F.col("v")) / (F.col("qnrm") * F.col("nrm"))).alias(
-                    "cos_raw"
-                ),
-            ).collect()
-            out3 = norm(cos_scores_arrow(z, "qid", "vid").collect())
-            assert norm(ref3) == out3
-            assert out3[5] is None and out3[9] is None and out3[1] is not None
-    finally:
-        spark.conf.set("spark.sql.ansi.enabled", old_ansi)

@@ -307,6 +307,7 @@ def test_srp_neardup_no_cross_join(spark, sf_dir):
     )
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
+    assert "MapInArrow" in plan  # the signature stage
 
 
 def test_ann_sign_ivf_candidates_are_equi_join(spark, sf_dir):
@@ -325,6 +326,8 @@ def test_ann_sign_ivf_candidates_are_equi_join(spark, sf_dir):
     )
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
+    # corpus cells, query cells and candidate scoring: one Arrow pass each
+    assert plan.count("MapInArrow") == 3
 
 
 # ---- round-3 plan contracts -------------------------------------------------

@@ -149,65 +149,13 @@ def test_ivf_pq_index_is_projection_only(spark, vecs):
     assert "Join" not in plan
 
 
-def test_pq_encode_arrow_bitequal_sql(spark, sf_dir):
-    """r13: the vectorized Arrow encode pass must be BIT-IDENTICAL to
-    the generated-SQL spelling — codes AND raw recon_err2 doubles,
-    because q158 hash-checks the rounded values downstream. Compared
-    on the real embedding table and on a degenerate matrix (NULL
-    vector, NULL element, ragged short/long, NaN element, exact-tie
-    rows) — the degenerate rows force the per-row replica, whose
-    NULL-first / NaN-last ordering must match the struct array_min."""
-    from pyspark.sql import functions as F
-
-    from file_appender_spark.operators.pq import (
-        _pq_encode_arrow,
-        _pq_encode_sql,
-        seed_codebook,
-    )
-    from file_appender_spark.sources.catalog import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    v = emb.select(
-        "vec_id",
-        F.transform("embedding", lambda x: x.cast("double")).alias("e"),
-    )
-    cb = seed_codebook(v, "e", 4, 16)
-    sql = _pq_encode_sql(v, "e", cb, ["vec_id"])
-    arrow = _pq_encode_arrow(v, "e", cb, ["vec_id"])
-    assert sql.columns == arrow.columns
-    assert sql.exceptAll(arrow).count() == 0
-    assert arrow.exceptAll(sql).count() == 0
-
-    dim = 4 * len(cb[0][0])
-    nan = float("nan")
-    rows = [
-        (1, [1.0] * dim),
-        (2, None),
-        (3, [1.0] * (dim - 3)),            # ragged short: NULL-padded tail
-        (4, [None] + [1.0] * (dim - 1)),   # NULL element
-        (5, []),                           # empty
-        (6, [nan] + [1.0] * (dim - 1)),    # NaN poisons subspace 0
-        (7, list(cb[0][2]) + list(cb[1][2]) + list(cb[2][2]) + list(cb[3][2])),
-    ]
-    adv = spark.createDataFrame(rows, "vec_id long, e array<double>")
-    sql2 = _pq_encode_sql(adv, "e", cb, ["vec_id"]).collect()
-    arrow2 = _pq_encode_arrow(adv, "e", cb, ["vec_id"]).collect()
-    import math
-
-    def norm(rs):
-        out = {}
-        for r in sorted(rs, key=lambda r: r["vec_id"]):
-            vals = tuple(r[c] for c in ("code0", "code1", "code2", "code3"))
-            e = r["recon_err2"]
-            out[r["vec_id"]] = (vals, "nan" if e is not None and math.isnan(e) else e)
-        return out
-    assert norm(sql2) == norm(arrow2)
-
-
 def test_pq_encode_null_first_row_keeps_arrow_path(spark):
-    """A NULL FIRST vector must not send pq_encode to the generated-SQL
-    spelling: the dim probe skips NULL rows, so the frame still plans
-    the Arrow pass, and every code equals the NULL-last frame's."""
+    """A NULL FIRST vector must not change the encode: the frame plans
+    the Arrow pass and every code equals the NULL-last frame's. An
+    empty frame encodes to nothing, and an all-NULL frame to code 0 in
+    every subspace with a NULL recon_err2 — the SQL spelling's
+    output, which these frames got before the Arrow pass served
+    them."""
     schema = "vec_id long, e array<double>"
     rows = _clustered_vecs(40, 8, 2, seed=5)
     cb = seed_codebook(spark.createDataFrame(rows, schema), "e", 2, 4)
@@ -218,3 +166,58 @@ def test_pq_encode_null_first_row_keeps_arrow_path(spark):
     assert "MapInArrow" in enc._jdf.queryExecution().executedPlan().toString()
     ref = pq_encode(last, "e", cb, keep_cols=["vec_id"])
     assert sorted(enc.collect()) == sorted(ref.collect())
+
+    assert pq_encode(spark.createDataFrame([], schema), "e", cb).collect() == []
+    nulls = spark.createDataFrame([(1, None), (2, None)], schema)
+    assert sorted(map(tuple, pq_encode(nulls, "e", cb).collect())) == [
+        (1, 0, 0, None),
+        (2, 0, 0, None),
+    ]
+
+
+def test_pq_encode_submits_no_job(spark):
+    """Building the encoded frame is lazy: the codebook fixes the
+    width, so no probe job runs until an action."""
+    schema = "vec_id long, e array<double>"
+    rows = _clustered_vecs(20, 8, 2, seed=3)
+    df = spark.createDataFrame(rows, schema)
+    cb = seed_codebook(df, "e", 2, 4)
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup())
+    enc = pq_encode(df, "e", cb, keep_cols=["vec_id"])
+    assert set(tracker.getJobIdsForGroup()) == before
+    enc.count()  # the tracker does see this frame's jobs
+    assert set(tracker.getJobIdsForGroup()) != before
+
+
+def test_py_cell_matches_engine_cell(spark):
+    """``ivf_pq_search`` assigns query cells in plain Python with
+    ``_py_cell``; they must equal the engine's ``_srp_cell_sql`` cells
+    the index was built with, including Spark's NaN sign rule, and a
+    query of the wrong width must raise rather than get a cell."""
+    from file_appender_spark.operators.pq import _py_cell
+    from file_appender_spark.operators.similarity import _srp_cell_sql, _srp_coefs
+
+    coefs = _srp_coefs(spark, 4, 4)
+    nan = float("nan")
+    queries = [
+        [0.3, -1.2, 2.5, -0.7],
+        [-0.3, 1.2, -2.5, 0.7],
+        [nan, 1.0, 1.0, 1.0],
+        [nan] * 4,
+        [0.0] * 4,
+    ]
+    df = spark.createDataFrame(
+        [(i, q) for i, q in enumerate(queries)], "i int, v array<double>"
+    )
+    engine = {
+        r["i"]: r["cell"]
+        for r in df.select("i", _srp_cell_sql("v", 4, coefs).alias("cell")).collect()
+    }
+    assert engine[3] == 15  # every NaN projection is bit 1
+    assert {i: _py_cell(q, 4, coefs) for i, q in enumerate(queries)} == engine
+
+    short = spark.createDataFrame([([1.0, 2.0],)], "v array<double>")
+    assert short.select(_srp_cell_sql("v", 4, coefs)).first()[0] is None
+    with pytest.raises(ValueError, match="expects 4"):
+        _py_cell([1.0, 2.0], 4, coefs)
