@@ -117,123 +117,3 @@ def dedup_clusters(
         F.col("component").alias("cluster"),
         (F.col("node") == F.col("component")).alias("keep"),
     )
-
-
-def _canon_edges(edges: DataFrame, src: str, dst: str) -> DataFrame:
-    return (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .filter(F.col("u") != F.col("v"))
-        .select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v"))
-        .distinct()
-    )
-
-
-def _large_star(edges: DataFrame) -> DataFrame:
-    """large-star(u): every strictly-larger neighbor of u re-points at
-    the min of u's closed neighborhood."""
-    sym = edges.union(edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    mins = (
-        sym.groupBy("u")
-        .agg(F.min("v").alias("mv"))
-        .select("u", F.least("mv", F.col("u")).alias("m"))
-    )
-    return (
-        sym.join(mins, "u")
-        .filter(F.col("v") > F.col("u"))
-        .select(F.col("v").alias("u"), F.col("m").alias("v"))
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-    )
-
-
-def _small_star(edges: DataFrame) -> DataFrame:
-    """small-star(u): u's smaller-or-equal neighbors (and u) all
-    re-point at the minimum among them."""
-    e = edges.select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v"))
-    mins = e.groupBy("u").agg(F.min("v").alias("m"))
-    moved = (
-        e.join(mins, "u")
-        .filter(F.col("v") != F.col("m"))
-        .select(F.col("v").alias("u"), F.col("m").alias("v"))
-    )
-    hub = mins.select("u", F.col("m").alias("v"))
-    return moved.union(hub).filter(F.col("u") != F.col("v")).distinct()
-
-
-def connected_components_star(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_iterations: int = 40,
-    return_rounds: bool = False,
-):
-    """Connected components via alternating large-star / small-star
-    contractions (Kiveris et al., "Connected Components in MapReduce
-    and Beyond", SoCC 2014): converges in O(log n) rounds REGARDLESS
-    of graph diameter, where min-label propagation
-    (``connected_components``) needs O(diameter) rounds.
-
-    Use this variant when clusters can be long chains (entity-
-    resolution graphs, citation chains); for near-dup clusters (tiny
-    diameters) plain propagation does 2-3 rounds and is cheaper per
-    round. Same determinism contract: component = min node id.
-
-    Scale notes: each half-round is one groupBy + one join on the
-    node key; edge count never grows above 2x the input (each node
-    keeps at most one out-edge per star step). localCheckpoint per
-    round truncates the otherwise-exponential iterative lineage (same
-    lesson as min-label)."""
-    e = _canon_edges(edges, src, dst).localCheckpoint(eager=True)
-    # node universe from the RAW edge list: _canon_edges drops
-    # self-loops, and a node appearing only as u==v must still get a
-    # (singleton) label — matching min-label propagation's universe
-    all_nodes = (
-        edges.select(F.col(src).alias("node"))
-        .union(edges.select(F.col(dst).alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    # fixpoint stat: same edge set (count + two independent hash sums;
-    # the contraction is monotone so a false "changed" only costs one
-    # extra round, and a stable checksum at equal count means equal
-    # sets with overwhelming probability). Modular-reduce the 64-bit
-    # hashes before summing: ANSI mode (Spark 4 default) hard-errors
-    # on long overflow, and a raw xxhash64 sum overflows immediately.
-    # r13 (same fusion as min-label propagation): the stat rides the
-    # round checkpoint's own job via observe, and each round compares
-    # against the REMEMBERED previous stat — the r12 spelling re-ran
-    # stat() as two extra aggregate jobs per round over checkpointed
-    # (hence deterministic, identical-value) frames.
-    stat_aggs = lambda: [  # noqa: E731 — fresh Columns per use site
-        F.count("*").alias("n"),
-        F.sum(F.pmod(F.xxhash64("u", "v"), F.lit(1_000_000_007))).alias("h1"),
-        F.sum(F.pmod(F.hash("u", "v"), F.lit(998_244_353))).alias("h2"),
-    ]
-    prev = tuple(e.agg(*stat_aggs()).collect()[0])
-    rounds = 0
-    for _ in range(max_iterations):
-        obs = Observation()
-        stepped = (
-            _small_star(_large_star(e))
-            .observe(obs, *stat_aggs())
-            .localCheckpoint(eager=True)
-        )
-        rounds += 1
-        got = obs.get
-        cur = (got["n"], got["h1"], got["h2"])
-        e = stepped
-        if cur == prev:
-            break
-        prev = cur
-    else:
-        raise RuntimeError(
-            f"connected_components_star did not converge in {max_iterations} "
-            "rounds — not expected for any graph of < 2^40 nodes"
-        )
-    labels = (
-        all_nodes.join(e, all_nodes.node == e.u, "left")
-        .select("node", F.coalesce("v", F.col("node")).alias("component"))
-    )
-    if return_rounds:
-        return labels, rounds
-    return labels

@@ -28,7 +28,7 @@ admitted item. Each incoming batch:
 Scale notes: per batch, work is O(batch x matching-bucket) — the
 historical side is touched only through the signature join, so cost
 tracks the batch size, not corpus size. The store append is the only
-write; ``compact_store`` (with ``_recover_store`` crash recovery)
+write; ``compact_store`` (with the shared storefs crash recovery)
 keeps its file count bounded. Retries are at-least-once: own-id
 matches are excluded from the history join, so a retried batch
 re-emits its identical admitted set (with a ``band_bucket_cap``, a
@@ -52,21 +52,26 @@ from file_appender_spark.operators.similarity import (
     _vec_dim,
     srp_sigs_arrow,
 )
-from file_appender_spark.storefs import require_atomic_dir_rename, store_fs_for
-
-
-def _store_has_data(store_dir: str) -> bool:
-    """Does the signature store hold any parquet yet? Routed through
-    the StoreFS seam, so ``hdfs://``/``file://`` store dirs work the
-    same as bare local paths (r8 verdict task 2)."""
-    return any(
-        f.endswith(".parquet") for f in store_fs_for(store_dir).listdir(store_dir)
-    )
-
+from file_appender_spark.storefs import (
+    TableStore,
+    create_manifest_tables,
+    migrate_tables_to_manifest,
+    open_table_store,
+    resolve_manifest_dir,
+    stamp_params,
+    store_fs_for,
+    table_dir,
+)
 
 # --------------------------------------------------------------------------
-# Manifest store layout (r10 verdict task 4): object-store support
+# Store lifecycle and the manifest layout (r10 verdict task 4)
 # --------------------------------------------------------------------------
+#
+# All three incremental stores — this signature store, the pair graph
+# and the corpus stats — run on ONE lifecycle, storefs.TableStore:
+# open (crash recovery, migration refusal, params guard), manifest
+# create/migrate and the params stamp. The signature store declares
+# a single table that is the store root itself (``tables=("",)``).
 #
 # The classic layout keeps the store's parquet directly under
 # store_dir and compacts via the crash-safe two-RENAME directory swap
@@ -86,125 +91,53 @@ def _store_has_data(store_dir: str) -> bool:
 # layout is legal on filesystems without atomic directory rename
 # (s3://, gs://; store_fs_for binds them with
 # supports_atomic_dir_rename=False and the classic swap refuses).
+# The pair-graph and corpus-stats stores apply the same protocol per
+# TABLE (store_dir/<table>/_CURRENT); the signature store applies it
+# at the root, so its params stamp lives in the live version dir.
 
-# the per-directory manifest primitives are shared with the pair /
-# corpus-stats stores (they version per TABLE); storefs.py is the
-# canonical home, these aliases keep this module's established names
-from file_appender_spark.storefs import (  # noqa: E402
-    MANIFEST_CURRENT_FILE as _CURRENT_FILE,
-    manifest_version as _manifest_version,
+_PARAMS_FILE = "_LSH_PARAMS.json"
+
+_STORE = TableStore(
+    kind="signature",
+    tables=("",),
+    params_file=_PARAMS_FILE,
+    # with no params given (compaction, reports) the stamp is its own
+    # expectation; ingest passes the batch's LSH params
+    params=lambda stamp: stamp,
+    mismatch="signatures are incomparable across LSH params; rebuild the "
+    "store or pass the original parameters",
+    rebuild_hint="stamp_store_params, or a fresh store",
+    migrate_hint="migrate_store_to_manifest",
+    # a missing stamp on an EMPTY store is a first ingest; on a store
+    # holding data it is refused (legacy or lost stamp: band equi-joins
+    # under other params would silently find no candidates)
+    first_ingest_stamps=True,
 )
-
-
-def _resolve_store(store_dir: str) -> str:
-    """Where the store's live data actually is: the manifest's current
-    version dir, or ``store_dir`` itself for classic-layout stores.
-    Every ingest/maintenance entry point resolves ONCE at the top and
-    threads the resolved dir everywhere (params stamp, sidecar, reads,
-    appends), so the two layouts share every other line of code."""
-    v = _manifest_version(store_dir)
-    return store_dir if v is None else os.path.join(store_dir, v)
 
 
 def create_manifest_store(store_dir: str) -> str:
     """Initialize an EMPTY manifest-layout store (the layout choice is
-    creation-time): makes ``v1`` and publishes the manifest. Returns
-    the live data dir. Ingest entry points call this automatically
-    when the target filesystem lacks atomic directory rename (an
-    object store could otherwise only ever hold a classic store that
-    its own compaction would then refuse)."""
-    fs = store_fs_for(store_dir)
-    if fs.exists(os.path.join(store_dir, _CURRENT_FILE)):
-        return _resolve_store(store_dir)
-    _refuse_mid_migration(store_dir)  # half-moved v1 is NOT a fresh store
-    if fs.exists(store_dir.rstrip("/") + ".old"):
-        # classic crash debris whose ONLY data copy may be the backup;
-        # publishing an empty manifest would orphan it silently
-        raise ValueError(
-            f"{store_dir!r} has classic crash debris "
-            f"({store_dir.rstrip('/') + '.old'!r} exists); recover the "
-            "classic store first, then use migrate_store_to_manifest"
-        )
-    if fs.isdir(store_dir) and _store_has_data(store_dir):
-        raise ValueError(
-            f"{store_dir!r} already holds a classic-layout store; use "
-            "migrate_store_to_manifest instead"
-        )
-    fs.makedirs(os.path.join(store_dir, "v1"))
-    fs.publish_text(os.path.join(store_dir, _CURRENT_FILE), "v1")
-    return os.path.join(store_dir, "v1")
-
-
-# a crash mid-migration (files half-moved into v1, manifest not yet
-# published) must not read as a classic store silently missing
-# history — the marker makes every entry point refuse until a re-run
-# of the (resumable) migration finishes the move (the same discipline
-# as the pair/corpus-stats stores' migrate_tables_to_manifest)
-_MIGRATING_MARKER = "_MIGRATING_TO_MANIFEST"
-
-
-def _refuse_mid_migration(store_dir: str) -> None:
-    # the shared refusal (storefs.py): raises on a live marker, but
-    # SELF-HEALS when the manifest is already published — a crash
-    # between the publish and the marker removal leaves a fully
-    # consistent store, and the marker is completed-migration debris
-    from file_appender_spark.storefs import refuse_mid_migration
-
-    refuse_mid_migration(
-        store_dir,
-        _MIGRATING_MARKER,
-        "signature",
-        "migrate_store_to_manifest",
-        manifest_dirs=[store_dir],
-    )
+    creation-time): ``v1`` + the ``_CURRENT`` manifest. Returns the
+    live data dir. Ingest calls this automatically on a filesystem
+    without atomic directory rename; refusals as in
+    storefs.create_manifest_tables."""
+    return table_dir(create_manifest_tables(_STORE, store_dir), "")
 
 
 def migrate_store_to_manifest(store_dir: str) -> str:
     """Convert a CLASSIC store in place (single-writer maintenance
-    window): move the wide files + params stamp + sidecar into ``v1``
-    and publish the manifest. Needs per-file renames, so it runs on
-    POSIX/HDFS only — which is where classic stores can exist at all.
-    RESUMABLE: the marker makes every other entry point refuse after
-    a mid-move crash (a half-moved store would otherwise read as a
-    classic store silently missing history), and a re-run finishes
-    the move. Returns the live data dir."""
-    fs = store_fs_for(store_dir)
-    marker = os.path.join(store_dir, _MIGRATING_MARKER)
-    if _manifest_version(store_dir) is not None:
-        if fs.exists(marker):
-            fs.remove(marker)  # crash between the publish and this
-        return _resolve_store(store_dir)
-    require_atomic_dir_rename(fs, store_dir, "migrate_store_to_manifest")
-    # classic .old recovery inline — _recover_store refuses on the
-    # marker this function itself drops
-    old = store_dir.rstrip("/") + ".old"
-    if not fs.exists(store_dir) and fs.exists(old):
-        fs.rename(old, store_dir)
-    # sweep classic debris no later pass would clean (the shared
-    # migrate_tables_to_manifest discipline): a stale .old BACKUP next
-    # to a live store and an interrupted .compacting output — classic
-    # compaction used to remove both, and it never runs again after
-    # this migration
-    for suffix in (".old", ".compacting"):
-        p = store_dir.rstrip("/") + suffix
-        if fs.exists(p):
-            fs.rmtree(p)
-    fs.makedirs(store_dir)
-    fs.write_text(marker, "migrate_store_to_manifest in progress")
-    v1 = os.path.join(store_dir, "v1")
-    fs.makedirs(v1)
-    for name in fs.listdir(store_dir):
-        if (
-            name == "v1"
-            or name.startswith(".")
-            or name == _CURRENT_FILE
-            or name == _MIGRATING_MARKER
-        ):
-            continue
-        fs.rename(os.path.join(store_dir, name), os.path.join(v1, name))
-    fs.publish_text(os.path.join(store_dir, _CURRENT_FILE), "v1")
-    fs.remove(marker)
-    return v1
+    window, POSIX/HDFS only): the wide files, params stamp and index
+    sidecar move into ``v1``. Resumable behind the migration marker
+    (storefs.migrate_tables_to_manifest). Returns the live data dir."""
+    return table_dir(migrate_tables_to_manifest(_STORE, store_dir), "")
+
+
+def stamp_store_params(store_dir: str, params: dict) -> None:
+    """Explicit migration hook for a signature store holding data but
+    no params stamp (written before the stamp existed, or lost it):
+    the operator KNOWS which params built it and vouches for them.
+    Overwrites any existing stamp in the live dir."""
+    stamp_params(_STORE, store_dir, params)
 
 
 # --------------------------------------------------------------------------
@@ -502,7 +435,7 @@ def build_band_index(
     byte sizes (index_bytes, wide_narrow_bytes, banded_rows) that the
     use-index gate compares at epoch time (r10 verdict task 6) —
     footprint and crossover are store facts, not constants."""
-    store_dir = _resolve_store(store_dir)
+    store_dir = resolve_manifest_dir(store_dir)
     fs = store_fs_for(store_dir)
     params_path = os.path.join(store_dir, _PARAMS_FILE)
     if not fs.exists(params_path):
@@ -1214,19 +1147,22 @@ def _ingest_epoch(
 ) -> DataFrame:
     """ONE ingest epoch for every modality — ``mod`` is the modality
     spec (_modality_spec plus the entry point's ``id_col``,
-    ``sig_frame`` and ``verify``): open the store and stamp its
-    params, build the batch signatures and resolve the hot-bucket cap,
-    take the LEAN or BIG candidate terms, apply the identical-
-    signature tier and the own-stored override, then admit the batch
-    and append its signatures to the store.
+    ``sig_frame`` and ``verify``): open the store (which checks or
+    first stamps its params), build the batch signatures and resolve
+    the hot-bucket cap, take the LEAN or BIG candidate terms, apply
+    the identical-signature tier and the own-stored override, then
+    admit the batch and append its signatures to the store.
 
     The lean-vs-big decision is ONE early-exit footer walk, taken
     before any Spark work so a lean epoch runs under static planning
     end to end (_static_epoch_planning); the full footer count is
     walked only when the ``"auto"`` cap policy asks for ``n_items``."""
     id_col, n_bands = mod["id_col"], mod["n_bands"]
-    store_dir = _open_store(store_dir)
-    store_exists = _store_has_data(store_dir)
+    open_table_store(_STORE, store_dir, mod["params"], ingest=True)
+    store_dir = table_dir(store_dir, "")
+    store_exists = any(
+        f.endswith(".parquet") for f in store_fs_for(store_dir).listdir(store_dir)
+    )
     big = (
         store_exists
         and store_fs_for(store_dir).parquet_rows(
@@ -1235,7 +1171,6 @@ def _ingest_epoch(
         >= _EAGER_SLICE_MIN_STORE_ROWS
     )
     with nullcontext() if big else _static_epoch_planning(spark):
-        _check_store_params(store_dir, mod["params"])
         sigs = mod["keep_sigs"](
             _with_index_cols(mod["sig_frame"](batch), n_bands, mod["fh_cols"]),
             reliable,
@@ -1427,67 +1362,6 @@ def neardup_ingest_batch(
     return _ingest_epoch(spark, batch, store_dir, mod, band_bucket_cap, reliable)
 
 
-_PARAMS_FILE = "_LSH_PARAMS.json"
-
-
-def _check_store_params(store_dir: str, expected: dict) -> None:
-    """Stamp the LSH parameters into the store on first use and fail
-    fast when a later batch disagrees. Signatures computed under
-    different (n_bits, n_bands) — or a different modality — are
-    incomparable: band equi-joins would silently find no historical
-    candidates and admit every near-duplicate. The sidecar starts
-    with ``_`` so Spark's parquet reader ignores it."""
-    fs = store_fs_for(store_dir)
-    fs.makedirs(store_dir)
-    path = os.path.join(store_dir, _PARAMS_FILE)
-    if fs.exists(path):
-        stored = json.loads(fs.read_text(path))
-        if stored != expected:
-            raise ValueError(
-                f"signature store {store_dir} was built with LSH params "
-                f"{stored}, but this batch uses {expected} — signatures "
-                "are incomparable across params; rebuild the store or "
-                "pass the original parameters"
-            )
-    else:
-        # a store with parquet files but NO sidecar predates the
-        # params stamp (or lost it): stamping the CURRENT batch's
-        # params would silently bless legacy signatures that may have
-        # been built under different (n_bits, n_bands) — exactly the
-        # incomparable-signature failure this guard exists to catch.
-        # Require an explicit migration instead of guessing.
-        legacy = [
-            f
-            for f in fs.listdir(store_dir)
-            if f.endswith(".parquet") or (not f.startswith(("_", "."))
-                                          and fs.isdir(os.path.join(store_dir, f)))
-        ]
-        if legacy:
-            raise ValueError(
-                f"signature store {store_dir} holds existing data but no "
-                f"{_PARAMS_FILE} sidecar — its LSH params are unknown and "
-                "may not match this batch's. If the store was definitely "
-                "built with the same parameters, stamp it explicitly with "
-                "stamp_store_params(store_dir, params); otherwise rebuild."
-            )
-        fs.publish_text(path, json.dumps(expected, sort_keys=True))
-
-
-def stamp_store_params(store_dir: str, params: dict) -> None:
-    """Explicit migration hook for a legacy signature store written
-    before the params sidecar existed: the operator KNOWS which
-    params built it and vouches for them. Overwrites any existing
-    stamp (atomic publish; manifest-layout roots resolve to their
-    live version dir first)."""
-    fs = store_fs_for(store_dir)
-    store_dir = _resolve_store(store_dir)
-    fs.makedirs(store_dir)
-    fs.publish_text(
-        os.path.join(store_dir, _PARAMS_FILE),
-        json.dumps(params, sort_keys=True),
-    )
-
-
 def ingest_band_bucket_cap_for(
     n_items: int,
     n_bands: int = 4,
@@ -1572,8 +1446,8 @@ def store_hot_buckets(
     4-rows-per-item band stack; no pair work, no payloads."""
     if band_bucket_cap < 1:
         raise ValueError(f"band_bucket_cap must be >= 1, got {band_bucket_cap}")
-    store_dir = _open_store(store_dir)
-    hist = spark.read.parquet(store_dir)
+    open_table_store(_STORE, store_dir)
+    hist = spark.read.parquet(table_dir(store_dir, ""))
     stacked = hist.select(
         F.expr(
             f"stack({n_bands}, "
@@ -1595,51 +1469,6 @@ def _store_row_count(store_dir: str) -> int:
     hot-bucket cap, which needs order-of-magnitude accuracy only —
     retry-duplicated rows counting double is immaterial there."""
     return store_fs_for(store_dir).parquet_rows(store_dir)
-
-
-def _recover_store(store_dir: str) -> None:
-    """Crash recovery for compact_store's CLASSIC directory swap: if a
-    crash between the two renames left ``store_dir`` missing while the
-    ``.old`` backup exists, restore the backup — called at the top of
-    every ingest batch and compaction so the history can never be
-    silently treated as a first run. Manifest-layout stores need no
-    recovery rename (the flip is one atomic publish; crash debris is
-    cleaned lazily by the next compaction) — and on filesystems
-    without atomic dir rename the backup rename could not run anyway.
-    A half-finished manifest MIGRATION refuses loudly first (a
-    half-moved store would otherwise read as classic with silently
-    missing history)."""
-    fs = store_fs_for(store_dir)
-    _refuse_mid_migration(store_dir)
-    if not fs.supports_atomic_dir_rename:
-        return
-    old = store_dir.rstrip("/") + ".old"
-    if not fs.exists(store_dir) and fs.exists(old):
-        fs.rename(old, store_dir)
-
-
-def _open_store(store_dir: str) -> str:
-    """Every entry point's first move: classic-swap crash recovery,
-    manifest auto-creation for a NEW store on a filesystem without
-    atomic directory rename (an object store could otherwise only
-    ever grow a classic store its own compaction must refuse), and
-    layout resolution. Returns the live data dir all further work
-    (params stamp, reads, appends, sidecar) runs against."""
-    fs = store_fs_for(store_dir)
-    if not fs.supports_atomic_dir_rename and _manifest_version(
-        store_dir
-    ) is None:
-        if fs.isdir(store_dir) and _store_has_data(store_dir):
-            raise ValueError(
-                f"{store_dir!r} is a classic-layout store on a filesystem "
-                "without atomic directory rename — its compaction swap "
-                "cannot ever run there. Copy the store's files into a "
-                "fresh manifest-layout store (create_manifest_store) "
-                "instead"
-            )
-        return create_manifest_store(store_dir)
-    _recover_store(store_dir)
-    return _resolve_store(store_dir)
 
 
 def compact_store(
@@ -1675,7 +1504,7 @@ def compact_store(
       rename on bare paths, the pyarrow adapter's atomic namenode
       rename on ``hdfs://``; refused on filesystems without atomic
       directory rename). A crash between the two renames leaves the
-      ``.old`` backup; ``_recover_store`` restores it.
+      ``.old`` backup; the next open's crash recovery restores it.
     - MANIFEST stores (r10 verdict task 4): the next version dir is
       written completely (files + params + sidecar), then ONE atomic
       manifest publish flips readers over and the old version is
@@ -1685,23 +1514,19 @@ def compact_store(
 
     Returns the ACTUAL compacted file count."""
     from file_appender_spark.operators.layout import dir_bytes, plan_file_count
-    from file_appender_spark.storefs import assert_no_inflight_write, swap_table_dir
+    from file_appender_spark.storefs import swap_table_dir
 
     fs = store_fs_for(store_dir)
-    if _manifest_version(store_dir) is None:
-        require_atomic_dir_rename(fs, store_dir, "classic-layout compact_store")
-        _recover_store(store_dir)
-    data_dir = _resolve_store(store_dir)
-    # single-writer window invariant (r9 verdict task 7): an in-flight
+    # the shared open: crash recovery, the migration refusal, and the
+    # single-writer window invariant (r9 verdict task 7) — an in-flight
     # ingest append leaves _temporary under the store while it runs
-    assert_no_inflight_write(fs, data_dir)
+    stamp = open_table_store(_STORE, store_dir, quiesce=("",))
+    data_dir = table_dir(store_dir, "")
     df = spark.read.parquet(data_dir)
     params_src = os.path.join(data_dir, _PARAMS_FILE)
-    spec = None
-    if fs.exists(params_src):
-        spec = _modality_spec(json.loads(fs.read_text(params_src)))
-        if not _store_is_v2(df):
-            df = _with_index_cols(df, spec["n_bands"], spec["fh_cols"])
+    spec = None if stamp is None else _modality_spec(stamp)
+    if spec is not None and not _store_is_v2(df):
+        df = _with_index_cols(df, spec["n_bands"], spec["fh_cols"])
     # size the rewrite from the DEDUPED fraction, not raw bytes — a
     # heavily retry-duplicated store would otherwise get ~dup-factor
     # more, smaller files than target_file_mb asks for
@@ -1730,7 +1555,7 @@ def compact_store(
                 build_band_index(spark, tmp, id_col, n_buckets=index_buckets)
 
     swap_table_dir(store_dir, write)
-    return len(_wide_files(_resolve_store(store_dir)))
+    return len(_wide_files(table_dir(store_dir, "")))
 
 
 # --------------------------------------------------------------------------

@@ -1240,11 +1240,11 @@ def q116_dedup_clusters(
     can never drift).
 
     Scale: pairs come from q52's banded LSH (equi-join candidates);
-    the component collapse is the alternating large-star/small-star
-    algorithm (O(log n) rounds, each a groupBy-min + join — the
-    public MapReduce CC algorithm of Kiveris et al.), never a driver
-    loop over edges. Component diameter, not corpus size, bounds the
-    round count.
+    the component collapse is min-label propagation
+    (operators/components.py: O(diameter) rounds, each a join + a
+    groupBy-min), never a driver loop over edges. Component diameter,
+    not corpus size, bounds the round count — near-dup clusters have
+    tiny diameters, so it is a few rounds.
 
     ``graph_dir`` (opt-in, the stats_dir pattern) answers from a
     materialized operators/pairstore.py store — the pair graph AND

@@ -223,11 +223,11 @@ def q270_textdup_manifest_sim(spark: SparkSession, sf_dir: str) -> DataFrame:
     admit decision: same oracle as q260/q264, hash-equal or the
     driver fails the row."""
     from file_appender_spark.operators.neardup_ingest import (
-        _manifest_version,
         compact_store,
         migrate_store_to_manifest,
         textdup_ingest_batch,
     )
+    from file_appender_spark.storefs import manifest_version as _manifest_version
 
     store = _scratch("q270_manifest")
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")

@@ -95,8 +95,8 @@ def q164_cluster_representatives(
     use for oracle simplicity. Scores stay INTEGER weight sums so the
     argmax is exact on both engines.
 
-    Scale: clusters from the banded-LSH pair graph (large/small-star
-    CC, O(log n) rounds); scoring is a zero-shuffle per-row fold; the
+    Scale: clusters from the banded-LSH pair graph (min-label
+    propagation CC, O(diameter) rounds); scoring is a zero-shuffle per-row fold; the
     representative argmax is one groupBy on cluster_id — no step sees
     a pair explosion or a driver loop. ``graph_dir`` (opt-in) reads
     the materialized assignment from the pairstore instead of

@@ -456,11 +456,12 @@ def q219_cluster_size_histogram(
     (keep-one-per-cluster saves sum((sz-1) * n_clusters) docs; q144
     reports that scalar, this is the distribution behind it).
 
-    Scale: composes q116 (large/small-star CC, O(log n) rounds); the
-    histogram is two map-side-combined aggregates over the assignment
-    (cluster sizes, then size counts); the total is a 1-row broadcast
-    derived from the same frame. Oracle composes the SAME q52 CTEs +
-    recursive closure as q116, so the definitions cannot drift."""
+    Scale: composes q116 (min-label propagation CC, O(diameter)
+    rounds); the histogram is two map-side-combined aggregates over
+    the assignment (cluster sizes, then size counts); the total is a
+    1-row broadcast derived from the same frame. Oracle composes the
+    SAME q52 CTEs + recursive closure as q116, so the definitions
+    cannot drift."""
     asg = q116_dedup_clusters(spark, sf_dir, graph_dir=graph_dir).select(
         "doc_id", "cluster_id"
     )

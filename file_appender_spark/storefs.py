@@ -24,9 +24,9 @@ their (possibly schemed) paths to Spark unchanged and route only the
 metadata operations — exists/list/rename/delete/sidecars — through
 this seam.
 
-The module also holds the one multi-table store lifecycle
-(:class:`TableStore` and the functions over it) that the pair-graph
-and corpus-stats stores run on; see the section comment below.
+The module also holds the one store lifecycle (:class:`TableStore`
+and the functions over it) that the signature, pair-graph and
+corpus-stats stores all run on; see the section comment below.
 
 Durability note: ``rename`` must be atomic for DIRECTORIES on the
 target filesystem — POSIX rename and the HDFS namenode rename both
@@ -507,11 +507,14 @@ def manifest_version(directory: str) -> str | None:
     return name
 
 
+def _live(directory: str, version: str | None) -> str:
+    return directory if version is None else os.path.join(directory, version)
+
+
 def resolve_manifest_dir(directory: str) -> str:
     """Where the live data actually is: the manifest's current version
     dir, or ``directory`` itself for classic layout."""
-    v = manifest_version(directory)
-    return directory if v is None else os.path.join(directory, v)
+    return _live(directory, manifest_version(directory))
 
 
 def next_manifest_version_dir(directory: str, current: str) -> str:
@@ -558,47 +561,52 @@ def create_manifest_dir(directory: str) -> str:
     return v1
 
 
-def _is_empty_version_debris(fs: "StoreFS", base: str, name: str) -> bool:
-    """An EMPTY ``v<N>`` dir with no manifest is create_manifest_dir's
-    own crash debris (it makedirs v1 then publishes) — tolerated by a
-    retry. Anything non-empty is ambiguous and must be refused."""
-    p = os.path.join(base, name)
-    return (
-        len(name) > 1
-        and name[0] == "v"
-        and name[1:].isdigit()
-        and fs.isdir(p)
-        and not fs.listdir(p)
-    )
+def _is_version_name(name: str) -> bool:
+    return len(name) > 1 and name[0] == "v" and name[1:].isdigit()
+
+
+def _table_data(spec: "TableStore", fs: "StoreFS", directory: str) -> list[str]:
+    """The children of a table dir that are DATA: every child except
+    version dirs, the manifest and the record's own marker files. The
+    migration move, the create-manifest refusal and the first-stamp
+    refusal all use this one rule. Spark's ``_SUCCESS`` and Hadoop's
+    ``.crc`` checksum files are data by it, so they travel with the
+    files they describe."""
+    skip = (MANIFEST_CURRENT_FILE, spec.migrating_marker, spec.rebuild_marker)
+    return [
+        n for n in fs.listdir(directory) if n not in skip and not _is_version_name(n)
+    ]
 
 
 def create_manifest_tables(spec: "TableStore", store_dir: str) -> str:
-    """Initialize an EMPTY manifest-layout multi-table store: each
-    table gets v1 + its own ``_CURRENT``. Idempotent, and resumable
-    across a crash inside create_manifest_dir (a lone empty version
-    dir is recognized as our own debris, not classic data). Refuses:
+    """Initialize an EMPTY manifest-layout store: each table gets v1 +
+    its own ``_CURRENT``. Idempotent, and resumable across a crash
+    inside create_manifest_dir (a lone version dir is not data).
+    Refuses:
 
-    - a table base with real (classic) children — classic data must
-      go through the store's migrate function instead;
+    - a store with an unfinished migration — its half-moved tables
+      are not a fresh store;
+    - a table base holding data (classic data must go through the
+      store's migrate function instead);
     - a ``<table>.old`` sibling — classic crash debris whose ONLY
       data copy may be the backup; publishing an empty manifest over
       it would orphan that copy silently (the manifest-layout
       recovery never looks at .old again)."""
     fs = store_fs_for(store_dir)
-    for name in spec.tables:
-        base = os.path.join(store_dir, name)
+    bases = [_table_base(store_dir, n) for n in spec.tables]
+    refuse_mid_migration(
+        store_dir, spec.migrating_marker, spec.kind, spec.migrate_hint, bases
+    )
+    for base in bases:
         if manifest_version(base) is not None:
             continue
-        old = base.rstrip("/") + ".old"
-        if fs.exists(old):
+        if fs.exists(base + ".old"):
             raise ValueError(
-                f"{base!r} has classic crash debris ({old!r} exists); "
+                f"{base!r} has classic crash debris ({base + '.old'!r} exists); "
                 f"recover the classic {spec.kind} store first, then use "
                 f"{spec.migrate_hint}"
             )
-        if fs.isdir(base) and any(
-            not _is_empty_version_debris(fs, base, n) for n in fs.listdir(base)
-        ):
+        if _table_data(spec, fs, base):
             raise ValueError(
                 f"{base!r} already holds a classic-layout table; use "
                 f"{spec.migrate_hint} instead"
@@ -646,22 +654,23 @@ def refuse_mid_migration(
 
 
 def migrate_tables_to_manifest(spec: "TableStore", store_dir: str) -> str:
-    """Convert a CLASSIC multi-table store in place (single-writer
-    maintenance window): move each table's children into its ``v1``
-    and publish the per-table manifests. Needs per-child renames, so
-    POSIX/HDFS only — which is where classic stores can exist at all.
-    RESUMABLE: the store-level marker makes every other entry point
-    refuse after a mid-move crash (refuse_mid_migration), and a re-run
-    skips already-published tables and finishes the rest. The marker
-    is also removed when a re-run finds every table already published
-    (a crash BETWEEN the last publish and the marker removal must not
-    wedge the store). Classic debris siblings (stale ``.old`` backups
-    alongside a live table, interrupted ``.compacting``/``.refreshing``
-    outputs) are cleaned here — the classic maintenance passes that
-    used to clean them never run again after migration."""
+    """Convert a CLASSIC store in place (single-writer maintenance
+    window): move each table's data children (_table_data) into its
+    ``v1`` and publish the per-table manifests. Needs per-child
+    renames, so POSIX/HDFS only — which is where classic stores can
+    exist at all. RESUMABLE: the store-level marker makes every other
+    entry point refuse after a mid-move crash (refuse_mid_migration),
+    and a re-run skips already-published tables and finishes the
+    rest. The marker is also removed when a re-run finds every table
+    already published (a crash BETWEEN the last publish and the
+    marker removal must not wedge the store). Classic debris siblings
+    (stale ``.old`` backups alongside a live table, interrupted
+    ``.compacting``/``.refreshing`` outputs) are cleaned here — the
+    classic maintenance passes that used to clean them never run
+    again after migration."""
     fs = store_fs_for(store_dir)
     marker = os.path.join(store_dir, spec.migrating_marker)
-    bases = [os.path.join(store_dir, n) for n in spec.tables]
+    bases = [_table_base(store_dir, n) for n in spec.tables]
     if all(manifest_version(b) is not None for b in bases):
         if fs.exists(marker):
             fs.remove(marker)  # crash after the last publish: finish up
@@ -670,9 +679,8 @@ def migrate_tables_to_manifest(spec: "TableStore", store_dir: str) -> str:
     # classic .old recovery first (the store's recovery refuses on the
     # marker, so the restore must happen here)
     for b in bases:
-        old = b.rstrip("/") + ".old"
-        if not fs.exists(b) and fs.exists(old):
-            fs.rename(old, b)
+        if not fs.exists(b) and fs.exists(b + ".old"):
+            fs.rename(b + ".old", b)
     fs.makedirs(store_dir)
     fs.write_text(marker, f"{spec.migrate_hint} in progress")
     for b in bases:
@@ -681,29 +689,14 @@ def migrate_tables_to_manifest(spec: "TableStore", store_dir: str) -> str:
         # it after the second rename; a crash in between leaves it),
         # and interrupted swap outputs
         for suffix in spec.classic_debris:
-            p = b.rstrip("/") + suffix
-            if fs.exists(p):
-                fs.rmtree(p)
+            if fs.exists(b + suffix):
+                fs.rmtree(b + suffix)
         if manifest_version(b) is None:
             v1 = os.path.join(b, "v1")
             fs.makedirs(v1)
-            for name in fs.listdir(b):
-                if name == "v1" or name.startswith((".", "_")):
-                    continue
+            for name in _table_data(spec, fs, b):
                 fs.rename(os.path.join(b, name), os.path.join(v1, name))
             fs.publish_text(os.path.join(b, MANIFEST_CURRENT_FILE), "v1")
-        # sweep Spark write-artifact FILES left at the table base
-        # (_SUCCESS, Hadoop .part-*.crc siblings): their data files
-        # moved into v1, clean_stale_manifest_versions only removes
-        # directories, and no later pass touches base-level files —
-        # without this they'd sit there forever (r11 ADVICE). Runs on
-        # resumed/already-published tables too (a crash between
-        # publish and sweep must not orphan them). Version dirs and
-        # the manifest file itself are untouched.
-        for name in fs.listdir(b):
-            p = os.path.join(b, name)
-            if name != MANIFEST_CURRENT_FILE and not fs.isdir(p):
-                fs.remove(p)
     fs.remove(marker)
     return store_dir
 
@@ -724,6 +717,7 @@ def swap_table_dir(base: str, write, tmp_suffix: str = ".compacting") -> None:
     fs = store_fs_for(base)
     cur = manifest_version(base)
     if cur is None:
+        require_atomic_dir_rename(fs, base, "the classic two-rename swap")
         tmp = base.rstrip("/") + tmp_suffix
         if fs.exists(tmp):
             fs.rmtree(tmp)
@@ -747,40 +741,54 @@ def swap_table_dir(base: str, write, tmp_suffix: str = ".compacting") -> None:
 
 
 # --------------------------------------------------------------------------
-# Multi-table store lifecycle (shared by the pair graph and corpus stats)
+# Store lifecycle (shared by the signature, pair-graph and corpus-stats
+# stores)
 # --------------------------------------------------------------------------
 #
-# Both stores keep several tables under one store dir, a params stamp
-# next to them, a store-level migration marker and a rebuild marker.
-# Each declares how it differs as a TableStore record; the functions
-# below are its whole lifecycle — open (recover, refuse, check params),
-# rebuild, epoch write, manifest create/migrate and compaction — and
-# none of them branches on which store is calling.
+# Every store keeps one or more tables under one store dir, a params
+# stamp, a store-level migration marker and (if it can be rebuilt) a
+# rebuild marker. Each declares how it differs as a TableStore record;
+# the functions below are its whole lifecycle — open (recover, refuse,
+# check params), rebuild, epoch write, manifest create/migrate and
+# compaction — and none of them branches on which store is calling.
+# Two layout rules hold for every store:
+#
+# - the params stamp lives in the store root's RESOLVED dir: the root
+#   itself, or its current version dir when the root holds a manifest
+#   (only a store whose one table is the root, ``tables=("",)``, has
+#   one there);
+# - a table's data is every child but version dirs, the manifest and
+#   the record's markers (_table_data).
 
 
 @dataclass(frozen=True)
 class TableStore:
-    """One multi-table store's declared differences.
+    """One store's declared differences.
 
     ``params`` maps the stamp on disk (None when there is none) to the
     params this code expects of the store; ``mismatch`` ends the
     refusal of a foreign stamp. ``first_ingest_stamps`` is what a
     missing stamp means to ingest: stamp it and start the store, or
-    refuse (reads and compaction never stamp; they accept a missing
-    stamp only when ingest could have started the store)."""
+    refuse (reads and compaction never stamp). ``rebuild_marker`` is
+    None for a store that has no rebuild."""
 
     kind: str
     tables: tuple[str, ...]
     params_file: str
     params: Callable[[dict | None], dict]
     mismatch: str
-    rebuild_marker: str
     rebuild_hint: str
     migrate_hint: str
+    rebuild_marker: str | None = None
     migrating_marker: str = MANIFEST_MIGRATING_MARKER
     classic_debris: tuple[str, ...] = (".old", ".compacting")
     rebuild_wipes: tuple[str, ...] = ()
     first_ingest_stamps: bool = False
+
+
+def _table_base(store_dir: str, name: str) -> str:
+    """A table's base dir (the store root itself for the table "")."""
+    return os.path.join(store_dir, name).rstrip("/")
 
 
 def table_dir(store_dir: str, name: str) -> str:
@@ -788,36 +796,38 @@ def table_dir(store_dir: str, name: str) -> str:
     the table base itself for classic layout. Safe to resolve per
     call — maintenance windows are single-writer by contract, so a
     flip cannot race the operation that resolved."""
-    return resolve_manifest_dir(os.path.join(store_dir, name))
+    return resolve_manifest_dir(_table_base(store_dir, name))
 
 
-def _recover_tables(spec: TableStore, store_dir: str) -> None:
+def _recover_tables(spec: TableStore, store_dir: str) -> str:
     """Crash recovery at the head of every entry point, layout-aware:
     MANIFEST-layout tables need none (crash debris is a stale version
     dir, cleaned lazily by the next swap of that table), so a fully
     manifest store runs on filesystems without atomic directory
     rename. CLASSIC tables keep the .old restore, whose crash-safety
     still requires the rename — enforced per table, only when classic
-    data actually exists."""
+    data or a backup actually exists. Returns the dir the params
+    stamp lives in: the store root, resolved (every manifest is read
+    once, the root's too when it is a table base)."""
     fs = store_fs_for(store_dir)
+    bases = [_table_base(store_dir, n) for n in spec.tables]
     refuse_mid_migration(
-        store_dir,
-        spec.migrating_marker,
-        spec.kind,
-        spec.migrate_hint,
-        manifest_dirs=[os.path.join(store_dir, n) for n in spec.tables],
+        store_dir, spec.migrating_marker, spec.kind, spec.migrate_hint, bases
     )
-    for name in spec.tables:
-        base = os.path.join(store_dir, name)
-        if manifest_version(base) is not None:
+    root = store_dir.rstrip("/")
+    versions = {d: manifest_version(d) for d in dict.fromkeys([root, *bases])}
+    for base in bases:
+        if versions[base] is not None:
             continue
-        old = base.rstrip("/") + ".old"
-        if fs.exists(base) or fs.exists(old):
-            require_atomic_dir_rename(
-                fs, store_dir, f"classic-layout {spec.kind} store maintenance"
-            )
-        if not fs.exists(base) and fs.exists(old):
+        old = base + ".old"
+        if not fs.supports_atomic_dir_rename:
+            if fs.exists(old) or _table_data(spec, fs, base):
+                require_atomic_dir_rename(
+                    fs, store_dir, f"{spec.kind} maintenance of a classic-layout store"
+                )
+        elif not fs.exists(base) and fs.exists(old):
             fs.rename(old, base)
+    return _live(root, versions[root])
 
 
 def _ensure_layout(spec: TableStore, store_dir: str) -> None:
@@ -833,14 +843,14 @@ def _ensure_layout(spec: TableStore, store_dir: str) -> None:
 def stamp_params(spec: TableStore, store_dir: str, params: dict) -> None:
     """(Re)write the params stamp unconditionally — the build path's
     prerogative (a full rebuild replaces every table, so stale params
-    are simply replaced) and corpus stats' first ingest. publish_text:
-    atomic tmp+rename on POSIX/HDFS, one atomic PUT on object stores
-    (where replace_file would raise)."""
+    are simply replaced), a first ingest, and the explicit adoption of
+    unstamped data. publish_text: atomic tmp+rename on POSIX/HDFS, one
+    atomic PUT on object stores (where replace_file would raise)."""
     fs = store_fs_for(store_dir)
-    fs.makedirs(store_dir)
+    d = resolve_manifest_dir(store_dir.rstrip("/"))
+    fs.makedirs(d)
     fs.publish_text(
-        os.path.join(store_dir, spec.params_file),
-        json.dumps(params, sort_keys=True),
+        os.path.join(d, spec.params_file), json.dumps(params, sort_keys=True)
     )
 
 
@@ -860,18 +870,22 @@ def open_table_store(
     incomparable, and these paths only add to or read what exists, so
     they refuse rather than re-stamp. ``params`` defaults to what the
     store expects of its own stamp. Only ``ingest`` on a store whose
-    first ingest stamps ever writes a stamp. ``quiesce`` names tables
-    that must have no in-flight write (the maintenance window).
-    Returns the stamp (None for an unstamped store that may be read)."""
+    first ingest stamps ever writes a stamp, and only while no table
+    holds data: stamping data of unknown params would bless it.
+    ``quiesce`` names tables that must have no in-flight write (the
+    maintenance window). Returns the stamp (None for an unstamped
+    store that may be read)."""
     fs = store_fs_for(store_dir)
-    _recover_tables(spec, store_dir)
-    if fs.exists(os.path.join(store_dir, spec.rebuild_marker)):
+    stamp_dir = _recover_tables(spec, store_dir)
+    if spec.rebuild_marker and fs.exists(
+        os.path.join(store_dir, spec.rebuild_marker)
+    ):
         raise ValueError(
             f"{spec.kind} store {store_dir} has an unfinished rebuild "
             f"(crash mid-{spec.rebuild_hint}): its tables are partial — "
             f"re-run {spec.rebuild_hint} over the full corpus"
         )
-    path = os.path.join(store_dir, spec.params_file)
+    path = os.path.join(stamp_dir, spec.params_file)
     if fs.exists(path):
         stored = json.loads(fs.read_text(path))
         want = params if params is not None else spec.params(stored)
@@ -885,12 +899,19 @@ def open_table_store(
             f"{store_dir} is not a {spec.kind} store (no {spec.params_file}); "
             f"run {spec.rebuild_hint} first"
         )
-    elif ingest:
-        _ensure_layout(spec, store_dir)  # ingest may legitimately START a store
-        stored = spec.params(None)
-        stamp_params(spec, store_dir, stored)
-    else:
+    elif not ingest:
         stored = None
+    elif any(_table_data(spec, fs, table_dir(store_dir, n)) for n in spec.tables):
+        raise ValueError(
+            f"{spec.kind} store {store_dir} holds data but no "
+            f"{spec.params_file} — its params are unknown and may not match "
+            f"this call's: stamp the params that built it, or rebuild it "
+            f"({spec.rebuild_hint})"
+        )
+    else:
+        _ensure_layout(spec, store_dir)  # ingest may legitimately START a store
+        stored = params if params is not None else spec.params(None)
+        stamp_params(spec, store_dir, stored)
     assert_no_inflight_write(fs, *[table_dir(store_dir, n) for n in quiesce])
     return stored
 
@@ -916,14 +937,16 @@ def rebuild_table_store(
     the marker makes every open refuse the half-built store in
     between, which a missing stamp alone cannot signal where ingest
     may start a store."""
-    _recover_tables(spec, store_dir)
+    stamp_dir = _recover_tables(spec, store_dir)
     _ensure_layout(spec, store_dir)
     fs = store_fs_for(store_dir)
     fs.makedirs(store_dir)
     marker = os.path.join(store_dir, spec.rebuild_marker)
     fs.write_text(marker, "rebuild in progress")
-    for name in (spec.params_file, *spec.rebuild_wipes):
-        p = os.path.join(store_dir, name)
+    for p in (
+        os.path.join(stamp_dir, spec.params_file),
+        *[os.path.join(store_dir, name) for name in spec.rebuild_wipes],
+    ):
         if fs.exists(p):
             fs.remove(p)
     for name in spec.tables:

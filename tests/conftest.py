@@ -34,13 +34,13 @@ _SLOW_TESTS = {
     "tests/test_append_fs.py::test_rotation_off_by_one_preserves_prefix",
     "tests/test_append_fs.py::test_two_run_append_doubles_multiset",
     "tests/test_append_sink.py::test_age_threshold_excludes_old_files",
+    "tests/test_append_sink.py::test_cc_labels_self_loop_only_node",
     "tests/test_append_sink.py::test_custom_fs_reaches_executors",
     "tests/test_append_sink.py::test_projection_via_output_schema",
     "tests/test_append_sink.py::test_read_back_roundtrip",
     "tests/test_append_sink.py::test_rotation_preserves_name_prefix",
     "tests/test_append_sink.py::test_size_rotation_off_by_one",
     "tests/test_append_sink.py::test_size_threshold_zero_means_no_rotation",
-    "tests/test_append_sink.py::test_star_cc_labels_self_loop_only_node",
     "tests/test_append_text_datasource.py::test_datasource_matches_read_delimited",
     "tests/test_append_text_datasource.py::test_one_partition_per_rotated_file",
     "tests/test_append_text_datasource.py::test_streaming_tail_exactly_once_across_appends",
@@ -51,8 +51,6 @@ _SLOW_TESTS = {
     "tests/test_components.py::test_components_deterministic",
     "tests/test_components.py::test_components_long_path_needs_iterations",
     "tests/test_components.py::test_dedup_clusters_from_jaccard_pairs",
-    "tests/test_components.py::test_star_cc_equals_min_label_on_random_graph",
-    "tests/test_components.py::test_star_cc_logarithmic_on_long_path",
     "tests/test_containment.py::test_capped_equals_exact_when_rare_tokens_exist",
     "tests/test_containment.py::test_randomized_agreement_under_zipf_vocab",
     "tests/test_corpusstats.py::test_bigram_incremental_matches_batch",
@@ -121,7 +119,6 @@ _SLOW_TESTS = {
     "tests/test_manifest_store.py::test_pairstore_manifest_lifecycle_on_no_dir_rename_backend",
     "tests/test_manifest_store.py::test_pairstore_manifest_parity_with_classic",
     "tests/test_manifest_store.py::test_pairstore_migration_resumes_after_crash",
-    "tests/test_manifest_store.py::test_sigstore_migration_marker_refuses_and_resumes",
     "tests/test_operators.py::test_ann_sign_ivf_exclude_self_flag",
     "tests/test_operators.py::test_band_pairs_slice_equivalence",
     "tests/test_operators.py::test_embedding_ingest_auto_cap_admits_degenerate_family",

@@ -237,22 +237,17 @@ def test_rotation_counter_excludes_newline(tmp_path):
     assert w.bytes_written == len("ab") + len("cdef") + len("g")
 
 
-def test_star_cc_labels_self_loop_only_node(spark):
+def test_cc_labels_self_loop_only_node(spark):
     """A node appearing only in a self-loop edge must still get a
-    singleton label from BOTH variants (the star variant's node
-    universe is built from raw edges, before the self-loop filter)."""
-    from file_appender_spark.operators.components import (
-        connected_components,
-        connected_components_star,
-    )
+    singleton label from min-label propagation."""
+    from file_appender_spark.operators.components import connected_components
 
     edges = spark.createDataFrame(
         [(1, 2), (7, 7)], "src long, dst long"
     )
     want = {(1, 1), (2, 1), (7, 7)}
-    a = {(r.node, r.component) for r in connected_components(edges).collect()}
-    b = {(r.node, r.component) for r in connected_components_star(edges).collect()}
-    assert a == want and b == want
+    got = {(r.node, r.component) for r in connected_components(edges).collect()}
+    assert got == want
 
 
 def test_task_retry_duplicates_lines_at_least_once(tmp_path):

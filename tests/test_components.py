@@ -66,50 +66,3 @@ def test_dedup_clusters_from_jaccard_pairs(spark, sf_dir):
         keeps = [m for m in members if m["keep"]]
         assert len(keeps) == 1
         assert keeps[0]["doc"] == min(m["doc"] for m in members) == cluster
-
-
-def test_star_cc_equals_min_label_on_random_graph(spark):
-    """Both algorithms assign identical (node, component) labels on a
-    seeded random pair graph."""
-    import random
-
-    from file_appender_spark.operators.components import (
-        connected_components,
-        connected_components_star,
-    )
-
-    rng = random.Random(11)
-    pairs = [(rng.randrange(0, 300), rng.randrange(0, 300)) for _ in range(250)]
-    pairs = [(a, b) for a, b in pairs if a != b]
-    edges = spark.createDataFrame(pairs, "src long, dst long")
-    a = {
-        (r.node, r.component)
-        for r in connected_components(edges).collect()
-    }
-    b = {
-        (r.node, r.component)
-        for r in connected_components_star(edges).collect()
-    }
-    assert a == b
-
-
-def test_star_cc_logarithmic_on_long_path(spark):
-    """The reason this variant exists: a 400-node path (diameter 400)
-    finishes in O(log n) star rounds — min-label propagation would
-    need ~400 rounds (and raises at its default budget)."""
-    import pytest as _pytest
-
-    from file_appender_spark.operators.components import (
-        connected_components,
-        connected_components_star,
-    )
-
-    path_edges = spark.createDataFrame(
-        [(i, i + 1) for i in range(400)], "src long, dst long"
-    )
-    labels, rounds = connected_components_star(path_edges, return_rounds=True)
-    got = labels.collect()
-    assert all(r.component == 0 for r in got) and len(got) == 401
-    assert rounds <= 12  # ~log2(400) + slack, nowhere near 400
-    with _pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(path_edges, max_iterations=10)

@@ -119,6 +119,14 @@ def test_tokenizer_params_guard(spark, sf_dir, tmp_path):
     with pytest.raises(ValueError, match="incomparable"):
         compact_corpus_stats(spark, store)
     assert _listing(store) == before
+    # a store holding data but NO stamp (lost, or written before the
+    # stamp existed) has unknown params: ingest refuses to stamp its
+    # own over the old counts, the signature stores' first-stamp rule
+    os.remove(os.path.join(store, "_corpusstats_params.json"))
+    before = _listing(store)
+    with pytest.raises(ValueError, match="no _corpusstats_params.json"):
+        corpusstats_ingest_batch(spark, docs, store, batch_id=8)
+    assert _listing(store) == before
 
 
 def _listing(store):

@@ -22,17 +22,19 @@ from pyspark.sql import functions as F
 
 from file_appender_spark import storefs
 from file_appender_spark.operators.neardup_ingest import (
-    _CURRENT_FILE,
     _INDEX_DIR,
     _band_index_state,
-    _manifest_version,
-    _resolve_store,
     compact_store,
     create_manifest_store,
     migrate_store_to_manifest,
     textdup_ingest_batch,
 )
-from file_appender_spark.storefs import LocalStoreFS
+from file_appender_spark.storefs import (
+    MANIFEST_CURRENT_FILE as _CURRENT_FILE,
+    LocalStoreFS,
+    manifest_version as _manifest_version,
+    table_dir,
+)
 
 
 class NoDirRenameFS(LocalStoreFS):
@@ -106,7 +108,7 @@ def test_manifest_lifecycle_on_no_dir_rename_backend(
     assert n_files >= 1
     assert _manifest_version(store) == "v2"
     assert not os.path.exists(os.path.join(store, "v1"))
-    state = _band_index_state(_resolve_store(store))
+    state = _band_index_state(table_dir(store, ""))
     assert state is not None and state["version"] == 2
     # post-compaction epoch resolves the new version; a replay of
     # previously-ADMITTED ids re-emits them all (at-least-once; doc 1
@@ -521,11 +523,21 @@ def test_classic_corpusstats_refused_on_no_dir_rename_backend(
         compact_corpus_stats(spark, store)
 
 
+def _sig_rows(spark, store):
+    """The signature store's live rows, opened through its read entry
+    point (crash recovery, migration refusal, params guard)."""
+    from file_appender_spark.operators.neardup_ingest import store_hot_buckets
+
+    store_hot_buckets(spark, store, band_bucket_cap=1)
+    return spark.read.parquet(table_dir(store, ""))
+
+
 def _table_store(kind):
-    """One multi-table store's lifecycle entry points, so the shared
-    lifecycle tests run against both stores: (spec, build(spark, docs,
-    store), create(store), migrate(store), read(spark, store) -> frame,
-    rows the read serves for _corpus(spark, 10))."""
+    """One store's lifecycle entry points, so the shared lifecycle
+    tests run against all three stores: (spec, build(spark, docs,
+    store), ingest(spark, docs, store), create(store), migrate(store),
+    compact(spark, store), read(spark, store) -> frame, rows the read
+    serves for _corpus(spark, 10))."""
     from types import SimpleNamespace
 
     if kind == "pair":
@@ -534,26 +546,52 @@ def _table_store(kind):
         return SimpleNamespace(
             spec=m._STORE,
             build=m.build_pair_graph,
+            ingest=lambda spark, docs, store: m.pairstore_ingest_batch(
+                spark, docs, store, 1
+            ),
             create=m.create_manifest_pairstore,
             migrate=m.migrate_pairstore_to_manifest,
+            compact=m.compact_pairstore,
             read=m.read_pairs,
             n_rows=1,  # the one exact twin pair (0, 1)
         )
+    if kind == "signature":
+        from file_appender_spark.operators import neardup_ingest as m
+
+        return SimpleNamespace(
+            spec=m._STORE,
+            build=m.textdup_ingest_batch,
+            ingest=m.textdup_ingest_batch,
+            create=m.create_manifest_store,
+            migrate=m.migrate_store_to_manifest,
+            compact=lambda spark, store: m.compact_store(
+                spark, store, id_col="doc_id"
+            ),
+            read=_sig_rows,
+            n_rows=9,  # 10 docs, doc 1 is doc 0's exact twin
+        )
     from file_appender_spark.operators import corpusstats as m
+
+    def with_source(docs):
+        return docs.withColumn("source", F.lit("web"))
 
     return SimpleNamespace(
         spec=m._STORE,
         build=lambda spark, docs, store: m.build_corpus_stats(
-            spark, docs.withColumn("source", F.lit("web")), store
+            spark, with_source(docs), store
+        ),
+        ingest=lambda spark, docs, store: m.corpusstats_ingest_batch(
+            spark, with_source(docs), store, 1
         ),
         create=m.create_manifest_corpusstats,
         migrate=m.migrate_corpusstats_to_manifest,
+        compact=m.compact_corpus_stats,
         read=m.read_token_stats,
         n_rows=90,  # 9 distinct texts x 10 distinct words, one source
     )
 
 
-_TABLE_STORES = pytest.mark.parametrize("kind", ["pair", "corpusstats"])
+_TABLE_STORES = pytest.mark.parametrize("kind", ["pair", "corpusstats", "signature"])
 
 
 @_TABLE_STORES
@@ -561,29 +599,41 @@ def test_migration_marker_crash_after_last_publish(spark, tmp_path, kind):
     """Review finding: a crash BETWEEN the last table publish and the
     marker removal used to wedge the store forever (the re-run's
     all-published early return skipped the removal). With every
-    manifest published the store is fully consistent, so entry points
-    SELF-HEAL: the marker is recognized as completed-migration debris
-    and removed (storefs.refuse_mid_migration), no manual re-run
-    needed."""
+    manifest published the store is fully consistent, so a re-run of
+    the migration finishes up, and entry points SELF-HEAL: the marker
+    is recognized as completed-migration debris and removed
+    (storefs.refuse_mid_migration), no manual re-run needed. A
+    genuinely half-moved store is refused by every entry point —
+    read, ingest and compaction — until a re-run finishes the move,
+    with the history intact."""
     ts = _table_store(kind)
-    marker = ts.spec.migrating_marker
     store = str(tmp_path / "marker")
+    marker = os.path.join(store, ts.spec.migrating_marker)
     ts.build(spark, _corpus(spark, 12, tag="mk"), store)
-    ts.migrate(store)
+    want = ts.read(spark, store).count()
+    live = ts.migrate(store)
     # simulate the crash: every table published, marker back on disk
-    open(os.path.join(store, marker), "w").write("crash")
-    assert ts.read(spark, store).count() >= 1  # self-heals
-    assert not os.path.exists(os.path.join(store, marker))
+    open(marker, "w").write("crash")
+    assert ts.migrate(store) == live  # the re-run's early return
+    assert not os.path.exists(marker)
+    open(marker, "w").write("crash")
+    assert ts.read(spark, store).count() == want  # self-heals
+    assert not os.path.exists(marker)
     # a genuinely half-moved store (some manifest missing) still
     # refuses: recreate the marker and unpublish one table's manifest
-    open(os.path.join(store, marker), "w").write("crash")
+    open(marker, "w").write("crash")
     os.remove(os.path.join(store, ts.spec.tables[-1], _CURRENT_FILE))
-    with pytest.raises(ValueError, match="unfinished manifest migration"):
-        ts.read(spark, store)
+    for entry in (
+        lambda: ts.read(spark, store),
+        lambda: ts.ingest(spark, _corpus(spark, 3, tag="x"), store),
+        lambda: ts.compact(spark, store),
+    ):
+        with pytest.raises(ValueError, match="unfinished manifest migration"):
+            entry()
     # the re-run republishes the missing manifest and clears the marker
     ts.migrate(store)
-    assert not os.path.exists(os.path.join(store, marker))
-    assert ts.read(spark, store).count() >= 1
+    assert not os.path.exists(marker)
+    assert ts.read(spark, store).count() == want
 
 
 @_TABLE_STORES
@@ -596,7 +646,7 @@ def test_create_manifest_resumes_and_refuses_debris(
     backup refuses loudly instead of being silently orphaned under an
     empty manifest."""
     ts = _table_store(kind)
-    first, second = ts.spec.tables[:2]
+    first, last = ts.spec.tables[0], ts.spec.tables[-1]
     store = str(tmp_path / "create_resume")
     # crash between makedirs(v1) and the _CURRENT publish
     os.makedirs(os.path.join(store, first, "v1"))
@@ -605,8 +655,9 @@ def test_create_manifest_resumes_and_refuses_debris(
     assert ts.read(spark, store).count() == ts.n_rows
     # a .old sibling is recoverable classic data — never orphan it
     store2 = str(tmp_path / "create_old")
-    os.makedirs(os.path.join(store2, f"{second}.old"))
-    open(os.path.join(store2, f"{second}.old", "part-x.parquet"), "w").close()
+    old = os.path.join(store2, last).rstrip("/") + ".old"
+    os.makedirs(old)
+    open(os.path.join(old, "part-x.parquet"), "w").close()
     with pytest.raises(ValueError, match="classic crash debris"):
         ts.create(store2)
 
@@ -622,26 +673,29 @@ def test_migration_sweeps_classic_debris(spark, tmp_path, kind):
     store = str(tmp_path / "debris")
     ts.build(spark, _corpus(spark, 12, tag="db"), store)
     want = ts.read(spark, store).count()
-    # stale backup NEXT TO a live table + interrupted swap outputs
-    debris = [t + s for t, s in zip(ts.spec.tables, ts.spec.classic_debris)]
-    os.makedirs(os.path.join(store, debris[0]))
-    open(os.path.join(store, debris[0], "stale.parquet"), "w").close()
-    for d in debris[1:]:
-        os.makedirs(os.path.join(store, d))
+    # stale backups NEXT TO live tables + interrupted swap outputs
+    debris = [
+        os.path.join(store, t).rstrip("/") + suffix
+        for t in ts.spec.tables
+        for suffix in ts.spec.classic_debris
+    ]
+    for d in debris:
+        os.makedirs(d)
+        open(os.path.join(d, "stale.parquet"), "w").close()
     ts.migrate(store)
     for d in debris:
-        assert not os.path.exists(os.path.join(store, d)), d
+        assert not os.path.exists(d), d
     assert ts.read(spark, store).count() == want
 
 
 def test_migration_sweeps_base_level_write_artifacts(spark, tmp_path):
     """r11 ADVICE: a table root written directly by Spark leaves
-    _SUCCESS and Hadoop .part-*.crc siblings at the table base; the
-    migration loop skips '.'/'_' names when moving children into v1,
-    and clean_stale_manifest_versions only removes directories — so
-    without an explicit sweep these files sat at the base forever.
-    After migration each table base holds only version dirs and the
-    manifest file."""
+    _SUCCESS and Hadoop .part-*.crc siblings at the table base, and
+    clean_stale_manifest_versions only removes directories — a file
+    the migration left at the base would sit there forever. The
+    migration moves them into v1 with the data they describe: after
+    it each table base holds only version dirs and the manifest
+    file."""
     from file_appender_spark.operators.pairstore import (
         build_pair_graph,
         migrate_pairstore_to_manifest,
@@ -710,37 +764,6 @@ def test_refuse_mid_migration_self_heal_tolerates_lost_race(tmp_path):
     finally:
         sfs.store_fs_for = orig
     assert not os.path.exists(marker)
-
-
-def test_sigstore_migration_marker_refuses_and_resumes(spark, tmp_path):
-    """The signature store's migration gets the same marker discipline
-    as the pair/corpus-stats stores: a crash mid-move must not read as
-    a classic store silently missing history; a re-run finishes the
-    move, and a crash between the publish and the marker removal is
-    finished by the re-run's early return."""
-    from file_appender_spark.operators.neardup_ingest import (
-        _MIGRATING_MARKER,
-    )
-
-    store = str(tmp_path / "sig_marker")
-    docs = _corpus(spark, 20, tag="sm")
-    textdup_ingest_batch(spark, docs, store)
-    # simulate a crash mid-move: marker on disk, nothing moved yet
-    open(os.path.join(store, _MIGRATING_MARKER), "w").write("crash")
-    with pytest.raises(ValueError, match="unfinished manifest migration"):
-        textdup_ingest_batch(spark, _corpus(spark, 3, tag="x"), store)
-    with pytest.raises(ValueError, match="unfinished manifest migration"):
-        compact_store(spark, store, id_col="doc_id")
-    live = migrate_store_to_manifest(store)  # resumes and finishes
-    assert _manifest_version(store) == "v1" and live.endswith("v1")
-    assert not os.path.exists(os.path.join(store, _MIGRATING_MARKER))
-    # crash between the publish and the marker removal: re-run cleans
-    open(os.path.join(store, _MIGRATING_MARKER), "w").write("crash")
-    assert migrate_store_to_manifest(store) == live
-    assert not os.path.exists(os.path.join(store, _MIGRATING_MARKER))
-    # history survived: a twin of doc 0 is still suppressed
-    dup = _docs(spark, [(900, docs.collect()[0]["text"])])
-    assert textdup_ingest_batch(spark, dup, store).count() == 0
 
 
 def test_create_manifest_store_refuses_old_debris(tmp_path, object_fs):

@@ -230,18 +230,27 @@ def test_s3_sigstore_params_sidecar(s3_base):
     drive stamp, re-check agreement, and the mismatch refusal on a
     real object-store URI."""
     from file_appender_spark.operators.neardup_ingest import (
-        _check_store_params,
+        _STORE,
         create_manifest_store,
         stamp_store_params,
     )
-    from file_appender_spark.storefs import manifest_version
+    from file_appender_spark.storefs import (
+        manifest_version,
+        open_table_store,
+        store_fs_for,
+    )
 
     store = f"{s3_base}/sig/store"
     data = create_manifest_store(store)
     assert manifest_version(store) == "v1"
     params = {"modality": "minhash", "n_slots": 16, "n_bands": 4}
     stamp_store_params(store, params)
-    _check_store_params(data, params)  # agreement: no raise
+    # the stamp lives in the live version dir, not at the store root
+    assert store_fs_for(store).exists(os.path.join(data, "_LSH_PARAMS.json"))
+    # agreement: no raise, for the ingest open and the read open
+    assert open_table_store(_STORE, store, params, ingest=True) == params
+    assert open_table_store(_STORE, store) == params
     with pytest.raises(ValueError, match="incomparable"):
-        _check_store_params(data, {"modality": "minhash", "n_slots": 32,
-                                   "n_bands": 8})
+        open_table_store(
+            _STORE, store, {"modality": "minhash", "n_slots": 32, "n_bands": 8}
+        )

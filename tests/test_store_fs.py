@@ -169,7 +169,6 @@ def test_textdup_store_lifecycle_both_backends(spark, mkstore):
     suppression, compaction (two-rename swap + params stamp
     survival), crash recovery — through the parametrized backend."""
     from file_appender_spark.operators.neardup_ingest import (
-        _recover_store,
         _store_row_count,
         compact_store,
         textdup_ingest_batch,
@@ -198,14 +197,14 @@ def test_textdup_store_lifecycle_both_backends(spark, mkstore):
     assert n_files >= 1
     assert textdup_ingest_batch(spark, dup, store).count() == 0
 
-    # crash recovery: simulate the window between the two renames
+    # crash recovery: simulate the window between the two renames; the
+    # next epoch's open restores the backup before reading history
     fs = store_fs_for(store)
     old = store.rstrip("/") + ".old"
     fs.rename(store, old)
     assert not fs.exists(store)
-    _recover_store(store)
-    assert fs.exists(store)
     assert textdup_ingest_batch(spark, dup, store).count() == 0
+    assert fs.exists(store) and not fs.exists(old)
 
 
 def test_pairstore_lifecycle_both_backends(spark, mkstore):
