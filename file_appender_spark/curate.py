@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from file_appender_spark.operators.lsh import resolve_cap
+
 
 def quality_alpha_ratio(text_col: str = "text") -> Column:
     """Stage-3 quality metric (q56's alphabetic-character ratio) —
@@ -159,16 +161,8 @@ def curate(
         raise ValueError(
             f"image_mode must be 'off', 'ahash' or 'dhash', got {image_mode!r}"
         )
-    if image_band_bucket_cap is not None and not isinstance(
-        image_band_bucket_cap, int
-    ):
-        # validate before any Spark job runs (the sized operators'
-        # _resolve_cap would catch it too, but only mid-funnel)
-        if image_band_bucket_cap != "auto":
-            raise ValueError(
-                "image_band_bucket_cap must be 'auto', None, or an int, got "
-                f"{image_band_bucket_cap!r}"
-            )
+    # validate before any Spark job runs; the image stage sizes "auto"
+    resolve_cap(image_band_bucket_cap, lambda: None, "image_band_bucket_cap")
     if image_mode != "off" and payload_col not in docs.columns:
         raise ValueError(
             f"image_mode={image_mode!r} needs a {payload_col!r} column; "
@@ -302,7 +296,13 @@ def curate(
                 .join(surv.select(F.col("doc_id").alias("d2")), "d2", "semi")
             )
         else:
-            pairs = _minhash_pairs(d1, threshold=near_threshold, persisted=_persisted)
+            from file_appender_spark.queries.llm import _minhash_lsh
+
+            pairs = (
+                _minhash_lsh(d1, persisted=_persisted)
+                .filter(F.col("jac") >= near_threshold)
+                .select("d1", "d2")
+            )
         drop = pairs.select(F.col("d2").alias("doc_id")).distinct()
         # persist the near-dup SURVIVORS: three downstream consumers
         # (n_near count, the quality-gate count, the shard write) would
@@ -377,64 +377,3 @@ def curate(
     if store_capped:
         out["near_dedup_store_capped"] = True
     return out
-
-
-def _minhash_pairs(
-    docs: DataFrame, threshold: float, persisted: list | None = None
-) -> DataFrame:
-    """q52's banded MinHash-LSH pipeline over an arbitrary documents
-    frame (q52 itself is bound to a sf_dir table): same shingle,
-    hash, 16-slot, 4-band and exact-Jaccard-verify definitions,
-    imported from the one shared source so nothing can drift.
-
-    The shingled frame is persisted (it feeds both signature build
-    and exact verify); it is appended to ``persisted`` so the caller
-    can unpersist once the returned pairs have been materialized —
-    otherwise repeated curate() calls in a long-lived session
-    accumulate cached blocks until executor storage evicts them."""
-    from pyspark import StorageLevel
-
-    from file_appender_spark.operators.neardup_ingest import minhash_signatures
-    from file_appender_spark.queries.llm import _WS, let_expr, shingle_expr
-
-    words = F.split("text", _WS)
-    shingled = (
-        docs.filter(F.size(words) >= 3)
-        .select("doc_id", let_expr(words, shingle_expr).alias("shingles"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    if persisted is not None:
-        persisted.append(shingled)
-    # the REUSE branch of the minhash_signatures dispatch: the
-    # persisted shingled frame also feeds the exact verify below, so
-    # signatures derive from it (the exploded tail) instead of the
-    # fused re-shingling spelling — see the dispatcher's measured
-    # policy (SIGDISPATCH_PROBE_r12)
-    sigs = minhash_signatures(None, "doc_id", shingled=shingled)
-    bands = sigs.select(
-        "doc_id",
-        F.expr(
-            "stack(4, "
-            + ", ".join(f"{bi}, b{bi}" for bi in range(4))
-            + ") AS (band, sig)"
-        ),
-    )
-    x = bands.alias("x")
-    y = bands.alias("y")
-    cand = (
-        x.join(
-            y,
-            (F.col("x.band") == F.col("y.band"))
-            & (F.col("x.sig") == F.col("y.sig"))
-            & (F.col("x.doc_id") < F.col("y.doc_id")),
-        )
-        .select(F.col("x.doc_id").alias("d1"), F.col("y.doc_id").alias("d2"))
-        .distinct()
-    )
-    sh1 = shingled.select(F.col("doc_id").alias("d1"), F.col("shingles").alias("sa"))
-    sh2 = shingled.select(F.col("doc_id").alias("d2"), F.col("shingles").alias("sb"))
-    inter = F.size(F.array_intersect("sa", "sb"))
-    jac = inter.cast("double") / (F.size("sa") + F.size("sb") - inter)
-    return (
-        cand.join(sh1, "d1").join(sh2, "d2").filter(jac >= threshold).select("d1", "d2")
-    )

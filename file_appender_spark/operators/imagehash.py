@@ -30,8 +30,9 @@ per-byte explode to ≤64 rows/doc before the wire, one keyed (id)
 where the 64 cells gather into an array; threshold, bit-packing and
 banding are then higher-order array functions inside one projection
 (no window, no further shuffle — asserted in tests/test_plans.py
-style via the PLANS.md snapshot). The candidate join is bucketed on
-(band_index, band_value) — never all-pairs. Exact-duplicate payloads
+style via the PLANS.md snapshot). The candidate join is
+operators/lsh.py's banded stage, bucketed on (band_index,
+band_value) — never all-pairs. Exact-duplicate payloads
 share every band, so in production run exact dedup (q50's sha256
 groupBy) FIRST, or pass `band_bucket_cap` to drop degenerate buckets
 (bounded recall loss on hot buckets, the same df-cap pattern as
@@ -47,7 +48,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from file_appender_spark.operators.lsh import (
+    band_pairs,
+    band_stack,
+    hot_buckets,
+    resolve_cap,
+)
+
 _DIG = "0123456789ABCDEF"
+# the image band stack's keys: (band index, packed band bits)
+_IMAGE_KEYS = ("bi", "bv")
 
 # Input-frame-independent Column caches (r12, the neardup_ingest
 # _MH_COLS_CACHE discipline): the extraction/banding expression trees
@@ -408,22 +418,6 @@ def ahash_from_cells(cells: DataFrame, id_col: str, grid: int = 64) -> DataFrame
     return _bands_from_wide(_wide_from_cells(cells, id_col, grid), id_col)
 
 
-def _resolve_cap(
-    band_bucket_cap: int | None | str, n_items: int, grid: int
-) -> int | None:
-    """The sized entry points default their hot-bucket guard to the
-    band_bucket_cap_for policy (``"auto"``) so the cap exists without
-    the caller knowing to pass it; ``None`` disables it explicitly."""
-    if band_bucket_cap == "auto":
-        return band_bucket_cap_for(n_items, grid=grid)
-    if isinstance(band_bucket_cap, str):
-        raise ValueError(
-            "band_bucket_cap must be 'auto', None, or an int, got "
-            f"{band_bucket_cap!r}"
-        )
-    return band_bucket_cap
-
-
 def capped_band_buckets(
     wide: DataFrame, id_col: str, band_bucket_cap: int
 ) -> DataFrame:
@@ -434,14 +428,10 @@ def capped_band_buckets(
     caller deserves to see which rather than infer it. Empty = the
     capped run found the same pairs an uncapped run would have.
     One groupBy over the 4-rows-per-item band stack; no pair work."""
-    if band_bucket_cap < 1:
-        raise ValueError(f"band_bucket_cap must be >= 1, got {band_bucket_cap}")
-    return (
-        _bands_from_wide(wide, id_col)
-        .groupBy("bi", "bv")
-        .agg(F.count("*").cast("long").alias("n_in_bucket"))
-        .filter(F.col("n_in_bucket") > band_bucket_cap)
-    )
+    cap = resolve_cap(band_bucket_cap)
+    if cap is None:
+        raise ValueError("band_bucket_cap=None: no cap, no truncation to report")
+    return hot_buckets(_bands_from_wide(wide, id_col), cap, _IMAGE_KEYS)
 
 
 def _capped_buckets_sized(
@@ -453,12 +443,9 @@ def _capped_buckets_sized(
     band_bucket_cap: int | None | str,
 ) -> DataFrame:
     grid = ahash_params_for(n_items)
-    cap = _resolve_cap(band_bucket_cap, n_items, grid)
-    if cap is None:
-        raise ValueError(
-            "band_bucket_cap=None disables the guard — there is no "
-            "truncation to report; pass 'auto' or an int"
-        )
+    cap = resolve_cap(
+        band_bucket_cap, lambda: band_bucket_cap_for(n_items, grid=grid)
+    )
     return capped_band_buckets(wide_fn(df, id_col, payload_col, grid), id_col, cap)
 
 
@@ -506,7 +493,9 @@ def _neardup_sized_with_report(
     curate's funnel report was a second full hash pass). Report is
     None when the guard is disabled (nothing can truncate)."""
     grid = ahash_params_for(n_items)
-    cap = _resolve_cap(band_bucket_cap, n_items, grid)
+    cap = resolve_cap(
+        band_bucket_cap, lambda: band_bucket_cap_for(n_items, grid=grid)
+    )
     wide = wide_fn(df, id_col, payload_col, grid).localCheckpoint(eager=True)
     pairs = _neardup_from_wide(wide, id_col, max_hamming, cap)
     report = (
@@ -555,14 +544,16 @@ def ahash_neardup_sized(
     (grid = ahash_params_for(n_items)) — the production entry point
     for corpora past ~2k items. Note max_hamming is measured on the
     policy-sized hash (grid bits, not 64). The hot-bucket guard
-    defaults to the sized policy (see _resolve_cap)."""
+    defaults to the sized policy (band_bucket_cap_for)."""
     grid = ahash_params_for(n_items)
     return ahash_neardup(
         df,
         id_col,
         payload_col,
         max_hamming=max_hamming,
-        band_bucket_cap=_resolve_cap(band_bucket_cap, n_items, grid),
+        band_bucket_cap=resolve_cap(
+            band_bucket_cap, lambda: band_bucket_cap_for(n_items, grid=grid)
+        ),
         grid=grid,
     )
 
@@ -571,9 +562,7 @@ def _bands_from_wide(wide: DataFrame, id_col: str) -> DataFrame:
     """wide -> (id, n_bytes, bi, bv, pop) band rows, no extra shuffle
     (a 4-way stack projection; pop is bit_count of the band)."""
     stacked = wide.select(
-        id_col,
-        "n_bytes",
-        F.expr("stack(4, 0, b0, 1, b1, 2, b2, 3, b3) AS (bi, bv)"),
+        id_col, "n_bytes", band_stack(["b0", "b1", "b2", "b3"], _IMAGE_KEYS)
     )
     return stacked.select(
         id_col,
@@ -617,8 +606,9 @@ def ahash_neardup(
     # byte-explode feature pipeline per reference tripled wall and
     # thrashed the heap at the 500k-doc 100x probe (x36.9 before,
     # see SCALING.md). 7 ints per doc, bounded.
+    cap = resolve_cap(band_bucket_cap)
     wide = ahash_wide(df, id_col, payload_col, grid).localCheckpoint(eager=True)
-    return _neardup_from_wide(wide, id_col, max_hamming, band_bucket_cap)
+    return _neardup_from_wide(wide, id_col, max_hamming, cap)
 
 
 def _neardup_from_wide(
@@ -631,29 +621,8 @@ def _neardup_from_wide(
     materialized wide hash frame (id, ..., b0..b3) — the shared core
     of ahash_neardup and dhash_neardup (the two hashes differ only in
     how the wide frame's bits are derived)."""
-    bands = _bands_from_wide(wide, id_col).select(
-        F.col(id_col).alias("bid"), "bi", "bv"
-    )
-    if band_bucket_cap is not None:
-        sized = bands.groupBy("bi", "bv").agg(F.count("*").alias("n_in_bucket"))
-        bands = bands.join(
-            F.broadcast(sized.filter(F.col("n_in_bucket") > band_bucket_cap)),
-            ["bi", "bv"],
-            "left_anti",
-        )
-    b = bands.select(
-        F.col("bid").alias("bid2"), F.col("bi").alias("bi2"), F.col("bv").alias("bv2")
-    )
-    cand = (
-        bands.join(
-            b,
-            (F.col("bi") == F.col("bi2"))
-            & (F.col("bv") == F.col("bv2"))
-            & (F.col("bid") < F.col("bid2")),
-        )
-        .select(F.col("bid").alias("d1"), F.col("bid2").alias("d2"))
-        .distinct()
-    )
+    bands = _bands_from_wide(wide, id_col).select(id_col, *_IMAGE_KEYS)
+    cand = band_pairs(bands, id_col, band_bucket_cap, _IMAGE_KEYS)
     w1 = wide.select(
         F.col(id_col).alias("d1"),
         *[F.col(f"b{k}").alias(f"x{k}") for k in range(4)],
@@ -786,8 +755,9 @@ def dhash_neardup(
     dhash_wide supplying the bits. Useful where corruptions are
     brightness-like (dHash is shift-invariant) rather than
     content-structural."""
+    cap = resolve_cap(band_bucket_cap)
     wide = dhash_wide(df, id_col, payload_col, grid).localCheckpoint(eager=True)
-    return _neardup_from_wide(wide, id_col, max_hamming, band_bucket_cap)
+    return _neardup_from_wide(wide, id_col, max_hamming, cap)
 
 
 def dhash_neardup_sized(
@@ -802,13 +772,15 @@ def dhash_neardup_sized(
     ahash_neardup_sized (ahash_params_for applies unchanged: band
     collision volume depends only on band width vs log2 n, not on
     which perceptual hash fills the bits). Hot-bucket guard defaults
-    to the sized policy (see _resolve_cap)."""
+    to the sized policy (band_bucket_cap_for)."""
     grid = ahash_params_for(n_items)
     return dhash_neardup(
         df,
         id_col,
         payload_col,
         max_hamming=max_hamming,
-        band_bucket_cap=_resolve_cap(band_bucket_cap, n_items, grid),
+        band_bucket_cap=resolve_cap(
+            band_bucket_cap, lambda: band_bucket_cap_for(n_items, grid=grid)
+        ),
         grid=grid,
     )

@@ -18,8 +18,9 @@ A persistent SIGNATURE STORE (parquet) holds one signature row per
 admitted item. Each incoming batch:
 
 1. computes its own band signatures (map-side only),
-2. finds candidates against the STORE by band-signature equi-join —
-   never a scan of historical payloads, never a cross join,
+2. finds candidates against the STORE by band-signature equi-join
+   (operators/lsh.py's banded candidate stage) — never a scan of
+   historical payloads, never a cross join,
 3. finds candidates WITHIN the batch the same way (earlier-id wins),
 4. verifies candidates (exact cosine / estimated Jaccard >= threshold),
 5. admits survivors and appends ONLY their signature rows to the
@@ -46,6 +47,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from file_appender_spark.operators.arraykernels import dot
+from file_appender_spark.operators.lsh import (
+    band_pairs,
+    band_stack,
+    hot_buckets,
+    resolve_cap,
+)
 from file_appender_spark.operators.materialize import materialize_frame
 from file_appender_spark.operators.similarity import (
     _srp_coefs,
@@ -342,6 +349,14 @@ def _store_is_v2(df: DataFrame) -> bool:
     return "bh0" in df.columns and "fh" in df.columns
 
 
+# the hashed band stack's keys: (band index, 64-bit band hash)
+_HASH_KEYS = ("band", "bh")
+
+
+def _bh_cols(n_bands: int) -> list[str]:
+    return [f"bh{bi}" for bi in range(n_bands)]
+
+
 def _bands_hash_long(
     df: DataFrame, n_bands: int, id_col: str, fh_cols: list[str]
 ) -> DataFrame:
@@ -351,22 +366,12 @@ def _bands_hash_long(
     (the compatibility path compaction retires)."""
     if _store_is_v2(df):
         return df.select(
-            F.col(id_col),
-            "fh",
-            F.expr(
-                f"stack({n_bands}, "
-                + ", ".join(f"{bi}, bh{bi}" for bi in range(n_bands))
-                + ") AS (band, bh)"
-            ),
+            F.col(id_col), "fh", band_stack(_bh_cols(n_bands), _HASH_KEYS)
         ).select(id_col, "band", "bh", "fh")
     stacked = df.select(
         F.col(id_col),
         F.xxhash64(*[F.col(c) for c in fh_cols]).alias("fh"),
-        F.expr(
-            f"stack({n_bands}, "
-            + ", ".join(f"{bi}, b{bi}" for bi in range(n_bands))
-            + ") AS (band, sig)"
-        ),
+        band_stack([f"b{bi}" for bi in range(n_bands)]),
     )
     return stacked.select(
         id_col, "band", F.xxhash64("band", "sig").alias("bh"), "fh"
@@ -463,13 +468,7 @@ def build_band_index(
     if n_buckets == "auto":
         n_buckets = _auto_index_buckets(banded_rows)
     rows = v2.select(
-        F.col(id_col),
-        "fh",
-        F.expr(
-            f"stack({spec['n_bands']}, "
-            + ", ".join(f"{bi}, bh{bi}" for bi in range(spec["n_bands"]))
-            + ") AS (band, bh)"
-        ),
+        F.col(id_col), "fh", band_stack(_bh_cols(spec["n_bands"]), _HASH_KEYS)
     ).select(
         F.pmod(F.col("bh"), F.lit(int(n_buckets))).alias("bucket"),
         "band",
@@ -487,9 +486,7 @@ def build_band_index(
     # fallback decodes the signature strings (b*) plus the fh source
     # columns, so those are what get costed.
     if _store_is_v2(hist):
-        narrow_cols = [id_col, "fh"] + [
-            f"bh{bi}" for bi in range(spec["n_bands"])
-        ]
+        narrow_cols = [id_col, "fh", *_bh_cols(spec["n_bands"])]
     else:
         narrow_cols = sorted(
             {id_col, *spec["fh_cols"]}
@@ -683,22 +680,37 @@ def _sliced_band_candidates(
     bounded), then derive both the over-cap histogram and the post-cap
     candidates from the materialized frame, so the store is scanned
     exactly once per epoch however many consumers follow. Returns
-    (slice, candidates); candidate semantics match _band_pairs
-    (within_batch=False): self-id matches excluded, over-cap buckets
-    dropped from BOTH sides. ``materialize=False`` keeps the slice
-    lazy (the small-store lean shape: consumers re-derive it inside
-    one action instead of paying a checkpoint job)."""
+    (slice, candidates): (new_id, old_id) pairs, self-id matches
+    excluded — which is what makes retries at-least-once instead of
+    self-suppressing. ``materialize=False`` keeps the slice lazy (the
+    small-store lean shape: consumers re-derive it inside one action
+    instead of paying a checkpoint job).
+
+    The slice changes no candidate: a semi-join keeps whole buckets,
+    so the over-cap histogram counts every batch-touched bucket
+    exactly, and an untouched bucket can produce neither a candidate
+    nor a cap decision that matters (pinned in tests/test_operators.py
+    ::test_sliced_band_candidates_slice_equivalence).
+
+    ``cap`` is the hot-bucket guard for LONG-LIVED stores: a
+    degenerate band value (flat images, all-zero sign bands)
+    accumulates members across every ingested batch, so without it
+    the per-batch history join grows linearly in store size on that
+    bucket alone. Buckets whose INCUMBENT population exceeds the cap
+    are dropped from BOTH sides; their new members are then ADMITTED
+    rather than suppressed (the conservative direction for an
+    ingest: at-least-once admission, never silent loss of a
+    legitimate document). Identical-FULL-signature duplicates never
+    depend on this join (the identical-signature tier of
+    _ingest_epoch), so a binding cap costs only the partial-match
+    candidates of that bucket."""
     touched = F.broadcast(batch_bands.select("band", "bh").distinct())
     sl = hist_bands.join(touched, ["band", "bh"], "semi")
     if materialize:
         sl = materialize_frame(sl, eager=True, reliable=reliable)
     x, s2 = batch_bands, sl
     if cap is not None:
-        hot = F.broadcast(
-            sl.groupBy("band", "bh")
-            .agg(F.count("*").alias("n_in_bucket"))
-            .filter(F.col("n_in_bucket") > cap)
-        )
+        hot = F.broadcast(hot_buckets(sl, cap, _HASH_KEYS))
         s2 = sl.join(hot, ["band", "bh"], "left_anti")
         x = batch_bands.join(hot, ["band", "bh"], "left_anti")
     cand = (
@@ -844,15 +856,7 @@ def _lean_dup_terms(
     sets are pinned equal to the materialized big-store shape in
     tests/test_store_v2.py::test_big_store_materialized_path_equals_
     lean (all three modalities)."""
-    n_bands = spec["n_bands"]
-    stack = _LEAN_STACK_CACHE.get(n_bands)
-    if stack is None:
-        stack = F.expr(
-            f"stack({n_bands}, "
-            + ", ".join(f"{bi}, bh{bi}" for bi in range(n_bands))
-            + ") AS (band, bh)"
-        )
-        _LEAN_STACK_CACHE[n_bands] = stack
+    stack = band_stack(_bh_cols(spec["n_bands"]), _HASH_KEYS)
     xb = sigs.select(
         F.col(id_col).alias("new_id"),
         stack,
@@ -865,11 +869,7 @@ def _lean_dup_terms(
     )
     xw, yw = xb, yb
     if cap is not None:
-        hot = F.broadcast(
-            yb.groupBy("band", "bh")
-            .agg(F.count("*").alias("n_in_bucket"))
-            .filter(F.col("n_in_bucket") > cap)
-        )
+        hot = F.broadcast(hot_buckets(yb, cap, _HASH_KEYS))
         xw = xb.join(hot, ["band", "bh"], "left_anti")
         yw = yb.join(hot, ["band", "bh"], "left_anti")
     wb_pairs = (
@@ -900,11 +900,7 @@ def _lean_dup_terms(
     xh = xb.select("new_id", "band", "bh")
     s2 = sl
     if cap is not None:
-        hot_h = F.broadcast(
-            sl.groupBy("band", "bh")
-            .agg(F.count("*").alias("n_in_bucket"))
-            .filter(F.col("n_in_bucket") > cap)
-        )
+        hot_h = F.broadcast(hot_buckets(sl, cap, _HASH_KEYS))
         s2 = sl.join(hot_h, ["band", "bh"], "left_anti")
         xh = xh.join(hot_h, ["band", "bh"], "left_anti")
     cand = (
@@ -1009,8 +1005,7 @@ def _static_epoch_planning(spark: SparkSession):
         conf.set("spark.sql.shuffle.partitions", old_sp)
         conf.set("spark.sql.constraintPropagation.enabled", old_cp)
 
-# input-frame-independent Column caches (see _MH_COLS_CACHE's note)
-_LEAN_STACK_CACHE: dict[int, object] = {}
+# input-frame-independent Column cache (see _MH_COLS_CACHE's note)
 _VERIFY_COLS_CACHE: dict[str, object] = {}
 
 
@@ -1028,85 +1023,6 @@ def _compact_scan(ckpt: DataFrame) -> DataFrame:
     materialization — wrapping a lazy persist would run the upstream
     computation itself at 4-way parallelism."""
     return ckpt.coalesce(_LEAN_SCAN_PARTITIONS)
-
-
-def _bands_long(sigs: DataFrame, n_bands: int, id_col: str) -> DataFrame:
-    return sigs.select(
-        F.col(id_col),
-        F.expr(
-            f"stack({n_bands}, "
-            + ", ".join(f"{bi}, b{bi}" for bi in range(n_bands))
-            + ") AS (band, sig)"
-        ),
-    )
-
-
-def _band_pairs(
-    new_bands: DataFrame,
-    old_bands: DataFrame,
-    id_col: str,
-    within_batch: bool,
-    band_bucket_cap: int | None = None,
-) -> DataFrame:
-    """(new_id, old_id) candidate pairs from band-signature equality —
-    the shared core of both ingest variants. ``within_batch=True``
-    keeps only earlier-id incumbents (the min-id-representative rule);
-    ``False`` (vs history) excludes only self-id matches, which is
-    what makes retries at-least-once instead of self-suppressing.
-
-    ``band_bucket_cap`` is the hot-bucket guard for LONG-LIVED stores
-    (imagehash's band_bucket_cap pattern applied to the history join):
-    a degenerate band value — flat images, all-zero sign bands —
-    accumulates members across every ingested batch, so the per-batch
-    history join would grow linearly in store size on that bucket
-    alone. Buckets whose INCUMBENT population exceeds the cap are
-    dropped from candidate generation; their new members are then
-    ADMITTED rather than suppressed (the conservative direction for
-    an ingest: at-least-once admission, never silent loss of a
-    legitimate document). Identical-FULL-signature duplicates never
-    depend on this join — the entry points suppress them via
-    _identical_sig_dups first, so a binding cap costs only the
-    partial-match (distinct-signature) candidates of that bucket.
-
-    Per-epoch cost is O(batch + touched buckets), NOT O(store): on
-    the history path (``within_batch=False``) the incumbent band
-    stack is first SLICED by a broadcast semi-join on the batch's
-    distinct (band, sig) set — micro-batch cardinality — before both
-    the over-cap histogram and the candidate join. A semi keeps
-    whole buckets, so the histogram counts exactly what the unsliced
-    spelling counted for every bucket the batch touches, and a
-    bucket the batch does not touch can produce neither a candidate
-    nor a cap decision that matters (its new-member side is empty).
-    Without the slice, both the histogram and the equi-join
-    shuffled the FULL store's band stack every micro-batch (the r8
-    verdict's top finding; equivalence pinned in
-    tests/test_operators.py::test_band_pairs_slice_equivalence)."""
-    if not within_batch:
-        touched = F.broadcast(new_bands.select("band", "sig").distinct())
-        old_bands = old_bands.join(touched, ["band", "sig"], "semi")
-    x = new_bands.alias("x")
-    if band_bucket_cap is not None:
-        sized = old_bands.groupBy("band", "sig").agg(
-            F.count("*").alias("n_in_bucket")
-        )
-        hot = F.broadcast(sized.filter(F.col("n_in_bucket") > band_bucket_cap))
-        old_bands = old_bands.join(hot, ["band", "sig"], "left_anti")
-        x = new_bands.join(hot, ["band", "sig"], "left_anti").alias("x")
-    y = old_bands.select(F.col(id_col).alias("_oid"), "band", "sig").alias("y")
-    if within_batch:
-        idcmp = F.col(f"x.{id_col}") > F.col("y._oid")
-    else:
-        idcmp = F.col(f"x.{id_col}") != F.col("y._oid")
-    return (
-        x.join(
-            y,
-            (F.col("x.band") == F.col("y.band"))
-            & (F.col("x.sig") == F.col("y.sig"))
-            & idcmp,
-        )
-        .select(F.col(f"x.{id_col}").alias("new_id"), F.col("y._oid").alias("old_id"))
-        .distinct()
-    )
 
 
 def _identical_sig_dups(
@@ -1158,6 +1074,9 @@ def _ingest_epoch(
     end to end (_static_epoch_planning); the full footer count is
     walked only when the ``"auto"`` cap policy asks for ``n_items``."""
     id_col, n_bands = mod["id_col"], mod["n_bands"]
+    # validated before any Spark job; the "auto" policy may count the
+    # kept batch signatures, so it is sized below
+    cap = resolve_cap(band_bucket_cap, lambda: "auto")
     open_table_store(_STORE, store_dir, mod["params"], ingest=True)
     store_dir = table_dir(store_dir, "")
     store_exists = any(
@@ -1175,13 +1094,11 @@ def _ingest_epoch(
             _with_index_cols(mod["sig_frame"](batch), n_bands, mod["fh_cols"]),
             reliable,
         )
-        if band_bucket_cap == "auto":
+        if cap == "auto":
             # footer counts include retry-duplicated rows until
             # compaction — fine, the cap needs order-of-magnitude
             # accuracy only
             cap = mod["cap_for"](lambda: sigs.count() + _store_row_count(store_dir))
-        else:
-            cap = _resolve_ingest_cap(band_bucket_cap, 2, n_bands, None)
         hist = spark.read.parquet(store_dir) if store_exists else None
 
         def payload(src, renames, id_alias):
@@ -1217,10 +1134,10 @@ def _ingest_epoch(
             # over-cap histogram, identical-signature matches and the
             # own-stored override — _hist_dup_terms
             batch_bands = _bands_hash_long(sigs, n_bands, id_col, mod["fh_cols"])
-            wb = batch_bands.select(id_col, "band", F.col("bh").alias("sig"))
-            cands = _band_pairs(
-                wb, wb, id_col, within_batch=True, band_bucket_cap=cap
-            ).join(payload(sigs, mod["payload"], "old_id"), "old_id")
+            cands = band_pairs(
+                batch_bands.select(id_col, *_HASH_KEYS), id_col, cap, _HASH_KEYS
+            ).select(F.col("d2").alias("new_id"), F.col("d1").alias("old_id"))
+            cands = cands.join(payload(sigs, mod["payload"], "old_id"), "old_id")
             cand_pay, ident_pay = _hist_dup_terms(
                 spark, store_dir, hist, sigs, batch_bands, id_col, mod, cap,
                 reliable=reliable,
@@ -1317,16 +1234,16 @@ def neardup_ingest_batch(
 
     ``band_bucket_cap`` (default ``"auto"`` = the sized
     ingest_band_bucket_cap_for policy over store footers + batch)
-    forwards _band_pairs' hot-bucket guard — degenerate vectors (e.g.
-    all-zeros) share every sign band and accumulate in one bucket
-    across the store's lifetime; capped buckets drop out of candidate
-    generation, admitting their new members (see _band_pairs for the
-    trade). EXACT duplicates never depend on that join: identical
-    nonzero vectors are suppressed by a vector-equality groupBy
-    (_identical_sig_dups with the vector as the signature — cosine
-    is exactly 1.0), so an identical-embedding family dedups to one
-    stored representative even under a binding cap. ``None``
-    disables the cap explicitly (the shortcut stays).
+    is the hot-bucket guard — degenerate vectors (e.g. all-zeros)
+    share every sign band and accumulate in one bucket across the
+    store's lifetime; capped buckets drop out of candidate
+    generation, admitting their new members (see
+    _sliced_band_candidates for the trade). EXACT duplicates never
+    depend on that join: identical nonzero vectors are suppressed by
+    a vector-equality groupBy (_identical_sig_dups with the vector as
+    the signature — cosine is exactly 1.0), so an identical-embedding
+    family dedups to one stored representative even under a binding
+    cap. ``None`` disables the cap explicitly (the shortcut stays).
     ``reliable=True`` as in textdup_ingest_batch (DFS checkpoints
     for scheduled pipelines needing within-job recovery)."""
     # try_divide: a zero-norm vector's cosine is UNDEFINED — NULL
@@ -1406,26 +1323,6 @@ def ingest_band_bucket_cap_for(
     return cap
 
 
-def _resolve_ingest_cap(
-    band_bucket_cap: int | None | str,
-    n_items: int,
-    n_bands: int,
-    bucket_space_bits: int | None,
-) -> int | None:
-    """'auto' -> the sized policy; None disables explicitly; ints
-    forward. Mirrors imagehash._resolve_cap."""
-    if band_bucket_cap == "auto":
-        return ingest_band_bucket_cap_for(
-            max(n_items, 2), n_bands=n_bands, bucket_space_bits=bucket_space_bits
-        )
-    if isinstance(band_bucket_cap, str):
-        raise ValueError(
-            "band_bucket_cap must be 'auto', None, or an int, got "
-            f"{band_bucket_cap!r}"
-        )
-    return band_bucket_cap
-
-
 def store_hot_buckets(
     spark: SparkSession,
     store_dir: str,
@@ -1444,21 +1341,13 @@ def store_hot_buckets(
     on the pair store's partitioned sigs table (pass its ``sigs``
     dir; the partition column is ignored). One groupBy over the
     4-rows-per-item band stack; no pair work, no payloads."""
-    if band_bucket_cap < 1:
-        raise ValueError(f"band_bucket_cap must be >= 1, got {band_bucket_cap}")
+    cap = resolve_cap(band_bucket_cap)
+    if cap is None:
+        raise ValueError("band_bucket_cap=None: no cap, no truncation to report")
     open_table_store(_STORE, store_dir)
     hist = spark.read.parquet(table_dir(store_dir, ""))
-    stacked = hist.select(
-        F.expr(
-            f"stack({n_bands}, "
-            + ", ".join(f"{bi}, b{bi}" for bi in range(n_bands))
-            + ") AS (band, sig)"
-        )
-    )
-    return (
-        stacked.groupBy("band", "sig")
-        .agg(F.count("*").cast("long").alias("n_in_bucket"))
-        .filter(F.col("n_in_bucket") > band_bucket_cap)
+    return hot_buckets(
+        hist.select(band_stack([f"b{bi}" for bi in range(n_bands)])), cap
     )
 
 
@@ -1569,9 +1458,9 @@ def _minhash_sigs_from_shingles(shingled: DataFrame, id_col: str) -> DataFrame:
     aggregates under a groupBy(doc) exchange — the literal shape of
     the q52 oracle SQL. This is the reuse-path half of the
     minhash_signatures dispatch: when the caller persists the
-    shingled frame for a downstream exact verify (curate's funnel),
-    deriving signatures FROM it avoids re-shingling and re-hashing
-    every document."""
+    shingled frame for a downstream exact verify (the q52 pipeline of
+    q52, q136 and curate's funnel), deriving signatures FROM it avoids
+    re-shingling and re-hashing every document."""
     from file_appender_spark.queries.llm import _MH_P, _MH_PARAMS, _tok_hash32
 
     hashed = shingled.select(
@@ -1632,7 +1521,8 @@ def minhash_signatures(
     full-column evaluation), so batch size or document length never
     flips the choice. What flips it is REUSE: when the caller already
     persists the shingled frame for a downstream exact-Jaccard verify
-    (curate's funnel), deriving signatures from that frame avoids
+    (queries/llm.py's q52 pipeline, which q52, q136 and curate's
+    funnel share), deriving signatures from that frame avoids
     re-shingling + re-hashing every document — r11 measured the fused
     respelling 1.3x SLOWER inside curate for exactly this reason.
 
@@ -1772,8 +1662,8 @@ def textdup_ingest_batch(
     unconditionally and not stored. Retry semantics are at-least-once
     exactly as the embedding ingest: own-id matches are excluded.
     ``band_bucket_cap`` (default ``"auto"`` = the sized
-    ingest_band_bucket_cap_for policy) forwards _band_pairs'
-    hot-bucket guard for DISTINCT-signature band collisions.
+    ingest_band_bucket_cap_for policy) is the hot-bucket guard for
+    DISTINCT-signature band collisions.
     Identical-FULL-signature duplicates (estimated Jaccard exactly
     1.0) never reach that join: the signature-equality shortcut
     (_identical_sig_dups) suppresses them with a groupBy, so a
@@ -1852,8 +1742,8 @@ def imagedup_ingest_batch(
     binding cap and stores ONE representative — the all-zero bucket
     never accumulates. Over-cap buckets of DISTINCT hashes drop out
     of candidate generation and their new members are admitted
-    (at-least-once, see _band_pairs). ``None`` disables the cap
-    explicitly (the shortcut stays). ``reliable=True`` as in
+    (at-least-once, see _sliced_band_candidates). ``None`` disables
+    the cap explicitly (the shortcut stays). ``reliable=True`` as in
     textdup_ingest_batch (DFS checkpoints for scheduled pipelines)."""
     # Both modes take the vectorized Arrow signature stage (r12, guide
     # §4.2): one mapInArrow pass computes the strided cells +

@@ -81,15 +81,16 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from file_appender_spark.operators.lsh import band_pairs, hot_buckets, resolve_cap
 from file_appender_spark.operators.neardup_ingest import (
     _EAGER_SLICE_MIN_STORE_ROWS,
-    _band_pairs,
+    _HASH_KEYS,
     _bands_hash_long,
-    _resolve_ingest_cap,
     _sliced_band_candidates,
     _spread,
     _store_is_v2,
     _with_index_cols,
+    ingest_band_bucket_cap_for,
 )
 from file_appender_spark.storefs import (
     TableStore,
@@ -107,7 +108,7 @@ from file_appender_spark.storefs import (
 _CLUSTERS_STATE = "_CLUSTERS_STATE.json"
 _CAPPED_MARKER = "_CAPPED_EPOCHS"
 
-# the store's one band count, used at EVERY _bands_long/_resolve call
+# the store's one band count, used at EVERY band stack / cap call
 # site (r9 ADVICE: a hard-coded 4 drifting from _params would make the
 # cap marker silently undercount buckets and break pairstore_is_exact)
 _N_BANDS = 4
@@ -127,6 +128,12 @@ def _with_sig_hashes(sigs: DataFrame) -> DataFrame:
     params; legacy v1 epochs are derived at read and upgraded by
     compact_pairstore."""
     return _with_index_cols(sigs, _N_BANDS, _FH_COLS)
+
+
+def _auto_cap() -> int:
+    # MinHash bands have an unbounded bucket space, so the sized cap
+    # is the count-free candidate budget: no batch count, no footer walk
+    return ingest_band_bucket_cap_for(2, n_bands=_N_BANDS)
 
 
 def _params(threshold: float) -> dict:
@@ -351,23 +358,20 @@ def build_pair_graph(
 
     if threshold is None:
         threshold = _q52_threshold()
+    cap = resolve_cap(band_bucket_cap, _auto_cap)
 
     def write() -> None:
         sigs = _with_sig_hashes(pair_signatures(docs, id_col, text_col)).persist(
             StorageLevel.MEMORY_AND_DISK
         )
-        # the MinHash band space is unbounded (bucket_space_bits=None), so
-        # the sized cap is count-free — no sigs.count() forced here, and
-        # the default (None) pays nothing at all
-        cap = _resolve_ingest_cap(band_bucket_cap, 2, _N_BANDS, None)
         bands = _bands_hash_long(sigs, _N_BANDS, id_col, _FH_COLS).select(
-            id_col, "band", F.col("bh").alias("sig")
+            id_col, *_HASH_KEYS
         )
-        # within_batch=True emits every unordered candidate pair exactly
-        # once (larger id on the new side) — the full self-join, over the
-        # precomputed long band hashes (same buckets, cheaper equi-join)
-        cand = _band_pairs(
-            bands, bands, id_col, within_batch=True, band_bucket_cap=cap
+        # every unordered candidate pair exactly once — the full
+        # self-join, over the precomputed long band hashes (same
+        # buckets, cheaper equi-join)
+        cand = band_pairs(bands, id_col, cap, _HASH_KEYS).select(
+            F.col("d2").alias("new_id"), F.col("d1").alias("old_id")
         )
         pairs = _verified_pairs(
             cand, _new_side(sigs, id_col), _old_side(sigs, id_col), threshold
@@ -376,9 +380,7 @@ def build_pair_graph(
             # a capped BUILD can drop candidates too — the shared binding
             # test, history side empty (the build IS the corpus), marker
             # before the epoch writes like the ingest path
-            _mark_if_cap_bound(
-                store_dir, None, bands.withColumnRenamed("sig", "bh"), cap
-            )
+            _mark_if_cap_bound(store_dir, None, bands, cap)
         write_table_epoch(sigs, store_dir, "sigs", "base")
         write_table_epoch(pairs, store_dir, "pairs", "base")
         sigs.unpersist()
@@ -424,6 +426,7 @@ def pairstore_ingest_batch(
             "batch_id 'base' is reserved for build_pair_graph — an ingest "
             "epoch writing there would clobber the corpus baseline"
         )
+    cap = resolve_cap(band_bucket_cap, _auto_cap)
     threshold = float(open_table_store(_STORE, store_dir, ingest=True)["threshold"])
     sigs = _with_sig_hashes(
         pair_signatures(batch, id_col, text_col)
@@ -439,11 +442,6 @@ def pairstore_ingest_batch(
         .filter(F.col("batch").cast("string") != str(batch_id))
         .drop("batch")
     )
-    # MinHash bands pass bucket_space_bits=None, so the sized cap is
-    # the count-free candidate budget (65) — no batch count, no
-    # per-ingest footer walk (review finding r8: the counts were dead
-    # arguments on this path)
-    cap = _resolve_ingest_cap(band_bucket_cap, 2, _N_BANDS, None)
     # ONE narrow store scan per epoch (r9 verdict task 1): the hashed
     # band stack — precomputed long columns on a v2 sigs table, derived
     # from the strings on a legacy one — is semi-sliced by the batch's
@@ -458,10 +456,9 @@ def pairstore_ingest_batch(
         cap,
         materialize=big,
     )
-    wb = batch_bands.select(id_col, "band", F.col("bh").alias("sig"))
-    new_vs_new = _band_pairs(
-        wb, wb, id_col, within_batch=True, band_bucket_cap=cap
-    )
+    new_vs_new = band_pairs(
+        batch_bands.select(id_col, *_HASH_KEYS), id_col, cap, _HASH_KEYS
+    ).select(F.col("d2").alias("new_id"), F.col("d1").alias("old_id"))
     ns = _new_side(sigs, id_col)
     if cap is not None and big:
         # r9 ADVICE: gate the candidate broadcast on the EXACT row
@@ -528,13 +525,7 @@ def _mark_if_cap_bound(
         sides = sides.unionByName(
             hist_slice.select("band", "bh", F.lit("hist").alias("_side"))
         )
-    over = (
-        sides.groupBy("_side", "band", "bh")
-        .count()
-        .filter(F.col("count") > cap)
-        .limit(1)
-        .count()
-    )
+    over = hot_buckets(sides, cap, ("_side", *_HASH_KEYS)).limit(1).count()
     if over:
         fs.write_text(
             marker,

@@ -20,8 +20,9 @@ Three tiers:
    < 1 by design, so never oracle-checked).
 4. ``srp_neardup`` — banded sign-random-projection LSH for embedding
    near-duplicate PAIRS: candidates come from band-signature
-   collisions (an equi-join, the q52 MinHash-LSH structure), never an
-   all-pairs cross join; exact cosine verifies only the collisions.
+   collisions (operators/lsh.py's band equi-join, the q52 MinHash-LSH
+   structure), never an all-pairs cross join; exact cosine verifies
+   only the collisions.
    The scale path for q62's declared exact all-pairs semantics.
 5. ``ann_sign_ivf`` — the parameterized form of q74's deterministic
    IVF: the cell count GROWS with the corpus
@@ -50,6 +51,7 @@ from file_appender_spark.operators.arraykernels import (
     sql_double,
     zero_divisor,
 )
+from file_appender_spark.operators.lsh import band_pairs, band_stack
 
 
 def brute_force_topk(
@@ -398,7 +400,6 @@ def srp_neardup(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     round_dp: int = 6,
-    persist: bool = True,
 ) -> DataFrame:
     """Embedding near-duplicate pairs via banded sign-random-projection
     LSH — the 100 TB path for q62's exact all-pairs contract
@@ -406,9 +407,10 @@ def srp_neardup(
 
     Structure is q52's MinHash-LSH, transplanted to the cosine metric:
     per-vector band signatures -> candidate pairs from band-signature
-    equality (a shuffled equi-join on (band, sig), NEVER a cross
-    join) -> exact cosine verification >= threshold on candidates
-    only. Output columns match q62: (id1, id2, cos_sim).
+    equality (operators/lsh.py's banded stage: a shuffled equi-join on
+    (band, sig), NEVER a cross join) -> exact cosine verification >=
+    threshold on candidates only. Output columns match q62: (id1,
+    id2, cos_sim).
 
     Recall is the LSH contract: a pair at cosine c collides with
     probability 1 - (1 - (1 - acos(c)/pi)^r)^b for r = n_bits/n_bands
@@ -421,39 +423,18 @@ def srp_neardup(
 
     # vectors + norms + band signatures in one pass — the frame
     # feeds the candidate join AND both verify sides, so it is
-    # persisted by default (the q52 shared-branch pattern). The cache
-    # lives until evicted or the session ends; repeat callers in a
-    # long-lived service should pass persist=False (recompute the
-    # map-side signatures 3x instead of holding a cache per call) or
-    # unpersist via their own lifecycle. The signature stage is the
-    # vectorized Arrow pass (srp_sigs_arrow, bit-identical to the SQL
-    # folds; SRP_BREAKDOWN_r12: those folds were 84% of end-to-end
-    # wall).
+    # persisted (the q52 shared-branch pattern) instead of running the
+    # map-side signatures 3x. The cache lives until evicted or the
+    # session ends. The signature stage is the vectorized Arrow pass
+    # (srp_sigs_arrow, bit-identical to the SQL folds;
+    # SRP_BREAKDOWN_r12: those folds were 84% of end-to-end wall).
     coefs = _srp_coefs(corpus.sparkSession, n_bits, _vec_dim(corpus, F.col(vec_col)))
-    sigs = srp_sigs_arrow(corpus, id_col, vec_col, n_bits, n_bands, coefs)
-    if persist:
-        sigs = sigs.persist(StorageLevel.MEMORY_AND_DISK)
-    bands = sigs.select(
-        F.col(id_col),
-        F.expr(
-            f"stack({n_bands}, "
-            + ", ".join(f"{bi}, b{bi}" for bi in range(n_bands))
-            + ") AS (band, sig)"
-        ),
+    sigs = srp_sigs_arrow(corpus, id_col, vec_col, n_bits, n_bands, coefs).persist(
+        StorageLevel.MEMORY_AND_DISK
     )
-    x = bands.alias("x")
-    y = bands.alias("y")
-    cand = (
-        x.join(
-            y,
-            (F.col("x.band") == F.col("y.band"))
-            & (F.col("x.sig") == F.col("y.sig"))
-            & (F.col(f"x.{id_col}") < F.col(f"y.{id_col}")),
-        )
-        .select(
-            F.col(f"x.{id_col}").alias("id1"), F.col(f"y.{id_col}").alias("id2")
-        )
-        .distinct()
+    bands = sigs.select(id_col, band_stack([f"b{bi}" for bi in range(n_bands)]))
+    cand = band_pairs(bands, id_col).select(
+        F.col("d1").alias("id1"), F.col("d2").alias("id2")
     )
     s1 = sigs.select(
         F.col(id_col).alias("id1"), F.col("v").alias("v1"), F.col("nrm").alias("n1")

@@ -62,6 +62,8 @@ from typing import Iterator
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window as W
 
+from file_appender_spark.operators.lsh import band_pairs
+
 # fixed 64-bit mixing constants (splitmix64, public domain reference
 # constants) — shared by the Spark-side and test-side ICWS generators
 _SM_GAMMA = 0x9E3779B97F4A7C15
@@ -379,9 +381,9 @@ def icws_neardup_pairs(
     ws: str = r"\s+",
 ) -> DataFrame:
     """Banded-ICWS near-dup pairs (d1 < d2, exact wjac >= threshold):
-    q52's band equi-join on weighted-sample signatures, candidates
-    verified exactly (precision 1.0 by construction; recall is the
-    banding detection probability 1 - (1 - t^r)^b)."""
+    operators/lsh.py's band equi-join on weighted-sample signatures,
+    candidates verified exactly (precision 1.0 by construction; recall
+    is the banding detection probability 1 - (1 - t^r)^b)."""
     if n_hashes % n_bands != 0:
         raise ValueError(f"n_hashes ({n_hashes}) must divide into n_bands ({n_bands})")
     rows = n_hashes // n_bands
@@ -401,19 +403,7 @@ def icws_neardup_pairs(
             ).alias("sig")
         )
     )
-    a = bands.alias("a")
-    b = bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.sig") == F.col("b.sig"))
-            & (F.col("a._id") < F.col("b._id")),
-        )
-        .select(F.col("a._id").alias("d1"), F.col("b._id").alias("d2"))
-        .distinct()
-    )
-    return _exact_verify(cand, tf, threshold)
+    return _exact_verify(band_pairs(bands, "_id"), tf, threshold)
 
 
 def icws_recall(threshold: float, n_hashes: int, n_bands: int) -> float:

@@ -215,6 +215,68 @@ _Q52_FINAL = f"""
     """
 
 
+def _minhash_lsh(
+    docs: DataFrame, persisted: list | None = None, est: bool = False
+) -> DataFrame:
+    """q52's MinHash-LSH pipeline over any (doc_id, text) frame — the
+    one spelling q52, q136 and curate's near-dup stage share: 3-word
+    shingles -> the 16-slot signatures and 4 band strings (the reuse
+    branch of neardup_ingest.minhash_signatures) -> candidate pairs
+    from band-bucket equality (operators/lsh.band_pairs) -> exact
+    Jaccard over the string shingle sets. Returns every candidate as
+    (d1, d2[, est], jac), unrounded and unfiltered; ``est`` adds the
+    estimated Jaccard (the fraction of agreeing minhash slots).
+
+    The shingled frame feeds the signatures and both verify sides, so
+    it is persisted (MEMORY_AND_DISK, the 100 TB-safe level: shingling
+    and md5 run once) and appended to ``persisted`` for a caller that
+    unpersists once the pairs are materialized. The signatures are
+    persisted too when ``est`` reads them a second and third time."""
+    from pyspark import StorageLevel
+
+    from file_appender_spark.operators.lsh import band_pairs, band_stack
+    from file_appender_spark.operators.neardup_ingest import minhash_signatures
+
+    words = F.split("text", _WS)
+    # let_expr binds the split ONCE per row — projection collapse
+    # would otherwise re-split the text inside every element_at of
+    # the shingle lambda (see let_expr; ~20x on this stage)
+    shingled = (
+        docs.filter(F.size(words) >= 3)
+        .select("doc_id", let_expr(words, shingle_expr).alias("shingles"))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    )
+    if persisted is not None:
+        persisted.append(shingled)
+    sigs = minhash_signatures(None, "doc_id", shingled=shingled)
+    if est:
+        sigs = sigs.persist(StorageLevel.MEMORY_AND_DISK)
+    bands = sigs.select("doc_id", band_stack(["b0", "b1", "b2", "b3"]))
+    pairs = band_pairs(bands, "doc_id")
+    cols = []
+    if est:
+        s1 = sigs.select(F.col("doc_id").alias("d1"), F.col("mh").alias("mha"))
+        s2 = sigs.select(F.col("doc_id").alias("d2"), F.col("mh").alias("mhb"))
+        pairs = pairs.join(s1, "d1").join(s2, "d2")
+        agree = F.aggregate(
+            F.zip_with("mha", "mhb", lambda a, b: (a == b).cast("int")),
+            F.lit(0),
+            lambda acc, x: acc + x,
+        )
+        cols.append((agree * 1.0 / len(_MH_PARAMS)).alias("est"))
+    # exact-verify candidates with array_intersect on the shingle sets
+    # — two hash joins on doc ids, zero explodes
+    sh1 = shingled.select(F.col("doc_id").alias("d1"), F.col("shingles").alias("sa"))
+    sh2 = shingled.select(F.col("doc_id").alias("d2"), F.col("shingles").alias("sb"))
+    inter = F.size(F.array_intersect("sa", "sb"))
+    jac = inter.cast("double") / (F.size("sa") + F.size("sb") - inter)
+    return (
+        pairs.join(sh1, "d1")
+        .join(sh2, "d2")
+        .select("d1", "d2", *cols, jac.alias("jac"))
+    )
+
+
 @register("q52_minhash_lsh", f"WITH {_Q52_CTES}{_Q52_FINAL}")
 def q52_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full MinHash-LSH near-dup pipeline, end to end deterministic:
@@ -228,72 +290,10 @@ def q52_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     the inverted token index of q51. The band signature string is the
     shuffle key; bucket skew is bounded by band width."""
     d = _t(spark, sf_dir, "documents")
-    words = F.split("text", _WS)
-    # let_expr binds the split ONCE per row — projection collapse
-    # would otherwise re-split the text inside every element_at of
-    # the shingle lambda (see let_expr; ~20x on this stage)
-    shingled = (
-        d.filter(F.size(words) >= 3)
-        .select("doc_id", let_expr(words, shingle_expr).alias("shingles"))
-    )
-    # shingled feeds three plan branches (signatures + both verify
-    # sides); persist it so shingling+md5 run once, spilling to disk
-    # when it outgrows memory (the 100 TB-safe storage level)
-    from pyspark import StorageLevel
-
-    shingled = shingled.persist(StorageLevel.MEMORY_AND_DISK)
-    # all 16 minhash slots in ONE aggregation over the exploded
-    # shingle hashes — no 16x row blowup, a single shuffle on doc_id
-    # (vs the naive params-cross-join + groupBy(doc,j) + re-group plan,
-    # which benched 5x slower)
-    hashed = shingled.select(
-        "doc_id", F.explode("shingles").alias("sh")
-    ).select("doc_id", _tok_hash32(F.col("sh")).alias("h"))
-    sigs = hashed.groupBy("doc_id").agg(
-        *[
-            F.min((F.lit(a) * F.col("h") + F.lit(b)) % _MH_P).alias(f"mh{j}")
-            for j, (a, b) in enumerate(_MH_PARAMS)
-        ]
-    )
-    # 4 bands of 4 rows: unpivot via stack — tiny (n_docs x 4) output
-    bands = sigs.select(
-        "doc_id",
-        F.expr(
-            "stack(4, "
-            + ", ".join(
-                f"{bi}, concat_ws(',', mh{4 * bi}, mh{4 * bi + 1}, mh{4 * bi + 2}, mh{4 * bi + 3})"
-                for bi in range(4)
-            )
-            + ") AS (band, sig)"
-        ),
-    )
-    x = bands.alias("x")
-    y = bands.alias("y")
-    cand = (
-        x.join(
-            y,
-            (F.col("x.band") == F.col("y.band"))
-            & (F.col("x.sig") == F.col("y.sig"))
-            & (F.col("x.doc_id") < F.col("y.doc_id")),
-        )
-        .select(F.col("x.doc_id").alias("d1"), F.col("y.doc_id").alias("d2"))
-        .distinct()
-    )
-    # exact-verify candidates with array_intersect on the shingle sets
-    # — two hash joins on doc ids, zero explodes
-    sh1 = shingled.select(
-        F.col("doc_id").alias("d1"), F.col("shingles").alias("sh1")
-    )
-    sh2 = shingled.select(
-        F.col("doc_id").alias("d2"), F.col("shingles").alias("sh2")
-    )
-    inter = F.size(F.array_intersect("sh1", "sh2"))
-    jac = inter.cast("double") / (F.size("sh1") + F.size("sh2") - inter)
     return (
-        cand.join(sh1, "d1")
-        .join(sh2, "d2")
-        .filter(jac >= _Q52_THRESHOLD)
-        .select("d1", "d2", F.round(jac, 6).alias("jaccard"))
+        _minhash_lsh(d)
+        .filter(F.col("jac") >= _Q52_THRESHOLD)
+        .select("d1", "d2", F.round("jac", 6).alias("jaccard"))
     )
 
 
@@ -1537,76 +1537,13 @@ def q136_minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: same banded candidate generation as q52 (never all-pairs);
     the slot-agreement join runs on the tiny (doc, slot) signature
     frame, the exact verify on candidate pairs only."""
-    from pyspark import StorageLevel
-
     d = _t(spark, sf_dir, "documents")
-    words = F.split("text", _WS)
-    shingled = (
-        d.filter(F.size(words) >= 3)
-        .select("doc_id", let_expr(words, shingle_expr).alias("shingles"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    hashed = shingled.select(
-        "doc_id", F.explode("shingles").alias("sh")
-    ).select("doc_id", _tok_hash32(F.col("sh")).alias("h"))
-    sigs = hashed.groupBy("doc_id").agg(
-        *[
-            F.min((F.lit(a) * F.col("h") + F.lit(b)) % _MH_P).alias(f"mh{j}")
-            for j, (a, b) in enumerate(_MH_PARAMS)
-        ]
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    bands = sigs.select(
-        "doc_id",
-        F.expr(
-            "stack(4, "
-            + ", ".join(
-                f"{bi}, concat_ws(',', mh{4 * bi}, mh{4 * bi + 1}, mh{4 * bi + 2}, mh{4 * bi + 3})"
-                for bi in range(4)
-            )
-            + ") AS (band, sig)"
-        ),
-    )
-    x = bands.alias("x")
-    y = bands.alias("y")
-    cand = (
-        x.join(
-            y,
-            (F.col("x.band") == F.col("y.band"))
-            & (F.col("x.sig") == F.col("y.sig"))
-            & (F.col("x.doc_id") < F.col("y.doc_id")),
-        )
-        .select(F.col("x.doc_id").alias("d1"), F.col("y.doc_id").alias("d2"))
-        .distinct()
-    )
-    n_slots = len(_MH_PARAMS)
-    mh_arr = F.array(*[F.col(f"mh{j}") for j in range(n_slots)])
-    s1 = sigs.select(F.col("doc_id").alias("d1"), mh_arr.alias("mha"))
-    s2 = sigs.select(F.col("doc_id").alias("d2"), mh_arr.alias("mhb"))
-    est = (
-        F.aggregate(
-            F.zip_with("mha", "mhb", lambda a, b: (a == b).cast("int")),
-            F.lit(0),
-            lambda s, x_: s + x_,
-        )
-        * 1.0
-        / n_slots
-    )
-    sh1 = shingled.select(F.col("doc_id").alias("d1"), F.col("shingles").alias("sha"))
-    sh2 = shingled.select(F.col("doc_id").alias("d2"), F.col("shingles").alias("shb"))
-    inter = F.size(F.array_intersect("sha", "shb"))
-    jac = inter.cast("double") / (F.size("sha") + F.size("shb") - inter)
-    return (
-        cand.join(s1, "d1")
-        .join(s2, "d2")
-        .join(sh1, "d1")
-        .join(sh2, "d2")
-        .select(
-            "d1",
-            "d2",
-            F.round(est, 6).alias("est_jaccard"),
-            F.round(jac, 6).alias("jaccard"),
-            F.round(est - jac, 6).alias("est_error"),
-        )
+    return _minhash_lsh(d, est=True).select(
+        "d1",
+        "d2",
+        F.round("est", 6).alias("est_jaccard"),
+        F.round("jac", 6).alias("jaccard"),
+        F.round(F.col("est") - F.col("jac"), 6).alias("est_error"),
     )
 
 

@@ -120,7 +120,6 @@ _SLOW_TESTS = {
     "tests/test_manifest_store.py::test_pairstore_manifest_parity_with_classic",
     "tests/test_manifest_store.py::test_pairstore_migration_resumes_after_crash",
     "tests/test_operators.py::test_ann_sign_ivf_exclude_self_flag",
-    "tests/test_operators.py::test_band_pairs_slice_equivalence",
     "tests/test_operators.py::test_embedding_ingest_auto_cap_admits_degenerate_family",
     "tests/test_operators.py::test_embedding_ingest_identical_vector_shortcut",
     "tests/test_operators.py::test_ivf_topk_runs_and_probes_subset",
@@ -134,6 +133,7 @@ _SLOW_TESTS = {
     "tests/test_operators.py::test_neardup_store_params_mismatch_fails_fast",
     "tests/test_operators.py::test_neardup_store_rejects_wrong_modality",
     "tests/test_operators.py::test_sig_shortcut_retry_on_legacy_multi_id_store",
+    "tests/test_operators.py::test_sliced_band_candidates_slice_equivalence",
     "tests/test_operators.py::test_srp_admitted_sigs_reuse_batch_frame",
     "tests/test_operators.py::test_srp_banded_verifier_never_suppresses_nan_vectors",
     "tests/test_operators.py::test_store_hot_buckets_report",

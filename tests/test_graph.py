@@ -195,7 +195,7 @@ def test_neardup_family_survives_exact_dedup_and_is_capped(spark):
     with 2 unique tokens each -> all distinct texts -> the real
     MinHash-LSH pair generator yields a near-clique -> the capped
     enumeration bounds wedges while reporting every hot vertex."""
-    from file_appender_spark.curate import _minhash_pairs
+    from file_appender_spark.queries.llm import _minhash_lsh
 
     base = " ".join(f"tmpl{w}" for w in range(60))
     rows = [(i, f"{base} unique{i}a unique{i}b") for i in range(60)]
@@ -204,7 +204,11 @@ def test_neardup_family_survives_exact_dedup_and_is_capped(spark):
     # distinct texts: exact dedup keeps all of them
     assert docs.select("text").distinct().count() == docs.count()
     persisted: list = []
-    e = _minhash_pairs(docs, threshold=0.2, persisted=persisted).select("d1", "d2")
+    e = (
+        _minhash_lsh(docs, persisted=persisted)
+        .filter(F.col("jac") >= 0.2)
+        .select("d1", "d2")
+    )
     m = e.count()
     assert m > 1000  # the family really is a near-clique
     cap = 5

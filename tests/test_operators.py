@@ -1104,16 +1104,19 @@ def test_sig_shortcut_retry_on_legacy_multi_id_store(spark, tmp_path):
     assert textdup_ingest_batch(spark, b2, store).count() == 0
 
 
-def test_band_pairs_slice_equivalence(spark):
+def test_sliced_band_candidates_slice_equivalence(spark):
     """r8 verdict task 1: the history-path broadcast-semi slice (the
     O(batch)-per-epoch fix) must change NOTHING about the candidate
     set — over-cap counts for every batch-touched bucket are computed
     on whole buckets (semi keeps them intact), and untouched buckets
-    could never produce a candidate. Pin _band_pairs against an
-    inline unsliced reference spelling, capped and uncapped, on a
-    history with a hot bucket, a cold shared bucket, and buckets the
-    batch never touches."""
-    from file_appender_spark.operators.neardup_ingest import _band_pairs
+    could never produce a candidate. Pin the live history path,
+    _sliced_band_candidates (lazy slice, the small-store shape),
+    against an inline unsliced reference spelling, capped and
+    uncapped, on a history with a hot bucket, a cold shared bucket,
+    and buckets the batch never touches."""
+    from file_appender_spark.operators.neardup_ingest import (
+        _sliced_band_candidates,
+    )
 
     # history: bucket (0,'HOT') holds ids 0..9, (1,'WARM') holds
     # 10..12, (2,'COLD') holds 20..24 (untouched by the batch)
@@ -1122,29 +1125,29 @@ def test_band_pairs_slice_equivalence(spark):
         + [(10 + i, 1, "WARM") for i in range(3)]
         + [(20 + i, 2, "COLD") for i in range(5)]
     )
-    old = spark.createDataFrame(hist_rows, "doc_id long, band int, sig string")
+    old = spark.createDataFrame(hist_rows, "doc_id long, band int, bh string")
     new = spark.createDataFrame(
         [(100, 0, "HOT"), (100, 1, "WARM"), (101, 1, "WARM"), (101, 3, "X")],
-        "doc_id long, band int, sig string",
+        "doc_id long, band int, bh string",
     )
 
     def unsliced(new_bands, old_bands, cap):
         x = new_bands.alias("x")
         if cap is not None:
-            sized = old_bands.groupBy("band", "sig").agg(
+            sized = old_bands.groupBy("band", "bh").agg(
                 F.count("*").alias("n_in_bucket")
             )
             hot = F.broadcast(sized.filter(F.col("n_in_bucket") > cap))
-            old_bands = old_bands.join(hot, ["band", "sig"], "left_anti")
-            x = new_bands.join(hot, ["band", "sig"], "left_anti").alias("x")
+            old_bands = old_bands.join(hot, ["band", "bh"], "left_anti")
+            x = new_bands.join(hot, ["band", "bh"], "left_anti").alias("x")
         y = old_bands.select(
-            F.col("doc_id").alias("_oid"), "band", "sig"
+            F.col("doc_id").alias("_oid"), "band", "bh"
         ).alias("y")
         return (
             x.join(
                 y,
                 (F.col("x.band") == F.col("y.band"))
-                & (F.col("x.sig") == F.col("y.sig"))
+                & (F.col("x.bh") == F.col("y.bh"))
                 & (F.col("x.doc_id") != F.col("y._oid")),
             )
             .select(
@@ -1153,25 +1156,19 @@ def test_band_pairs_slice_equivalence(spark):
             .distinct()
         )
 
+    def sliced(cap):
+        _, cand = _sliced_band_candidates(new, old, "doc_id", cap, materialize=False)
+        return sorted((r["new_id"], r["old_id"]) for r in cand.collect())
+
     for cap in (None, 5, 2):
-        got = sorted(
-            (r["new_id"], r["old_id"])
-            for r in _band_pairs(
-                new, old, "doc_id", within_batch=False, band_bucket_cap=cap
-            ).collect()
-        )
         want = sorted(
             (r["new_id"], r["old_id"]) for r in unsliced(new, old, cap).collect()
         )
-        assert got == want, f"cap={cap}: {got} != {want}"
+        assert sliced(cap) == want, f"cap={cap}: {sliced(cap)} != {want}"
     # sanity on the fixture: cap=5 drops the HOT bucket but keeps WARM
-    capped = sorted(
-        (r["new_id"], r["old_id"])
-        for r in _band_pairs(
-            new, old, "doc_id", within_batch=False, band_bucket_cap=5
-        ).collect()
-    )
-    assert capped == [(100, 10), (100, 11), (100, 12), (101, 10), (101, 11), (101, 12)]
+    assert sliced(5) == [
+        (100, 10), (100, 11), (100, 12), (101, 10), (101, 11), (101, 12)
+    ]
 
 
 def test_embedding_ingest_identical_vector_shortcut(spark, tmp_path):

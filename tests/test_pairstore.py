@@ -306,10 +306,7 @@ def test_signature_plan_is_shuffle_free_and_joins_are_equi(spark):
     (_spread's round-robin repartition — everything expensive is
     map-side after it), and the candidate+verify plan contains no
     cartesian/nested-loop join."""
-    from file_appender_spark.operators.neardup_ingest import (
-        _band_pairs,
-        _bands_long,
-    )
+    from file_appender_spark.operators.lsh import band_pairs, band_stack
     from file_appender_spark.operators.pairstore import (
         _new_side,
         _old_side,
@@ -326,8 +323,10 @@ def test_signature_plan_is_shuffle_free_and_joins_are_equi(spark):
     assert plan.count("Exchange") == 1, plan  # the _spread only
     assert "SortAggregate" not in plan and "HashAggregate" not in plan
 
-    bands = _bands_long(sigs, 4, "doc_id")
-    cand = _band_pairs(bands, bands, "doc_id", within_batch=True)
+    bands = sigs.select("doc_id", band_stack([f"b{bi}" for bi in range(4)]))
+    cand = band_pairs(bands, "doc_id").select(
+        F.col("d2").alias("new_id"), F.col("d1").alias("old_id")
+    )
     pairs = _verified_pairs(
         cand, _new_side(sigs, "doc_id"), _old_side(sigs, "doc_id"), 0.2
     )

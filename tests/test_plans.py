@@ -5,6 +5,8 @@ would silently 100x the IO at 100 TB — these assertions catch it."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from pyspark.sql import functions as F
@@ -291,23 +293,73 @@ def test_q104_quality_checks_fuse_and_fk_is_anti_join(spark, sf_dir):
     assert plan.count("Scan parquet") == 3  # orders x2 + customer keys
 
 
-def test_srp_neardup_no_cross_join(spark, sf_dir):
-    """The banded q62 scale path must generate candidates via a
-    band-signature equi-join — an all-pairs cross join here is exactly
-    the plan shape this operator exists to avoid."""
+def _pair_graph_build_plan(spark, docs, monkeypatch):
+    """The pair-store build's candidate + verify frame, unexecuted: the
+    real build_pair_graph with its epoch writes captured instead of
+    run."""
+    from file_appender_spark.operators import pairstore
+
+    frames = {}
+    monkeypatch.setattr(
+        pairstore, "rebuild_table_store", lambda store, d, params, write: write()
+    )
+    monkeypatch.setattr(
+        pairstore,
+        "write_table_epoch",
+        lambda df, d, table, epoch: frames.setdefault(table, df),
+    )
+    monkeypatch.setattr(pairstore, "refresh_clusters", lambda spark, d: None)
+    pairstore.build_pair_graph(spark, docs, "unused-store")
+    return frames["pairs"]
+
+
+def _candidate_stage_frame(spark, sf_dir, monkeypatch, op):
+    from file_appender_spark.operators import imagehash
     from file_appender_spark.operators.similarity import srp_neardup
+    from file_appender_spark.operators.wjaccard import icws_neardup_pairs
+    from file_appender_spark.queries.llm import _minhash_lsh
     from file_appender_spark.sources.catalog import load_table
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    plan = (
-        srp_neardup(emb, threshold=0.4)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
+    docs = load_table(spark, sf_dir, "documents")
+    if op in ("q52", "q136"):
+        name = {"q52": "q52_minhash_lsh", "q136": "q136_minhash_calibration"}[op]
+        return build_fresh(spark, sf_dir, name)
+    if op == "curate_pairs":
+        return _minhash_lsh(docs).filter(F.col("jac") >= 0.2).select("d1", "d2")
+    if op == "srp":
+        return srp_neardup(load_table(spark, sf_dir, "embeddings"), threshold=0.4)
+    if op in ("ahash", "dhash"):
+        img = docs.select("doc_id", F.encode("text", "utf-8").alias("payload"))
+        fn = getattr(imagehash, f"{op}_neardup")
+        return fn(img, "doc_id", "payload", max_hamming=8, band_bucket_cap=5)
+    if op == "icws":
+        return icws_neardup_pairs(docs, threshold=0.5)
+    return _pair_graph_build_plan(spark, docs, monkeypatch)
+
+
+# a hash or sort-merge join keyed on the band index AND the band value
+_BAND_EQUI_JOIN = re.compile(
+    r"(SortMergeJoin|BroadcastHashJoin|ShuffledHashJoin) "
+    r"\[(band|bi)#\d+, (sig|bh|bv)#\d+L?\], \[(band|bi)#\d+, (sig|bh|bv)#\d+L?\]"
+)
+
+
+@pytest.mark.parametrize(
+    "op",
+    ["q52", "q136", "curate_pairs", "srp", "ahash", "dhash", "icws", "pairstore_build"],
+)
+def test_band_candidate_stage_is_equi_join(spark, sf_dir, monkeypatch, op):
+    """Every operator on operators/lsh.band_pairs generates candidates
+    by an equi-join on the band keys — an all-pairs cross join is
+    exactly the plan shape banded LSH exists to avoid. The SRP
+    signature stage stays one Arrow pass."""
+    df = _candidate_stage_frame(spark, sf_dir, monkeypatch, op)
+    plan = df._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
-    assert "MapInArrow" in plan  # the signature stage
+    assert _BAND_EQUI_JOIN.search(plan), plan
+    if op == "srp":
+        assert "MapInArrow" in plan
 
 
 def test_ann_sign_ivf_candidates_are_equi_join(spark, sf_dir):
