@@ -1327,7 +1327,7 @@ def store_hot_buckets(
     spark: SparkSession,
     store_dir: str,
     band_bucket_cap: int,
-    n_bands: int = 4,
+    n_bands: int | None = None,
 ) -> DataFrame:
     """(band, sig, n_in_bucket) for every signature-store band bucket
     whose population exceeds the cap — the truncation report for the
@@ -1337,14 +1337,29 @@ def store_hot_buckets(
     from these buckets are being DROPPED, so their new members are
     admitted unverified, and an operator deserves to see which
     buckets those are instead of inferring it. Works on any of the
-    three modalities' stores (they share the b0..b3 band layout) and
+    three modalities' stores (they share the b0, b1, ... band layout) and
     on the pair store's partitioned sigs table (pass its ``sigs``
     dir; the partition column is ignored). One groupBy over the
-    4-rows-per-item band stack; no pair work, no payloads."""
+    n_bands-rows-per-item band stack; no pair work, no payloads.
+
+    ``n_bands`` comes from the store's params stamp (an SRP store may
+    carry any band count); an explicit value that contradicts the
+    stamp raises ``ValueError``. An unstamped dir (the pair store's
+    sigs table) stacks ``n_bands`` bands, 4 when not given."""
     cap = resolve_cap(band_bucket_cap)
     if cap is None:
         raise ValueError("band_bucket_cap=None: no cap, no truncation to report")
-    open_table_store(_STORE, store_dir)
+    stamp = open_table_store(_STORE, store_dir)
+    if stamp is not None:
+        stamped = _modality_spec(stamp)["n_bands"]
+        if n_bands is not None and n_bands != stamped:
+            raise ValueError(
+                f"n_bands={n_bands} contradicts the store's params stamp "
+                f"({stamped} bands) in {store_dir}"
+            )
+        n_bands = stamped
+    elif n_bands is None:
+        n_bands = 4
     hist = spark.read.parquet(table_dir(store_dir, ""))
     return hot_buckets(
         hist.select(band_stack([f"b{bi}" for bi in range(n_bands)])), cap

@@ -37,8 +37,10 @@ corpus. This module is that store:
   the dedup ingests, because a graph store admits every doc and
   never has to make a suppress decision).
 - ``refresh_clusters`` / ``read_cluster_assignment`` — the
-  connected-component collapse (operators/components.py, the
-  Kiveris-et-al. map-reduce CC) materialized as (doc, cluster) with
+  connected-component collapse (operators/components.py: on the
+  driver below its edge bound, sized by a footer or ``observe`` edge
+  count that costs no job; the Kiveris-et-al. map-reduce CC above
+  it) materialized as (doc, cluster) with
   a coverage stamp: reading an assignment that does not cover every
   pair epoch raises rather than silently serving merged-away
   clusters (``allow_stale=True`` opts in). Refresh is INCREMENTAL by
@@ -58,8 +60,9 @@ corpus. This module is that store:
   elsewhere).
 
 Scale notes: the build is q52's own plan (band equi-join candidates,
-never all-pairs) plus an O(log diameter)-round CC over the PAIR
-table — pairs, not corpus, bound every post-build consumer. Per
+never all-pairs) plus a CC over the PAIR table (one collect below the
+driver edge bound, O(diameter) distributed rounds above it) — pairs,
+not corpus, bound every post-build consumer. Per
 ingest epoch, the history side is touched only through the band
 equi-join on the signature columns (columnar scan of the sigs table;
 the heavy ``sh32`` column is fetched through the candidate join) and
@@ -78,7 +81,7 @@ from __future__ import annotations
 import json
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from file_appender_spark.operators.lsh import band_pairs, hot_buckets, resolve_cap
@@ -170,23 +173,23 @@ _STORE = TableStore(
 )
 
 
-def _sigs_row_count(store_dir: str) -> int:
-    """Total sigs rows across epoch partitions, from parquet FOOTER
-    metadata only (per-epoch-dir footer walks — the store's partition
-    layout hides its files from the flat parquet_rows). Sizes the
-    lean-vs-materialized epoch shape; order-of-magnitude is enough."""
+def _table_rows(store_dir: str, table: str, stop_at: int) -> int:
+    """Total rows of one table across its epoch partitions, from
+    parquet FOOTER metadata only (per-epoch-dir footer walks — the
+    store's partition layout hides its files from the flat
+    parquet_rows), stopping once the total reaches ``stop_at``. An
+    upper bound on distinct rows (a replayed epoch counts twice);
+    sizes the lean-vs-materialized epoch shape (sigs) and the driver
+    vs distributed components dispatch (pairs)."""
     fs = store_fs_for(store_dir)
-    d = table_dir(store_dir, "sigs")
+    d = table_dir(store_dir, table)
     if not fs.isdir(d):
         return 0
     total = 0
     for part in fs.listdir(d):
         if part.startswith("batch="):
-            total += fs.parquet_rows(
-                os.path.join(d, part),
-                stop_at=_EAGER_SLICE_MIN_STORE_ROWS,
-            )
-            if total >= _EAGER_SLICE_MIN_STORE_ROWS:
+            total += fs.parquet_rows(os.path.join(d, part), stop_at=stop_at)
+            if total >= stop_at:
                 break
     return total
 
@@ -447,7 +450,7 @@ def pairstore_ingest_batch(
     # from the strings on a legacy one — is semi-sliced by the batch's
     # (band, bh) set and checkpointed; the over-cap histogram, the
     # candidate join AND the cap marker all read that one frame
-    store_rows = _sigs_row_count(store_dir)
+    store_rows = _table_rows(store_dir, "sigs", _EAGER_SLICE_MIN_STORE_ROWS)
     big = store_rows >= _EAGER_SLICE_MIN_STORE_ROWS
     hist_slice, new_vs_hist = _sliced_band_candidates(
         batch_bands,
@@ -671,7 +674,7 @@ def _fold_new_edges(
     exactly what the full recompute assigns. Representatives
     untouched by new edges keep their labels; docs of untouched
     components are never read."""
-    from file_appender_spark.operators.components import dedup_clusters
+    from file_appender_spark.operators.components import _clusters
 
     asg = spark.read.parquet(table_dir(store_dir, "clusters")).select(
         "doc", "cluster"
@@ -682,7 +685,14 @@ def _fold_new_edges(
             os.path.join(table_dir(store_dir, "pairs"), f"batch={e}")
         ).select("d1", "d2")
         new_edges = part if new_edges is None else new_edges.unionByName(part)
-    new_edges = new_edges.distinct().localCheckpoint(eager=True)
+    # the edge count rides the checkpoint's own job; it bounds the
+    # representative-space edges below, which sizes their components
+    n_new = Observation()
+    new_edges = (
+        new_edges.distinct()
+        .observe(n_new, F.count(F.lit(1)).alias("n"))
+        .localCheckpoint(eager=True)
+    )
 
     # endpoint -> current representative (known docs: stored cluster;
     # new docs: themselves). Two left joins against the assignment.
@@ -699,10 +709,10 @@ def _fold_new_edges(
         .distinct()
     )
     # CC over the representative space: (rep, merged-min) mapping.
-    # dedup_clusters only emits nodes WITH edges — reps untouched by
+    # the clusters only hold nodes WITH edges — reps untouched by
     # any rep-space edge (e.g. both endpoints already same cluster)
     # keep their label through the coalesce below.
-    mapping = dedup_clusters(rep_edges, id1="u", id2="v").select(
+    mapping = _clusters(rep_edges, "u", "v", n_new.get["n"]).select(
         F.col("doc").alias("_rep"), F.col("cluster").alias("_newc")
     )
     old_rows = (
@@ -740,7 +750,7 @@ def refresh_clusters(
     longer exist). ``mode="full"`` forces the recompute — it is also
     the incremental path's equivalence oracle. Crash-safe swap +
     recovery, the shared store discipline."""
-    from file_appender_spark.operators.components import dedup_clusters
+    from file_appender_spark.operators import components
 
     if mode not in ("auto", "full", "incremental"):
         raise ValueError(f"mode must be auto/full/incremental, got {mode!r}")
@@ -770,7 +780,12 @@ def refresh_clusters(
         used = "incremental"
     else:
         pairs = read_pairs(spark, store_dir).select("d1", "d2")
-        cl = dedup_clusters(pairs).select("doc", "cluster")
+        # the footer count bounds the pair rows without a job
+        bound = components._DRIVER_EDGE_BOUND
+        n_pairs = _table_rows(store_dir, "pairs", bound + 1)
+        cl = components._clusters(pairs, "d1", "d2", n_pairs).select(
+            "doc", "cluster"
+        )
         used = "full"
     # the shared classic-two-rename vs manifest-publish swap; a
     # repartition(>=1) guarantees at least one footer-bearing file so

@@ -50,6 +50,7 @@ _SLOW_TESTS = {
     "tests/test_bpe.py::test_segment_applies_merges_in_order",
     "tests/test_components.py::test_components_deterministic",
     "tests/test_components.py::test_components_long_path_needs_iterations",
+    "tests/test_components.py::test_components_random_graph_paths_agree",
     "tests/test_components.py::test_dedup_clusters_from_jaccard_pairs",
     "tests/test_containment.py::test_capped_equals_exact_when_rare_tokens_exist",
     "tests/test_containment.py::test_randomized_agreement_under_zipf_vocab",

@@ -1069,6 +1069,37 @@ def test_store_hot_buckets_report(spark, tmp_path):
         store_hot_buckets(spark, store, band_bucket_cap=0)
 
 
+def test_store_hot_buckets_reads_band_count_from_stamp(spark, tmp_path):
+    """store_hot_buckets stacks the band count of the store's params
+    stamp: an SRP store built with 8 bands reports hot buckets in all
+    8 bands, not in the caller-default 4; an explicit band count that
+    contradicts the stamp is refused."""
+    import pytest as _pytest
+
+    from file_appender_spark.operators.neardup_ingest import (
+        neardup_ingest_batch,
+        store_hot_buckets,
+    )
+
+    # two distinct vectors six times each; threshold > 1.0 admits
+    # every row, so each band bucket holds six members
+    vecs = [[1.0, 2.0, -3.0, 0.5], [-2.0, 1.0, 4.0, -0.5]]
+    batch = spark.createDataFrame(
+        [(i, vecs[i % 2]) for i in range(12)], "vec_id long, embedding array<double>"
+    )
+    store = str(tmp_path / "srp8")
+    admitted = neardup_ingest_batch(
+        spark, batch, store, threshold=1.01, n_bands=8, band_bucket_cap=None
+    )
+    assert admitted.count() == 12
+    rep = store_hot_buckets(spark, store, band_bucket_cap=1).collect()
+    assert sorted({r["band"] for r in rep}) == list(range(8))
+    assert {r["n_in_bucket"] for r in rep} == {6}
+    assert store_hot_buckets(spark, store, 1, n_bands=8).count() == len(rep)
+    with _pytest.raises(ValueError, match="n_bands=4 contradicts"):
+        store_hot_buckets(spark, store, 1, n_bands=4)
+
+
 def test_sig_shortcut_retry_on_legacy_multi_id_store(spark, tmp_path):
     """Review finding (3rd pass): stores written under the pre-
     shortcut cap hold identical-signature groups with MANY ids

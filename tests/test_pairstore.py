@@ -758,3 +758,32 @@ def test_curate_reports_capped_store(spark, tmp_path):
         f.write("cap bound")
     r2 = curate(spark, docs, str(tmp_path / "out_capped"), graph_dir=store)
     assert r2["near_dedup_store_capped"] is True
+
+
+# Spark jobs a full cluster refresh of the tiny store below may run:
+# the pairs read's schema job, the driver components' one Arrow
+# collect, and the clusters write (shuffle + write). Measured 4; the
+# distributed components loop ran 16. Lower it when a job goes away;
+# raising it needs a stated cause.
+_FULL_REFRESH_JOB_BUDGET = 4
+
+
+def test_full_refresh_job_budget(spark, tmp_path):
+    base = " ".join(f"w{i}" for i in range(30))
+    docs = spark.createDataFrame(
+        [(i, f"{base} tail{i // 3}") for i in range(12)], "doc_id long, text string"
+    )
+    store = str(tmp_path / "budget")
+    build_pair_graph(spark, docs, store)
+    sc = spark.sparkContext
+    group = "test_full_refresh_job_budget"
+    sc.setJobGroup(group, group)
+    try:
+        assert refresh_clusters(spark, store, mode="full") == "full"
+    finally:
+        sc._jsc.clearJobGroup()
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 0 < len(jobs) <= _FULL_REFRESH_JOB_BUDGET, sorted(jobs)
+    assert set(_cluster_rows(read_cluster_assignment(spark, store))) == {
+        (i, 0) for i in range(12)
+    }
