@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from file_appender_spark.obs import stage
 from file_appender_spark.operators.lsh import resolve_cap
 
 
@@ -170,7 +171,8 @@ def curate(
         )
     scrub_expr(pii_mode)  # validate before any Spark job runs
     quality_keep(quality_mode, min_alpha_ratio)
-    n_input = docs.count()
+    with stage(spark, "curate", "input") as rec:
+        n_input = rec["rows"] = docs.count()
 
     # 1. exact dedup: min doc_id per sha256(text)
     keep = (
@@ -180,7 +182,8 @@ def curate(
         .select("doc_id")
     )
     d1 = docs.join(keep, "doc_id")
-    n_exact = d1.count()
+    with stage(spark, "curate", "exact") as rec:
+        n_exact = rec["rows"] = d1.count()
 
     # 1b. optional multimodal stage: payload near-dup suppression.
     # Exact-payload pre-dedup first (see docstring): near-dup runs
@@ -204,47 +207,48 @@ def curate(
         reps = d1.join(
             rep.select(F.col("_repid").alias("doc_id")), "doc_id"
         ).select("doc_id", payload_col)
-        n_rep = reps.count()
-        # pairs + truncation report from ONE checkpointed hash frame
-        # (the report must not cost a second payload decode pass)
-        ipairs, icapped = sized(
-            reps,
-            "doc_id",
-            payload_col,
-            n_items=max(n_rep, 2),
-            max_hamming=image_max_hamming,
-            band_bucket_cap=image_band_bucket_cap,
-        )
-        # a doc is dropped iff it is not its payload group's min, or
-        # its group's representative is the larger side of a pair —
-        # pairwise larger-id semantics, payload-determined hamming
-        dropped_rep = ipairs.select(F.col("d2").alias("_repid")).distinct()
-        member = withp.join(rep, "_ph")
-        idrop = member.filter(F.col("doc_id") != F.col("_repid")).select(
-            "doc_id"
-        ).unionByName(
-            member.join(dropped_rep, "_repid").select("doc_id")
-        ).distinct()
-        d1 = d1.join(idrop, "doc_id", "left_anti")
-        n_image = d1.count()
-        # truncation report (graph.capped_vertices discipline): a
-        # bound cap makes the stage INEXACT for the dropped buckets'
-        # members, and the funnel must say so rather than let the
-        # caller infer it. Computed over the SAME checkpointed hash
-        # frame as the pairs (one aggregate over 4 band rows/rep).
-        if icapped is not None:
-            row = icapped.agg(
-                F.count("*").alias("nb"),
-                F.coalesce(F.sum("n_in_bucket"), F.lit(0)).alias("nm"),
-            ).collect()[0]
-            # nm counts band MEMBERSHIPS (a rep in two hot buckets
-            # counts twice) — the over-cap exposure, not distinct ids
-            image_capped = {
-                "image_capped_buckets": int(row["nb"]),
-                "image_capped_members": int(row["nm"]),
-            }
-        else:
-            image_capped = None
+        with stage(spark, "curate", "image") as rec:
+            n_rep = reps.count()
+            # pairs + truncation report from ONE checkpointed hash frame
+            # (the report must not cost a second payload decode pass)
+            ipairs, icapped = sized(
+                reps,
+                "doc_id",
+                payload_col,
+                n_items=max(n_rep, 2),
+                max_hamming=image_max_hamming,
+                band_bucket_cap=image_band_bucket_cap,
+            )
+            # a doc is dropped iff it is not its payload group's min, or
+            # its group's representative is the larger side of a pair —
+            # pairwise larger-id semantics, payload-determined hamming
+            dropped_rep = ipairs.select(F.col("d2").alias("_repid")).distinct()
+            member = withp.join(rep, "_ph")
+            idrop = member.filter(F.col("doc_id") != F.col("_repid")).select(
+                "doc_id"
+            ).unionByName(
+                member.join(dropped_rep, "_repid").select("doc_id")
+            ).distinct()
+            d1 = d1.join(idrop, "doc_id", "left_anti")
+            n_image = rec["rows"] = d1.count()
+            # truncation report (graph.capped_vertices discipline): a
+            # bound cap makes the stage INEXACT for the dropped buckets'
+            # members, and the funnel must say so rather than let the
+            # caller infer it. Computed over the SAME checkpointed hash
+            # frame as the pairs (one aggregate over 4 band rows/rep).
+            if icapped is not None:
+                row = icapped.agg(
+                    F.count("*").alias("nb"),
+                    F.coalesce(F.sum("n_in_bucket"), F.lit(0)).alias("nm"),
+                ).collect()[0]
+                # nm counts band MEMBERSHIPS (a rep in two hot buckets
+                # counts twice) — the over-cap exposure, not distinct ids
+                image_capped = {
+                    "image_capped_buckets": int(row["nb"]),
+                    "image_capped_members": int(row["nm"]),
+                }
+            else:
+                image_capped = None
 
     # 2. near-dup suppression: q52 pairs over the SURVIVORS (identical
     # copies are already gone, so the pair graph is the near-dup one);
@@ -255,107 +259,109 @@ def curate(
     # write) must not leak the cached survivors/shingles blocks
     # in a long-lived session (review finding)
     try:
-        store_capped = False
-        if graph_dir is not None:
-            from file_appender_spark.operators.pairstore import (
-                pairstore_is_exact,
-                read_pairs,
-                store_missing_ids,
-            )
-            from file_appender_spark.queries.llm import _WS
-
-            # COVERAGE guard (r9 ADVICE, medium): a pair store built from
-            # a different or partial corpus passes both the threshold
-            # guard and pairstore_is_exact, and the semi-joins below would
-            # then silently drop most near-dup edges — near-dedup becomes
-            # a no-op with no signal. Every shingle-eligible survivor
-            # (>= 3 words — shorter docs never get a signature row by
-            # q52's definition) must have a signature row in the store.
-            elig = d1.filter(F.size(F.split("text", _WS)) >= 3).select("doc_id")
-            missing = store_missing_ids(spark, graph_dir, elig)
-            n_missing = missing.count()
-            if n_missing:
-                sample = [r["doc_id"] for r in missing.limit(5).collect()]
-                raise ValueError(
-                    f"pair store {graph_dir} does not cover this corpus: "
-                    f"{n_missing} surviving shingle-eligible doc_ids have no "
-                    f"signature row (e.g. {sample}) — the store was built "
-                    "from a different or partial corpus, and its pair set "
-                    "would silently miss their near-dup edges. Rebuild the "
-                    "store over (a superset of) these documents, or ingest "
-                    "the missing epochs first."
+        with stage(spark, "curate", "near") as rec:
+            store_capped = False
+            if graph_dir is not None:
+                from file_appender_spark.operators.pairstore import (
+                    pairstore_is_exact,
+                    read_pairs,
+                    store_missing_ids,
                 )
-            # a store whose ingest cap ever BOUND is missing edges — the
-            # funnel must say so (near_dedup_store_capped below) rather
-            # than let shards that still hold near-dups pass as exact
-            store_capped = not pairstore_is_exact(graph_dir)
-            surv = d1.select("doc_id")
-            pairs = (
-                read_pairs(spark, graph_dir, expected_threshold=near_threshold)
-                .join(surv.select(F.col("doc_id").alias("d1")), "d1", "semi")
-                .join(surv.select(F.col("doc_id").alias("d2")), "d2", "semi")
+                from file_appender_spark.queries.llm import _WS
+
+                # COVERAGE guard (r9 ADVICE, medium): a pair store built from
+                # a different or partial corpus passes both the threshold
+                # guard and pairstore_is_exact, and the semi-joins below would
+                # then silently drop most near-dup edges — near-dedup becomes
+                # a no-op with no signal. Every shingle-eligible survivor
+                # (>= 3 words — shorter docs never get a signature row by
+                # q52's definition) must have a signature row in the store.
+                elig = d1.filter(F.size(F.split("text", _WS)) >= 3).select("doc_id")
+                missing = store_missing_ids(spark, graph_dir, elig)
+                n_missing = missing.count()
+                if n_missing:
+                    sample = [r["doc_id"] for r in missing.limit(5).collect()]
+                    raise ValueError(
+                        f"pair store {graph_dir} does not cover this corpus: "
+                        f"{n_missing} surviving shingle-eligible doc_ids have "
+                        f"no signature row (e.g. {sample}) — the store was built "
+                        "from a different or partial corpus, and its pair set "
+                        "would silently miss their near-dup edges. Rebuild the "
+                        "store over (a superset of) these documents, or ingest "
+                        "the missing epochs first."
+                    )
+                # a store whose ingest cap ever BOUND is missing edges — the
+                # funnel must say so (near_dedup_store_capped below) rather
+                # than let shards that still hold near-dups pass as exact
+                store_capped = not pairstore_is_exact(graph_dir)
+                surv = d1.select("doc_id")
+                pairs = (
+                    read_pairs(spark, graph_dir, expected_threshold=near_threshold)
+                    .join(surv.select(F.col("doc_id").alias("d1")), "d1", "semi")
+                    .join(surv.select(F.col("doc_id").alias("d2")), "d2", "semi")
+                )
+            else:
+                from file_appender_spark.queries.llm import _minhash_lsh
+
+                pairs = (
+                    _minhash_lsh(d1, persisted=_persisted)
+                    .filter(F.col("jac") >= near_threshold)
+                    .select("d1", "d2")
+                )
+            drop = pairs.select(F.col("d2").alias("doc_id")).distinct()
+            # persist the near-dup SURVIVORS: three downstream consumers
+            # (n_near count, the quality-gate count, the shard write) would
+            # otherwise each recompute the band join + exact verify + both
+            # dedup anti-joins — the funnel's most expensive lineage. The
+            # persisted shingled frame only covers the shingle work, not the
+            # joins above it (measured: curate sf0.1 recompute 6.8 -> ~4s).
+            from pyspark import StorageLevel
+
+            d2 = d1.join(drop, "doc_id", "left_anti").persist(
+                StorageLevel.MEMORY_AND_DISK
             )
-        else:
-            from file_appender_spark.queries.llm import _minhash_lsh
+            _persisted.append(d2)
+            n_near = rec["rows"] = d2.count()
 
-            pairs = (
-                _minhash_lsh(d1, persisted=_persisted)
-                .filter(F.col("jac") >= near_threshold)
-                .select("d1", "d2")
+        with stage(spark, "curate", "write") as rec:
+            # 3. quality gate: heuristic alpha ratio or the q154 model scorer
+            d3 = d2.filter(quality_keep(quality_mode, min_alpha_ratio))
+
+            # 4. PII scrub + 5. hash split — the same module-level stage
+            # expressions the incremental (streaming) drive composes
+            d4 = d3.withColumn("text", scrub_expr(pii_mode)).withColumn(
+                "split", split_col()
             )
-        drop = pairs.select(F.col("d2").alias("doc_id")).distinct()
-        # persist the near-dup SURVIVORS: three downstream consumers
-        # (n_near count, the quality-gate count, the shard write) would
-        # otherwise each recompute the band join + exact verify + both
-        # dedup anti-joins — the funnel's most expensive lineage. The
-        # persisted shingled frame only covers the shingle work, not the
-        # joins above it (measured: curate sf0.1 recompute 6.8 -> ~4s).
-        from pyspark import StorageLevel
 
-        d2 = d1.join(drop, "doc_id", "left_anti").persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-        _persisted.append(d2)
-        n_near = d2.count()
+            # 6. shard write, partitioned by split. The funnel tail counts
+            # (quality survivors == rows written, plus the per-split
+            # breakdown) ride the write job itself via Dataset.observe
+            # (r13, guide §1.2 "don't compute things you throw away"): the
+            # r12 spelling paid a d3.count() action BEFORE the write plus
+            # a full read-back of the written shards (count + groupBy
+            # collect) AFTER it — three extra jobs re-deriving numbers the
+            # write already streams past (PCBREAK_r13: quality_count 0.31s
+            # + readback 0.58s of curate's 3.6s). Values are identical:
+            # what is written IS d4's rows, and n_quality == n_written by
+            # construction (d4 is a projection of d3). A fully-filtered
+            # corpus still short-circuits to zero counts without reading
+            # the empty partitioned dir back (UNABLE_TO_INFER_SCHEMA).
+            from pyspark.sql import Observation
 
-        # 3. quality gate: heuristic alpha ratio or the q154 model scorer
-        d3 = d2.filter(quality_keep(quality_mode, min_alpha_ratio))
-
-        # 4. PII scrub + 5. hash split — the same module-level stage
-        # expressions the incremental (streaming) drive composes
-        d4 = d3.withColumn("text", scrub_expr(pii_mode)).withColumn(
-            "split", split_col()
-        )
-
-        # 6. shard write, partitioned by split. The funnel tail counts
-        # (quality survivors == rows written, plus the per-split
-        # breakdown) ride the write job itself via Dataset.observe
-        # (r13, guide §1.2 "don't compute things you throw away"): the
-        # r12 spelling paid a d3.count() action BEFORE the write plus
-        # a full read-back of the written shards (count + groupBy
-        # collect) AFTER it — three extra jobs re-deriving numbers the
-        # write already streams past (PCBREAK_r13: quality_count 0.31s
-        # + readback 0.58s of curate's 3.6s). Values are identical:
-        # what is written IS d4's rows, and n_quality == n_written by
-        # construction (d4 is a projection of d3). A fully-filtered
-        # corpus still short-circuits to zero counts without reading
-        # the empty partitioned dir back (UNABLE_TO_INFER_SCHEMA).
-        from pyspark.sql import Observation
-
-        obs = Observation()
-        d4.observe(
-            obs,
-            F.count(F.lit(1)).alias("n"),
-            *[
-                F.sum((F.col("split") == s).cast("long")).alias(s)
-                for s in ("train", "val", "test")
-            ],
-        ).write.mode("overwrite").partitionBy("split").parquet(out_dir)
-        m = obs.get
-        n_quality = n_written = int(m["n"] or 0)
-        by_split = {
-            s: int(m[s]) for s in ("train", "val", "test") if m[s]
-        }
+            obs = Observation()
+            d4.observe(
+                obs,
+                F.count(F.lit(1)).alias("n"),
+                *[
+                    F.sum((F.col("split") == s).cast("long")).alias(s)
+                    for s in ("train", "val", "test")
+                ],
+            ).write.mode("overwrite").partitionBy("split").parquet(out_dir)
+            m = obs.get
+            n_quality = n_written = rec["rows"] = int(m["n"] or 0)
+            by_split = {
+                s: int(m[s]) for s in ("train", "val", "test") if m[s]
+            }
         # every downstream consumer of the persisted shingles (near-dup
         # counts + the shard write) has materialized — release the cache
         # so repeated curate() calls don't accumulate executor storage

@@ -35,15 +35,16 @@ symmetric frame — and the collect far below
 ``spark.driver.maxResultSize``'s 1 GB default. The probe's figures
 are in SCALING.md.
 
-Above the bound nothing changed: iterative min-label propagation
-(each node takes the min label in its closed neighborhood until
-fixpoint) — a pure DataFrame formulation of the map-reduce CC used in
-production dedup pipelines (cf. the alternating small-star/large-star
-optimization of Kiveris et al., "Connected Components in MapReduce and
-Beyond", SoCC 2014; min-label propagation converges in O(diameter)
-rounds, which for dedup clusters — tiny diameters — is 2-3 rounds).
-A graph that does not fit one driver keeps that path with the same
-rounds and plans.
+Above the bound: iterative min-label propagation (each node takes the
+min label in its closed neighborhood until fixpoint) — a pure
+DataFrame formulation of the map-reduce CC used in production dedup
+pipelines (cf. the alternating small-star/large-star optimization of
+Kiveris et al., "Connected Components in MapReduce and Beyond", SoCC
+2014). Plain propagation needs O(diameter) rounds, so a long chain
+exhausts ``max_iterations``; each round therefore also takes one
+pointer-jumping step (``component := component[component]``, a
+self-join of the round's labels), which brings a path down to
+O(log diameter) rounds. Dedup clusters (tiny diameters) take 2-3.
 
 Scale notes: each round is one join + one aggregation on the node
 key. Labels are localCheckpoint(eager)'d every round — persist alone
@@ -190,23 +191,31 @@ def _min_label_rounds(sym: DataFrame, max_iterations: int) -> DataFrame:
             .groupBy(F.col("a").alias("node"))
             .agg(F.min("component").alias("nbr_min"))
         )
-        new_comp = F.least(
-            F.col("component"), F.coalesce("nbr_min", F.col("component"))
+        stepped = labels.join(neighbor_min, "node", "left").select(
+            "node",
+            F.col("component").alias("_old"),
+            F.least(
+                F.col("component"), F.coalesce("nbr_min", F.col("component"))
+            ).alias("component"),
         )
+        # pointer jumping, component := component[component]: a label's
+        # own label is a smaller-or-equal node of the same component —
+        # a path converges in O(log diameter) rounds, not O(diameter)
+        hop = stepped.select(
+            F.col("node").alias("component"), F.col("component").alias("_hop")
+        )
+        jumped = F.coalesce("_hop", F.col("component"))
         # the changed count rides the checkpoint's own job: labels are
         # monotone non-increasing, so changed == strictly-decreased,
         # an aggregate over the round join's existing columns — no
         # second action, no new-vs-old join (module docstring)
         obs = Observation()
         new_labels = (
-            labels.join(neighbor_min, "node", "left")
+            stepped.join(hop, "component", "left")
             .observe(
-                obs,
-                F.sum((new_comp < F.col("component")).cast("long")).alias(
-                    "changed"
-                ),
+                obs, F.sum((jumped < F.col("_old")).cast("long")).alias("changed")
             )
-            .select("node", new_comp.alias("component"))
+            .select("node", jumped.alias("component"))
             .localCheckpoint(eager=True)  # truncate lineage every round
         )
         changed = int(obs.get["changed"] or 0)
@@ -220,7 +229,7 @@ def _min_label_rounds(sym: DataFrame, max_iterations: int) -> DataFrame:
     raise RuntimeError(
         f"connected_components did not converge in {max_iterations} "
         f"iterations ({changed} labels still changing); raise "
-        "max_iterations (rounds needed ~ graph diameter)"
+        "max_iterations (rounds needed grow with the graph diameter)"
     )
 
 

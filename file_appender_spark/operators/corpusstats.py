@@ -44,6 +44,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from file_appender_spark.obs import stage
 from file_appender_spark.storefs import (
     TableStore,
     compact_tables,
@@ -278,7 +279,8 @@ def build_corpus_stats(
 
     def write() -> None:
         for name, stats in zip(_STORE.tables, _STATS):
-            write_table_epoch(stats(docs), store_dir, name, "base")
+            with stage(spark, "corpusstats.build", name, store=store_dir):
+                write_table_epoch(stats(docs), store_dir, name, "base")
 
     # the shared rebuild protocol (storefs.rebuild_table_store): a
     # rebuild replaces all data, so it RE-STAMPS rather than checks
@@ -304,7 +306,9 @@ def corpusstats_ingest_batch(
         )
     open_table_store(_STORE, store_dir, ingest=True)
     for name, stats in zip(_STORE.tables, _STATS):
-        write_table_epoch(stats(batch), store_dir, name, batch_id)
+        known = {"store": store_dir, "epoch": str(batch_id)}
+        with stage(spark, "corpusstats.ingest", name, **known):
+            write_table_epoch(stats(batch), store_dir, name, batch_id)
 
 
 # ---------------------------------------------------------------------------
@@ -365,23 +369,24 @@ def _merged_view(
     ``sums`` over base + increments, opened through the store's one
     open path (crash recovery, mid-rebuild and params refusal) and
     memoized per file fingerprint (see the block comment above)."""
-    open_table_store(_STORE, store_dir)
-    d = table_dir(store_dir, name)
-    key = (spark.sparkContext.applicationId, d, _table_fingerprint(store_dir, d))
-    df = _VIEW_CACHE.get(key)
-    if df is None:
-        # drop stale fingerprints of the same table before inserting
-        for k in [k for k in _VIEW_CACHE if k[:2] == key[:2]]:
-            del _VIEW_CACHE[k]
-        while len(_VIEW_CACHE) >= _VIEW_CACHE_MAX:
-            del _VIEW_CACHE[next(iter(_VIEW_CACHE))]
-        df = (
-            spark.read.parquet(d)
-            .groupBy(*keys)
-            .agg(*[F.sum(c).cast("long").alias(c) for c in sums])
-            .localCheckpoint(eager=False)
-        )
-        _VIEW_CACHE[key] = df
+    with stage(spark, "corpusstats.read", name, store=store_dir):
+        open_table_store(_STORE, store_dir)
+        d = table_dir(store_dir, name)
+        key = (spark.sparkContext.applicationId, d, _table_fingerprint(store_dir, d))
+        df = _VIEW_CACHE.get(key)
+        if df is None:
+            # drop stale fingerprints of the same table before inserting
+            for k in [k for k in _VIEW_CACHE if k[:2] == key[:2]]:
+                del _VIEW_CACHE[k]
+            while len(_VIEW_CACHE) >= _VIEW_CACHE_MAX:
+                del _VIEW_CACHE[next(iter(_VIEW_CACHE))]
+            df = (
+                spark.read.parquet(d)
+                .groupBy(*keys)
+                .agg(*[F.sum(c).cast("long").alias(c) for c in sums])
+                .localCheckpoint(eager=False)
+            )
+            _VIEW_CACHE[key] = df
     return df
 
 
@@ -430,12 +435,13 @@ def compact_corpus_stats(spark: SparkSession, store_dir: str) -> None:
     # single-writer window invariant: refuse to fold epochs while an
     # ingest epoch write is in flight
     open_table_store(_STORE, store_dir, quiesce=_STORE.tables)
-    compact_tables(
-        spark,
-        store_dir,
-        {
-            "token_stats": lambda d: read_token_stats(spark, store_dir),
-            "source_stats": lambda d: read_source_stats(spark, store_dir),
-            "bigram_stats": lambda d: read_bigram_stats(spark, store_dir),
-        },
-    )
+    with stage(spark, "corpusstats.compact", "compact", store=store_dir) as rec:
+        rec["files"], rec["manifest_version"] = compact_tables(
+            spark,
+            store_dir,
+            {
+                "token_stats": lambda d: read_token_stats(spark, store_dir),
+                "source_stats": lambda d: read_source_stats(spark, store_dir),
+                "bigram_stats": lambda d: read_bigram_stats(spark, store_dir),
+            },
+        )

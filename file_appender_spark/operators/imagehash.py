@@ -241,7 +241,7 @@ def image_sigs_arrow(
     a handful of numpy int64 ops on the raw bytes — no explode, no
     exchange, no per-row JVM lambda (the interpreted aggregate() fold
     was measured 4x SLOWER in r11 and rejected;
-    scripts/probe_sigstage_r11.py keeps it for the record).
+    SIGSTAGE_PROBE_r11.json keeps the figures for the record).
 
     BIT-EQUALITY contract (pinned in tests/test_imagehash.py):
     identical (id, b0..b3) multisets to

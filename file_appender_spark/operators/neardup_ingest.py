@@ -46,6 +46,7 @@ from contextlib import contextmanager, nullcontext
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from file_appender_spark.obs import stage
 from file_appender_spark.operators.arraykernels import dot
 from file_appender_spark.operators.lsh import (
     band_pairs,
@@ -509,12 +510,6 @@ def build_band_index(
     return int(n_buckets)
 
 
-# observability: which history source the last epoch against each
-# store actually used ('pruned' | 'wide') — driver-side only, set by
-# _history_access; q269's lifecycle oracle asserts the pruned path was
-# really taken (the q257-asserts-'incremental' pattern)
-_LAST_HISTORY_PATH: dict[str, str] = {}
-
 # Explicit per-store read-path override for certification drives
 # (q269's lifecycle oracle, the pytest path diagnostics). The byte
 # gate is a PERFORMANCE policy — after the r12 recalibration it
@@ -581,6 +576,7 @@ def _history_access(
     batch_bands: DataFrame,
     id_col: str,
     spec: dict,
+    rec: dict,
 ) -> tuple[DataFrame, DataFrame]:
     """The per-epoch store SOURCES (r9 verdict task 1): returns
 
@@ -600,7 +596,9 @@ def _history_access(
     partitions (+ the narrow tail of post-compaction appends): a
     small batch against a huge store reads only the touched
     directories. Otherwise the fused narrow wide scan runs — all-long
-    columns on a v2 store."""
+    columns on a v2 store. The epoch's run record ``rec`` gets the
+    path taken (``history_path``: ``pruned`` | ``wide``), which q269's
+    lifecycle oracle asserts."""
     payload_renames = [
         F.col(src).alias(dst) for src, dst in spec["payload"].items()
     ]
@@ -656,12 +654,12 @@ def _history_access(
             slice_src = slice_src.unionByName(
                 _bands_hash_long(tail, spec["n_bands"], id_col, spec["fh_cols"])
             )
-        _LAST_HISTORY_PATH[store_dir] = "pruned"
+        rec["history_path"] = "pruned"
     else:
         slice_src = _bands_hash_long(
             hist, spec["n_bands"], id_col, spec["fh_cols"]
         )
-        _LAST_HISTORY_PATH[store_dir] = "wide"
+        rec["history_path"] = "wide"
     return slice_src, payload_src
 
 
@@ -738,6 +736,7 @@ def _hist_dup_terms(
     id_col: str,
     spec: dict,
     cap: int | None,
+    rec: dict,
     reliable: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
     """History-side dup inputs of the BIG-store epoch shape, from the
@@ -776,7 +775,7 @@ def _hist_dup_terms(
     the candidate set). Small stores take _lean_dup_terms instead;
     the two shapes are pinned equal in tests/test_store_v2.py."""
     slice_src, payload_src = _history_access(
-        spark, store_dir, hist, batch_bands, id_col, spec
+        spark, store_dir, hist, batch_bands, id_col, spec, rec
     )
     sl, cand = _sliced_band_candidates(
         batch_bands, slice_src, id_col, cap, reliable=reliable
@@ -819,6 +818,7 @@ def _lean_dup_terms(
     id_col: str,
     spec: dict,
     cap: int | None,
+    rec: dict,
 ) -> tuple[DataFrame, DataFrame | None, DataFrame | None]:
     """Micro-batch (LEAN) dup-candidate terms with the verify payload
     CARRIED through the within-batch band self-join (r12, r11 verdict
@@ -890,7 +890,7 @@ def _lean_dup_terms(
     if hist is None:
         return wb_pairs, None, None
     slice_src, payload_src = _history_access(
-        spark, store_dir, hist, xb, id_col, spec
+        spark, store_dir, hist, xb, id_col, spec, rec
     )
     # no .distinct() under the broadcast: a semi-join probe tolerates
     # duplicate build keys, and the distinct was a whole shuffle stage
@@ -1078,6 +1078,7 @@ def _ingest_epoch(
     # kept batch signatures, so it is sized below
     cap = resolve_cap(band_bucket_cap, lambda: "auto")
     open_table_store(_STORE, store_dir, mod["params"], ingest=True)
+    epoch = stage(spark, "neardup.ingest", "epoch", store=store_dir)
     store_dir = table_dir(store_dir, "")
     store_exists = any(
         f.endswith(".parquet") for f in store_fs_for(store_dir).listdir(store_dir)
@@ -1089,7 +1090,7 @@ def _ingest_epoch(
         )
         >= _EAGER_SLICE_MIN_STORE_ROWS
     )
-    with nullcontext() if big else _static_epoch_planning(spark):
+    with nullcontext() if big else _static_epoch_planning(spark), epoch as rec:
         sigs = mod["keep_sigs"](
             _with_index_cols(mod["sig_frame"](batch), n_bands, mod["fh_cols"]),
             reliable,
@@ -1118,7 +1119,7 @@ def _ingest_epoch(
             # the within-batch band self-join, no intermediate
             # .distinct()s — see _lean_dup_terms
             wb_pairs, hist_pairs, ident_pairs = _lean_dup_terms(
-                spark, store_dir, hist, sigs, id_col, mod, cap
+                spark, store_dir, hist, sigs, id_col, mod, cap, rec
             )
             dup_ids = as_id(wb_pairs.filter(verify))
             if hist_pairs is not None:
@@ -1139,7 +1140,7 @@ def _ingest_epoch(
             ).select(F.col("d2").alias("new_id"), F.col("d1").alias("old_id"))
             cands = cands.join(payload(sigs, mod["payload"], "old_id"), "old_id")
             cand_pay, ident_pay = _hist_dup_terms(
-                spark, store_dir, hist, sigs, batch_bands, id_col, mod, cap,
+                spark, store_dir, hist, sigs, batch_bands, id_col, mod, cap, rec,
                 reliable=reliable,
             )
             cands = cands.unionByName(cand_pay.select(*cands.columns))
@@ -1583,7 +1584,7 @@ def _minhash_sig_frame(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     1.17 -> 0.55s per 2500-doc batch under FORCED full-column
     evaluation — a bare count() lets Catalyst prune the signature
     expressions and under-measures both spellings
-    (scripts/probe_sigstage_r11.py).
+    (SIGSTAGE_PROBE_r11.json).
     Output is BIT-IDENTICAL to _minhash_sig_frame_exploded (pinned in
     tests/test_operators.py): the fold's init value _MH_P strictly
     exceeds every (a*h+b) % _MH_P, all arithmetic stays bigint, and

@@ -83,7 +83,9 @@ import os
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
+from file_appender_spark.obs import stage
 from file_appender_spark.operators.lsh import band_pairs, hot_buckets, resolve_cap
 from file_appender_spark.operators.neardup_ingest import (
     _EAGER_SLICE_MIN_STORE_ROWS,
@@ -121,6 +123,7 @@ _FH_COLS = [f"b{i}" for i in range(_N_BANDS)]
 # r9 ADVICE: exact-count ceiling for broadcasting the candidate set
 # into the sh32 payload fetch (mirrors neardup_ingest's gate)
 _BROADCAST_CAND_ROWS = 4_000_000
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"  # footer key
 
 
 def _with_sig_hashes(sigs: DataFrame) -> DataFrame:
@@ -192,6 +195,26 @@ def _table_rows(store_dir: str, table: str, stop_at: int) -> int:
             if total >= stop_at:
                 break
     return total
+
+
+def _read_table(
+    spark: SparkSession, store_dir: str, table: str, epoch: str | None = None
+) -> DataFrame:
+    """Table ``table``, or its ``epoch`` partition, with the Spark
+    schema stamped in one parquet FOOTER: a schema-less read runs a
+    one-task footer-merge job per call. Falls back to inference when
+    no footer carries the stamp."""
+    fs = store_fs_for(store_dir)
+    d = table_dir(store_dir, table)
+    path = d if epoch is None else os.path.join(d, f"batch={epoch}")
+    parts = sorted(p for p in fs.listdir(path) if p.startswith("batch="))
+    reader = spark.read.option("basePath", d)
+    for sub in (path, *[os.path.join(path, p) for p in parts]):
+        schema = fs.parquet_schema(sub)
+        if schema is not None and _SPARK_SCHEMA_KEY in (schema.metadata or {}):
+            stamped = json.loads(schema.metadata[_SPARK_SCHEMA_KEY])
+            return reader.schema(StructType.fromJson(stamped)).parquet(path)
+    return reader.parquet(path)
 
 
 def create_manifest_pairstore(store_dir: str) -> str:
@@ -379,13 +402,15 @@ def build_pair_graph(
         pairs = _verified_pairs(
             cand, _new_side(sigs, id_col), _old_side(sigs, id_col), threshold
         )
-        if cap is not None:
-            # a capped BUILD can drop candidates too — the shared binding
-            # test, history side empty (the build IS the corpus), marker
-            # before the epoch writes like the ingest path
-            _mark_if_cap_bound(store_dir, None, bands, cap)
-        write_table_epoch(sigs, store_dir, "sigs", "base")
-        write_table_epoch(pairs, store_dir, "pairs", "base")
+        with stage(spark, "pairstore.build", "signatures", store=store_dir):
+            write_table_epoch(sigs, store_dir, "sigs", "base")
+        with stage(spark, "pairstore.build", "pairs", store=store_dir):
+            if cap is not None:
+                # a capped BUILD can drop candidates too — the shared
+                # binding test, history side empty (the build IS the
+                # corpus), marker before the pairs epoch like the ingest
+                _mark_if_cap_bound(store_dir, None, bands, cap)
+            write_table_epoch(pairs, store_dir, "pairs", "base")
         sigs.unpersist()
 
     # the shared rebuild protocol (storefs.rebuild_table_store): the
@@ -431,71 +456,73 @@ def pairstore_ingest_batch(
         )
     cap = resolve_cap(band_bucket_cap, _auto_cap)
     threshold = float(open_table_store(_STORE, store_dir, ingest=True)["threshold"])
-    sigs = _with_sig_hashes(
-        pair_signatures(batch, id_col, text_col)
-    ).localCheckpoint(eager=True)
+    op, known = "pairstore.ingest", {"store": store_dir, "epoch": str(batch_id)}
+    with stage(spark, op, "signatures", **known):
+        sigs = _with_sig_hashes(
+            pair_signatures(batch, id_col, text_col)
+        ).localCheckpoint(eager=True)
     batch_bands = _bands_hash_long(sigs, _N_BANDS, id_col, _FH_COLS)
 
-    sd = table_dir(store_dir, "sigs")
-    hist = (
-        spark.read.option("basePath", sd)
-        .parquet(sd)
-        # cast: the partition column infers int when every epoch id is
-        # numeric, string once 'base' is present — normalize
-        .filter(F.col("batch").cast("string") != str(batch_id))
-        .drop("batch")
-    )
-    # ONE narrow store scan per epoch (r9 verdict task 1): the hashed
-    # band stack — precomputed long columns on a v2 sigs table, derived
-    # from the strings on a legacy one — is semi-sliced by the batch's
-    # (band, bh) set and checkpointed; the over-cap histogram, the
-    # candidate join AND the cap marker all read that one frame
-    store_rows = _table_rows(store_dir, "sigs", _EAGER_SLICE_MIN_STORE_ROWS)
-    big = store_rows >= _EAGER_SLICE_MIN_STORE_ROWS
-    hist_slice, new_vs_hist = _sliced_band_candidates(
-        batch_bands,
-        _bands_hash_long(hist, _N_BANDS, id_col, _FH_COLS),
-        id_col,
-        cap,
-        materialize=big,
-    )
-    new_vs_new = band_pairs(
-        batch_bands.select(id_col, *_HASH_KEYS), id_col, cap, _HASH_KEYS
-    ).select(F.col("d2").alias("new_id"), F.col("d1").alias("old_id"))
-    ns = _new_side(sigs, id_col)
-    if cap is not None and big:
-        # r9 ADVICE: gate the candidate broadcast on the EXACT row
-        # count (checkpoint first), never force it — a large batch
-        # under a big cap can legally exceed driver memory
-        new_vs_hist = new_vs_hist.localCheckpoint(eager=True)
-        bounded = new_vs_hist.count() <= _BROADCAST_CAND_ROWS
-    else:
-        # small stores take the lean shape: candidates are bounded by
-        # min(batch x bands x cap, store x bands), so the hint is safe
-        # without paying checkpoint+count jobs; cap None stays unhinted
-        bounded = cap is not None
-    pairs = _verified_pairs(
-        new_vs_hist,
-        ns,
-        _old_side(hist, id_col, dedup=False),
-        threshold,
-        broadcast_cand=bounded,
-    ).unionByName(
-        _verified_pairs(new_vs_new, ns, _old_side(sigs, id_col), threshold)
-    ).distinct()
-    # marker FIRST, epoch writes after: a crash in between leaves a
-    # marked-but-incomplete epoch (conservative — the retry rewrites
-    # it), never a missing-edges store that pairstore_is_exact calls
-    # exact (2nd review pass, r9)
-    if cap is not None:
-        _mark_if_cap_bound(store_dir, hist_slice, batch_bands, cap)
-    write_table_epoch(pairs, store_dir, "pairs", batch_id)
+    with stage(spark, op, "pairs", **known):
+        hist = (
+            _read_table(spark, store_dir, "sigs")
+            # cast: the partition column infers int when every epoch id
+            # is numeric, string once 'base' is present — normalize
+            .filter(F.col("batch").cast("string") != str(batch_id))
+            .drop("batch")
+        )
+        # ONE narrow store scan per epoch (r9 verdict task 1): the hashed
+        # band stack (long columns on a v2 sigs table, derived from the
+        # strings on a legacy one) is semi-sliced by the batch's (band,
+        # bh) set and checkpointed; the over-cap histogram, candidate
+        # join AND cap marker all read that one frame
+        store_rows = _table_rows(store_dir, "sigs", _EAGER_SLICE_MIN_STORE_ROWS)
+        big = store_rows >= _EAGER_SLICE_MIN_STORE_ROWS
+        hist_slice, new_vs_hist = _sliced_band_candidates(
+            batch_bands,
+            _bands_hash_long(hist, _N_BANDS, id_col, _FH_COLS),
+            id_col,
+            cap,
+            materialize=big,
+        )
+        new_vs_new = band_pairs(
+            batch_bands.select(id_col, *_HASH_KEYS), id_col, cap, _HASH_KEYS
+        ).select(F.col("d2").alias("new_id"), F.col("d1").alias("old_id"))
+        ns = _new_side(sigs, id_col)
+        if cap is not None and big:
+            # r9 ADVICE: gate the candidate broadcast on the EXACT row
+            # count (checkpoint first), never force it — a large batch
+            # under a big cap can legally exceed driver memory
+            new_vs_hist = new_vs_hist.localCheckpoint(eager=True)
+            bounded = new_vs_hist.count() <= _BROADCAST_CAND_ROWS
+        else:
+            # small stores take the lean shape: candidates are bounded
+            # by min(batch x bands x cap, store x bands), so the hint is
+            # safe without checkpoint+count jobs; cap None stays unhinted
+            bounded = cap is not None
+        pairs = _verified_pairs(
+            new_vs_hist,
+            ns,
+            _old_side(hist, id_col, dedup=False),
+            threshold,
+            broadcast_cand=bounded,
+        ).unionByName(
+            _verified_pairs(new_vs_new, ns, _old_side(sigs, id_col), threshold)
+        ).distinct()
+        # marker FIRST, epoch writes after: a crash in between leaves a
+        # marked-but-incomplete epoch (conservative — the retry rewrites
+        # it), never a missing-edges store that pairstore_is_exact calls
+        # exact (2nd review pass, r9)
+        if cap is not None:
+            _mark_if_cap_bound(store_dir, hist_slice, batch_bands, cap)
+        write_table_epoch(pairs, store_dir, "pairs", batch_id)
     if not _store_is_v2(hist):
         # epochs always match the store's existing sig schema so the
         # merged partitioned read is never mixed-version; compaction
         # upgrades the whole table atomically
         sigs = sigs.drop("fh", *[f"bh{bi}" for bi in range(_N_BANDS)])
-    write_table_epoch(sigs, store_dir, "sigs", batch_id)
+    with stage(spark, op, "sigs_write", **known):
+        write_table_epoch(sigs, store_dir, "sigs", batch_id)
 
 
 def _mark_if_cap_bound(
@@ -585,9 +612,8 @@ def read_pairs(
         store_dir,
         None if expected_threshold is None else _params(expected_threshold),
     )
-    d = table_dir(store_dir, "pairs")
-    pairs = spark.read.option("basePath", d).parquet(d).select("d1", "d2", "jaccard")
-    if len(_epoch_ids(d)) > 1:
+    pairs = _read_table(spark, store_dir, "pairs").select("d1", "d2", "jaccard")
+    if len(_epoch_ids(table_dir(store_dir, "pairs"))) > 1:
         pairs = pairs.distinct()
     return pairs
 
@@ -608,8 +634,7 @@ def store_missing_ids(
     a coverage gap). One columnar id scan of the sigs table + an
     anti-join; no payload columns touched."""
     open_table_store(_STORE, store_dir)
-    d = table_dir(store_dir, "sigs")
-    sigs_ids = spark.read.option("basePath", d).parquet(d).select(F.col(id_col))
+    sigs_ids = _read_table(spark, store_dir, "sigs").select(F.col(id_col))
     return doc_ids.select(id_col).join(sigs_ids, id_col, "left_anti")
 
 
@@ -676,14 +701,10 @@ def _fold_new_edges(
     components are never read."""
     from file_appender_spark.operators.components import _clusters
 
-    asg = spark.read.parquet(table_dir(store_dir, "clusters")).select(
-        "doc", "cluster"
-    )
+    asg = _read_table(spark, store_dir, "clusters").select("doc", "cluster")
     new_edges = None
     for e in new_epochs:
-        part = spark.read.parquet(
-            os.path.join(table_dir(store_dir, "pairs"), f"batch={e}")
-        ).select("d1", "d2")
+        part = _read_table(spark, store_dir, "pairs", e).select("d1", "d2")
         new_edges = part if new_edges is None else new_edges.unionByName(part)
     # the edge count rides the checkpoint's own job; it bounds the
     # representative-space edges below, which sizes their components
@@ -772,37 +793,35 @@ def refresh_clusters(
             f"{sorted(live)}); run a full refresh"
         )
     use_incremental = can_fold if mode == "auto" else (mode == "incremental")
-    if use_incremental:
-        new_epochs = sorted(live - covers)
-        if not new_epochs:
-            return "fresh"  # assignment already covers every epoch
-        cl = _fold_new_edges(spark, store_dir, new_epochs)
-        used = "incremental"
-    else:
-        pairs = read_pairs(spark, store_dir).select("d1", "d2")
-        # the footer count bounds the pair rows without a job
-        bound = components._DRIVER_EDGE_BOUND
-        n_pairs = _table_rows(store_dir, "pairs", bound + 1)
-        cl = components._clusters(pairs, "d1", "d2", n_pairs).select(
-            "doc", "cluster"
+    if use_incremental and not live - covers:
+        return "fresh"  # assignment already covers every epoch
+    used = "incremental" if use_incremental else "full"
+    op, known = "pairstore.refresh", {"store": store_dir, "mode": used}
+    with stage(spark, op, "components", **known):
+        if use_incremental:
+            cl = _fold_new_edges(spark, store_dir, sorted(live - covers))
+        else:
+            pairs = read_pairs(spark, store_dir).select("d1", "d2")
+            # the footer count bounds the pair rows without a job
+            bound = components._DRIVER_EDGE_BOUND
+            n_pairs = _table_rows(store_dir, "pairs", bound + 1)
+            cl = components._clusters(pairs, "d1", "d2", n_pairs).select(
+                "doc", "cluster"
+            )
+    with stage(spark, op, "clusters_write", **known) as rec:
+        # the shared classic-two-rename vs manifest-publish swap; a
+        # repartition(>=1) guarantees at least one footer-bearing file
+        # so an empty graph still reads back with a schema
+        rec["files"] = n = max(1, spark.sparkContext.defaultParallelism // 8)
+        rec["manifest_version"] = swap_table_dir(
+            os.path.join(store_dir, "clusters"),
+            lambda tmp: cl.repartition(n).write.mode("overwrite").parquet(tmp),
+            tmp_suffix=".refreshing",
         )
-        used = "full"
-    # the shared classic-two-rename vs manifest-publish swap; a
-    # repartition(>=1) guarantees at least one footer-bearing file so
-    # an empty graph still reads back with a schema
-    swap_table_dir(
-        os.path.join(store_dir, "clusters"),
-        lambda tmp: cl.repartition(
-            max(1, spark.sparkContext.defaultParallelism // 8)
+        fs.publish_text(
+            state,
+            json.dumps({"covers": _epoch_ids(pairs_dir)}, sort_keys=True),
         )
-        .write.mode("overwrite")
-        .parquet(tmp),
-        tmp_suffix=".refreshing",
-    )
-    fs.publish_text(
-        state,
-        json.dumps({"covers": _epoch_ids(pairs_dir)}, sort_keys=True),
-    )
     return used
 
 
@@ -840,7 +859,7 @@ def read_cluster_assignment(
             f"{sorted(live - covers)} are not folded in — run "
             "refresh_clusters (or pass allow_stale=True to read anyway)"
         )
-    return spark.read.parquet(table_dir(store_dir, "clusters"))
+    return _read_table(spark, store_dir, "clusters")
 
 
 def compact_pairstore(spark: SparkSession, store_dir: str) -> None:
@@ -878,11 +897,11 @@ def compact_pairstore(spark: SparkSession, store_dir: str) -> None:
             ),
         )
 
-    def epochs(d: str) -> DataFrame:
-        return spark.read.option("basePath", d).parquet(d).drop("batch")
+    def epochs(table: str) -> DataFrame:
+        return _read_table(spark, store_dir, table).drop("batch")
 
     def sigs(d: str) -> DataFrame:
-        merged = epochs(d)
+        merged = epochs("sigs")
         # compaction is the v1 -> v2 migration point: fold in the
         # precomputed band-hash columns so later epochs scan longs
         return merged if _store_is_v2(merged) else _with_sig_hashes(merged)
@@ -892,6 +911,9 @@ def compact_pairstore(spark: SparkSession, store_dir: str) -> None:
     # good; read_pairs dedups them on the fly until compaction. Sigs
     # never duplicate: each doc's signature lives in exactly its own
     # overwritten epoch.
-    compact_tables(
-        spark, store_dir, {"sigs": sigs, "pairs": lambda d: epochs(d).distinct()}
-    )
+    with stage(spark, "pairstore.compact", "compact", store=store_dir) as rec:
+        rec["files"], rec["manifest_version"] = compact_tables(
+            spark,
+            store_dir,
+            {"sigs": sigs, "pairs": lambda d: epochs("pairs").distinct()},
+        )

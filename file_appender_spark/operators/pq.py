@@ -42,6 +42,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from file_appender_spark.obs import stage
 from file_appender_spark.operators.arraykernels import (
     as_double,
     fold_dot,
@@ -208,7 +209,8 @@ def pq_encode(
     a NULL vector encodes to code 0 in every subspace with a NULL
     recon_err2, like the SQL spelling."""
     keep = keep_cols if keep_cols is not None else [df.columns[0]]
-    return _pq_encode_arrow(df, vec_col, codebook, keep)
+    with stage(df.sparkSession, "pq.encode", "plan"):
+        return _pq_encode_arrow(df, vec_col, codebook, keep)
 
 
 def pq_train(

@@ -41,6 +41,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from file_appender_spark.obs import stage
 from file_appender_spark.operators.arraykernels import (
     as_double,
     dot,
@@ -428,7 +429,9 @@ def srp_neardup(
     # session ends. The signature stage is the vectorized Arrow pass
     # (srp_sigs_arrow, bit-identical to the SQL folds;
     # SRP_BREAKDOWN_r12: those folds were 84% of end-to-end wall).
-    coefs = _srp_coefs(corpus.sparkSession, n_bits, _vec_dim(corpus, F.col(vec_col)))
+    spark = corpus.sparkSession
+    with stage(spark, "similarity.srp_neardup", "plan"):
+        coefs = _srp_coefs(spark, n_bits, _vec_dim(corpus, F.col(vec_col)))
     sigs = srp_sigs_arrow(corpus, id_col, vec_col, n_bits, n_bands, coefs).persist(
         StorageLevel.MEMORY_AND_DISK
     )
@@ -552,12 +555,13 @@ def ann_sign_ivf(
     query the scored candidates stay ~target_cell_size * nprobe rows
     regardless of corpus size (the fix for the fixed-cell 14.2x probe
     regression recorded in SCALING.md)."""
-    if n_bits is None:
-        if n_rows is None:
-            n_rows = corpus.count()
-        n_bits = ivf_bits_for(n_rows, target_cell_size)
-
-    coefs = _srp_coefs(corpus.sparkSession, n_bits, _vec_dim(corpus, F.col(vec_col)))
+    spark = corpus.sparkSession
+    with stage(spark, "similarity.ann_sign_ivf", "plan") as rec:
+        if n_bits is None:
+            if n_rows is None:
+                n_rows = rec["rows"] = corpus.count()
+            n_bits = ivf_bits_for(n_rows, target_cell_size)
+        coefs = _srp_coefs(spark, n_bits, _vec_dim(corpus, F.col(vec_col)))
     # both sides take the same one-band signature pass: b0 is the
     # packed n_bits cell id, bit-identical to the SQL spelling
     c = srp_sigs_arrow(corpus, id_col, vec_col, n_bits, 1, coefs).select(

@@ -2,10 +2,10 @@
 oracle (r10 verdict task 5).
 
 - q269: build the sidecar -> ingest a minute-level epoch through the
-  PRUNED history path (asserted via neardup_ingest._LAST_HISTORY_PATH,
-  the q257-asserts-'incremental' pattern) -> append a tail epoch that
-  falls back to the fused wide scan -> compact again (index rebuilt,
-  tail folded) -> serve. The admitted set across all three epochs is
+  PRUNED history path (asserted via the epoch run record's
+  ``history_path``, the q257-asserts-'incremental' pattern) -> append
+  a tail epoch that falls back to the fused wide scan -> compact again
+  (index rebuilt, tail folded) -> serve. The admitted set across all three epochs is
   pinned against a DuckDB mirror of the exact protocol over q52's own
   CTE chain — until now the pruned read path was pytest-pinned
   (tests/test_store_v2.py) but no driver hash had ever exercised it.
@@ -113,15 +113,21 @@ def q269_textdup_index_lifecycle(
     the admitted (doc_id, epoch) set, hash-equal to the protocol
     mirror in DuckDB. Maintenance must never change admit decisions;
     the pruned/wide path split must never change them either."""
+    from file_appender_spark.obs import records
     from file_appender_spark.operators.neardup_ingest import (
         _FORCE_HISTORY_PATH,
-        _LAST_HISTORY_PATH,
         _band_index_state,
         compact_store,
         textdup_ingest_batch,
     )
 
     store = _scratch("q269_textidx")
+
+    def history_path() -> str | None:  # what the latest epoch read
+        ep = [r for r in records() if r["op"] == "neardup.ingest"]
+        ep = [r for r in ep if r["store"] == store]
+        return ep[-1].get("history_path") if ep else None
+
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
     e0 = docs.filter(F.col("doc_id") % 4 == 0)
     e1 = docs.filter((F.col("doc_id") % 4 == 1) & (F.col("doc_id") < 40))
@@ -173,10 +179,10 @@ def q269_textdup_index_lifecycle(
         )
     finally:
         _FORCE_HISTORY_PATH.pop(store, None)
-    if seeded and _LAST_HISTORY_PATH.get(store) != "pruned":
+    if seeded and history_path() != "pruned":
         raise AssertionError(
             "the minute-level epoch must take the PRUNED index path, "
-            f"got {_LAST_HISTORY_PATH.get(store)!r}"
+            f"got {history_path()!r}"
         )
     emit(
         textdup_ingest_batch(
@@ -186,10 +192,10 @@ def q269_textdup_index_lifecycle(
         "append",
     )
     if seeded:
-        if _LAST_HISTORY_PATH.get(store) != "wide":
+        if history_path() != "wide":
             raise AssertionError(
                 "the large tail epoch must fall back to the wide scan, "
-                f"got {_LAST_HISTORY_PATH.get(store)!r}"
+                f"got {history_path()!r}"
             )
         state = _band_index_state(store)
         if state is None or not state["tail"]:

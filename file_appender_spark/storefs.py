@@ -78,6 +78,8 @@ class StoreFS(Protocol):
 
     def parquet_rows(self, directory: str, stop_at: int | None = None) -> int: ...
 
+    def parquet_schema(self, directory: str): ...
+
     def parquet_data_bytes(
         self,
         directory: str,
@@ -179,6 +181,15 @@ class LocalStoreFS:
                 if stop_at is not None and total >= stop_at:
                     return total
         return total
+
+    def parquet_schema(self, directory: str):
+        """The first parquet file's FOOTER schema (no Spark job), or None."""
+        import pyarrow.parquet as pq
+
+        for f in sorted(os.listdir(directory)) if os.path.isdir(directory) else []:
+            if f.endswith(".parquet") and not f.startswith((".", "_")):
+                return pq.read_schema(os.path.join(directory, f))
+        return None
 
     def parquet_data_bytes(
         self,
@@ -367,6 +378,15 @@ class ArrowStoreFS:
                 if stop_at is not None and total >= stop_at:
                     return total
         return total
+
+    def parquet_schema(self, directory: str):
+        import pyarrow.parquet as pq
+
+        for name in sorted(self.listdir(directory)) if self.isdir(directory) else []:
+            if name.endswith(".parquet") and not name.startswith((".", "_")):
+                path = f"{self._resolve(directory)}/{name}"
+                return pq.read_schema(path, filesystem=self._filesystem())
+        return None
 
     def parquet_data_bytes(
         self,
@@ -701,9 +721,10 @@ def migrate_tables_to_manifest(spec: "TableStore", store_dir: str) -> str:
     return store_dir
 
 
-def swap_table_dir(base: str, write, tmp_suffix: str = ".compacting") -> None:
+def swap_table_dir(base: str, write, tmp_suffix: str = ".compacting") -> str | None:
     """The per-table swap both protocols share: call ``write(tmp)`` to
     produce the table's full next state at ``tmp``, then make it live.
+    Returns the published manifest version (None for classic layout).
 
     - CLASSIC layout (no manifest): ``tmp`` is a ``tmp_suffix``
       sibling; the crash-safe two-rename swap (needs atomic directory
@@ -738,6 +759,7 @@ def swap_table_dir(base: str, write, tmp_suffix: str = ".compacting") -> None:
         live_old = os.path.join(base, cur)
         if fs.exists(live_old):
             fs.rmtree(live_old)
+        return os.path.basename(tmp)
 
 
 # --------------------------------------------------------------------------
@@ -958,9 +980,10 @@ def rebuild_table_store(
     fs.remove(marker)  # critical section closed — store is whole again
 
 
-def compact_tables(spark, store_dir: str, folds: dict) -> None:
+def compact_tables(spark, store_dir: str, folds: dict) -> tuple[int, dict]:
     """Fold each named table into one fresh ``batch=base`` partition:
-    ``folds[name](live_dir)`` is the table's merged content. Output
+    ``folds[name](live_dir)`` is the table's merged content. Returns
+    the files written and each manifest table's new version. Output
     files are sized from the table's measured bytes — without this
     every compaction writes one tiny file per shuffle partition,
     recreating the small-file problem it exists to fix — and each
@@ -969,16 +992,19 @@ def compact_tables(spark, store_dir: str, folds: dict) -> None:
     ``quiesce`` over the same tables first."""
     from file_appender_spark.operators.layout import dir_bytes, plan_file_count
 
+    files, versions = 0, {}
     for name, fold in folds.items():
         d = table_dir(store_dir, name)
         merged = fold(d)
         n = plan_file_count(dir_bytes(spark, d))
-        swap_table_dir(
+        versions[name] = swap_table_dir(
             os.path.join(store_dir, name),
             lambda tmp, m=merged, k=n: m.repartition(k)
             .write.mode("overwrite")
             .parquet(os.path.join(tmp, "batch=base")),
         )
+        files += n
+    return files, {k: v for k, v in versions.items() if v}
 
 
 def store_fs_for(path: str) -> StoreFS:

@@ -1,8 +1,8 @@
 #!/usr/bin/env python
 """Parameterized per-tranche 10x probe (replaces the probe_r6c..g
 copies — review finding): run the named tranche's queries at sf0.1
-vs the 10x replica, idle, fresh plans per timed run
-(probe_r6.query_probe methodology).
+vs the 10x replica, idle, best-of-2 over fresh plans per timed run
+(``query_probe``).
 
     python scripts/probe_tranche.py tranche9
 
@@ -13,11 +13,14 @@ key. The TRANCHES dict keeps every historical run reproducible.
 from __future__ import annotations
 
 import json
+import os
 import sys
+import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from file_appender_spark.session import get_spark  # noqa: E402
+from scripts import scale_probe as sp  # noqa: E402
 
 TRANCHES: dict[str, list[str]] = {
     "tranche7_tranche8": [
@@ -102,10 +105,37 @@ TRANCHES: dict[str, list[str]] = {
 }
 
 
-def main() -> None:
-    from scripts import probe_r6 as p6
-    from scripts import scale_probe as sp
+def best_of(k, fn):
+    best = None
+    for _ in range(k):
+        t0 = time.perf_counter()
+        fn()
+        w = time.perf_counter() - t0
+        best = w if best is None else min(best, w)
+    return best
 
+
+def query_probe(spark, name, runs=2):
+    """Each timed run rebuilds the plan (registry.build_fresh): the
+    memoized DataFrame shares RDDs across actions, so a repeat
+    collect reuses already-materialized shuffle map stages and times
+    ~0 (measured 1.75s -> 0.05s on q161) — best-of over fresh plans
+    measures real executions only."""
+    from file_appender_spark.queries.registry import build_fresh
+
+    small = best_of(runs, lambda: build_fresh(spark, sp.SRC, name).collect())
+    big = best_of(runs, lambda: build_fresh(spark, sp.DST, name).collect())
+    row = {
+        "sf0.1_sec": round(small, 2),
+        "sf1_sec": round(big, 2),
+        "ratio": round(big / small, 1),
+    }
+    print(f"# {name}: {small:.2f}s -> {big:.2f}s (x{big / small:.1f})",
+          file=sys.stderr)
+    return row
+
+
+def main() -> None:
     tranche = sys.argv[1]
     names = TRANCHES[tranche]
     spark = get_spark(app_name=f"probe_{tranche}")
@@ -118,7 +148,7 @@ def main() -> None:
 
     out = {"probe": f"{tranche}_10x", "factor": 10}
     for name in names:
-        out[name] = p6.query_probe(spark, name)
+        out[name] = query_probe(spark, name)
     print(json.dumps(out))
 
 

@@ -51,6 +51,21 @@ def test_components_long_path_needs_iterations(spark, monkeypatch):
     assert _on_both_paths(monkeypatch, lambda: _labels(edges)) == [want, want]
 
 
+def test_components_distributed_path_converges_on_chain(spark, monkeypatch):
+    # path 0-1-...-199: plain min-label propagation needs ~199 rounds,
+    # pointer jumping about log2(199); 25 must be enough on both paths
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(199)], "src long, dst long"
+    )
+
+    def run():
+        labels = connected_components(edges, max_iterations=25).collect()
+        return {tuple(r) for r in labels}
+
+    want = {(i, 0) for i in range(200)}
+    assert _on_both_paths(monkeypatch, run) == [want, want]
+
+
 def test_components_deterministic(spark, monkeypatch):
     edges = spark.createDataFrame(
         [(5, 3), (3, 8), (2, 9), (7, 2)], "src long, dst long"

@@ -20,6 +20,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from file_appender_spark.obs import records
 from file_appender_spark.operators.pairstore import (
     build_pair_graph,
     compact_pairstore,
@@ -761,11 +762,11 @@ def test_curate_reports_capped_store(spark, tmp_path):
 
 
 # Spark jobs a full cluster refresh of the tiny store below may run:
-# the pairs read's schema job, the driver components' one Arrow
-# collect, and the clusters write (shuffle + write). Measured 4; the
-# distributed components loop ran 16. Lower it when a job goes away;
-# raising it needs a stated cause.
-_FULL_REFRESH_JOB_BUDGET = 4
+# the driver components' one Arrow collect and the clusters write
+# (shuffle + write); the pairs read takes its schema from a footer.
+# Measured 3; the distributed components loop ran 16. Lower it when a
+# job goes away; raising it needs a stated cause.
+_FULL_REFRESH_JOB_BUDGET = 3
 
 
 def test_full_refresh_job_budget(spark, tmp_path):
@@ -775,15 +776,12 @@ def test_full_refresh_job_budget(spark, tmp_path):
     )
     store = str(tmp_path / "budget")
     build_pair_graph(spark, docs, store)
-    sc = spark.sparkContext
-    group = "test_full_refresh_job_budget"
-    sc.setJobGroup(group, group)
-    try:
-        assert refresh_clusters(spark, store, mode="full") == "full"
-    finally:
-        sc._jsc.clearJobGroup()
-    jobs = sc.statusTracker().getJobIdsForGroup(group)
-    assert 0 < len(jobs) <= _FULL_REFRESH_JOB_BUDGET, sorted(jobs)
+    before = {r["seq"] for r in records()}
+    assert refresh_clusters(spark, store, mode="full") == "full"
+    recs = [r for r in records() if r["seq"] not in before]
+    assert {(r["op"], r["store"]) for r in recs} == {("pairstore.refresh", store)}
+    jobs = [j for r in recs for j in r["jobs"]]
+    assert 0 < len(jobs) <= _FULL_REFRESH_JOB_BUDGET, recs
     assert set(_cluster_rows(read_cluster_assignment(spark, store))) == {
         (i, 0) for i in range(12)
     }

@@ -11,6 +11,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from file_appender_spark.obs import records
 from file_appender_spark.operators.neardup_ingest import (
     _INDEX_DIR,
     _INDEX_META,
@@ -27,6 +28,15 @@ from file_appender_spark.operators.neardup_ingest import (
 )
 
 TEXT_PARAMS = {"modality": "minhash", "n_slots": 16, "n_bands": 4}
+
+
+def _history_path(store):
+    """The history source the store's latest ingest epoch read, from
+    its run record."""
+    epochs = [
+        r for r in records() if r["op"] == "neardup.ingest" and r["store"] == store
+    ]
+    return epochs[-1].get("history_path")
 
 
 def _docs(spark, ids_texts):
@@ -416,14 +426,12 @@ def test_band_index_rows_are_id_only_and_meta_has_bytes(spark, tmp_path):
 
 def test_pruned_epoch_sets_history_path_diagnostic(spark, tmp_path):
     """The q269 lifecycle oracle asserts the pruned path was really
-    taken; this pins the diagnostic it reads (_LAST_HISTORY_PATH) and
+    taken; this pins the diagnostic it reads (the epoch run record's
+    ``history_path``) and
     the explicit override it uses (_FORCE_HISTORY_PATH — the r12
     recalibrated byte gate correctly refuses to prune fixture-sized
     stores, so certification drives force the path)."""
-    from file_appender_spark.operators.neardup_ingest import (
-        _FORCE_HISTORY_PATH,
-        _LAST_HISTORY_PATH,
-    )
+    from file_appender_spark.operators.neardup_ingest import _FORCE_HISTORY_PATH
 
     store = str(tmp_path / "diag")
     docs = _corpus(spark, 40, seed_tag="diag")
@@ -432,18 +440,18 @@ def test_pruned_epoch_sets_history_path_diagnostic(spark, tmp_path):
     ep = _docs(spark, [(900, "fresh words entirely unshared x y z")])
     # unforced at fixture scale: the gate routes wide (tiny store)
     textdup_ingest_batch(spark, ep, store)
-    assert _LAST_HISTORY_PATH[store] == "wide"
+    assert _history_path(store) == "wide"
     _FORCE_HISTORY_PATH[store] = "pruned"
     try:
         ep2 = _docs(spark, [(901, "more fresh unshared words p q r")])
         textdup_ingest_batch(spark, ep2, store)
     finally:
         _FORCE_HISTORY_PATH.pop(store, None)
-    assert _LAST_HISTORY_PATH[store] == "pruned"
+    assert _history_path(store) == "pruned"
     # a batch touching most buckets (the whole corpus re-ingested)
     # falls back to the wide scan under the byte gate
     textdup_ingest_batch(spark, _corpus(spark, 300, seed_tag="wide"), store)
-    assert _LAST_HISTORY_PATH[store] == "wide"
+    assert _history_path(store) == "wide"
 
 
 def test_unforced_gate_routes_pruned_end_to_end(spark, tmp_path):
@@ -458,10 +466,7 @@ def test_unforced_gate_routes_pruned_end_to_end(spark, tmp_path):
     _FORCE_HISTORY_PATH entry, and the assertion that the gate itself
     routed it through the index — with admits equal to a wide-routed
     twin store."""
-    from file_appender_spark.operators.neardup_ingest import (
-        _INDEX_META,
-        _LAST_HISTORY_PATH,
-    )
+    from file_appender_spark.operators.neardup_ingest import _INDEX_META
 
     docs = _corpus(spark, 40, seed_tag="unforced")
     ep = _corpus(spark, 60, seed_tag="unforced").filter(
@@ -484,7 +489,7 @@ def test_unforced_gate_routes_pruned_end_to_end(spark, tmp_path):
         out = textdup_ingest_batch(spark, ep, store)
         admitted[tag] = sorted(r["doc_id"] for r in out.collect())
         # the gate alone (no _FORCE_HISTORY_PATH) must pick the path
-        assert _LAST_HISTORY_PATH[store] == (
+        assert _history_path(store) == (
             "pruned" if tag == "gated" else "wide"
         )
     assert admitted["gated"] == admitted["wide"] and admitted["gated"]
