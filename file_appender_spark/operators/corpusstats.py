@@ -51,6 +51,7 @@ from file_appender_spark.storefs import (
     create_manifest_tables,
     migrate_tables_to_manifest,
     open_table_store,
+    read_table,
     rebuild_table_store,
     store_fs_for,
     table_dir,
@@ -320,15 +321,20 @@ def corpusstats_ingest_batch(
 # table (CSBREAK_r13: read_*_stats noop 0.38-0.47s each; the six
 # consumers touch the tables ~10 times). The merged view is a pure
 # function of the table's FILES, so it is memoized per (Spark app,
-# table dir, file fingerprint) as a lazily-localCheckpoint'ed frame:
-# the first consumer's action materializes the (tiny) merged table
-# once, every later consumer scans the checkpointed partitions — the
-# r12 "sides" single-evaluation pattern applied across consumer
-# calls. The fingerprint is the recursive FILE listing: parquet part
-# names are write-unique (task UUIDs), so any append (new epoch dir),
-# overwrite (new part names), compaction swap or migration changes it
-# and the stale entry is dropped. Nothing persists across processes —
-# a fresh session always recomputes from the parquet inputs.
+# table dir, file fingerprint) as a localCheckpoint(eager=False)
+# frame. That read is not fully lazy: planning the checkpoint under
+# AQE submits the merge's shuffle-map stage at call time (one job in
+# the read's run record). The first consumer's action then
+# materializes the (tiny) merged table once, and every later consumer
+# scans the checkpointed partitions — the r12 "sides"
+# single-evaluation pattern applied across consumer calls. The table
+# schema comes from a parquet footer (storefs.read_table), so the
+# read runs no schema-inference job. The fingerprint is the recursive
+# FILE listing: parquet part names are write-unique (task UUIDs), so
+# any append (new epoch dir), overwrite (new part names), compaction
+# swap or migration changes it and the stale entry is dropped.
+# Nothing persists across processes — a fresh session always
+# recomputes from the parquet inputs.
 # ---------------------------------------------------------------------------
 
 _VIEW_CACHE: dict[tuple, DataFrame] = {}
@@ -381,7 +387,7 @@ def _merged_view(
             while len(_VIEW_CACHE) >= _VIEW_CACHE_MAX:
                 del _VIEW_CACHE[next(iter(_VIEW_CACHE))]
             df = (
-                spark.read.parquet(d)
+                read_table(spark, store_dir, name)
                 .groupBy(*keys)
                 .agg(*[F.sum(c).cast("long").alias(c) for c in sums])
                 .localCheckpoint(eager=False)

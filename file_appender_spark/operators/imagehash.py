@@ -157,69 +157,6 @@ def ahash_wide(
     return _wide_from_cells(_cells(df, id_col, payload_col, grid), id_col, grid)
 
 
-def ahash_ingest_sigs_sql(
-    df: DataFrame, id_col: str, payload_col: str, grid: int = 64
-) -> DataFrame:
-    """ONE-CALL spelling of the ingest signature stage: ahash_wide's
-    strided-cell pipeline + the schema-v2 index columns (bh0..bh3 =
-    xxhash64(i, b_i), fh = xxhash64(b0..b3)) emitted by a single
-    ``spark.sql`` statement (r12, the lean-epoch fixed-overhead work).
-
-    Identical VALUES to
-    ``_with_index_cols(ahash_wide(df, ...).select(id, b0..b3))`` —
-    pinned in tests/test_imagehash.py::test_ahash_ingest_sigs_sql_
-    bitequal. The DataFrame spelling pays eager JVM analysis per
-    transformation (~0.3s of driver time per ingest epoch across its
-    7 ops, EPOCH_OVERHEAD_PROBE_r12); one SQL statement is parsed and
-    analyzed once. Rows with empty payloads produce no cells and are
-    absent, exactly like ahash_wide."""
-    if grid % 4 != 0 or grid // 4 > 64:
-        raise ValueError(f"grid must be a multiple of 4, <= 256: {grid}")
-    w = grid // 4
-    ident, pay = f"`{id_col}`", f"`{payload_col}`"
-    bit = "IF(s.cell * n_bytes > tot * s.k, 1L, 0L)"
-    bands = ", ".join(
-        f"aggregate(a, 0L, (acc, s) -> acc + IF(CAST(floor(s.c / {w}) AS INT)"
-        f" = {k}, shiftleft({bit}, s.c % {w}), 0L)) AS b{k}"
-        for k in range(4)
-    )
-    bhs = ", ".join(f"xxhash64({k}, b{k}) AS bh{k}" for k in range(4))
-    query = f"""
-    WITH e AS (
-      SELECT {ident}, length({pay}) AS n, i, p
-      FROM {{df}}
-      LATERAL VIEW posexplode(split(regexp_replace(hex({pay}), '(..)', '$1\x01'), '\x01')) t AS i, p
-      WHERE p != ''
-    ),
-    byt AS (
-      SELECT {ident}, n, CAST(i % {grid} AS INT) AS c,
-             CAST(16 * (instr('{_DIG}', substr(p, 1, 1)) - 1)
-                + (instr('{_DIG}', substr(p, 2, 1)) - 1) AS BIGINT) AS b
-      FROM e
-    ),
-    cells AS (
-      SELECT {ident}, c, max(n) AS n_bytes, sum(b) AS cell,
-             CAST(count(*) AS BIGINT) AS k
-      FROM byt GROUP BY {ident}, c
-    ),
-    g AS (
-      SELECT {ident}, max(n_bytes) AS n_bytes,
-             collect_list(struct(c, cell, k)) AS a
-      FROM cells GROUP BY {ident}
-    ),
-    withtot AS (
-      SELECT {ident}, n_bytes, a,
-             aggregate(a, 0L, (acc, s) -> acc + s.cell) AS tot
-      FROM g
-    ),
-    wide AS (SELECT {ident}, {bands} FROM withtot)
-    SELECT {ident}, b0, b1, b2, b3, {bhs},
-           xxhash64(b0, b1, b2, b3) AS fh
-    FROM wide
-    """
-    return df.sparkSession.sql(query, df=df)
-
-
 def image_sigs_arrow(
     df: DataFrame,
     id_col: str,

@@ -65,6 +65,7 @@ from file_appender_spark.storefs import (
     create_manifest_tables,
     migrate_tables_to_manifest,
     open_table_store,
+    read_table,
     resolve_manifest_dir,
     stamp_params,
     store_fs_for,
@@ -460,7 +461,7 @@ def build_band_index(
         # sweep); with the sidecar absent readers fall back cleanly
         return 0
     covers = _wide_files(store_dir)
-    hist = spark.read.parquet(store_dir)
+    hist = read_table(spark, store_dir, "")
     v2 = hist if _store_is_v2(hist) else _with_index_cols(
         hist, spec["n_bands"], spec["fh_cols"]
     )
@@ -1100,7 +1101,7 @@ def _ingest_epoch(
             # compaction — fine, the cap needs order-of-magnitude
             # accuracy only
             cap = mod["cap_for"](lambda: sigs.count() + _store_row_count(store_dir))
-        hist = spark.read.parquet(store_dir) if store_exists else None
+        hist = read_table(spark, store_dir, "") if store_exists else None
 
         def payload(src, renames, id_alias):
             return src.select(
@@ -1361,7 +1362,7 @@ def store_hot_buckets(
         n_bands = stamped
     elif n_bands is None:
         n_bands = 4
-    hist = spark.read.parquet(table_dir(store_dir, ""))
+    hist = read_table(spark, store_dir, "")
     return hot_buckets(
         hist.select(band_stack([f"b{bi}" for bi in range(n_bands)])), cap
     )
@@ -1427,7 +1428,7 @@ def compact_store(
     # ingest append leaves _temporary under the store while it runs
     stamp = open_table_store(_STORE, store_dir, quiesce=("",))
     data_dir = table_dir(store_dir, "")
-    df = spark.read.parquet(data_dir)
+    df = read_table(spark, store_dir, "")
     params_src = os.path.join(data_dir, _PARAMS_FILE)
     spec = None if stamp is None else _modality_spec(stamp)
     if spec is not None and not _store_is_v2(df):
@@ -1468,15 +1469,86 @@ def compact_store(
 # --------------------------------------------------------------------------
 
 
+# Cached per-name Column trees for the MinHash stage (r12): the
+# expressions are input-frame-independent (unresolved references
+# only), and building them costs ~0.2s of driver py4j round trips per
+# call — a visible share of the minute-level epoch's fixed floor
+# (EPOCH_OVERHEAD_PROBE_r12: sig_plan_built 0.39s of a ~4.7s epoch).
+# One process-wide build per column naming, reused by every call.
+# Safe to reuse: Columns are immutable expression trees and each
+# appears at most once per plan.
+_MH_COLS_CACHE: dict = {}
+
+
+def _shingled(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """(id, shingles): q52's distinct 3-word shingles (queries/llm.py's
+    shingle_expr over the declared whitespace tokenizer). Documents
+    with fewer than 3 words (empty and NULL text included) produce no
+    row: they cannot shingle, so they cannot pair. The one shingle
+    frame under every MinHash spelling — the text ingest, the pair
+    store and q52's pipeline."""
+    from file_appender_spark.operators.textstats import let_expr
+    from file_appender_spark.queries.llm import _WS, shingle_expr
+
+    cols = _MH_COLS_CACHE.get(("shingles", text_col))
+    if cols is None:
+        words = F.split(F.col(text_col), _WS)
+        # let_expr binds the split once per row: projection collapse
+        # would re-split inside every shingle element_at (~20x)
+        cols = (F.size(words) >= 3, let_expr(words, shingle_expr).alias("shingles"))
+        _MH_COLS_CACHE[("shingles", text_col)] = cols
+    keep, shingles = cols
+    return df.filter(keep).select(id_col, shingles)
+
+
+def _mh_sig_cols() -> list:
+    """mh (the 16 slots mh0..mh15 as one array) and the 4 band strings
+    b0..b3 (4 slots each, comma-joined like q52's string_agg)."""
+    from file_appender_spark.queries.llm import _MH_PARAMS
+
+    cols = _MH_COLS_CACHE.get("sig")
+    if cols is None:
+        n_slots = len(_MH_PARAMS)
+        cols = [F.array(*[F.col(f"mh{j}") for j in range(n_slots)]).alias("mh")] + [
+            F.concat_ws(",", *[F.col(f"mh{4 * bi + r}") for r in range(4)]).alias(
+                f"b{bi}"
+            )
+            for bi in range(n_slots // 4)
+        ]
+        _MH_COLS_CACHE["sig"] = cols
+    return cols
+
+
+def _minhash_slot_sigs(
+    df: DataFrame, id_col: str, h_col: str, keep: tuple = ()
+) -> DataFrame:
+    """(id, *keep, mh, b0..b3) over a frame whose ``h_col`` is an
+    in-row array of 32-bit shingle hashes: each of q52's 16 affine
+    slots is an ``array_min`` over that array (no explode, no
+    exchange; duplicates never change a min, so a 32-bit collision
+    changes nothing), and the slot array and band strings follow in a
+    SECOND projection. Catalyst does not inline a non-trivial
+    projection that is referenced more than once, so ``h_col`` (16
+    references) and every slot (2 references) are evaluated once."""
+    from file_appender_spark.queries.llm import _MH_P, _MH_PARAMS
+
+    slots = _MH_COLS_CACHE.get(("slots", h_col))
+    if slots is None:
+        slots = [
+            F.array_min(
+                F.transform(F.col(h_col), lambda h: (F.lit(a) * h + F.lit(b)) % _MH_P)
+            ).alias(f"mh{j}")
+            for j, (a, b) in enumerate(_MH_PARAMS)
+        ]
+        _MH_COLS_CACHE[("slots", h_col)] = slots
+    return df.select(id_col, *keep, *slots).select(id_col, *keep, *_mh_sig_cols())
+
+
 def _minhash_sigs_from_shingles(shingled: DataFrame, id_col: str) -> DataFrame:
     """The EXPLODED signature tail over an already-shingled frame
     (id, shingles): explode one row per shingle, md5-hash, 16 min
     aggregates under a groupBy(doc) exchange — the literal shape of
-    the q52 oracle SQL. This is the reuse-path half of the
-    minhash_signatures dispatch: when the caller persists the
-    shingled frame for a downstream exact verify (the q52 pipeline of
-    q52, q136 and curate's funnel), deriving signatures FROM it avoids
-    re-shingling and re-hashing every document."""
+    the q52 oracle SQL. The reuse branch of minhash_signatures."""
     from file_appender_spark.queries.llm import _MH_P, _MH_PARAMS, _tok_hash32
 
     hashed = shingled.select(
@@ -1488,39 +1560,7 @@ def _minhash_sigs_from_shingles(shingled: DataFrame, id_col: str) -> DataFrame:
             for j, (a, b) in enumerate(_MH_PARAMS)
         ]
     )
-    n_slots = len(_MH_PARAMS)
-    return sigs.select(
-        id_col,
-        F.array(*[F.col(f"mh{j}") for j in range(n_slots)]).alias("mh"),
-        *[
-            F.concat_ws(
-                ",", *[F.col(f"mh{4 * bi + r}") for r in range(4)]
-            ).alias(f"b{bi}")
-            for bi in range(n_slots // 4)
-        ],
-    )
-
-
-def _minhash_sig_frame_exploded(
-    df: DataFrame, id_col: str, text_col: str
-) -> DataFrame:
-    """REFERENCE spelling of the MinHash signature stage: shingle,
-    then the exploded tail (_minhash_sigs_from_shingles). Kept as the
-    bit-equality pin target for the fused production spelling below
-    (tests/test_operators.py::test_minhash_sig_fused_bitequal); on
-    the hot path only through the reuse branch of the
-    minhash_signatures dispatch."""
-    from file_appender_spark.queries.llm import _WS, let_expr, shingle_expr
-
-    words = F.split(F.col(text_col), _WS)
-    # let_expr: bind the split once per row (projection collapse would
-    # re-split inside every shingle element_at — 20x on this stage)
-    shingled = (
-        _spread(df)
-        .filter(F.size(words) >= 3)
-        .select(id_col, let_expr(words, shingle_expr).alias("shingles"))
-    )
-    return _minhash_sigs_from_shingles(shingled, id_col)
+    return sigs.select(id_col, *_mh_sig_cols())
 
 
 def minhash_signatures(
@@ -1529,129 +1569,40 @@ def minhash_signatures(
     text_col: str | None = None,
     shingled: DataFrame | None = None,
 ) -> DataFrame:
-    """ONE dispatch policy for the fused-vs-exploded MinHash signature
-    spellings (r11 verdict task 6). The crossover is STRUCTURAL, not
-    sized: SIGDISPATCH_PROBE_r12 measured the fused one-projection
-    spelling faster at EVERY doc length for the standalone stage
-    (1.69x at 54 avg words, 3.84x at 216, 4.20x at 864 — forced
-    full-column evaluation), so batch size or document length never
-    flips the choice. What flips it is REUSE: when the caller already
-    persists the shingled frame for a downstream exact-Jaccard verify
-    (queries/llm.py's q52 pipeline, which q52, q136 and curate's
-    funnel share), deriving signatures from that frame avoids
-    re-shingling + re-hashing every document — r11 measured the fused
-    respelling 1.3x SLOWER inside curate for exactly this reason.
+    """Per-document MinHash signatures (id, mh, b0..b3) under q52's
+    definition (queries/llm.py: 3-word shingles, md5-derived 32-bit
+    hashes, 16 affine min slots mod 2^31-1, 4 bands of 4 slots). The
+    primitives are imported, not re-declared, so the ingest and the
+    oracle query cannot drift. Documents with fewer than 3 words
+    produce no row (callers admit them unconditionally).
 
-    - ``shingled=None`` (signatures are the only output — the ingest
-      stores, any standalone caller): the FUSED spelling.
-    - ``shingled=<persisted (id, shingles) frame>``: the exploded
-      tail over the shared frame.
+    Two spellings, picked by the STRUCTURAL ``shingled`` argument,
+    never by batch size or document length:
 
-    Both spellings are pinned bit-identical
-    (tests/test_operators.py::test_minhash_sig_fused_bitequal)."""
+    - ``shingled=None`` — signatures are the only output (the text
+      ingest, perfbench's probe): shingle the spread batch, md5 each
+      shingle ONCE into an in-row hash array, then the slot builder
+      (_minhash_slot_sigs). The pair store (pairstore.pair_signatures)
+      runs the same builder over its sorted distinct ``sh32``.
+    - ``shingled=<persisted (id, shingles) frame>`` — the caller keeps
+      the shingles for an exact-Jaccard verify (queries/llm.py's
+      _minhash_lsh, which q52, q136 and curate share): the exploded
+      groupBy tail over that frame (_minhash_sigs_from_shingles),
+      which measured faster than the slot builder there (0.85 s
+      against 1.18 s for 20k docs of ~60 words on 4 cores).
+
+    Every spelling is pinned bit-identical to a Spark-free reference
+    (tests/test_pairstore.py::test_minhash_signatures_bit_identical)."""
     if shingled is not None:
         return _minhash_sigs_from_shingles(shingled, id_col)
     if df is None or text_col is None:
         raise ValueError("need (df, text_col) when no shingled frame is given")
-    return _minhash_sig_frame(df, id_col, text_col)
+    from file_appender_spark.queries.llm import _tok_hash32
 
-
-# Cached per-(id_col, text_col) Column trees for the fused signature
-# stage (r12): the expressions are input-frame-independent (unresolved
-# references only), and building them costs ~0.2s of driver py4j
-# round trips per call — a visible share of the minute-level epoch's
-# fixed floor (EPOCH_OVERHEAD_PROBE_r12: sig_plan_built 0.39s of a
-# ~4.7s epoch). One process-wide build per column naming, reused by
-# every epoch. Safe to reuse: Columns are immutable expression trees
-# and each appears at most once per plan.
-_MH_COLS_CACHE: dict[tuple[str, str], tuple] = {}
-
-
-def _minhash_sig_frame(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Per-document MinHash signatures, identical definition to
-    q52_minhash_lsh (queries/llm.py: 3-word shingles, md5-derived
-    32-bit hashes, 16 affine min-slots, 4 bands) — the primitives are
-    imported, not re-declared, so the ingest and the oracle query can
-    never drift. Documents with fewer than 3 words produce no
-    signature (they cannot shingle; callers admit them
-    unconditionally).
-
-    FUSED spelling (r10 verdict task 1): hash each shingle ONCE via
-    transform(md5), then fold ALL 16 affine min slots in a single
-    aggregate() HOF per row — no explode, no groupBy, no exchange
-    (the exploded reference spelling ran one md5 per shingle too, but
-    paid a per-epoch exchange plus per-shingle row traffic; measured
-    1.17 -> 0.55s per 2500-doc batch under FORCED full-column
-    evaluation — a bare count() lets Catalyst prune the signature
-    expressions and under-measures both spellings
-    (SIGSTAGE_PROBE_r11.json).
-    Output is BIT-IDENTICAL to _minhash_sig_frame_exploded (pinned in
-    tests/test_operators.py): the fold's init value _MH_P strictly
-    exceeds every (a*h+b) % _MH_P, all arithmetic stays bigint, and
-    min over the same multiset is least-fold over the same multiset."""
-    from file_appender_spark.queries.llm import (
-        _MH_P,
-        _MH_PARAMS,
-        _WS,
-        _tok_hash32,
-        let_expr,
-        shingle_expr,
+    hashed = _shingled(_spread(df), id_col, text_col).select(
+        id_col, F.transform("shingles", _tok_hash32).alias("h")
     )
-
-    n_slots = len(_MH_PARAMS)
-    n_bands = n_slots // 4
-    cached = _MH_COLS_CACHE.get((id_col, text_col))
-    if cached is None:
-        words = F.split(F.col(text_col), _WS)
-        params = F.array(
-            *[
-                F.struct(F.lit(a).alias("a"), F.lit(b).alias("b"))
-                for (a, b) in _MH_PARAMS
-            ]
-        )
-
-        def fold(shingles):
-            # transform: one md5 per shingle; the fold then reads the
-            # bound hash value 16 times per shingle (cheap lambda-var
-            # references, never re-hashing)
-            return F.aggregate(
-                F.transform(shingles, _tok_hash32),
-                F.array_repeat(F.lit(_MH_P).cast("bigint"), n_slots),
-                lambda acc, h: F.zip_with(
-                    acc,
-                    params,
-                    lambda m, p: F.least(m, (p["a"] * h + p["b"]) % F.lit(_MH_P)),
-                ),
-            )
-
-        def row_out(m):
-            return F.struct(
-                m.alias("mh"),
-                *[
-                    F.concat_ws(
-                        ",", *[F.element_at(m, 4 * bi + r + 1) for r in range(4)]
-                    ).alias(f"b{bi}")
-                    for bi in range(n_bands)
-                ],
-            )
-
-        # both lets matter: the fold result is referenced 17 times by
-        # row_out (once per output column element), and an inlined
-        # copy would re-run the whole 16-slot fold per reference
-        cached = (
-            F.size(words) >= 3,
-            let_expr(words, shingle_expr).alias("shingles"),
-            let_expr(fold(F.col("shingles")), row_out).alias("s"),
-        )
-        _MH_COLS_CACHE[(id_col, text_col)] = cached
-    shingle_filter, shingles_col, out_col = cached
-    shingled = _spread(df).filter(shingle_filter).select(id_col, shingles_col)
-    s = shingled.select(id_col, out_col)
-    return s.select(
-        id_col,
-        F.col("s.mh").alias("mh"),
-        *[F.col(f"s.b{bi}").alias(f"b{bi}") for bi in range(n_bands)],
-    )
+    return _minhash_slot_sigs(hashed, id_col, "h")
 
 
 def textdup_ingest_batch(
@@ -1764,10 +1715,9 @@ def imagedup_ingest_batch(
     # Both modes take the vectorized Arrow signature stage (r12, guide
     # §4.2): one mapInArrow pass computes the strided cells +
     # threshold bits per payload in numpy int64 — BIT-IDENTICAL to the
-    # exploded references (ahash_wide / dhash_wide /
-    # ahash_ingest_sigs_sql), pinned in tests/test_imagehash.py;
-    # measured 0.75 -> 0.37s (aHash) and 0.97 -> 0.39s (dHash) per
-    # 2500-payload batch (ARROW_SIGS_PROBE_r12)
+    # exploded references (ahash_wide / dhash_wide), pinned in
+    # tests/test_imagehash.py; measured 0.75 -> 0.37s (aHash) and
+    # 0.97 -> 0.39s (dHash) per 2500-payload batch (ARROW_SIGS_PROBE_r12)
     from file_appender_spark.operators.imagehash import image_sigs_arrow
 
     if hash_mode not in ("ahash", "dhash"):

@@ -15,9 +15,10 @@ corpus. This module is that store:
   MinHash slots and band signatures (imported definitions, zero
   drift) plus the doc's distinct 32-bit shingle-hash set (``sh32``),
   which is what makes EXACT Jaccard verification possible against
-  history without re-reading historical text. One map-side
-  projection, no shuffle (the minhash mins fold over the in-row
-  array instead of explode+groupBy).
+  history without re-reading historical text. Map-side projections
+  only, no shuffle: the slots are the text ingest's slot builder
+  (neardup_ingest._minhash_slot_sigs, 16 ``array_min`` over the
+  in-row ``sh32``) instead of explode+groupBy.
 - ``build_pair_graph`` — batch build: signatures, band-bucket
   candidate self-join, exact verify, cluster refresh. The pair
   definition is q52's with one stated difference: Jaccard is
@@ -83,7 +84,6 @@ import os
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
 
 from file_appender_spark.obs import stage
 from file_appender_spark.operators.lsh import band_pairs, hot_buckets, resolve_cap
@@ -91,6 +91,8 @@ from file_appender_spark.operators.neardup_ingest import (
     _EAGER_SLICE_MIN_STORE_ROWS,
     _HASH_KEYS,
     _bands_hash_long,
+    _minhash_slot_sigs,
+    _shingled,
     _sliced_band_candidates,
     _spread,
     _store_is_v2,
@@ -103,6 +105,7 @@ from file_appender_spark.storefs import (
     create_manifest_tables,
     migrate_tables_to_manifest,
     open_table_store,
+    read_table,
     rebuild_table_store,
     store_fs_for,
     swap_table_dir,
@@ -123,7 +126,6 @@ _FH_COLS = [f"b{i}" for i in range(_N_BANDS)]
 # r9 ADVICE: exact-count ceiling for broadcasting the candidate set
 # into the sh32 payload fetch (mirrors neardup_ingest's gate)
 _BROADCAST_CAND_ROWS = 4_000_000
-_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"  # footer key
 
 
 def _with_sig_hashes(sigs: DataFrame) -> DataFrame:
@@ -197,26 +199,6 @@ def _table_rows(store_dir: str, table: str, stop_at: int) -> int:
     return total
 
 
-def _read_table(
-    spark: SparkSession, store_dir: str, table: str, epoch: str | None = None
-) -> DataFrame:
-    """Table ``table``, or its ``epoch`` partition, with the Spark
-    schema stamped in one parquet FOOTER: a schema-less read runs a
-    one-task footer-merge job per call. Falls back to inference when
-    no footer carries the stamp."""
-    fs = store_fs_for(store_dir)
-    d = table_dir(store_dir, table)
-    path = d if epoch is None else os.path.join(d, f"batch={epoch}")
-    parts = sorted(p for p in fs.listdir(path) if p.startswith("batch="))
-    reader = spark.read.option("basePath", d)
-    for sub in (path, *[os.path.join(path, p) for p in parts]):
-        schema = fs.parquet_schema(sub)
-        if schema is not None and _SPARK_SCHEMA_KEY in (schema.metadata or {}):
-            stamped = json.loads(schema.metadata[_SPARK_SCHEMA_KEY])
-            return reader.schema(StructType.fromJson(stamped)).parquet(path)
-    return reader.parquet(path)
-
-
 def create_manifest_pairstore(store_dir: str) -> str:
     """Initialize an EMPTY manifest-layout pair store (the layout
     choice is creation-time, like the signature stores'): each table
@@ -247,54 +229,25 @@ def pair_signatures(
 
     Definitions are IMPORTED from q52 (queries/llm.py — shingle_expr,
     _tok_hash32, _MH_PARAMS), so store signatures and the oracle
-    query can never drift. Everything is one projection: sh32 is the
-    sorted distinct 32-bit shingle-hash set, each minhash slot is an
-    array_min fold over it (min over distinct == min over all — the
-    hash is applied before dedup in q52 and dedup never changes a
-    min), bands concatenate 4 slots exactly like q52's stack. NO
-    shuffle — the expensive part of the store build/ingest is
+    query can never drift. sh32 is the sorted distinct 32-bit
+    shingle-hash set; the slots and bands are the text ingest's slot
+    builder (neardup_ingest._minhash_slot_sigs) over it — min over
+    distinct == min over all, so the signature equals the ingest's.
+    NO shuffle — the expensive part of the store build/ingest is
     embarrassingly parallel. Docs too short to shingle (< 3 words)
     produce no row: they cannot pair under q52's definition."""
-    from file_appender_spark.queries.llm import (
-        _MH_P,
-        _MH_PARAMS,
-        _WS,
-        _tok_hash32,
-        let_expr,
-        shingle_expr,
-    )
+    from file_appender_spark.queries.llm import _tok_hash32
 
-    words = F.split(F.col(text_col), _WS)
-    shingled = (
-        _spread(docs)
-        .filter(F.size(words) >= 3)
-        .select(id_col, let_expr(words, shingle_expr).alias("shingles"))
-    )
     # shingle_expr already dedups; hash then re-dedup so a 32-bit
     # collision collapses identically here and in the verifier
     sh32 = F.array_sort(
         F.array_distinct(F.transform(F.col("shingles"), _tok_hash32))
     )
-    base = shingled.select(id_col, sh32.alias("sh32"))
-    mh = [
-        F.array_min(
-            F.transform(F.col("sh32"), lambda h: (F.lit(a) * h + F.lit(b)) % _MH_P)
-        ).alias(f"mh{j}")
-        for j, (a, b) in enumerate(_MH_PARAMS)
-    ]
-    n_slots = len(_MH_PARAMS)
-    wide = base.select(id_col, "sh32", *mh)
-    return wide.select(
-        id_col,
-        "sh32",
-        F.size("sh32").cast("long").alias("n_sh"),
-        F.array(*[F.col(f"mh{j}") for j in range(n_slots)]).alias("mh"),
-        *[
-            F.concat_ws(
-                ",", *[F.col(f"mh{4 * bi + r}") for r in range(4)]
-            ).alias(f"b{bi}")
-            for bi in range(n_slots // 4)
-        ],
+    base = _shingled(_spread(docs), id_col, text_col).select(
+        id_col, sh32.alias("sh32")
+    )
+    return _minhash_slot_sigs(base, id_col, "sh32", keep=("sh32",)).select(
+        id_col, "sh32", F.size("sh32").cast("long").alias("n_sh"), "mh", *_FH_COLS
     )
 
 
@@ -465,7 +418,7 @@ def pairstore_ingest_batch(
 
     with stage(spark, op, "pairs", **known):
         hist = (
-            _read_table(spark, store_dir, "sigs")
+            read_table(spark, store_dir, "sigs")
             # cast: the partition column infers int when every epoch id
             # is numeric, string once 'base' is present — normalize
             .filter(F.col("batch").cast("string") != str(batch_id))
@@ -612,7 +565,7 @@ def read_pairs(
         store_dir,
         None if expected_threshold is None else _params(expected_threshold),
     )
-    pairs = _read_table(spark, store_dir, "pairs").select("d1", "d2", "jaccard")
+    pairs = read_table(spark, store_dir, "pairs").select("d1", "d2", "jaccard")
     if len(_epoch_ids(table_dir(store_dir, "pairs"))) > 1:
         pairs = pairs.distinct()
     return pairs
@@ -634,7 +587,7 @@ def store_missing_ids(
     a coverage gap). One columnar id scan of the sigs table + an
     anti-join; no payload columns touched."""
     open_table_store(_STORE, store_dir)
-    sigs_ids = _read_table(spark, store_dir, "sigs").select(F.col(id_col))
+    sigs_ids = read_table(spark, store_dir, "sigs").select(F.col(id_col))
     return doc_ids.select(id_col).join(sigs_ids, id_col, "left_anti")
 
 
@@ -701,10 +654,10 @@ def _fold_new_edges(
     components are never read."""
     from file_appender_spark.operators.components import _clusters
 
-    asg = _read_table(spark, store_dir, "clusters").select("doc", "cluster")
+    asg = read_table(spark, store_dir, "clusters").select("doc", "cluster")
     new_edges = None
     for e in new_epochs:
-        part = _read_table(spark, store_dir, "pairs", e).select("d1", "d2")
+        part = read_table(spark, store_dir, "pairs", e).select("d1", "d2")
         new_edges = part if new_edges is None else new_edges.unionByName(part)
     # the edge count rides the checkpoint's own job; it bounds the
     # representative-space edges below, which sizes their components
@@ -859,7 +812,7 @@ def read_cluster_assignment(
             f"{sorted(live - covers)} are not folded in — run "
             "refresh_clusters (or pass allow_stale=True to read anyway)"
         )
-    return _read_table(spark, store_dir, "clusters")
+    return read_table(spark, store_dir, "clusters")
 
 
 def compact_pairstore(spark: SparkSession, store_dir: str) -> None:
@@ -898,7 +851,7 @@ def compact_pairstore(spark: SparkSession, store_dir: str) -> None:
         )
 
     def epochs(table: str) -> DataFrame:
-        return _read_table(spark, store_dir, table).drop("batch")
+        return read_table(spark, store_dir, table).drop("batch")
 
     def sigs(d: str) -> DataFrame:
         merged = epochs("sigs")

@@ -220,31 +220,30 @@ def _minhash_lsh(
 ) -> DataFrame:
     """q52's MinHash-LSH pipeline over any (doc_id, text) frame — the
     one spelling q52, q136 and curate's near-dup stage share: 3-word
-    shingles -> the 16-slot signatures and 4 band strings (the reuse
-    branch of neardup_ingest.minhash_signatures) -> candidate pairs
-    from band-bucket equality (operators/lsh.band_pairs) -> exact
-    Jaccard over the string shingle sets. Returns every candidate as
+    shingles (neardup_ingest._shingled) -> the 16-slot signatures and
+    4 band strings (the exploded reuse branch of
+    neardup_ingest.minhash_signatures) -> candidate pairs from
+    band-bucket equality (operators/lsh.band_pairs) -> exact Jaccard
+    over the string shingle sets. Returns every candidate as
     (d1, d2[, est], jac), unrounded and unfiltered; ``est`` adds the
     estimated Jaccard (the fraction of agreeing minhash slots).
 
     The shingled frame feeds the signatures and both verify sides, so
-    it is persisted (MEMORY_AND_DISK, the 100 TB-safe level: shingling
-    and md5 run once) and appended to ``persisted`` for a caller that
-    unpersists once the pairs are materialized. The signatures are
-    persisted too when ``est`` reads them a second and third time."""
+    it is persisted unspread (MEMORY_AND_DISK, the 100 TB-safe level:
+    shingling and md5 run once) and appended to ``persisted`` for a
+    caller that unpersists once the pairs are materialized. The
+    signatures are persisted too when ``est`` reads them a second and
+    third time."""
     from pyspark import StorageLevel
 
     from file_appender_spark.operators.lsh import band_pairs, band_stack
-    from file_appender_spark.operators.neardup_ingest import minhash_signatures
+    from file_appender_spark.operators.neardup_ingest import (
+        _shingled,
+        minhash_signatures,
+    )
 
-    words = F.split("text", _WS)
-    # let_expr binds the split ONCE per row — projection collapse
-    # would otherwise re-split the text inside every element_at of
-    # the shingle lambda (see let_expr; ~20x on this stage)
-    shingled = (
-        docs.filter(F.size(words) >= 3)
-        .select("doc_id", let_expr(words, shingle_expr).alias("shingles"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    shingled = _shingled(docs, "doc_id", "text").persist(
+        StorageLevel.MEMORY_AND_DISK
     )
     if persisted is not None:
         persisted.append(shingled)

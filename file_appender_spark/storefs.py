@@ -938,6 +938,30 @@ def open_table_store(
     return stored
 
 
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"  # footer key
+
+
+def read_table(spark, store_dir: str, name: str, epoch: str | None = None):
+    """Table ``name`` (its ``epoch`` partition when given) with the
+    Spark schema stamped in one parquet FOOTER: a schema-less read
+    runs a one-task footer-merge job per call. Falls back to
+    inference when no footer carries the stamp."""
+    from pyspark.sql.types import StructType
+
+    fs = store_fs_for(store_dir)
+    d = table_dir(store_dir, name)
+    path = d if epoch is None else os.path.join(d, f"batch={epoch}")
+    parts = sorted(fs.listdir(path)) if fs.isdir(path) else []
+    reader = spark.read.option("basePath", d)
+    batches = [os.path.join(path, p) for p in parts if p.startswith("batch=")]
+    for sub in (path, *batches):
+        schema = fs.parquet_schema(sub)
+        if schema is not None and _SPARK_SCHEMA_KEY in (schema.metadata or {}):
+            stamped = json.loads(schema.metadata[_SPARK_SCHEMA_KEY])
+            return reader.schema(StructType.fromJson(stamped)).parquet(path)
+    return reader.parquet(path)
+
+
 def write_table_epoch(df, store_dir: str, name: str, batch_id) -> None:
     """One partition dir per epoch in table ``name``'s live dir,
     overwritten on retry — idempotent. (An empty epoch still writes

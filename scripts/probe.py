@@ -103,6 +103,13 @@ def _text_ingest(spark, sf, work):
     return lambda: textdup_ingest_batch(spark, batch, store)
 
 
+def _minhash(spark, sf, work):
+    from file_appender_spark.operators.neardup_ingest import minhash_signatures
+
+    docs = _docs(spark, sf)
+    return lambda: minhash_signatures(docs, "doc_id", "text")
+
+
 def _srp(spark, sf, work):
     from file_appender_spark.operators.similarity import srp_neardup
 
@@ -134,6 +141,7 @@ OPERATORS = {
     "build_corpus_stats": _corpus_stats,
     "curate": _curate,
     "textdup_ingest_batch": _text_ingest,
+    "minhash_signatures": _minhash,
     "srp_neardup": _srp,
     "ann_sign_ivf": _ann,
     "pq_encode": _pq,

@@ -94,7 +94,6 @@ _SLOW_TESTS = {
     "tests/test_guards.py::test_q235_single_source_yields_null_nmi",
     "tests/test_heavyhitters.py::test_exact_heavy_hitters_ignores_nulls",
     "tests/test_heavyhitters.py::test_streaming_candidates_cover_true_heavy_hitters",
-    "tests/test_imagehash.py::test_ahash_ingest_sigs_sql_bitequal",
     "tests/test_imagehash.py::test_curate_funnel_reports_image_truncation",
     "tests/test_imagehash.py::test_curate_image_stage_drops_payload_neardups",
     "tests/test_imagehash.py::test_dhash_neardup_exact_dup_and_mode_separation",
@@ -124,7 +123,6 @@ _SLOW_TESTS = {
     "tests/test_operators.py::test_embedding_ingest_auto_cap_admits_degenerate_family",
     "tests/test_operators.py::test_embedding_ingest_identical_vector_shortcut",
     "tests/test_operators.py::test_ivf_topk_runs_and_probes_subset",
-    "tests/test_operators.py::test_minhash_sig_fused_bitequal",
     "tests/test_operators.py::test_neardup_ingest_across_batches",
     "tests/test_operators.py::test_neardup_ingest_plan_has_no_cross_join",
     "tests/test_operators.py::test_neardup_ingest_via_streaming_foreachbatch",
@@ -154,6 +152,7 @@ _SLOW_TESTS = {
     "tests/test_pairstore.py::test_incremental_cluster_refresh_matches_full",
     "tests/test_pairstore.py::test_incremental_matches_batch",
     "tests/test_pairstore.py::test_ingest_hot_bucket_cap_is_sized_and_overridable",
+    "tests/test_pairstore.py::test_minhash_signatures_bit_identical_sf",
     "tests/test_pairstore.py::test_pairstore_via_streaming_foreachbatch",
     "tests/test_pairstore.py::test_params_guard_and_reserved_epoch",
     "tests/test_pairstore.py::test_q183_graph_dir_equivalence",
@@ -256,3 +255,13 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_SMOKE
+
+
+@pytest.fixture(params=[True, False], ids=["ansi_on", "ansi_off"])
+def ansi(spark, request):
+    """Runs the test under ANSI mode on, then off (Arrow/SQL spelling
+    pins must hold bit-for-bit under both)."""
+    old = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", str(request.param).lower())
+    yield request.param
+    spark.conf.set("spark.sql.ansi.enabled", old)

@@ -210,14 +210,6 @@ def _pq_case(spark, sf_dir, data):
 _CASES = {"srp_sigs": _srp_case, "cos_scores": _cos_case, "pq_encode": _pq_case}
 
 
-@pytest.fixture(params=[True, False], ids=["ansi_on", "ansi_off"])
-def ansi(spark, request):
-    old = spark.conf.get("spark.sql.ansi.enabled")
-    spark.conf.set("spark.sql.ansi.enabled", str(request.param).lower())
-    yield request.param
-    spark.conf.set("spark.sql.ansi.enabled", old)
-
-
 @pytest.mark.parametrize("data", ["sf", "degenerate"])
 @pytest.mark.parametrize("kernel", list(_CASES))
 def test_kernel_bit_identical(spark, sf_dir, kernel, ansi, data):

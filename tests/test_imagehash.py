@@ -687,42 +687,6 @@ def test_curate_funnel_reports_image_truncation(spark, tmp_path):
     assert res2["after_image_dedup"] < res2["after_exact_dedup"]
 
 
-def test_ahash_ingest_sigs_sql_bitequal(spark):
-    """The one-statement SQL spelling of the ingest signature stage
-    (ahash_ingest_sigs_sql) is BIT-IDENTICAL to the DataFrame
-    pipeline it replaces on the ingest hot path — including the
-    schema-v2 bh/fh hash columns and the absent-row contract for
-    empty payloads (r12)."""
-    from pyspark.sql import functions as F
-
-    from file_appender_spark.operators.imagehash import (
-        ahash_ingest_sigs_sql,
-        ahash_wide,
-    )
-    from file_appender_spark.operators.neardup_ingest import _with_index_cols
-
-    rows = [
-        (1, b"hello world, a payload long enough to fill strides"),
-        (2, b"hello world, a payload long enough to fill strideZ"),
-        (3, b"x"),          # shorter than the grid: sparse cells
-        (4, b""),           # empty: no cells, row absent
-        (5, bytes(range(256)) * 3),
-    ]
-    df = spark.createDataFrame(rows, ["doc_id", "payload"])
-    ref = _with_index_cols(
-        ahash_wide(df, "doc_id", "payload").select(
-            "doc_id", "b0", "b1", "b2", "b3"
-        ),
-        4,
-        [f"b{k}" for k in range(4)],
-    )
-    got = ahash_ingest_sigs_sql(df, "doc_id", "payload")
-    assert got.columns == ref.columns
-    assert got.exceptAll(ref).count() == 0
-    assert ref.exceptAll(got).count() == 0
-    assert got.filter(F.col("doc_id") == 4).count() == 0
-
-
 def test_image_sigs_arrow_bitequal_both_modes(spark):
     """The vectorized Arrow signature stage (image_sigs_arrow, the
     r12 ingest hot path) is BIT-IDENTICAL to the exploded references

@@ -889,7 +889,7 @@ def test_textdup_ingest_band_bucket_cap_admits_hot_family(spark, tmp_path):
     join (estimated Jaccard exactly 1.0 needs no candidates). So the
     capped run admits exactly one doc per distinct signature."""
     from file_appender_spark.operators.neardup_ingest import (
-        _minhash_sig_frame,
+        minhash_signatures,
         textdup_ingest_batch,
     )
 
@@ -903,7 +903,7 @@ def test_textdup_ingest_band_bucket_cap_admits_hot_family(spark, tmp_path):
     assert plain.count() < 12  # family suppressed to representatives
 
     n_distinct_sigs = (
-        _minhash_sig_frame(docs, "doc_id", "text")
+        minhash_signatures(docs, "doc_id", "text")
         .select("b0", "b1", "b2", "b3")
         .distinct()
         .count()
@@ -1107,7 +1107,7 @@ def test_sig_shortcut_retry_on_legacy_multi_id_store(spark, tmp_path):
     row that IS stored (own-row membership), not just the group min —
     and still suppress genuinely new members of the family."""
     from file_appender_spark.operators.neardup_ingest import (
-        _minhash_sig_frame,
+        minhash_signatures,
         stamp_store_params,
         textdup_ingest_batch,
     )
@@ -1118,7 +1118,7 @@ def test_sig_shortcut_retry_on_legacy_multi_id_store(spark, tmp_path):
 
     # fabricate the legacy state: all 80 identical-sig rows stored
     store = str(tmp_path / "legacy_store")
-    _minhash_sig_frame(docs, "doc_id", "text").write.parquet(store)
+    minhash_signatures(docs, "doc_id", "text").write.parquet(store)
     stamp_store_params(
         store, {"modality": "minhash", "n_slots": 16, "n_bands": 4}
     )
@@ -1257,7 +1257,7 @@ def test_textdup_replay_on_legacy_under_cap_group(spark, tmp_path):
     own-id override must still re-emit every stored row instead of
     swallowing the batch (at-least-once)."""
     from file_appender_spark.operators.neardup_ingest import (
-        _minhash_sig_frame,
+        minhash_signatures,
         stamp_store_params,
         textdup_ingest_batch,
     )
@@ -1267,7 +1267,7 @@ def test_textdup_replay_on_legacy_under_cap_group(spark, tmp_path):
     docs = spark.createDataFrame(rows, "doc_id long, text string")
 
     store = str(tmp_path / "legacy_small")
-    _minhash_sig_frame(docs, "doc_id", "text").write.parquet(store)
+    minhash_signatures(docs, "doc_id", "text").write.parquet(store)
     stamp_store_params(
         store, {"modality": "minhash", "n_slots": 16, "n_bands": 4}
     )
@@ -1335,35 +1335,6 @@ def test_store_fs_cache_reset():
     assert store_fs_for("hdfs://nn-x:8020/t") is a
     reset_store_fs_cache()
     assert store_fs_for("hdfs://nn-x:8020/s") is not a
-
-
-def test_minhash_sig_fused_bitequal(spark, sf_dir):
-    """r10 verdict task 1 contract: the fused MinHash signature stage
-    (one transform-hash per shingle + a single 16-slot aggregate()
-    fold per row, no explode/exchange) is BIT-IDENTICAL to the
-    exploded reference spelling — the literal q52 oracle shape — on
-    real documents plus the short-doc edge (< 3 words yields no
-    row in either spelling)."""
-    from file_appender_spark.operators.neardup_ingest import (
-        _minhash_sig_frame,
-        _minhash_sig_frame_exploded,
-    )
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    edge = spark.createDataFrame(
-        [(90001, "one two"), (90002, ""), (90003, "a b c"),
-         (90004, "x x x x x")],
-        "doc_id long, text string",
-    )
-    docs = docs.unionByName(edge)
-    cur = _minhash_sig_frame_exploded(docs, "doc_id", "text")
-    fus = _minhash_sig_frame(docs, "doc_id", "text")
-    assert cur.schema.simpleString() == fus.schema.simpleString()
-    assert cur.exceptAll(fus).count() == 0
-    assert fus.exceptAll(cur).count() == 0
-    # the guard rows: exactly the two shingle-able edge docs appear
-    got = {r["doc_id"] for r in fus.filter("doc_id >= 90001").collect()}
-    assert got == {90003, 90004}
 
 
 def test_srp_admitted_sigs_reuse_batch_frame(spark, tmp_path):

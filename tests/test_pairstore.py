@@ -14,8 +14,11 @@ corpusstats pattern applied to the q52 prefix. Pins:
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
+import random
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -303,11 +306,13 @@ def test_q183_graph_dir_equivalence(spark, sf_dir, built_store):
 
 def test_signature_plan_is_shuffle_free_and_joins_are_equi(spark):
     """The store's scale contract, plan-asserted: the signature
-    projection's ONLY exchange is the deliberate batch spread
-    (_spread's round-robin repartition — everything expensive is
-    map-side after it), and the candidate+verify plan contains no
-    cartesian/nested-loop join."""
+    projection (the pair store's and the text ingest's standalone
+    stage) hashes each shingle once and its ONLY exchange is the
+    deliberate batch spread (_spread's round-robin repartition —
+    everything expensive is map-side after it), and the
+    candidate+verify plan contains no cartesian/nested-loop join."""
     from file_appender_spark.operators.lsh import band_pairs, band_stack
+    from file_appender_spark.operators.neardup_ingest import minhash_signatures
     from file_appender_spark.operators.pairstore import (
         _new_side,
         _old_side,
@@ -320,9 +325,14 @@ def test_signature_plan_is_shuffle_free_and_joins_are_equi(spark):
         "doc_id long, text string",
     )
     sigs = pair_signatures(docs)
-    plan = sigs._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("Exchange") == 1, plan  # the _spread only
-    assert "SortAggregate" not in plan and "HashAggregate" not in plan
+    # the text ingest's standalone stage too; in both the hash array is
+    # bound once (one md5 in the optimized plan, not one per slot)
+    for df in (sigs, minhash_signatures(docs, "doc_id", "text")):
+        qe = df._jdf.queryExecution()
+        assert qe.optimizedPlan().toString().count("md5(") == 1, qe.optimizedPlan()
+        plan = qe.executedPlan().toString()
+        assert plan.count("Exchange") == 1, plan  # the _spread only
+        assert "SortAggregate" not in plan and "HashAggregate" not in plan
 
     bands = sigs.select("doc_id", band_stack([f"b{bi}" for bi in range(4)]))
     cand = band_pairs(bands, "doc_id").select(
@@ -515,38 +525,106 @@ def test_every_graph_dir_consumer_matches_default(
     )
 
 
-def test_pair_signatures_match_textdup_minhash(spark):
-    """Cross-module no-drift pin: the pair store's shuffle-free
-    array_min signature fold produces bit-identical MinHash slots and
-    band strings to the textdup ingest's explode+groupBy spelling
-    (both import q52's definitions; this pins that the two PLANS
-    compute the same function, incl. on hash-collision-free random
-    text, repeated tokens, and minimum-length docs)."""
-    import random
+# Java's \s (the tokenizer regex runs in the JVM; Python's \s also
+# matches Unicode spaces)
+_JAVA_WS = re.compile(r"[ \t\n\x0b\f\r]+")
 
-    from file_appender_spark.operators.neardup_ingest import _minhash_sig_frame
+
+def _ref_minhash(text):
+    """q52's signature without Spark: (sorted distinct 32-bit shingle
+    hashes, 16 slots, 4 band strings), or None for a doc that cannot
+    shingle. The hash is md5's first 8 hex digits read as an int."""
+    from file_appender_spark.queries.llm import _MH_P, _MH_PARAMS
+
+    w = [] if text is None else _JAVA_WS.split(text)
+    if len(w) < 3:
+        return None
+    hs = sorted(
+        {
+            int(hashlib.md5(" ".join(w[i : i + 3]).encode()).hexdigest()[:8], 16)
+            for i in range(len(w) - 2)
+        }
+    )
+    mh = [min((a * h + b) % _MH_P for h in hs) for a, b in _MH_PARAMS]
+    return hs, mh, [",".join(map(str, mh[4 * i : 4 * i + 4])) for i in range(4)]
+
+
+def _minhash_spelling(spelling, docs):
+    from file_appender_spark.operators.neardup_ingest import (
+        _shingled,
+        minhash_signatures,
+    )
     from file_appender_spark.operators.pairstore import pair_signatures
 
-    rng = random.Random(42)
-    rows = []
-    for i in range(60):
-        n = rng.randint(3, 80)
-        words = [f"w{rng.randint(0, 40)}" for _ in range(n)]
-        rows.append((i, " ".join(words)))
-    rows.append((1000, "a b c"))  # minimum shingle-able length
-    rows.append((1001, "x x x x x"))  # degenerate repeated token
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    if spelling == "standalone":
+        return minhash_signatures(docs, "doc_id", "text")
+    if spelling == "pair_store":
+        return pair_signatures(docs)
+    shingled = _shingled(docs, "doc_id", "text")
+    return minhash_signatures(None, "doc_id", shingled=shingled)
 
-    a = {
-        r["doc_id"]: (list(r["mh"]), r["b0"], r["b1"], r["b2"], r["b3"])
-        for r in pair_signatures(docs).collect()
-    }
-    b = {
-        r["doc_id"]: (list(r["mh"]), r["b0"], r["b1"], r["b2"], r["b3"])
-        for r in _minhash_sig_frame(docs, "doc_id", "text").collect()
-    }
-    assert a == b
-    assert len(a) == 62
+
+def _assert_minhash_matches_reference(spelling, docs):
+    want = {r["doc_id"]: _ref_minhash(r["text"]) for r in docs.collect()}
+    want = {k: v for k, v in want.items() if v is not None}
+    sigs = _minhash_spelling(spelling, docs)
+    id_type = docs.schema["doc_id"].dataType.simpleString()
+    extra = "sh32:array<bigint>,n_sh:bigint," if spelling == "pair_store" else ""
+    assert sigs.schema.simpleString() == (
+        f"struct<doc_id:{id_type},{extra}mh:array<bigint>,"
+        "b0:string,b1:string,b2:string,b3:string>"
+    )
+    rows = sigs.collect()
+    got = {}
+    for r in rows:
+        hs = want[r["doc_id"]][0]
+        if spelling == "pair_store":
+            assert (list(r["sh32"]), r["n_sh"]) == (hs, len(hs)), r["doc_id"]
+        got[r["doc_id"]] = (hs, list(r["mh"]), [r[f"b{i}"] for i in range(4)])
+    assert len(rows) == len(got) and got == want
+
+
+_MH_SPELLINGS = ["standalone", "pair_store", "reuse"]
+
+
+@pytest.mark.parametrize("spelling", _MH_SPELLINGS)
+def test_minhash_signatures_bit_identical(spark, ansi, spelling):
+    """Each MinHash spelling — the standalone slot builder, the pair
+    store's slots over sh32, the exploded tail over a shingled frame —
+    equals a Spark-free reference: random text with repeated tokens,
+    minimum-length docs, docs of fewer than 3 words, an empty and a
+    NULL doc (no row), and two shingles of one doc whose md5 prefixes
+    collide in 32 bits (one hash, the same slots everywhere)."""
+    rng = random.Random(42)
+    rows = [
+        (i, " ".join(f"w{rng.randint(0, 40)}" for _ in range(rng.randint(3, 80))))
+        for i in range(60)
+    ]
+    rows += [
+        (1000, "a b c"),
+        (1001, "x x x x x"),
+        (1002, "one two"),
+        (1003, "solo"),
+        (1004, ""),
+        (1005, None),
+        (1006, "c7796 q r c37754 q r"),
+    ]
+    collide = ("c7796 q r", "c37754 q r")
+    assert len({hashlib.md5(t.encode()).hexdigest()[:8] for t in collide}) == 1
+    assert len(_ref_minhash(rows[-1][1])[0]) == 3  # 4 shingles, 3 hashes
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    _assert_minhash_matches_reference(spelling, docs)
+
+
+@pytest.mark.parametrize("spelling", _MH_SPELLINGS)
+def test_minhash_signatures_bit_identical_sf(spark, sf_dir, spelling):
+    """The same pin over the sf0.01 documents (next to the smoke
+    data; skipped when that scale is not generated)."""
+    sf = os.path.join(os.path.dirname(os.path.abspath(sf_dir)), "sf0.01")
+    if not os.path.isdir(sf):
+        pytest.skip(f"{sf} not generated")
+    docs = load_table(spark, sf, "documents").select("doc_id", "text")
+    _assert_minhash_matches_reference(spelling, docs)
 
 
 def test_compaction_crash_never_reads_spuriously_fresh(

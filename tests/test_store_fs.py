@@ -15,9 +15,11 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from file_appender_spark.obs import records
 from file_appender_spark.storefs import (
     ArrowStoreFS,
     LocalStoreFS,
+    read_table,
     store_fs_for,
     table_dir,
 )
@@ -311,3 +313,75 @@ def test_neardup_embedding_store_both_backends(spark, mkstore):
 
     with pytest.raises(ValueError, match="LSH params"):
         neardup_ingest_batch(spark, dup, store, threshold=0.9, n_bits=8)
+
+
+def _parquet_jobs(spark, rec):
+    """The record's jobs with a stage named after a parquet call: a
+    schema-inference read, or a parquet write."""
+    tracker = spark.sparkContext.statusTracker()
+    return [
+        j
+        for j in rec["jobs"]
+        if any(
+            tracker.getStageInfo(s).name.startswith("parquet at ")
+            for s in tracker.getJobInfo(j).stageIds
+        )
+    ]
+
+
+def _new_records(call):
+    before = {r["seq"] for r in records()}
+    call()
+    return [r for r in records() if r["seq"] not in before]
+
+
+def test_store_reads_take_schema_from_footer(spark, tmp_path):
+    """A schema-less parquet read runs a one-task schema-inference
+    job. The second text-ingest epoch reads its history through the
+    footer stamp, so its one parquet job is the store append (its
+    last job); a cold read_token_stats runs none."""
+    from file_appender_spark.operators.corpusstats import (
+        build_corpus_stats,
+        read_token_stats,
+        reset_stats_view_cache,
+    )
+    from file_appender_spark.operators.neardup_ingest import textdup_ingest_batch
+
+    docs = spark.createDataFrame(
+        [(i, f"alpha beta doc{i} gamma", None, "web", 20) for i in range(12)],
+        "doc_id long, text string, lang string, source string, n_chars long",
+    )
+    store = str(tmp_path / "text")
+    textdup_ingest_batch(spark, docs.filter("doc_id % 2 = 0"), store)
+    (epoch,) = _new_records(
+        lambda: textdup_ingest_batch(spark, docs.filter("doc_id % 2 = 1"), store)
+    )
+    assert _parquet_jobs(spark, epoch) == epoch["jobs"][-1:], epoch
+
+    stats = str(tmp_path / "stats")
+    build_corpus_stats(spark, docs, stats)
+    reset_stats_view_cache()
+    (read,) = _new_records(lambda: read_token_stats(spark, stats))
+    assert _parquet_jobs(spark, read) == [], read
+    assert read_token_stats(spark, stats).count() == 15  # 3 shared + 12 doc tokens
+
+
+def test_read_table_infers_schema_without_footer_stamp(spark, mkstore):
+    """Parquet written outside Spark carries no schema stamp: the read
+    falls back to inference, partition column included."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    store = mkstore("foreign")
+    part = os.path.join(table_dir(store, "t"), "batch=base")
+    local = part.removeprefix("file://")
+    os.makedirs(local)
+    pq.write_table(
+        pa.table({"d1": [1, 2], "d2": [3, 4]}), os.path.join(local, "part-0.parquet")
+    )
+    assert b"org.apache.spark.sql.parquet.row.metadata" not in (
+        store_fs_for(store).parquet_schema(part).metadata or {}
+    )
+    got = read_table(spark, store, "t")
+    assert sorted(got.columns) == ["batch", "d1", "d2"]
+    assert sorted(tuple(r) for r in got.select("d1", "d2").collect()) == [(1, 3), (2, 4)]

@@ -17,12 +17,12 @@ from file_appender_spark.operators.neardup_ingest import (
     _INDEX_META,
     _band_index_state,
     _bands_hash_long,
-    _minhash_sig_frame,
     _modality_spec,
     _store_is_v2,
     _with_index_cols,
     build_band_index,
     compact_store,
+    minhash_signatures,
     stamp_store_params,
     textdup_ingest_batch,
 )
@@ -60,7 +60,7 @@ def _corpus(spark, n=40, seed_tag="alpha"):
 def test_with_index_cols_matches_v1_derive(spark):
     """The write-time v2 columns and the read-time v1 derivation must
     be bit-identical, or mixed-era signatures would never join."""
-    sigs = _minhash_sig_frame(_corpus(spark), "doc_id", "text")
+    sigs = minhash_signatures(_corpus(spark), "doc_id", "text")
     spec = _modality_spec(TEXT_PARAMS)
     v2 = _with_index_cols(sigs, 4, spec["fh_cols"])
     a = _bands_hash_long(v2, 4, "doc_id", spec["fh_cols"])
@@ -75,7 +75,7 @@ def test_v1_store_compat_appends_v1_then_compaction_upgrades(spark, tmp_path):
     atomically; results are identical before and after."""
     store = str(tmp_path / "v1store")
     docs = _corpus(spark, 40)
-    _minhash_sig_frame(docs, "doc_id", "text").write.parquet(store)
+    minhash_signatures(docs, "doc_id", "text").write.parquet(store)
     stamp_store_params(store, TEXT_PARAMS)
 
     d0 = docs.filter(F.col("doc_id") == 0).collect()[0]["text"]
@@ -178,7 +178,7 @@ def test_compact_empty_store_skips_sidecar(spark, tmp_path):
 
 def test_build_band_index_requires_params(spark, tmp_path):
     store = str(tmp_path / "noparams")
-    _minhash_sig_frame(_corpus(spark, 10), "doc_id", "text").write.parquet(store)
+    minhash_signatures(_corpus(spark, 10), "doc_id", "text").write.parquet(store)
     with pytest.raises(ValueError, match="stamp or rebuild"):
         build_band_index(spark, store, "doc_id")
 
