@@ -2,21 +2,30 @@
 similarity operator scales through. Items are stacked into (band, key)
 buckets (``band_stack``), buckets holding more members than a cap are
 found by one histogram (``hot_buckets``) and dropped, and the members of
-each remaining bucket are equi-joined (``band_pairs``): a shuffled join
-on the band keys, never a cross join. ``resolve_cap`` is the one
-validator of the ``band_bucket_cap`` every capped entry point takes.
+each remaining bucket are equi-joined: within one frame
+(``band_pairs``) or between an incoming batch and a store's history
+(``history_candidates``) — a shuffled join on the band keys, never a
+cross join. ``resolve_cap`` is the one validator of the
+``band_bucket_cap`` every capped entry point takes.
 
 Band frames are long: one row per (item, band), with the band index and
 the band's signature in the two ``keys`` columns — ``("band", "sig")``
 unless the caller's layout names them otherwise (the hashed store
 columns ``("band", "bh")``, the image bands ``("bi", "bv")``).
 
+The incremental stores' store-size policy lives here too, read at call
+time: ``is_big_store`` picks the epoch shape from a footer row count
+against ``_EAGER_SLICE_MIN_STORE_ROWS`` (setting it to 0 forces the big
+shape on any store), and ``fits_broadcast`` is the one exact-count
+ceiling on a hinted broadcast.
+
 Callers: q52 / q136 / curate (queries/llm.py ``_minhash_lsh``),
 ``srp_neardup``, the image ``_neardup_from_wide``,
-``icws_neardup_pairs``, the pair store's build and new x new join, and
-the near-dup ingest's big-store within-batch join. The ingest's history
-(new x old) joins and its lean payload-carrying self-join keep their
-own measured shapes and use only ``band_stack`` / ``hot_buckets``."""
+``icws_neardup_pairs``, the pair store's build and its new x new and
+new x history joins, and the near-dup ingest's history join (text, SRP
+and image stores). The ingest's within-batch join carries the verify
+payload through its own self-join and uses ``band_stack`` /
+``hot_buckets``."""
 
 from __future__ import annotations
 
@@ -26,7 +35,25 @@ from typing import Callable
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from file_appender_spark.operators.materialize import materialize_frame
+
 BAND_KEYS = ("band", "sig")
+# the hashed band stack of the incremental stores: (band index, 64-bit
+# band hash)
+HASH_KEYS = ("band", "bh")
+
+# Below this store size (parquet-footer rows, no scan) an ingest epoch
+# takes the LEAN shape: no slice/candidate materialization jobs,
+# broadcast hints straight into the lazy joins, static planning. The
+# materialized shape exists to avoid re-scanning a BIG store per
+# consumer; at small stores the re-scans are cheaper than the 4-6
+# extra Spark jobs the materializations cost (SCALE1000_PROBE_r10).
+_EAGER_SLICE_MIN_STORE_ROWS = 1_000_000
+# Exact-count ceiling for hinting a broadcast of a big-store epoch's
+# candidate set (counted after materialization, never forced): a large
+# micro-batch under a big cap can legally produce tens of millions of
+# candidate rows, which must go through AQE, not a hint
+_BROADCAST_MAX_ROWS = 4_000_000
 
 # input-frame-independent Column cache: a stack() expression holds only
 # unresolved references, so one build per (columns, keys) serves every
@@ -123,3 +150,76 @@ def resolve_cap(
     if auto is not None:
         allowed = "'auto', " + allowed
     raise ValueError(f"{name} must be {allowed}, got {band_bucket_cap!r}")
+
+
+def is_big_store(rows_upto: Callable[[int], int]) -> bool:
+    """Whether a store takes the big (materialized) epoch shape.
+    ``rows_upto(n)`` is the store's footer row count, which may stop
+    counting once it reaches ``n``."""
+    return rows_upto(_EAGER_SLICE_MIN_STORE_ROWS) >= _EAGER_SLICE_MIN_STORE_ROWS
+
+
+def fits_broadcast(
+    frames: list[DataFrame], reliable: bool = False
+) -> tuple[list[DataFrame], bool]:
+    """Materialize ``frames`` and report whether their EXACT combined
+    row count is at most the broadcast ceiling — the gate a big-store
+    epoch puts on hinting its candidate set into a broadcast."""
+    kept = [materialize_frame(f, eager=True, reliable=reliable) for f in frames]
+    return kept, sum(f.count() for f in kept) <= _BROADCAST_MAX_ROWS
+
+
+def history_candidates(
+    batch_bands: DataFrame,
+    hist_bands: DataFrame,
+    id_col: str,
+    cap: int | None,
+    materialize: bool = False,
+    reliable: bool = False,
+) -> tuple[DataFrame, DataFrame]:
+    """Banded candidates of an incoming batch against a store's
+    history. Both frames are hashed long band stacks (``id_col`` +
+    ``HASH_KEYS``). Returns ``(slice, cand)``:
+
+      slice — the history band rows in a batch-touched bucket: a
+        broadcast semi-join of ``hist_bands`` on the batch's keys,
+        so the epoch touches the store through this one frame.
+        ``materialize=True`` checkpoints it (``materialize_frame``;
+        ``reliable`` picks the DFS spelling), the big-store shape
+        whose several consumers would otherwise each re-scan the
+        store; lazy otherwise.
+      cand — ``(new_id, old_id)`` pairs sharing a bucket, a row's own
+        id excluded (so a retried batch is never suppressed by its
+        own stored rows: at-least-once, not self-suppressing). NOT
+        deduped: a pair sharing k bands appears k times; every
+        consumer is set-shaped.
+
+    ``cap`` drops every bucket whose HISTORY population exceeds it
+    from both sides — the hot-bucket guard of a long-lived store, where
+    a degenerate band value (flat images, all-zero sign bands)
+    accumulates members across every ingested batch. Their new members
+    lose those candidates and are admitted rather than suppressed (the
+    conservative direction). The slice changes no candidate and no cap
+    decision: a semi-join keeps whole buckets, and an untouched bucket
+    can produce neither (pinned in tests/test_lsh.py)."""
+    keys = list(HASH_KEYS)
+    sl = hist_bands.join(F.broadcast(batch_bands.select(*keys)), keys, "semi")
+    if materialize:
+        sl = materialize_frame(sl, eager=True, reliable=reliable)
+    x, y = batch_bands, sl
+    if cap is not None:
+        hot = F.broadcast(hot_buckets(sl, cap, HASH_KEYS))
+        x = x.join(hot, keys, "left_anti")
+        y = y.join(hot, keys, "left_anti")
+    on = (
+        (F.col("x.band") == F.col("y.band"))
+        & (F.col("x.bh") == F.col("y.bh"))
+        & (F.col(f"x.{id_col}") != F.col("y._oid"))
+    )
+    cand = (
+        x.select(id_col, *keys)
+        .alias("x")
+        .join(y.select(F.col(id_col).alias("_oid"), *keys).alias("y"), on)
+        .select(F.col(f"x.{id_col}").alias("new_id"), F.col("y._oid").alias("old_id"))
+    )
+    return sl, cand

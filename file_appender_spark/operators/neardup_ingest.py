@@ -49,9 +49,12 @@ from pyspark.sql import functions as F
 from file_appender_spark.obs import stage
 from file_appender_spark.operators.arraykernels import dot
 from file_appender_spark.operators.lsh import (
-    band_pairs,
+    HASH_KEYS,
     band_stack,
+    fits_broadcast,
+    history_candidates,
     hot_buckets,
+    is_big_store,
     resolve_cap,
 )
 from file_appender_spark.operators.materialize import materialize_frame
@@ -190,20 +193,6 @@ def stamp_store_params(store_dir: str, params: dict) -> None:
 
 _INDEX_DIR = "_BANDS_IDX"
 _INDEX_META = "_INDEX_META.json"
-# ADVICE r9: the candidate/payload broadcast is gated on an EXACT
-# bounded row count (both sides are checkpointed first), never forced
-# — a large micro-batch under a big cap can legally produce tens of
-# millions of candidate rows, which must go through AQE, not a hint
-_BROADCAST_FETCH_ROWS = 4_000_000
-# below this store size (parquet-footer rows, no scan) the epoch takes
-# the LEAN shape: no slice/candidate materialization jobs, broadcast
-# hints straight into the lazy joins (the r9 spelling). The fused
-# checkpoint+count machinery exists to avoid re-scanning a BIG store
-# per consumer; at small stores the re-scans are cheaper than the 4-6
-# extra Spark jobs the materializations cost (the r9 verdict's
-# small-store throughput regression, measured again in
-# SCALE1000_PROBE_r10's first cut)
-_EAGER_SLICE_MIN_STORE_ROWS = 1_000_000
 
 
 def _checkpoint_sigs(sigs: DataFrame, reliable: bool) -> DataFrame:
@@ -351,10 +340,6 @@ def _store_is_v2(df: DataFrame) -> bool:
     return "bh0" in df.columns and "fh" in df.columns
 
 
-# the hashed band stack's keys: (band index, 64-bit band hash)
-_HASH_KEYS = ("band", "bh")
-
-
 def _bh_cols(n_bands: int) -> list[str]:
     return [f"bh{bi}" for bi in range(n_bands)]
 
@@ -368,7 +353,7 @@ def _bands_hash_long(
     (the compatibility path compaction retires)."""
     if _store_is_v2(df):
         return df.select(
-            F.col(id_col), "fh", band_stack(_bh_cols(n_bands), _HASH_KEYS)
+            F.col(id_col), "fh", band_stack(_bh_cols(n_bands), HASH_KEYS)
         ).select(id_col, "band", "bh", "fh")
     stacked = df.select(
         F.col(id_col),
@@ -470,7 +455,7 @@ def build_band_index(
     if n_buckets == "auto":
         n_buckets = _auto_index_buckets(banded_rows)
     rows = v2.select(
-        F.col(id_col), "fh", band_stack(_bh_cols(spec["n_bands"]), _HASH_KEYS)
+        F.col(id_col), "fh", band_stack(_bh_cols(spec["n_bands"]), HASH_KEYS)
     ).select(
         F.pmod(F.col("bh"), F.lit(int(n_buckets))).alias("bucket"),
         "band",
@@ -582,8 +567,9 @@ def _history_access(
     """The per-epoch store SOURCES (r9 verdict task 1): returns
 
       slice_src — lazy (id, band, bh, fh) band rows;
-        _sliced_band_candidates semi-slices + checkpoints them into
-        THE one narrow store scan of the epoch.
+        lsh.history_candidates semi-slices them (and checkpoints the
+        slice on a big store) into THE one narrow store scan of the
+        epoch.
       payload_src — lazy (old_id, payload...) rows the bounded
         payload fetch filters. ALWAYS the wide store (r10 verdict
         task 2): index rows are id-only, and the count-gated
@@ -664,154 +650,7 @@ def _history_access(
     return slice_src, payload_src
 
 
-def _sliced_band_candidates(
-    batch_bands: DataFrame,
-    hist_bands: DataFrame,
-    id_col: str,
-    cap: int | None,
-    materialize: bool = True,
-    reliable: bool = False,
-) -> tuple[DataFrame, DataFrame]:
-    """Shared history-candidate core over HASHED band keys for stores
-    that manage their own layout (pairstore's partitioned sigs table):
-    semi-slice the history band stack by the batch's (band, bh) set,
-    materialize it ONCE (localCheckpoint — the slice is micro-batch-
-    bounded), then derive both the over-cap histogram and the post-cap
-    candidates from the materialized frame, so the store is scanned
-    exactly once per epoch however many consumers follow. Returns
-    (slice, candidates): (new_id, old_id) pairs, self-id matches
-    excluded — which is what makes retries at-least-once instead of
-    self-suppressing. ``materialize=False`` keeps the slice lazy (the
-    small-store lean shape: consumers re-derive it inside one action
-    instead of paying a checkpoint job).
-
-    The slice changes no candidate: a semi-join keeps whole buckets,
-    so the over-cap histogram counts every batch-touched bucket
-    exactly, and an untouched bucket can produce neither a candidate
-    nor a cap decision that matters (pinned in tests/test_operators.py
-    ::test_sliced_band_candidates_slice_equivalence).
-
-    ``cap`` is the hot-bucket guard for LONG-LIVED stores: a
-    degenerate band value (flat images, all-zero sign bands)
-    accumulates members across every ingested batch, so without it
-    the per-batch history join grows linearly in store size on that
-    bucket alone. Buckets whose INCUMBENT population exceeds the cap
-    are dropped from BOTH sides; their new members are then ADMITTED
-    rather than suppressed (the conservative direction for an
-    ingest: at-least-once admission, never silent loss of a
-    legitimate document). Identical-FULL-signature duplicates never
-    depend on this join (the identical-signature tier of
-    _ingest_epoch), so a binding cap costs only the partial-match
-    candidates of that bucket."""
-    touched = F.broadcast(batch_bands.select("band", "bh").distinct())
-    sl = hist_bands.join(touched, ["band", "bh"], "semi")
-    if materialize:
-        sl = materialize_frame(sl, eager=True, reliable=reliable)
-    x, s2 = batch_bands, sl
-    if cap is not None:
-        hot = F.broadcast(hot_buckets(sl, cap, _HASH_KEYS))
-        s2 = sl.join(hot, ["band", "bh"], "left_anti")
-        x = batch_bands.join(hot, ["band", "bh"], "left_anti")
-    cand = (
-        x.alias("x")
-        .join(
-            s2.select(F.col(id_col).alias("_oid"), "band", "bh").alias("y"),
-            (F.col("x.band") == F.col("y.band"))
-            & (F.col("x.bh") == F.col("y.bh"))
-            & (F.col(f"x.{id_col}") != F.col("y._oid")),
-        )
-        .select(
-            F.col(f"x.{id_col}").alias("new_id"), F.col("y._oid").alias("old_id")
-        )
-        .distinct()
-    )
-    return sl, cand
-
-
-def _hist_dup_terms(
-    spark: SparkSession,
-    store_dir: str,
-    hist: DataFrame,
-    sigs: DataFrame,
-    batch_bands: DataFrame,
-    id_col: str,
-    spec: dict,
-    cap: int | None,
-    rec: dict,
-    reliable: bool = False,
-) -> tuple[DataFrame, DataFrame]:
-    """History-side dup inputs of the BIG-store epoch shape, from the
-    fused store touch:
-
-      cand_pay  — (new_id, old_id, payload...) post-cap banded
-        candidates with the incumbent verify payload attached;
-      ident_pay — (new_id, old_id, payload...) full-signature-HASH
-        matches, UNCAPPED and including self-matches (old_id ==
-        new_id). Callers confirm exact payload equality (mh / bands /
-        vector) before suppressing — the 64-bit fh only prunes, so a
-        hash collision can never false-suppress — then split into
-        sig-stored dups (old != new) and the own-stored at-least-once
-        override set (old == new: this row's own content is already
-        stored, so a replay must re-emit it; see _identical_sig_dups'
-        contract). INTENDED NARROWING (r10 ADVICE confirmed): the
-        override requires id AND exact-payload equality, so the
-        at-least-once re-emit guarantee assumes byte-identical replay
-        content — which is what a retry of the same micro-batch is. A
-        same-id row whose payload DIFFERS from the stored one is not a
-        replay (id reuse / content drift); it gets no override and is
-        judged like any new document — it can never be suppressed by
-        its own stored row (the banded join excludes self-ids and the
-        ident tier requires payload equality), only by a genuine
-        near-match with a DIFFERENT incumbent, which is the correct
-        verdict for new content. Identical-signature detection deliberately runs on
-        the UNCAPPED slice: a template family's stored twin may sit in
-        an over-cap bucket, and exact dups must dedup regardless
-        (the r8 shortcut's whole point).
-
-    The slice and both frames are checkpointed, and the payload
-    broadcast is gated on their EXACT combined row count under
-    _BROADCAST_FETCH_ROWS (r9 ADVICE: the old unconditional hint could
-    legally OOM the driver); over the ceiling the joins run unhinted
-    and AQE picks the strategy. cap None never hints (nothing bounds
-    the candidate set). Small stores take _lean_dup_terms instead;
-    the two shapes are pinned equal in tests/test_store_v2.py."""
-    slice_src, payload_src = _history_access(
-        spark, store_dir, hist, batch_bands, id_col, spec, rec
-    )
-    sl, cand = _sliced_band_candidates(
-        batch_bands, slice_src, id_col, cap, reliable=reliable
-    )
-    ident = (
-        sigs.select(F.col(id_col).alias("new_id"), "fh")
-        .join(
-            sl.select(F.col(id_col).alias("old_id"), "fh").dropDuplicates(
-                ["old_id", "fh"]
-            ),
-            "fh",
-        )
-        .select("new_id", "old_id")
-        .distinct()
-    )
-    if cap is None:
-        return cand.join(payload_src, "old_id"), ident.join(payload_src, "old_id")
-    cand = materialize_frame(cand, eager=True, reliable=reliable)
-    ident = materialize_frame(ident, eager=True, reliable=reliable)
-    bounded = (cand.count() + ident.count()) <= _BROADCAST_FETCH_ROWS
-    fetch_ids = cand.select("old_id").unionByName(ident.select("old_id")).distinct()
-    if bounded:
-        pay = materialize_frame(
-            payload_src.join(F.broadcast(fetch_ids), "old_id", "semi").dropDuplicates(
-                ["old_id"]
-            ),
-            eager=True,
-            reliable=reliable,
-        )
-    else:
-        pay = payload_src.join(fetch_ids, "old_id", "semi").dropDuplicates(["old_id"])
-    return cand.join(pay, "old_id"), ident.join(pay, "old_id")
-
-
-def _lean_dup_terms(
+def _dup_terms(
     spark: SparkSession,
     store_dir: str,
     hist: DataFrame | None,
@@ -820,44 +659,58 @@ def _lean_dup_terms(
     spec: dict,
     cap: int | None,
     rec: dict,
+    big: bool,
+    reliable: bool = False,
 ) -> tuple[DataFrame, DataFrame | None, DataFrame | None]:
-    """Micro-batch (LEAN) dup-candidate terms with the verify payload
-    CARRIED through the within-batch band self-join (r12, r11 verdict
-    task 1: collapse the per-epoch fixed-overhead floor). At the
-    minute-level batch shape the epoch cost is dominated by tiny AQE
-    stages and broadcast jobs, not data — EPOCH_OVERHEAD_PROBE_r12
-    measured ~35 jobs per 2500-doc epoch with ~1.9s of driver-side
-    gaps — so every join and .distinct() removed from the lean DAG is
-    a measurable slice of wall time. Returns (wb_pairs, hist_pairs,
-    ident_pairs):
+    """The epoch's dup-candidate terms, each with the verify payload
+    attached. Returns (wb_pairs, hist_pairs, ident_pairs):
 
       wb_pairs   — within-batch band-collision pairs ``(new_id,
         old_id, payload_new..., payload_old...)``, earlier id is the
-        incumbent (``new_id > old_id``), hot-bucket cap applied, NOT
-        deduped: callers apply the verify filter directly, tolerating
-        the <= n_bands duplicate factor — the final left_anti
-        assembly treats the result as a set, and each dropped
-        ``.distinct()`` was a whole per-epoch shuffle stage.
+        incumbent (``new_id > old_id``), hot-bucket cap applied. The
+        payloads ride the band self-join (r12: at the minute-level
+        batch shape every join and shuffle removed from the DAG is a
+        measurable slice of wall), so its work is bounded by the
+        batch, whatever the store size.
       hist_pairs — batch x store banded candidates with the OLD
-        payload attached (``new_id, old_id, payload_old...``). The
-        candidate frame stays id-only through the broadcast hint
-        exactly as the r11 lean shape (bounded by min(batch x bands x
-        cap, store x bands); carrying array payloads through the hint
-        would break that bound — the new side is re-attached from the
-        checkpointed ``sigs`` by the caller, a tiny AQE-broadcast).
-      ident_pairs — full-signature-HASH matches vs the store's
-        touched slice, uncapped, INCLUDING self-matches, old payload
-        attached. Callers confirm exact payload equality before
-        suppressing and split out the own-stored at-least-once
-        override — contract notes in _hist_dup_terms apply verbatim.
-        Not deduped: the <= n_bands (old_id, fh) duplicate factor is
-        harmless to set-shaped consumers.
+        payload attached (``new_id, old_id, payload_old...``), from
+        lsh.history_candidates over the epoch's one store touch
+        (_history_access). The candidate frame stays id-only; the new
+        side is re-attached by the caller from the kept ``sigs``.
+      ident_pairs — full-signature-HASH matches vs the store's touched
+        slice, UNCAPPED and INCLUDING self-matches (old_id == new_id),
+        old payload attached. Callers confirm exact payload equality
+        (mh / bands / vector) before suppressing — the 64-bit fh only
+        prunes, so a hash collision can never false-suppress — then
+        split into sig-stored dups (old != new) and the own-stored
+        at-least-once override set (old == new: this row's own content
+        is already stored, so a replay must re-emit it; see
+        _identical_sig_dups). INTENDED NARROWING (r10 ADVICE
+        confirmed): the override requires id AND exact-payload
+        equality, so the re-emit guarantee assumes byte-identical
+        replay content — which is what a retry of the same micro-batch
+        is. A same-id row whose payload DIFFERS is judged like any new
+        document: never suppressed by its own stored row, only by a
+        genuine near-match with a DIFFERENT incumbent. The tier runs
+        on the UNCAPPED slice: a template family's stored twin may sit
+        in an over-cap bucket, and exact dups must dedup regardless.
 
-    hist_pairs/ident_pairs are None when ``hist`` is None. Admitted
-    sets are pinned equal to the materialized big-store shape in
-    tests/test_store_v2.py::test_big_store_materialized_path_equals_
-    lean (all three modalities)."""
-    stack = band_stack(_bh_cols(spec["n_bands"]), _HASH_KEYS)
+    None of the three is deduped (a pair sharing k bands appears k
+    times): every consumer is a ``left_anti`` join or a broadcast, and
+    both treat the result as a set. hist_pairs/ident_pairs are None
+    when ``hist`` is None.
+
+    ``big`` (lsh.is_big_store) selects the store-side shape only: the
+    slice is checkpointed once, and with a cap the candidate and
+    identical-match sets are checkpointed too and the payload fetch is
+    a broadcast only when their EXACT combined row count fits
+    lsh.fits_broadcast (r9 ADVICE: an unconditional hint could legally
+    OOM the driver); over the ceiling the joins run unhinted and AQE
+    picks the strategy. Small stores stay lazy, hinting the capped
+    candidate set straight into the payload join (bounded by
+    min(batch x bands x cap, store x bands)). cap None never hints.
+    The two shapes are pinned equal in tests/test_store_v2.py."""
+    stack = band_stack(_bh_cols(spec["n_bands"]), HASH_KEYS)
     xb = sigs.select(
         F.col(id_col).alias("new_id"),
         stack,
@@ -868,15 +721,14 @@ def _lean_dup_terms(
         stack,
         *[F.col(c).alias(a) for c, a in spec["payload"].items()],
     )
-    xw, yw = xb, yb
     if cap is not None:
-        hot = F.broadcast(hot_buckets(yb, cap, _HASH_KEYS))
-        xw = xb.join(hot, ["band", "bh"], "left_anti")
-        yw = yb.join(hot, ["band", "bh"], "left_anti")
+        hot = F.broadcast(hot_buckets(yb, cap, HASH_KEYS))
+        xb = xb.join(hot, list(HASH_KEYS), "left_anti")
+        yb = yb.join(hot, list(HASH_KEYS), "left_anti")
     wb_pairs = (
-        xw.alias("x")
+        xb.alias("x")
         .join(
-            yw.alias("y"),
+            yb.alias("y"),
             (F.col("x.band") == F.col("y.band"))
             & (F.col("x.bh") == F.col("y.bh"))
             & (F.col("x.new_id") > F.col("y.old_id")),
@@ -890,43 +742,33 @@ def _lean_dup_terms(
     )
     if hist is None:
         return wb_pairs, None, None
+    batch_bands = sigs.select(F.col(id_col), stack)
     slice_src, payload_src = _history_access(
-        spark, store_dir, hist, xb, id_col, spec, rec
+        spark, store_dir, hist, batch_bands, id_col, spec, rec
     )
-    # no .distinct() under the broadcast: a semi-join probe tolerates
-    # duplicate build keys, and the distinct was a whole shuffle stage
-    # over batch x bands rows — micro-batch cardinality either way
-    touched = F.broadcast(xb.select("band", "bh"))
-    sl = slice_src.join(touched, ["band", "bh"], "semi")
-    xh = xb.select("new_id", "band", "bh")
-    s2 = sl
-    if cap is not None:
-        hot_h = F.broadcast(hot_buckets(sl, cap, _HASH_KEYS))
-        s2 = sl.join(hot_h, ["band", "bh"], "left_anti")
-        xh = xh.join(hot_h, ["band", "bh"], "left_anti")
-    cand = (
-        xh.alias("x")
-        .join(
-            s2.select(F.col(id_col).alias("old_id"), "band", "bh").alias("y"),
-            (F.col("x.band") == F.col("y.band"))
-            & (F.col("x.bh") == F.col("y.bh"))
-            & (F.col("x.new_id") != F.col("y.old_id")),
-        )
-        .select("x.new_id", "y.old_id")
+    sl, cand = history_candidates(
+        batch_bands, slice_src, id_col, cap, materialize=big, reliable=reliable
     )
-    if cap is not None:
-        # the r11 lean rationale verbatim: candidates are bounded by
-        # min(batch x bands x cap, store x bands), so the hint is safe
-        # and the payload fetch streams the store scan with no shuffle
-        cand = F.broadcast(cand)
-    hist_pairs = cand.join(payload_src, "old_id")
-    ident_pairs = (
+    ident = (
         sigs.select(F.col(id_col).alias("new_id"), "fh")
         .join(sl.select(F.col(id_col).alias("old_id"), "fh"), "fh")
         .select("new_id", "old_id")
-        .join(payload_src, "old_id")
     )
-    return wb_pairs, hist_pairs, ident_pairs
+    pay = payload_src
+    if cap is not None and big:
+        (cand, ident), bounded = fits_broadcast([cand, ident], reliable)
+        fetch = cand.select("old_id").unionByName(ident.select("old_id"))
+        if bounded:
+            pay = materialize_frame(
+                payload_src.join(F.broadcast(fetch), "old_id", "semi"),
+                eager=True,
+                reliable=reliable,
+            )
+        else:
+            pay = payload_src.join(fetch, "old_id", "semi")
+    elif cap is not None:
+        cand = F.broadcast(cand)
+    return wb_pairs, cand.join(pay, "old_id"), ident.join(pay, "old_id")
 
 
 def _sig_frame(
@@ -962,7 +804,7 @@ def _static_epoch_planning(spark: SparkSession):
 
     AQE earns its keep by re-planning on REAL sizes; in the lean
     branch every frame is micro-batch-bounded by the branch condition
-    itself (store < _EAGER_SLICE_MIN_STORE_ROWS), the broadcast sides
+    itself (not lsh.is_big_store), the broadcast sides
     are explicitly hinted, and _spread/_compact_scan already size the
     partitioning — so what remains of AQE here is its COST: one
     driver round-trip job + re-plan per Exchange (EPOCH probe r13:
@@ -1042,7 +884,7 @@ def _identical_sig_dups(
     join the cap guards — so the sized default traded the family's
     DEDUP away for the cost bound. Since r10 this helper covers ONLY
     the within-batch half; the vs-HISTORY half rides the fused store
-    touch (_hist_dup_terms' fh full-signature-hash matches, confirmed
+    touch (_dup_terms' fh full-signature-hash matches, confirmed
     by exact payload equality), which also yields the own-stored
     at-least-once override set — one store scan where the r9 spelling
     paid a dedicated history slice here."""
@@ -1066,138 +908,117 @@ def _ingest_epoch(
     spec (_modality_spec plus the entry point's ``id_col``,
     ``sig_frame`` and ``verify``): open the store (which checks or
     first stamps its params), build the batch signatures and resolve
-    the hot-bucket cap, take the LEAN or BIG candidate terms, apply
-    the identical-signature tier and the own-stored override, then
-    admit the batch and append its signatures to the store.
+    the hot-bucket cap, build the dup-candidate terms (_dup_terms),
+    apply the identical-signature tier and the own-stored override,
+    then admit the batch and append its signatures to the store.
 
-    The lean-vs-big decision is ONE early-exit footer walk, taken
-    before any Spark work so a lean epoch runs under static planning
-    end to end (_static_epoch_planning); the full footer count is
-    walked only when the ``"auto"`` cap policy asks for ``n_items``."""
+    The epoch's ``neardup.ingest`` run record is ``epoch`` (it carries
+    ``history_path``), with the stages ``signatures``, ``candidates``,
+    ``admit`` and ``append`` nested under it. The store size
+    (lsh.is_big_store, ONE early-exit footer walk before any Spark
+    work) selects static planning for a small store's epoch
+    (_static_epoch_planning) and the materialized store-side shape of
+    _dup_terms for a big one; the full footer count is walked only
+    when the ``"auto"`` cap policy asks for ``n_items``."""
     id_col, n_bands = mod["id_col"], mod["n_bands"]
     # validated before any Spark job; the "auto" policy may count the
     # kept batch signatures, so it is sized below
     cap = resolve_cap(band_bucket_cap, lambda: "auto")
     open_table_store(_STORE, store_dir, mod["params"], ingest=True)
-    epoch = stage(spark, "neardup.ingest", "epoch", store=store_dir)
+    op, known = "neardup.ingest", {"store": store_dir}
+    epoch = stage(spark, op, "epoch", **known)
     store_dir = table_dir(store_dir, "")
-    store_exists = any(
-        f.endswith(".parquet") for f in store_fs_for(store_dir).listdir(store_dir)
+    fs = store_fs_for(store_dir)
+    store_exists = any(f.endswith(".parquet") for f in fs.listdir(store_dir))
+    big = store_exists and is_big_store(
+        lambda n: fs.parquet_rows(store_dir, stop_at=n)
     )
-    big = (
-        store_exists
-        and store_fs_for(store_dir).parquet_rows(
-            store_dir, stop_at=_EAGER_SLICE_MIN_STORE_ROWS
-        )
-        >= _EAGER_SLICE_MIN_STORE_ROWS
-    )
+    sigs = None
     with nullcontext() if big else _static_epoch_planning(spark), epoch as rec:
-        sigs = mod["keep_sigs"](
-            _with_index_cols(mod["sig_frame"](batch), n_bands, mod["fh_cols"]),
-            reliable,
-        )
-        if cap == "auto":
-            # footer counts include retry-duplicated rows until
-            # compaction — fine, the cap needs order-of-magnitude
-            # accuracy only
-            cap = mod["cap_for"](lambda: sigs.count() + _store_row_count(store_dir))
-        hist = read_table(spark, store_dir, "") if store_exists else None
+        try:
+            with stage(spark, op, "signatures", **known):
+                sigs = mod["keep_sigs"](
+                    _with_index_cols(mod["sig_frame"](batch), n_bands, mod["fh_cols"]),
+                    reliable,
+                )
+                if cap == "auto":
+                    # footer counts include retry-duplicated rows until
+                    # compaction — fine, the cap needs order-of-magnitude
+                    # accuracy only
+                    cap = mod["cap_for"](
+                        lambda: sigs.count() + _store_row_count(store_dir)
+                    )
+            with stage(spark, op, "candidates", **known):
+                hist = read_table(spark, store_dir, "") if store_exists else None
+                wb_pairs, hist_pairs, ident_pairs = _dup_terms(
+                    spark, store_dir, hist, sigs, id_col, mod, cap, rec, big, reliable
+                )
 
-        def payload(src, renames, id_alias):
-            return src.select(
-                F.col(id_col).alias(id_alias),
-                *[F.col(c).alias(a) for c, a in renames.items()],
+            def as_id(df):
+                return df.select(F.col("new_id").alias(id_col))
+
+            new_pay = sigs.select(
+                F.col(id_col).alias("new_id"),
+                *[F.col(c).alias(a) for c, a in mod["payload_new"].items()],
             )
-
-        def as_id(df):
-            return df.select(F.col("new_id").alias(id_col))
-
-        new_pay = payload(sigs, mod["payload_new"], "new_id")
-        verify = mod["verify"]
-        conf = None
-        if not big:
-            # LEAN micro-batch shape (r12): payloads carried through
-            # the within-batch band self-join, no intermediate
-            # .distinct()s — see _lean_dup_terms
-            wb_pairs, hist_pairs, ident_pairs = _lean_dup_terms(
-                spark, store_dir, hist, sigs, id_col, mod, cap, rec
-            )
+            verify = mod["verify"]
             dup_ids = as_id(wb_pairs.filter(verify))
+            own_stored = sig_stored = None
             if hist_pairs is not None:
                 dup_ids = dup_ids.unionByName(
                     as_id(hist_pairs.join(new_pay, "new_id").filter(verify))
                 )
-                conf = ident_pairs.join(new_pay, "new_id")
-        else:
-            # MATERIALIZED big-store shape (>= _EAGER_SLICE_MIN_STORE_ROWS
-            # footer rows): within-batch candidates over the hashed band
-            # keys (earlier id is the incumbent), and ONE fused store
-            # touch (r9 verdict task 1) for the banded candidates, the
-            # over-cap histogram, identical-signature matches and the
-            # own-stored override — _hist_dup_terms
-            batch_bands = _bands_hash_long(sigs, n_bands, id_col, mod["fh_cols"])
-            cands = band_pairs(
-                batch_bands.select(id_col, *_HASH_KEYS), id_col, cap, _HASH_KEYS
-            ).select(F.col("d2").alias("new_id"), F.col("d1").alias("old_id"))
-            cands = cands.join(payload(sigs, mod["payload"], "old_id"), "old_id")
-            cand_pay, ident_pay = _hist_dup_terms(
-                spark, store_dir, hist, sigs, batch_bands, id_col, mod, cap, rec,
-                reliable=reliable,
-            )
-            cands = cands.unionByName(cand_pay.select(*cands.columns))
-            conf = ident_pay.join(new_pay, "new_id")
-            dup_ids = as_id(cands.join(new_pay, "new_id").filter(verify)).distinct()
-        own_stored = sig_stored = None
-        if conf is not None:
-            # full-signature-hash matches confirmed by exact payload
-            # equality, split into stored dups and the own-stored set
-            conf = conf.filter(mod["exact_eq"]())
-            own_stored = as_id(conf.filter(F.col("old_id") == F.col("new_id")))
-            sig_stored = as_id(conf.filter(F.col("old_id") != F.col("new_id")))
-            if big:
-                own_stored, sig_stored = own_stored.distinct(), sig_stored.distinct()
-        if mod["ident_rows"] is not None:
-            # identical-signature tier: exact duplicates under the
-            # modality's own verifier, within the batch by a groupBy
-            # (no pair join) and vs history through the confirmed
-            # matches above — so a template family dedups to ONE
-            # stored representative even when its band bucket is capped
-            dup_ids = dup_ids.unionByName(
-                _identical_sig_dups(mod["ident_rows"](sigs), id_col, mod["fh_cols"])
-            )
-            if sig_stored is not None:
-                dup_ids = dup_ids.unionByName(sig_stored)
-            if big:
-                dup_ids = dup_ids.distinct()
-        if own_stored is not None:
-            # at-least-once override: a row whose own (id, payload) is
-            # already stored was admitted by an earlier attempt and
-            # must be re-emitted whatever it now collides with
-            dup_ids = dup_ids.join(F.broadcast(own_stored), id_col, "left_anti")
-        # NOTE: within-batch suppression is vs earlier-id rows
-        # regardless of whether the earlier row itself gets suppressed
-        # — a chain a~b~c (a<b<c, a!~c) admits only a. That is the
-        # transitive-closure contract of dedup_clusters (operators/
-        # components.py); the conservative form drops more, never
-        # less, and stays single-pass (no iteration inside a
-        # streaming batch). Materialized ONCE: the store append below
-        # and the caller's downstream write both reuse it.
-        admitted = materialize_frame(
-            batch.join(dup_ids, id_col, "left_anti"), eager=True, reliable=reliable
-        )
-        # reuse the kept batch signatures for the append (r11):
-        # the semi-join slices the admitted rows out of `sigs` instead
-        # of recomputing the signature stage
-        admitted_sigs = sigs.join(admitted.select(id_col), id_col)
-        if store_exists and not _store_is_v2(hist):
-            # appends always match the store's existing schema, so a
-            # store is never mixed-version (compact_store upgrades
-            # atomically)
-            admitted_sigs = admitted_sigs.drop(
-                "fh", *[f"bh{bi}" for bi in range(n_bands)]
-            )
-        admitted_sigs.write.mode("append").parquet(store_dir)
-        sigs.unpersist()  # a no-op unless keep_sigs cached the frame
+                # full-signature-hash matches confirmed by exact payload
+                # equality, split into stored dups and the own-stored set
+                conf = ident_pairs.join(new_pay, "new_id").filter(mod["exact_eq"]())
+                own_stored = as_id(conf.filter(F.col("old_id") == F.col("new_id")))
+                sig_stored = as_id(conf.filter(F.col("old_id") != F.col("new_id")))
+            if mod["ident_rows"] is not None:
+                # identical-signature tier: exact duplicates under the
+                # modality's own verifier, within the batch by a groupBy
+                # (no pair join) and vs history through the confirmed
+                # matches above — so a template family dedups to ONE
+                # stored representative even when its band bucket is capped
+                dup_ids = dup_ids.unionByName(
+                    _identical_sig_dups(mod["ident_rows"](sigs), id_col, mod["fh_cols"])
+                )
+                if sig_stored is not None:
+                    dup_ids = dup_ids.unionByName(sig_stored)
+            if own_stored is not None:
+                # at-least-once override: a row whose own (id, payload) is
+                # already stored was admitted by an earlier attempt and
+                # must be re-emitted whatever it now collides with
+                dup_ids = dup_ids.join(F.broadcast(own_stored), id_col, "left_anti")
+            # NOTE: within-batch suppression is vs earlier-id rows
+            # regardless of whether the earlier row itself gets suppressed
+            # — a chain a~b~c (a<b<c, a!~c) admits only a. That is the
+            # transitive-closure contract of dedup_clusters (operators/
+            # components.py); the conservative form drops more, never
+            # less, and stays single-pass (no iteration inside a
+            # streaming batch). Materialized ONCE: the store append below
+            # and the caller's downstream write both reuse it.
+            with stage(spark, op, "admit", **known):
+                admitted = materialize_frame(
+                    batch.join(dup_ids, id_col, "left_anti"),
+                    eager=True,
+                    reliable=reliable,
+                )
+            # reuse the kept batch signatures for the append (r11):
+            # the semi-join slices the admitted rows out of `sigs` instead
+            # of recomputing the signature stage
+            admitted_sigs = sigs.join(admitted.select(id_col), id_col)
+            if store_exists and not _store_is_v2(hist):
+                # appends always match the store's existing schema, so a
+                # store is never mixed-version (compact_store upgrades
+                # atomically)
+                admitted_sigs = admitted_sigs.drop(
+                    "fh", *[f"bh{bi}" for bi in range(n_bands)]
+                )
+            with stage(spark, op, "append", **known):
+                admitted_sigs.write.mode("append").parquet(store_dir)
+        finally:
+            if sigs is not None:
+                sigs.unpersist()  # a no-op unless keep_sigs cached the frame
     return admitted
 
 
@@ -1240,7 +1061,7 @@ def neardup_ingest_batch(
     share every sign band and accumulate in one bucket across the
     store's lifetime; capped buckets drop out of candidate
     generation, admitting their new members (see
-    _sliced_band_candidates for the trade). EXACT duplicates never
+    lsh.history_candidates for the trade). EXACT duplicates never
     depend on that join: identical nonzero vectors are suppressed by
     a vector-equality groupBy (_identical_sig_dups with the vector as
     the signature — cosine is exactly 1.0), so an identical-embedding
@@ -1709,7 +1530,7 @@ def imagedup_ingest_batch(
     binding cap and stores ONE representative — the all-zero bucket
     never accumulates. Over-cap buckets of DISTINCT hashes drop out
     of candidate generation and their new members are admitted
-    (at-least-once, see _sliced_band_candidates). ``None`` disables
+    (at-least-once, see lsh.history_candidates). ``None`` disables
     the cap explicitly (the shortcut stays). ``reliable=True`` as in
     textdup_ingest_batch (DFS checkpoints for scheduled pipelines)."""
     # Both modes take the vectorized Arrow signature stage (r12, guide

@@ -86,14 +86,19 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from file_appender_spark.obs import stage
-from file_appender_spark.operators.lsh import band_pairs, hot_buckets, resolve_cap
+from file_appender_spark.operators.lsh import (
+    HASH_KEYS,
+    band_pairs,
+    fits_broadcast,
+    history_candidates,
+    hot_buckets,
+    is_big_store,
+    resolve_cap,
+)
 from file_appender_spark.operators.neardup_ingest import (
-    _EAGER_SLICE_MIN_STORE_ROWS,
-    _HASH_KEYS,
     _bands_hash_long,
     _minhash_slot_sigs,
     _shingled,
-    _sliced_band_candidates,
     _spread,
     _store_is_v2,
     _with_index_cols,
@@ -123,9 +128,6 @@ _N_BANDS = 4
 # columns whose hash defines full-signature identity for the v2
 # derived columns (shared with neardup_ingest's minhash spec)
 _FH_COLS = [f"b{i}" for i in range(_N_BANDS)]
-# r9 ADVICE: exact-count ceiling for broadcasting the candidate set
-# into the sh32 payload fetch (mirrors neardup_ingest's gate)
-_BROADCAST_CAND_ROWS = 4_000_000
 
 
 def _with_sig_hashes(sigs: DataFrame) -> DataFrame:
@@ -262,15 +264,16 @@ def _verified_pairs(
     candidates -> canonical (d1 < d2, jaccard) rows. Two equi-joins
     on doc ids, HOF intersection — q52's verify stage over sh32.
 
-    ``broadcast_cand`` is the ingest path's O(batch) discipline
-    (neardup_ingest._hist_dup_terms' gated fetch): with a bucket cap the
-    candidate set is micro-batch-bounded, so broadcasting the bare
+    ``broadcast_cand`` is the ingest path's O(batch) discipline (the
+    signature stores' payload fetch does the same): with a bucket cap
+    the candidate set is micro-batch-bounded, so broadcasting the bare
     (new_id, old_id) pairs and joining the HISTORY side first turns
     the heavy sh32 fetch into a store scan — no shuffle of the
     store's shingle sets; the batch-side join then runs over two
-    candidate-sized frames. Duplicate incumbent rows (none under the
-    overwrite-epoch contract, but cheap to tolerate) collapse in the
-    trailing distinct."""
+    candidate-sized frames. Duplicate candidates (lsh.history_
+    candidates does not dedup) and duplicate incumbent rows (none
+    under the overwrite-epoch contract) collapse in the trailing
+    distinct."""
     if broadcast_cand:
         j = F.broadcast(cand).join(old_sh, "old_id").join(new_sh, "new_id")
     else:
@@ -343,28 +346,30 @@ def build_pair_graph(
         sigs = _with_sig_hashes(pair_signatures(docs, id_col, text_col)).persist(
             StorageLevel.MEMORY_AND_DISK
         )
-        bands = _bands_hash_long(sigs, _N_BANDS, id_col, _FH_COLS).select(
-            id_col, *_HASH_KEYS
-        )
-        # every unordered candidate pair exactly once — the full
-        # self-join, over the precomputed long band hashes (same
-        # buckets, cheaper equi-join)
-        cand = band_pairs(bands, id_col, cap, _HASH_KEYS).select(
-            F.col("d2").alias("new_id"), F.col("d1").alias("old_id")
-        )
-        pairs = _verified_pairs(
-            cand, _new_side(sigs, id_col), _old_side(sigs, id_col), threshold
-        )
-        with stage(spark, "pairstore.build", "signatures", store=store_dir):
-            write_table_epoch(sigs, store_dir, "sigs", "base")
-        with stage(spark, "pairstore.build", "pairs", store=store_dir):
-            if cap is not None:
-                # a capped BUILD can drop candidates too — the shared
-                # binding test, history side empty (the build IS the
-                # corpus), marker before the pairs epoch like the ingest
-                _mark_if_cap_bound(store_dir, None, bands, cap)
-            write_table_epoch(pairs, store_dir, "pairs", "base")
-        sigs.unpersist()
+        try:
+            bands = _bands_hash_long(sigs, _N_BANDS, id_col, _FH_COLS).select(
+                id_col, *HASH_KEYS
+            )
+            # every unordered candidate pair exactly once — the full
+            # self-join, over the precomputed long band hashes (same
+            # buckets, cheaper equi-join)
+            cand = band_pairs(bands, id_col, cap, HASH_KEYS).select(
+                F.col("d2").alias("new_id"), F.col("d1").alias("old_id")
+            )
+            pairs = _verified_pairs(
+                cand, _new_side(sigs, id_col), _old_side(sigs, id_col), threshold
+            )
+            with stage(spark, "pairstore.build", "signatures", store=store_dir):
+                write_table_epoch(sigs, store_dir, "sigs", "base")
+            with stage(spark, "pairstore.build", "pairs", store=store_dir):
+                if cap is not None:
+                    # a capped BUILD can drop candidates too — the shared
+                    # binding test, history side empty (the build IS the
+                    # corpus), marker before the pairs epoch like the ingest
+                    _mark_if_cap_bound(store_dir, None, bands, cap)
+                write_table_epoch(pairs, store_dir, "pairs", "base")
+        finally:
+            sigs.unpersist()
 
     # the shared rebuild protocol (storefs.rebuild_table_store): the
     # stamp lands only once the tables it describes exist, so a crash
@@ -427,11 +432,10 @@ def pairstore_ingest_batch(
         # ONE narrow store scan per epoch (r9 verdict task 1): the hashed
         # band stack (long columns on a v2 sigs table, derived from the
         # strings on a legacy one) is semi-sliced by the batch's (band,
-        # bh) set and checkpointed; the over-cap histogram, candidate
-        # join AND cap marker all read that one frame
-        store_rows = _table_rows(store_dir, "sigs", _EAGER_SLICE_MIN_STORE_ROWS)
-        big = store_rows >= _EAGER_SLICE_MIN_STORE_ROWS
-        hist_slice, new_vs_hist = _sliced_band_candidates(
+        # bh) set — checkpointed on a big store — and the over-cap
+        # histogram, candidate join AND cap marker all read that frame
+        big = is_big_store(lambda n: _table_rows(store_dir, "sigs", n))
+        hist_slice, new_vs_hist = history_candidates(
             batch_bands,
             _bands_hash_long(hist, _N_BANDS, id_col, _FH_COLS),
             id_col,
@@ -439,15 +443,14 @@ def pairstore_ingest_batch(
             materialize=big,
         )
         new_vs_new = band_pairs(
-            batch_bands.select(id_col, *_HASH_KEYS), id_col, cap, _HASH_KEYS
+            batch_bands.select(id_col, *HASH_KEYS), id_col, cap, HASH_KEYS
         ).select(F.col("d2").alias("new_id"), F.col("d1").alias("old_id"))
         ns = _new_side(sigs, id_col)
         if cap is not None and big:
             # r9 ADVICE: gate the candidate broadcast on the EXACT row
             # count (checkpoint first), never force it — a large batch
             # under a big cap can legally exceed driver memory
-            new_vs_hist = new_vs_hist.localCheckpoint(eager=True)
-            bounded = new_vs_hist.count() <= _BROADCAST_CAND_ROWS
+            (new_vs_hist,), bounded = fits_broadcast([new_vs_hist])
         else:
             # small stores take the lean shape: candidates are bounded
             # by min(batch x bands x cap, store x bands), so the hint is
@@ -486,12 +489,12 @@ def _mark_if_cap_bound(
 ) -> None:
     """Drop the inexactness marker iff the hot-bucket cap actually
     BINDS — some batch-touched history bucket (``hist_slice`` is the
-    ALREADY materialized narrow slice from _sliced_band_candidates;
-    None on the build path, which has no history) or within-batch
-    bucket exceeds it, so candidates (hence possibly edges) are
-    dropped. A capped-but-never-binding store stays exact. Cost: ONE
-    aggregate job over the checkpointed slice + the batch band stack
-    — NO extra store scan (the r9 spelling re-stacked and re-sliced
+    narrow slice from lsh.history_candidates; None on the build path,
+    which has no history) or within-batch bucket exceeds it, so
+    candidates (hence possibly edges) are dropped. A capped-but-never-
+    binding store stays exact. Cost: ONE aggregate job over the slice
+    (checkpointed on a big store) + the batch band stack — NO extra
+    store decode (the r9 spelling re-stacked and re-sliced
     the store's band strings here, a second O(store) decode per
     epoch), only when a cap is enabled, skipped entirely once a
     marker exists. The marker makes exactness consumers (curate's
@@ -508,7 +511,7 @@ def _mark_if_cap_bound(
         sides = sides.unionByName(
             hist_slice.select("band", "bh", F.lit("hist").alias("_side"))
         )
-    over = hot_buckets(sides, cap, ("_side", *_HASH_KEYS)).limit(1).count()
+    over = hot_buckets(sides, cap, ("_side", *HASH_KEYS)).limit(1).count()
     if over:
         fs.write_text(
             marker,

@@ -136,30 +136,27 @@ _DRIVER_PRIORITY = [
 # old evidence no longer certifies the current code, so they rank with
 # the never-green tranche until re-verified. Remove entries once the
 # round that re-checked them is committed.
-# (r11 entries cleared: CORRECTNESS_r11 re-greened all seven.)
+# (r11 entries cleared: CORRECTNESS_r11 re-greened all seven; r12's
+# eight are green in CORRECTNESS_r13.)
 _FORCE_RECHECK: set[str] = {
-    # r12: the ingest epoch's LEAN micro-batch shape was restructured
-    # (operators/neardup_ingest._lean_dup_terms: payloads carried
-    # through the within-batch band self-join, intermediate
-    # .distinct()s dropped, post-checkpoint coalesce) — re-certify
-    # every driver row whose lineage crosses the small-store ingest
-    # path. Big-store shape unchanged; pairstore/corpusstats tiers do
-    # not cross this path. q261's lineage additionally crosses the
-    # r12 Arrow image-signature stage (image_sigs_arrow, bit-equality
-    # pinned; q272 rides it too but has no green row to invalidate).
+    # the history (new x old) candidate stage of both ingest stores is
+    # one function, operators/lsh.history_candidates, and the
+    # signature-store epoch builds its dup terms once for every store
+    # size (neardup_ingest._dup_terms: the big shape lost its
+    # within-batch band_pairs join and its .distinct()s) — re-certify
+    # every driver row whose lineage crosses that stage: the
+    # signature-store epochs and the pair-store ingests
+    "q257_pairstore_incremental_served",
     "q260_textdup_ingest_sim",
     "q261_imagedup_ingest_sim",
+    "q263_pairstore_compacted_served",
     "q264_textdup_compacted_sim",
     "q265_embeddingdup_ingest_sim",
+    "q268_refresh_auto_fallback",
     "q269_textdup_index_lifecycle",
     "q270_textdup_manifest_sim",
-    # r12: wjaccard/_exact_verify rewritten to occurrence-indexed
-    # array_intersect (WJACCARD_BREAKDOWN_r12, 3.1x), and the capped
-    # branch's join arms restructured onto one lazily-checkpointed
-    # sides frame (SIDES_CKPT_PROBE_r12, pair sets pinned equal both
-    # ways) — re-certify the two driver rows that ride the module
-    "q163_wjaccard_capped",
-    "q267_icws_error_contract",
+    "q271_pairstore_manifest_served",
+    "q272_imagedup_dhash_ingest_sim",
 }
 
 

@@ -132,7 +132,7 @@ _SLOW_TESTS = {
     "tests/test_operators.py::test_neardup_store_params_mismatch_fails_fast",
     "tests/test_operators.py::test_neardup_store_rejects_wrong_modality",
     "tests/test_operators.py::test_sig_shortcut_retry_on_legacy_multi_id_store",
-    "tests/test_operators.py::test_sliced_band_candidates_slice_equivalence",
+    "tests/test_lsh.py::test_history_candidates_slice_equivalence",
     "tests/test_operators.py::test_srp_admitted_sigs_reuse_batch_frame",
     "tests/test_operators.py::test_srp_banded_verifier_never_suppresses_nan_vectors",
     "tests/test_operators.py::test_store_hot_buckets_report",
@@ -186,7 +186,6 @@ _SLOW_TESTS = {
     "tests/test_store_v2.py::test_band_index_invalidated_by_wide_rewrite",
     "tests/test_store_v2.py::test_band_index_pruned_epoch_equals_fullscan",
     "tests/test_store_v2.py::test_band_index_rows_are_id_only_and_meta_has_bytes",
-    "tests/test_store_v2.py::test_big_store_materialized_path_equals_lean",
     "tests/test_store_v2.py::test_compact_empty_store_skips_sidecar",
     "tests/test_store_v2.py::test_curate_graph_dir_coverage_guard",
     "tests/test_store_v2.py::test_index_meta_shape",

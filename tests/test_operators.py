@@ -477,6 +477,25 @@ def test_neardup_ingest_across_batches(spark, tmp_path):
     assert sorted(r["vec_id"] for r in a2_retry.collect()) == [102, 104]
 
 
+def test_srp_epoch_failure_leaves_nothing_cached(spark, tmp_path, monkeypatch):
+    """The SRP epoch caches its batch signatures (MEMORY_AND_DISK); a
+    micro-batch that fails after that persist must release the cache,
+    or a long-lived foreachBatch session accumulates one per failure."""
+    import file_appender_spark.operators.neardup_ingest as ni
+
+    def fail(*args, **kwargs):
+        raise RuntimeError("epoch failed")
+
+    monkeypatch.setattr(ni, "_identical_sig_dups", fail)
+    spark.catalog.clearCache()
+    with pytest.raises(RuntimeError, match="epoch failed"):
+        ni.neardup_ingest_batch(
+            spark, _synth_vecs(spark, [1, 2, 3]), str(tmp_path / "s"),
+            threshold=0.9, band_bucket_cap=None,
+        )
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def test_neardup_ingest_null_first_vector(spark, tmp_path):
     """A NULL vector in the FIRST row must not change the signature
     stage: the dim probe skips NULL rows, and the batch admits the
@@ -1133,73 +1152,6 @@ def test_sig_shortcut_retry_on_legacy_multi_id_store(spark, tmp_path):
         [(999, " ".join([base] * 95))], "doc_id long, text string"
     )
     assert textdup_ingest_batch(spark, b2, store).count() == 0
-
-
-def test_sliced_band_candidates_slice_equivalence(spark):
-    """r8 verdict task 1: the history-path broadcast-semi slice (the
-    O(batch)-per-epoch fix) must change NOTHING about the candidate
-    set — over-cap counts for every batch-touched bucket are computed
-    on whole buckets (semi keeps them intact), and untouched buckets
-    could never produce a candidate. Pin the live history path,
-    _sliced_band_candidates (lazy slice, the small-store shape),
-    against an inline unsliced reference spelling, capped and
-    uncapped, on a history with a hot bucket, a cold shared bucket,
-    and buckets the batch never touches."""
-    from file_appender_spark.operators.neardup_ingest import (
-        _sliced_band_candidates,
-    )
-
-    # history: bucket (0,'HOT') holds ids 0..9, (1,'WARM') holds
-    # 10..12, (2,'COLD') holds 20..24 (untouched by the batch)
-    hist_rows = (
-        [(i, 0, "HOT") for i in range(10)]
-        + [(10 + i, 1, "WARM") for i in range(3)]
-        + [(20 + i, 2, "COLD") for i in range(5)]
-    )
-    old = spark.createDataFrame(hist_rows, "doc_id long, band int, bh string")
-    new = spark.createDataFrame(
-        [(100, 0, "HOT"), (100, 1, "WARM"), (101, 1, "WARM"), (101, 3, "X")],
-        "doc_id long, band int, bh string",
-    )
-
-    def unsliced(new_bands, old_bands, cap):
-        x = new_bands.alias("x")
-        if cap is not None:
-            sized = old_bands.groupBy("band", "bh").agg(
-                F.count("*").alias("n_in_bucket")
-            )
-            hot = F.broadcast(sized.filter(F.col("n_in_bucket") > cap))
-            old_bands = old_bands.join(hot, ["band", "bh"], "left_anti")
-            x = new_bands.join(hot, ["band", "bh"], "left_anti").alias("x")
-        y = old_bands.select(
-            F.col("doc_id").alias("_oid"), "band", "bh"
-        ).alias("y")
-        return (
-            x.join(
-                y,
-                (F.col("x.band") == F.col("y.band"))
-                & (F.col("x.bh") == F.col("y.bh"))
-                & (F.col("x.doc_id") != F.col("y._oid")),
-            )
-            .select(
-                F.col("x.doc_id").alias("new_id"), F.col("y._oid").alias("old_id")
-            )
-            .distinct()
-        )
-
-    def sliced(cap):
-        _, cand = _sliced_band_candidates(new, old, "doc_id", cap, materialize=False)
-        return sorted((r["new_id"], r["old_id"]) for r in cand.collect())
-
-    for cap in (None, 5, 2):
-        want = sorted(
-            (r["new_id"], r["old_id"]) for r in unsliced(new, old, cap).collect()
-        )
-        assert sliced(cap) == want, f"cap={cap}: {sliced(cap)} != {want}"
-    # sanity on the fixture: cap=5 drops the HOT bucket but keeps WARM
-    assert sliced(5) == [
-        (100, 10), (100, 11), (100, 12), (101, 10), (101, 11), (101, 12)
-    ]
 
 
 def test_embedding_ingest_identical_vector_shortcut(spark, tmp_path):

@@ -839,6 +839,25 @@ def test_curate_reports_capped_store(spark, tmp_path):
     assert r2["near_dedup_store_capped"] is True
 
 
+def test_failed_build_leaves_nothing_cached(spark, tmp_path, monkeypatch):
+    """build_pair_graph caches the corpus signatures while it writes
+    the tables; a write that raises must still release that cache."""
+    import file_appender_spark.operators.pairstore as ps
+
+    def fail(*args, **kwargs):
+        raise RuntimeError("write failed")
+
+    monkeypatch.setattr(ps, "write_table_epoch", fail)
+    docs = spark.createDataFrame(
+        [(i, f"alpha beta gamma delta w{i}") for i in range(6)],
+        "doc_id long, text string",
+    )
+    spark.catalog.clearCache()
+    with pytest.raises(RuntimeError, match="write failed"):
+        build_pair_graph(spark, docs, str(tmp_path / "s"))
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 # Spark jobs a full cluster refresh of the tiny store below may run:
 # the driver components' one Arrow collect and the clusters write
 # (shuffle + write); the pairs read takes its schema from a footer.

@@ -338,8 +338,9 @@ def _new_records(call):
 def test_store_reads_take_schema_from_footer(spark, tmp_path):
     """A schema-less parquet read runs a one-task schema-inference
     job. The second text-ingest epoch reads its history through the
-    footer stamp, so its one parquet job is the store append (its
-    last job); a cold read_token_stats runs none."""
+    footer stamp, so its one parquet job, over all its records, is
+    the store append (its last job); a cold read_token_stats runs
+    none."""
     from file_appender_spark.operators.corpusstats import (
         build_corpus_stats,
         read_token_stats,
@@ -353,10 +354,13 @@ def test_store_reads_take_schema_from_footer(spark, tmp_path):
     )
     store = str(tmp_path / "text")
     textdup_ingest_batch(spark, docs.filter("doc_id % 2 = 0"), store)
-    (epoch,) = _new_records(
+    epoch = _new_records(
         lambda: textdup_ingest_batch(spark, docs.filter("doc_id % 2 = 1"), store)
     )
-    assert _parquet_jobs(spark, epoch) == epoch["jobs"][-1:], epoch
+    assert {r["op"] for r in epoch} == {"neardup.ingest"}
+    jobs = sorted(j for r in epoch for j in r["jobs"])
+    (append,) = [r for r in epoch if r["stage"] == "append"]
+    assert _parquet_jobs(spark, {"jobs": jobs}) == append["jobs"][-1:] == jobs[-1:], epoch
 
     stats = str(tmp_path / "stats")
     build_corpus_stats(spark, docs, stats)

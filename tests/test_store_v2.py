@@ -201,29 +201,70 @@ def test_index_meta_shape(spark, tmp_path):
     assert all(d.startswith(("bucket=", "_", ".")) for d in data)
 
 
-def _lean_big_case(spark, modality):
-    """(ingest, id_col, stored batch, epoch batch) for one modality.
-    The epoch carries an exact-duplicate family of stored row 5 (ids
-    900/901 — 901 is a near-dup tail for text), row 5's own-id
-    re-ingest and a novel row 902; the SRP case adds zero-norm vectors
-    to both sides (903/904 in the epoch), which are never suppressed."""
+def _lean_big_case(spark, modality, cap):
+    """(fill, epoch, check) for one store: ``fill(store)`` builds the
+    stored side, ``epoch(store)`` runs the compared epoch and returns
+    what it decided, ``check`` asserts the fixture's expected verdicts.
+
+    The signature-store epochs carry an exact-duplicate family of
+    stored row 5 (ids 900/901 — 901 is a near-dup tail for text), row
+    5's own-id re-ingest and a novel row 902; the SRP case adds
+    zero-norm vectors to both sides (903/904 in the epoch), which are
+    never suppressed. The pair store's stored corpus carries planted
+    near-dup twins and a three-copy template family; its epoch adds a
+    fourth copy (903), which binds cap 2 in the history bucket."""
     import random
 
     from file_appender_spark.operators.neardup_ingest import (
         imagedup_ingest_batch,
         neardup_ingest_batch,
     )
+    from file_appender_spark.operators.pairstore import (
+        build_pair_graph,
+        pairstore_ingest_batch,
+        pairstore_is_exact,
+        read_pairs,
+    )
 
-    if modality == "textdup":
+    if modality == "pairstore":
+        template = " ".join(f"tmpl{j}" for j in range(12))
         docs = _corpus(spark, 50, seed_tag="delta")
         d5 = docs.filter(F.col("doc_id") == 5).collect()[0]["text"]
+        stored = docs.unionByName(
+            _docs(spark, [(60, template), (61, template), (62, template)])
+        )
+        ep = _docs(
+            spark,
+            [(900, d5), (901, d5 + " near dup tail"),
+             (902, "novel qq ww ee rr tt yy uu"), (903, template)],
+        )
+
+        def epoch(store):
+            pairstore_ingest_batch(spark, ep, store, batch_id=1, band_bucket_cap=cap)
+            pairs = sorted(tuple(r) for r in read_pairs(spark, store).collect())
+            return pairs, pairstore_is_exact(store)
+
+        def check(got):
+            pairs, exact = got
+            assert (5, 900, 1.0) in pairs and not any(902 in p[:2] for p in pairs)
+            assert exact == (cap != 2)
+
+        return (
+            lambda store: build_pair_graph(spark, stored, store, threshold=0.2),
+            epoch,
+            check,
+        )
+
+    if modality == "textdup":
+        ingest, id_col = textdup_ingest_batch, "doc_id"
+        stored = _corpus(spark, 50, seed_tag="delta")
+        d5 = stored.filter(F.col("doc_id") == 5).collect()[0]["text"]
         ep = _docs(
             spark,
             [(900, d5), (901, d5 + " near dup tail"), (5, d5),
              (902, "totally novel tokens unlike anything else qq ww ee rr tt yy")],
         )
-        return textdup_ingest_batch, "doc_id", docs, ep
-    if modality == "neardup":
+    elif modality == "neardup":
         def vec(i):
             rng = random.Random(i)
             return [rng.gauss(0.0, 1.0) for _ in range(8)]
@@ -239,50 +280,96 @@ def _lean_big_case(spark, modality):
             schema,
         )
 
-        def ingest(spark, batch, store):
-            return neardup_ingest_batch(spark, batch, store, threshold=0.999)
+        def ingest(spark, batch, store, **kw):
+            return neardup_ingest_batch(spark, batch, store, threshold=0.999, **kw)
 
-        return ingest, "vec_id", stored, ep
+        id_col = "vec_id"
+    else:
+        def payload(i):
+            rng = random.Random(1000 + i)
+            return bytearray(rng.randrange(256) for _ in range(256))
 
-    def payload(i):
-        rng = random.Random(1000 + i)
-        return bytearray(rng.randrange(256) for _ in range(256))
+        schema = "doc_id long, payload binary"
+        stored = spark.createDataFrame([(i, payload(i)) for i in range(50)], schema)
+        ep = spark.createDataFrame(
+            [(900, payload(5)), (901, payload(5)), (5, payload(5)),
+             (902, payload(7777))],
+            schema,
+        )
+        ingest, id_col = imagedup_ingest_batch, "doc_id"
 
-    schema = "doc_id long, payload binary"
-    stored = spark.createDataFrame([(i, payload(i)) for i in range(50)], schema)
-    ep = spark.createDataFrame(
-        [(900, payload(5)), (901, payload(5)), (5, payload(5)),
-         (902, payload(7777))],
-        schema,
+    def run(batch, store):
+        admitted = ingest(spark, batch, store, band_bucket_cap=cap)
+        return sorted(r[id_col] for r in admitted.collect())
+
+    def check(admitted):
+        assert 5 in admitted and 900 not in admitted and 902 in admitted
+        if modality == "neardup":
+            assert 901 not in admitted and {903, 904} <= set(admitted)
+
+    return lambda store: run(stored, store), lambda store: run(ep, store), check
+
+
+_LEAN_BIG_CASES = [
+    pytest.param(
+        m, cap, id=f"{m}-{cap}", marks=() if cap == "auto" else pytest.mark.slow
     )
-    return imagedup_ingest_batch, "doc_id", stored, ep
+    for m in ("textdup", "neardup", "imagedup", "pairstore")
+    for cap in (None, 2, "auto")
+]
 
 
-@pytest.mark.parametrize("modality", ["textdup", "neardup", "imagedup"])
+@pytest.mark.parametrize("modality,cap", _LEAN_BIG_CASES)
 def test_big_store_materialized_path_equals_lean(
-    spark, tmp_path, monkeypatch, modality
+    spark, tmp_path, monkeypatch, modality, cap
 ):
-    """The epoch has two shapes: LEAN (small stores — lazy joins, no
-    materialization jobs) and MATERIALIZED (big stores — checkpointed
-    slice/candidates + exact-count broadcast gating). They must make
-    identical admit decisions for every modality; unit stores are
-    small, so the big branch is forced by zeroing the threshold."""
+    """Each store epoch has two shapes: LEAN (small stores — lazy
+    joins, no materialization jobs) and MATERIALIZED (big stores —
+    checkpointed slice/candidates + exact-count broadcast gating).
+    They must make identical decisions for every store and cap; unit
+    stores are small, so the big shape is forced through the one
+    store-size seam, lsh._EAGER_SLICE_MIN_STORE_ROWS. The "auto" cases
+    run in the fast tier, so a plain run executes the big shape."""
     import shutil
 
-    import file_appender_spark.operators.neardup_ingest as ni
+    import file_appender_spark.operators.lsh as lsh
 
-    ingest, id_col, stored, ep = _lean_big_case(spark, modality)
+    fill, epoch, check = _lean_big_case(spark, modality, cap)
     s_lean = str(tmp_path / "lean")
-    ingest(spark, stored, s_lean)
+    fill(s_lean)
     s_big = str(tmp_path / "big")
     shutil.copytree(s_lean, s_big)
 
-    lean = sorted(r[id_col] for r in ingest(spark, ep, s_lean).collect())
-    monkeypatch.setattr(ni, "_EAGER_SLICE_MIN_STORE_ROWS", 0)
-    big = sorted(r[id_col] for r in ingest(spark, ep, s_big).collect())
-    assert big == lean and 5 in big and 900 not in big and 902 in big
-    if modality == "neardup":
-        assert 901 not in big and {903, 904} <= set(big)
+    lean = epoch(s_lean)
+    monkeypatch.setattr(lsh, "_EAGER_SLICE_MIN_STORE_ROWS", 0)
+    big = epoch(s_big)
+    assert big == lean
+    check(lean)
+
+
+# Spark jobs of the second text epoch on _corpus(spark, 40), summed
+# over its run records (measured; a stage that adds a job fails here)
+_INGEST_EPOCH_JOB_BUDGET = {"lean": 12, "big": 32}
+
+
+@pytest.mark.parametrize("shape", ["lean", "big"])
+def test_ingest_epoch_job_budget(spark, tmp_path, monkeypatch, shape):
+    import file_appender_spark.operators.lsh as lsh
+
+    store = str(tmp_path / "budget")
+    docs = _corpus(spark, 40)
+    textdup_ingest_batch(spark, docs.filter(F.col("doc_id") < 20), store)
+    if shape == "big":
+        monkeypatch.setattr(lsh, "_EAGER_SLICE_MIN_STORE_ROWS", 0)
+    before = {r["seq"] for r in records()}
+    textdup_ingest_batch(spark, docs.filter(F.col("doc_id") >= 20), store)
+    recs = [r for r in records() if r["seq"] not in before]
+    assert {(r["op"], r["store"]) for r in recs} == {("neardup.ingest", store)}
+    assert [r["stage"] for r in recs] == [
+        "signatures", "candidates", "admit", "append", "epoch"
+    ]
+    jobs = [j for r in recs for j in r["jobs"]]
+    assert 0 < len(jobs) <= _INGEST_EPOCH_JOB_BUDGET[shape], recs
 
 
 def test_maintenance_refuses_inflight_write(spark, tmp_path):
